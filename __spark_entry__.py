@@ -178,7 +178,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _ship(spark)
         # the time-series consumer's predicate (event_type IN + ts range)
         # through the FORMAT: datetime probes translate to stored epoch
-        # ints; planning-time file pruning asserted via the task count
+        # ints; planning-time file pruning asserted via the planned files
         from orc_spark.generic_tables import dsv2_events_scan
 
         return dsv2_events_scan(spark, sf_dir)

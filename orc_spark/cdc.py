@@ -41,30 +41,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .warehouse import Warehouse
 
 
-def _decode_files(spark, manifest, files, to_schema, to_colmap):
-    """Plain decode of a FILE SUBSET under `to_snapshot`'s schema: the
-    to-manifest's alias mapping resolves any older stored names, added
-    columns null-fill."""
-    from .pipeline import _spark_type_str, decode_blob_batches
-
-    names = list(to_schema.keys())
-    out_schema = ", ".join(
-        f"{n} {_spark_type_str(to_schema[n])}" for n in names
-    )
-    cm = to_colmap or None
-
-    def fn(batches):
-        yield from decode_blob_batches(
-            batches, [], names, names,
-            colmap=cm, coltypes=to_schema if cm else None,
-        )
-
-    return (
-        spark.read.parquet(*files).select("blob", "footer")
-        .mapInArrow(fn, out_schema)
-    )
-
-
 def _to_schema_names(df: DataFrame, to_schema: dict, to_colmap: dict) -> DataFrame:
     """Rename/extend a parent-snapshot DataFrame into to_snapshot's schema:
     aliases rename forward, added columns null-fill, dropped columns drop."""
@@ -169,10 +145,15 @@ def changes_between(
             if p["file"] not in prev_files
         ]
         if new_files:
-            chunks.append(
-                tag(_decode_files(spark, m, new_files, to_schema, to_colmap),
-                    "insert", snap, ordinal)
+            from .pipeline import scan_stripe_files
+
+            # plain decode under to_snapshot's schema: its alias mapping
+            # resolves older stored names, added columns null-fill
+            ins = scan_stripe_files(
+                spark, m, [(f, ()) for f in new_files], to_schema, names,
+                colmap=to_colmap or None,
             )
+            chunks.append(tag(ins, "insert", snap, ordinal))
         prev_snap, prev_m = snap, m
 
     if not chunks:

@@ -16,11 +16,12 @@ levels through `DataSourceReader.pushFilters`:
   - planning time (driver): accepted filters run the manifest range prune +
     sidecar key-bloom prune (pipeline.plan_scan_files), so pruned files
     never become input partitions — Spark schedules NO task for them;
-  - one `InputPartition` per surviving data file; `read()` streams the
-    file's stripes through the shared decode generator
-    (pipeline.decode_blob_batches): stripe-stats skip, stripe-bloom skip,
-    then the exact arrow row filter — yielding Arrow RecordBatches straight
-    into Spark's arrow ingestion;
+  - surviving data files pack into the same size-balanced bins as
+    decode_table (pipeline.file_bins), one `InputPartition` per bin;
+    `read()` streams each file's stripes through the shared decode path
+    (pipeline.decode_file): stripe-stats skip, stripe-bloom skip, the
+    exact arrow row filter, then the file's merge-on-read delete mask —
+    yielding Arrow RecordBatches straight into Spark's arrow ingestion;
   - filters fully handled here (EqualTo / In / >= / <= with int/str probes
     on scalar int/string columns, int/float probes on float/double columns)
     are consumed, so Spark does not re-evaluate them; strict < / > are used
@@ -228,6 +229,11 @@ class _FilePartition(InputPartition):
         self.colmap = colmap
 
 
+class _BinPartition(InputPartition):
+    def __init__(self, files: list[tuple[str, tuple[str, ...]]]):
+        self.files = files  # (data file, its seq-scoped delete set)
+
+
 class _TokstripeReaderBase(DataSourceReader):
     """Planning + execution shared by both reader variants. Does NOT
     override pushFilters — registered as-is (TokstripeReaderNoPushdown)
@@ -268,26 +274,25 @@ class _TokstripeReaderBase(DataSourceReader):
         self._hint_preds: list[tuple] = []  # prune-only: Spark re-evaluates
         # merge-on-read deletes (deletes.py): entries are seq-scoped (an
         # upsert's delete file applies only to files BELOW its seq), so
-        # partitions() attaches each file's applicable delete paths. Small
-        # key sets load once at planning and ship in the reader (it is
+        # every planned file carries its applicable delete set. Small key
+        # sets load once at planning and ship in the reader (it is
         # serialized to every task); large sets load per task in read() —
         # the same per-task equality-delete merge Iceberg readers do,
         # memory-bounded by the set size (materialize_deletes is the
         # remedy for huge ones)
         from . import deletes as _deletes
 
-        self._del_entries = _deletes.normalize_delete_entries(
-            manifest.get("delete_files") or []
-        )
         self._key_col = (manifest.get("layout") or {}).get("key_col", "doc_id")
-        self._del_keymap = None  # path -> arrow key array, when small
-        if self._del_entries:
-            paths = [p for p, _ in self._del_entries]
-            if _deletes.count_delete_keys(paths) <= _deletes.INLINE_DELETE_MAX:
-                self._del_keymap = {
-                    p: _deletes.load_delete_keys([p], self._key_col)
-                    for p in paths
-                }
+        self._dels_of = _deletes.applicable_deletes(
+            manifest, [p["file"] for p in manifest["partitions"].values()]
+        )
+        self._keysets = {}  # delete set -> arrow key array, when small
+        paths = sorted({p for appl in self._dels_of.values() for p in appl})
+        if paths and _deletes.count_delete_keys(paths) <= _deletes.INLINE_DELETE_MAX:
+            self._keysets = {
+                appl: _deletes.load_delete_keys(list(appl), self._key_col)
+                for appl in set(self._dels_of.values()) if appl
+            }
 
     # -- planning ---------------------------------------------------------
 
@@ -386,82 +391,37 @@ class _TokstripeReaderBase(DataSourceReader):
         return None
 
     def partitions(self):
-        from .pipeline import plan_scan_files
+        from .pipeline import file_bins, plan_scan_files
 
         preds = self._preds + self._hint_preds
-        if preds:
-            files = plan_scan_files(self._manifest, preds)
-        else:
-            files = [p["file"] for p in self._manifest["partitions"].values()]
-        if self._del_entries:
-            seq_of = {
-                p["file"]: p.get("seq", 0)
-                for p in self._manifest["partitions"].values()
-            }
-            parts = []
-            for f in files:
-                fs = seq_of.get(f, 0)
-                appl = tuple(sorted(
-                    p for p, s in self._del_entries if s is None or s > fs
-                ))
-                parts.append(_FilePartition(f, appl))
-        else:
-            parts = [_FilePartition(f) for f in files]
-        # empty scan: the API needs >= 1 partition; read() of a pruned-out
-        # file yields nothing, so hand back one no-op partition
-        return parts or [_FilePartition("")]
+        files = plan_scan_files(self._manifest, preds) if preds else list(self._dels_of)
+        # the same size-balanced bins as decode_table, one InputPartition
+        # each. The planner runs in a Python worker that cannot reach the
+        # SparkContext, so the planning host's cores stand in for
+        # defaultParallelism (equal under local[*])
+        bins = file_bins(
+            self._manifest, [(f, self._dels_of[f]) for f in files],
+            os.cpu_count() or 1,
+        )
+        # empty scan: the API needs >= 1 partition; an empty bin reads
+        # nothing
+        return [_BinPartition(b) for b in bins] or [_BinPartition([])]
 
     # -- execution (executor-side) ---------------------------------------
 
-    def read(self, partition: _FilePartition):
-        if not partition.path:
-            return
-        import pyarrow.parquet as pq
-
-        from .pipeline import decode_blob_batches
+    def read(self, partition: _BinPartition):
+        from . import deletes as _deletes
+        from .pipeline import decode_file
 
         preds = self._preds + self._hint_preds
-        pcols = [p[1] for p in preds]
-        appl = getattr(partition, "dels", ())
-        del_keys = None
-        if appl:
-            import pyarrow as pa
-
-            from . import deletes as _deletes
-
-            km = self._del_keymap
-            ks = [
-                km[p] if km is not None
-                else _deletes.load_delete_keys([p], self._key_col)
-                for p in appl
-            ]
-            ks = [
-                k.combine_chunks() if isinstance(k, pa.ChunkedArray) else k
-                for k in ks
-            ]
-            del_keys = ks[0] if len(ks) == 1 else pa.concat_arrays(ks)
-        need_key = del_keys is not None and self._key_col not in self._names
-        inner = self._names + [self._key_col] if need_key else self._names
-        read_cols = inner + [c for c in pcols if c not in inner]
-        pf = pq.ParquetFile(partition.path)
-        for b in pf.iter_batches(columns=["blob", "footer"]):
-            for rb in decode_blob_batches(
-                [b], preds, read_cols, inner,
-                colmap=self._colmap,
-                coltypes=self._raw_types if self._colmap else None,
-            ):
-                if del_keys is not None:
-                    import pyarrow.compute as pc
-
-                    hit = pc.fill_null(
-                        pc.is_in(rb.column(inner.index(self._key_col)),
-                                 value_set=del_keys),
-                        False,
-                    )
-                    rb = rb.filter(pc.invert(hit))
-                    if need_key:
-                        rb = rb.select(self._names)
-                yield rb
+        keysets = dict(self._keysets)
+        for path, appl in partition.files:
+            if appl and appl not in keysets:
+                keysets[appl] = _deletes.load_delete_keys(list(appl), self._key_col)
+            yield from decode_file(
+                path, preds, self._names, keysets.get(appl), self._key_col,
+                self._colmap, self._raw_types if self._colmap else None,
+            )
 
 
 class TokstripeReaderNoPushdown(_TokstripeReaderBase):
@@ -648,21 +608,12 @@ class TokstripeStreamReader(DataSourceStreamReader):
                         _deletes.load_delete_keys(new_dels, kcol).to_pylist()
                     )
                     if keys:
-                        pentries = _deletes.normalize_delete_entries(
-                            pm.get("delete_files") or []
-                        )
-                        hit_files = set(plan_scan_files(
+                        hit_files = plan_scan_files(
                             pm, [("in", kcol, list(keys))]
-                        ))
-                        for p in pm["partitions"].values():
-                            f = p["file"]
-                            if f not in hit_files:
-                                continue
-                            fseq = p.get("seq", 0)
-                            appl = tuple(sorted(
-                                d for d, ds in pentries
-                                if ds is None or ds > fseq
-                            ))
+                        )
+                        for f, appl in _deletes.applicable_deletes(
+                            pm, hit_files
+                        ).items():
                             out.append(_FilePartition(
                                 f, dels=appl, change="delete", snap=s,
                                 ordinal=ordinal, keys=keys, kcol=kcol,
@@ -686,61 +637,35 @@ class TokstripeStreamReader(DataSourceStreamReader):
     def read(self, partition: _FilePartition):
         if not partition.path:
             return
-        import pyarrow.parquet as pq
+        import pyarrow as pa
 
-        from .pipeline import decode_blob_batches
+        from . import deletes as _deletes
+        from .pipeline import decode_file
 
         names = self._names
-        kcol = partition.kcol
+        kcol = partition.kcol or "doc_id"
         preds = [("in", kcol, list(partition.keys))] if partition.keys else []
-        appl = getattr(partition, "dels", ())
-        need_key = bool(appl) and kcol and kcol not in names
-        inner = names + [kcol] if need_key else names
-        read_cols = inner + [p[1] for p in preds if p[1] not in inner]
-        del_keys = None
-        if appl:
-            import pyarrow as pa
-
-            from . import deletes as _deletes
-
-            ks = [
-                k.combine_chunks() if isinstance(k, pa.ChunkedArray) else k
-                for k in (_deletes.load_delete_keys([p], kcol or "doc_id")
-                          for p in appl)
-            ]
-            del_keys = ks[0] if len(ks) == 1 else pa.concat_arrays(ks)
-        colmap = getattr(partition, "colmap", None)
-        pf = pq.ParquetFile(partition.path)
-        for b in pf.iter_batches(columns=["blob", "footer"]):
-            for rb in decode_blob_batches(
-                [b], preds, read_cols, inner,
-                colmap=colmap, coltypes=self._types if colmap else None,
-            ):
-                if del_keys is not None:
-                    import pyarrow.compute as pc
-
-                    hit = pc.fill_null(
-                        pc.is_in(rb.column(inner.index(kcol)),
-                                 value_set=del_keys),
-                        False,
-                    )
-                    rb = rb.filter(pc.invert(hit))
-                    if need_key:
-                        rb = rb.select(names)
-                if self._cdc:
-                    import pyarrow as pa
-
-                    n = rb.num_rows
-                    rb = pa.RecordBatch.from_arrays(
-                        list(rb.columns)
-                        + [
-                            pa.array([partition.change] * n, pa.string()),
-                            pa.array([partition.snap] * n, pa.string()),
-                            pa.array([partition.ordinal] * n, pa.int32()),
-                        ],
-                        names=names + list(self.CDC_COLS),
-                    )
-                yield rb
+        keyset = (
+            _deletes.load_delete_keys(list(partition.dels), kcol)
+            if partition.dels else None
+        )
+        colmap = partition.colmap
+        for rb in decode_file(
+            partition.path, preds, names, keyset, kcol, colmap,
+            self._types if colmap else None,
+        ):
+            if self._cdc:
+                n = rb.num_rows
+                rb = pa.RecordBatch.from_arrays(
+                    list(rb.columns)
+                    + [
+                        pa.array([partition.change] * n, pa.string()),
+                        pa.array([partition.snap] * n, pa.string()),
+                        pa.array([partition.ordinal] * n, pa.int32()),
+                    ],
+                    names=names + list(self.CDC_COLS),
+                )
+            yield rb
 
     def commit(self, end: dict) -> None:
         pass  # snapshots are durable; nothing to release

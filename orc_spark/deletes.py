@@ -29,9 +29,9 @@ warehouse's manifest tree:
     SEQ-SCOPED delete file ({'path','seq'} manifest entries) that readers
     merge only into files BELOW that seq — old versions vanish, the
     upsert's own files keep the new versions. Plain `delete_where`
-    entries stay bare strings = apply to every file. Readers group files
-    by applicable delete set (decode_table / the tokstripe reader), so
-    mixed chains (delete → upsert → delete) read exactly.
+    entries stay bare strings = apply to every file. Readers attach each
+    file's applicable delete set to it (applicable_deletes), so mixed
+    chains (delete → upsert → delete) read exactly in one scan.
   * Reads stay exact and scale-shaped. `decode_table` applies deletes one
     of two ways, chosen by the total delete-key count (read from parquet
     footers, O(#delete files) driver-side): small sets ship in the task
@@ -88,6 +88,20 @@ def normalize_delete_entries(raw: list) -> list[tuple[str, int | None]]:
     return out
 
 
+def applicable_deletes(manifest: dict, files: list[str]) -> dict[str, tuple[str, ...]]:
+    """Each data file's seq-scoped delete set: the delete-file paths a
+    reader must merge into it (normalize_delete_entries' scoping rule — a
+    plain entry applies to every file, a {'path','seq'} entry only to files
+    whose partition seq is lower). Files of a delete-free manifest map to
+    ()."""
+    entries = normalize_delete_entries(manifest.get("delete_files") or [])
+    seq_of = {p["file"]: p.get("seq", 0) for p in manifest["partitions"].values()}
+    return {
+        f: tuple(sorted(p for p, s in entries if s is None or s > seq_of.get(f, 0)))
+        for f in files
+    }
+
+
 def delete_files_of(manifest: dict | None) -> list[str]:
     """Delete-file PATHS of a manifest (seq scoping stripped) — the
     reachability view expire/vacuum need."""
@@ -121,8 +135,12 @@ def load_delete_keys(files: list[str], key_col: str):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tabs = [pq.read_table(f, columns=[key_col]) for f in files]
-    return pa.concat_tables(tabs).column(key_col).combine_chunks()
+    cols = [pq.read_table(f, columns=[key_col]).column(key_col) for f in files]
+    # delete files of different writers may differ in the key field's
+    # nullability, which concat_tables rejects: concatenate the arrays
+    return pa.chunked_array(
+        [c for col in cols for c in col.chunks], type=cols[0].type
+    ).combine_chunks()
 
 
 def _write_delete_files(keys_df, warehouse_path: str, dest: str) -> list[str]:
@@ -178,12 +196,13 @@ def delete_where(
     branch: str | None = None,
 ) -> dict:
     """Commit a merge-on-read delete: a new snapshot `dest` (default
-    `<snapshot>-d<n>`) sharing `snapshot`'s data files, whose readers drop
-    every row matching `predicate` (forms per normalize_predicates: key or
-    any stat-tracked column, BETWEEN / IN / conjunction — evaluated once,
-    now, against the snapshot being deleted from; rows are removed by key
-    equality thereafter). Returns the committed manifest with
-    `n_deleted` (distinct keys this call removed) added.
+    `<root>-d<n>`, n = its commit-log ordinal) sharing `snapshot`'s data
+    files, whose readers drop every row matching `predicate` (forms per
+    normalize_predicates: key or any stat-tracked column, BETWEEN / IN /
+    conjunction — evaluated once, now, against the snapshot being deleted
+    from; rows are removed by key equality thereafter). Returns the
+    committed manifest with `n_deleted` (distinct keys this call removed)
+    added.
 
     A predicate matching nothing still commits `dest` (Iceberg also
     snapshots no-op deletes) with no new delete file.
@@ -207,10 +226,12 @@ def delete_where(
     # delete must stay seq-scoped in the child manifest
     parent_dels = list(manifest.get("delete_files") or [])
     if dest is None:
-        # chain-stable default: strip the parent's own suffix so a
-        # long-lived table's chain stays `<root>-d1, <root>-d2, …`
-        # instead of growing `-d1-d2-…` without bound
-        dest = f"{_root(snapshot)}-d{len(parent_dels) + 1}"
+        # chain-stable default: strip the parent's own suffix so names stay
+        # `<root>-d<n>` instead of growing `-d1-d2-…` without bound. n is
+        # the ordinal this commit takes in the commit log, which every
+        # commit advances — a no-match delete adds no delete file, so a
+        # delete-file count would repeat the previous name
+        dest = f"{_root(snapshot)}-d{len(wh.commit_log())}"
     if wh.read_manifest(dest):
         raise ValueError(f"snapshot {dest!r} already exists")
 
@@ -319,7 +340,7 @@ def upsert(
     `df_new`'s keys is committed AT that seq — seq-scoped, so readers
     merge it into files BELOW seq (the old versions) but never into the
     upsert's own files (which carry the new versions). Reads stay the
-    engine's merge-on-read paths (inline mask / anti-join, grouped per
+    engine's merge-on-read paths (inline mask per file / anti-join per
     applicable-delete set); `materialize_deletes` folds the chain flat.
 
     The new files stage under snapshot `<dest>-stage` (its manifest is

@@ -127,13 +127,16 @@ def dsv2_events_scan(
     pushFilters as datetime probe values, which the reader translates to
     epoch counts at the stored unit (datasource._translate_ts; the ts range
     is a conservative prune hint, Spark keeps the exact filter). Planning-
-    time file pruning is asserted via the task count: the filtered scan
-    must plan strictly fewer input partitions than the full scan. The
-    oracle filters raw parquet, so translation + pruning must be exactly
-    transparent."""
+    time file pruning is asserted in two links: Catalyst hands the
+    event_type IN-set to the reader, which consumes it (it leaves Spark's
+    residual filter), and for those filters the reader packs strictly
+    fewer files into its partitions than a full scan. The oracle filters
+    raw parquet, so translation + pruning must be exactly transparent."""
     import datetime as dt
 
-    from .datasource import register
+    from pyspark.sql.datasource import GreaterThanOrEqual, In, LessThanOrEqual
+
+    from .datasource import TokstripeReader, register
 
     register(spark)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -156,13 +159,31 @@ def dsv2_events_scan(
             & (F.col("ts") >= F.lit(lo))
             & (F.col("ts") <= F.lit(hi))
         )
-        n_full = full.rdd.getNumPartitions()
-        n_flt = flt.rdd.getNumPartitions()
+        residual = [
+            ln for ln in
+            flt._jdf.queryExecution().optimizedPlan().toString().splitlines()
+            if "Filter" in ln
+        ]
+
+        def planned_files(filters) -> int:
+            reader = TokstripeReader(
+                {"path": wh, "snapshot": "gate_dsv2_events"}, full.schema
+            )
+            list(reader.pushFilters(filters))
+            return sum(len(p.files) for p in reader.partitions())
+
+        n_full = planned_files([])
+        n_flt = planned_files([
+            In(("event_type",), ("click", "purchase")),
+            GreaterThanOrEqual(("ts",), lo),
+            LessThanOrEqual(("ts",), hi),
+        ])
         out = _events_rollup(flt)
         out = spark.createDataFrame(out.collect(), out.schema)
-        if not n_flt < n_full:
+        if any("event_type" in ln for ln in residual) or not n_flt < n_full:
             raise AssertionError(
-                f"format-level file pruning did not fire: {n_flt} of {n_full} tasks"
+                "format-level file pruning did not fire: residual filter "
+                f"{residual}, {n_flt} of {n_full} files planned"
             )
         return out
     finally:

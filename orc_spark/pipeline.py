@@ -18,6 +18,19 @@ Physical plan (SURVEY.md §3.3) — one shuffle total:
                                       rename; idempotent under task retry)
     -> collect tiny metadata rows -> manifest commit (driver)
 
+Decode plan — no shuffle, and no Spark file listing or schema inference
+(the manifest already holds the file list and STRIPE_FILE_SCHEMA):
+
+  plan_scan_files (driver: manifest range + sidecar bloom prune)
+    -> file_bins                      surviving files, each with its
+                                      seq-scoped delete set, packed largest
+                                      first into one size-balanced bin per
+                                      task slot
+    -> spark.range(n_bins).mapInArrow task i opens bin i's files with
+                                      pyarrow and streams their (blob,
+                                      footer) row groups through the decode
+                                      kernel, then the file's delete mask
+
 Scale notes (designed for 10^12 rows / 1000 executors, tested on local[32]):
 - the salt spreads each source over S buckets, defusing long-token-array skew
   (BASELINE.json:6); choose S so a bucket is a few GB: S ~ total_bytes /
@@ -29,14 +42,17 @@ Scale notes (designed for 10^12 rows / 1000 executors, tested on local[32]):
   skewed document lengths; worker memory is bounded by MAX_BUFFERED_TOKENS
   across the task's open pid buffers + one Arrow batch, regardless of
   partition size (streaming ParquetWriter per pid).
-- decode is the mirror image and prunes columns at the stream level (only
-  requested columns' bytes are decompressed).
+- decode is the mirror image: executors read data files directly, the
+  driver ships only the bin list, and columns prune at the stream level
+  (only requested columns' bytes are decompressed).
 """
 
 from __future__ import annotations
 
+import heapq
 import json
 import os
+import re
 import time
 import uuid
 
@@ -675,7 +691,7 @@ def decode_table(
         # distinct from "every file pruned" below: a snapshot with nothing
         # committed is a caller error, not an empty query result
         raise ValueError(f"no committed files for snapshot {snapshot}")
-    schema = manifest["schema"] if manifest else {}
+    schema = manifest["schema"]
     preds = normalize_predicates(predicate)
     for p in preds:
         if p[1] not in schema:
@@ -688,123 +704,67 @@ def decode_table(
         files = plan_scan_files(manifest, preds, prune_metrics)
         if not files:  # every partition pruned: empty result, no job
             return spark.createDataFrame([], out_schema)
+    accs = (None, None, None)
     if prune_metrics is not None:
-        sc = spark.sparkContext
-        prune_metrics["stripes_seen"] = sc.accumulator(0)
-        prune_metrics["stripes_skipped"] = sc.accumulator(0)
-        prune_metrics["stripes_bloom_skipped"] = sc.accumulator(0)
-    acc_seen = (prune_metrics or {}).get("stripes_seen")
-    acc_skip = (prune_metrics or {}).get("stripes_skipped")
-    acc_bloom = (prune_metrics or {}).get("stripes_bloom_skipped")
+        accs = tuple(spark.sparkContext.accumulator(0) for _ in range(3))
+        prune_metrics.update(zip(
+            ("stripes_seen", "stripes_skipped", "stripes_bloom_skipped"), accs
+        ))
 
-    # merge-on-read deletes (deletes.py): delete entries are SEQ-SCOPED —
-    # plain (delete_where) entries apply to every data file; {'path','seq'}
-    # (upsert) entries apply only to files whose partition seq is lower,
-    # so an upsert's own files keep the re-inserted keys. Group the
-    # surviving files by their applicable delete set (a delete-free table
-    # and the plain-delete case both collapse to ONE group), then pick the
-    # apply strategy once from the TOTAL key count (parquet footers,
-    # driver-side): inline is_in mask inside the decode kernel (zero extra
-    # shuffle) vs a left_anti join per group (the unbounded path; Spark
-    # broadcasts or sort-merges by size).
-    dels_raw = (manifest or {}).get("delete_files") or []
-    key_col = ((manifest or {}).get("layout") or {}).get("key_col", "doc_id")
-    groups: dict[tuple[str, ...], list[str]] = {}
-    if dels_raw:
-        from . import deletes as _deletes
+    # merge-on-read deletes (deletes.py): delete entries are SEQ-SCOPED, so
+    # each file carries its own applicable delete set. The apply strategy
+    # is picked once from the TOTAL key count (parquet footers,
+    # driver-side): an inline is_in mask inside the decode kernel (zero
+    # extra shuffle) vs a left_anti join per delete set (the unbounded
+    # path; Spark broadcasts or sort-merges by size).
+    from . import deletes as _deletes
 
-        part_seq = {
-            p["file"]: p.get("seq", 0)
-            for p in manifest["partitions"].values()
-        }
-        entries = _deletes.normalize_delete_entries(dels_raw)
-        for f in files:
-            fseq = part_seq.get(f, 0)
-            appl = tuple(sorted(
-                path for path, s in entries if s is None or s > fseq
-            ))
-            groups.setdefault(appl, []).append(f)
-    else:
-        groups[()] = list(files)
-    all_del_paths = sorted({p for appl in groups for p in appl})
-    inline_keymap = None  # path -> arrow key array, shipped in task closures
+    key_col = (manifest.get("layout") or {}).get("key_col", "doc_id")
+    dels_of = _deletes.applicable_deletes(manifest, files)
+    all_del_paths = sorted({p for appl in dels_of.values() for p in appl})
+    keysets: dict[tuple[str, ...], pa.Array] = {}
     anti_join = False
     if all_del_paths:
-        from . import deletes as _deletes
-
         n_del = _deletes.count_delete_keys(all_del_paths)
         cap = (
             delete_inline_max
             if delete_inline_max is not None
             else _deletes.INLINE_DELETE_MAX
         )
-        if n_del == 0:
-            groups = {(): [f for fs in groups.values() for f in fs]}
-        elif n_del <= cap:
-            inline_keymap = {
-                p: _deletes.load_delete_keys([p], key_col)
-                for p in all_del_paths
-            }
-        else:
+        if n_del > cap:
             anti_join = True
+        elif n_del:
+            keysets = {
+                appl: _deletes.load_delete_keys(list(appl), key_col)
+                for appl in set(dels_of.values()) if appl
+            }
+    # {} normalizes to None: with the evolution invariant that every
+    # added/renamed column keeps a mapping entry, an empty mapping means
+    # "no evolution residue" — plain decode path
+    colmap = manifest.get("column_mapping") or None
 
-    # predicate columns must be decoded to filter rows; drop them after if
-    # the caller did not ask for them (the delete key is handled the same
-    # way, per group)
-    pcols = [p[1] for p in preds]
+    def scan(entries, cols: list[str]) -> DataFrame:
+        return scan_stripe_files(
+            spark, manifest, entries, schema, cols, preds, keysets, colmap, accs
+        )
 
-    def decode_branch(gfiles: list[str], appl: tuple[str, ...]) -> DataFrame:
-        use_key = bool(appl) and (inline_keymap is not None or anti_join)
-        nk = use_key and key_col not in names
-        inner = names + [key_col] if nk else names
-        ischema = ", ".join(f"{n} {_spark_type_str(schema[n])}" for n in inner)
-        rcols = inner + [c for c in pcols if c not in inner]
-        keyset = None
-        if inline_keymap is not None and appl:
-            import pyarrow as pa
-
-            ks = [
-                k.combine_chunks() if isinstance(k, pa.ChunkedArray) else k
-                for k in (inline_keymap[p] for p in appl)
-            ]
-            keyset = ks[0] if len(ks) == 1 else pa.concat_arrays(ks)
-
-        # {} normalizes to None: with the evolution invariant that every
-        # added/renamed column keeps a mapping entry, an empty mapping
-        # means "no evolution residue" — plain decode path
-        colmap = (manifest or {}).get("column_mapping") or None
-
-        def decode_partition(batches):
-            it = decode_blob_batches(
-                batches, preds, rcols, inner, acc_seen, acc_skip, acc_bloom,
-                colmap=colmap, coltypes=schema if colmap else None,
-            )
-            if keyset is None:
-                yield from it
-                return
-            import pyarrow.compute as pc
-
-            kidx = inner.index(key_col)
-            for b in it:
-                # null keys are kept: is_in(null)=null -> fill False ->
-                # invert True matches left_anti's null-join semantics
-                hit = pc.fill_null(
-                    pc.is_in(b.column(kidx), value_set=keyset), False
-                )
-                fb = b.filter(pc.invert(hit))
-                yield fb.select(names) if nk else fb
-
-        sdf = spark.read.parquet(*gfiles).select("blob", "footer")
-        if anti_join and appl:
-            out = sdf.mapInArrow(decode_partition, ischema)
+    if not anti_join:
+        # ONE scan: every file carries its own inline delete set
+        return scan([(f, dels_of[f]) for f in files], names)
+    groups: dict[tuple[str, ...], list[str]] = {}
+    for f in files:
+        groups.setdefault(dels_of[f], []).append(f)
+    res = None
+    for appl, gfiles in groups.items():
+        if appl:
+            inner = names if key_col in names else names + [key_col]
             dk = spark.read.parquet(*appl).select(key_col).distinct()
-            return out.join(dk, on=key_col, how="left_anti").select(*names)
-        return sdf.mapInArrow(decode_partition, out_schema)
-
-    branches = [decode_branch(gf, appl) for appl, gf in groups.items()]
-    res = branches[0]
-    for b in branches[1:]:
-        res = res.unionByName(b)
+            df = scan([(f, ()) for f in gfiles], inner).join(
+                dk, on=key_col, how="left_anti"
+            ).select(*names)
+        else:
+            df = scan([(f, ()) for f in gfiles], names)
+        res = df if res is None else res.unionByName(df)
     return res
 
 
@@ -898,8 +858,8 @@ def decode_blob_batches(
     """Decode a stream of (blob, footer) Arrow batches into RecordBatches of
     `names` columns, applying the executor-side half of predicate pushdown:
     stripe-stats skip, stripe-bloom skip (both BEFORE any stream of the blob
-    is decompressed), then the exact arrow row filter. Shared by
-    decode_table's mapInArrow task and the tokstripe data source's read().
+    is decompressed), then the exact arrow row filter. Shared by every
+    stripe-file read through decode_file.
 
     `colmap` (evolution.py `column_mapping`: current name -> prior stored
     names, newest first) resolves schema evolution PER STRIPE: stripe
@@ -986,6 +946,107 @@ def decode_blob_batches(
             yield rb
 
 
+# Spark's own default split size (spark.sql.files.maxPartitionBytes): a bin
+# grows past it only when there are fewer files than that many bins
+MAX_BIN_BYTES = 128 << 20
+
+
+def file_bins(manifest: dict, entries: list[tuple], slots: int) -> list[list[tuple]]:
+    """Pack (file, ...) entries into size-balanced bins, one Spark task
+    each: greedy largest-first by the manifest's `enc_bytes` into the
+    lightest bin. min(#files, max(slots, total / MAX_BIN_BYTES)) bins — one
+    per task slot, more only when bins would exceed Spark's split size."""
+    size = {p["file"]: p.get("enc_bytes") or 0 for p in manifest["partitions"].values()}
+    total = sum(size.get(e[0], 0) for e in entries)
+    n = min(len(entries), max(slots, -(-total // MAX_BIN_BYTES)))
+    heap = [(0, i) for i in range(n)]
+    bins: list[list[tuple]] = [[] for _ in range(n)]
+    for e in sorted(entries, key=lambda e: (-size.get(e[0], 0), e[0])):
+        load, i = heapq.heappop(heap)
+        bins[i].append(e)
+        heapq.heappush(heap, (load + size.get(e[0], 0), i))
+    return bins
+
+
+def scan_bins(spark: SparkSession, bins: list, read_bin, schema: str) -> DataFrame:
+    """The manifest-driven scan under every Spark read of stripe files:
+    task i of a `spark.range(len(bins))` runs `read_bin(bins[i])` in its
+    Python worker and yields Arrow batches of `schema`. The manifest
+    already holds the file list and STRIPE_FILE_SCHEMA, so building this
+    DataFrame starts no Spark job — no file listing, no schema inference —
+    and the blobs never pass through a JVM parquet scan."""
+
+    def run(batches):
+        for b in batches:
+            for i in b.column(0).to_pylist():
+                yield from read_bin(bins[i])
+
+    return spark.range(len(bins), numPartitions=len(bins)).mapInArrow(run, schema)
+
+
+def decode_file(
+    path: str,
+    preds: list[tuple],
+    names: list[str],
+    keyset: pa.Array | None = None,
+    key_col: str = "doc_id",
+    colmap: dict[str, list[str]] | None = None,
+    coltypes: dict[str, str] | None = None,
+    accs: tuple = (None, None, None),
+):
+    """Executor side of a stripe-file read: stream one data file's
+    (blob, footer) row groups through decode_blob_batches, then drop the
+    rows whose `key_col` is in `keyset` (the file's inline merge-on-read
+    delete set). Predicate and key columns not in `names` are decoded for
+    the filters and dropped after."""
+    nk = keyset is not None and key_col not in names
+    inner = names + [key_col] if nk else names
+    read_cols = list(dict.fromkeys(inner + [p[1] for p in preds]))
+    with pq.ParquetFile(path) as pf:
+        for rb in decode_blob_batches(
+            pf.iter_batches(columns=["blob", "footer"]), preds, read_cols,
+            inner, *accs, colmap=colmap, coltypes=coltypes,
+        ):
+            if keyset is not None:
+                # null keys are kept: is_in(null)=null -> fill False ->
+                # invert True matches left_anti's null-join semantics
+                hit = pc.fill_null(pc.is_in(rb.column(key_col), value_set=keyset), False)
+                rb = rb.filter(pc.invert(hit))
+                if nk:
+                    rb = rb.select(names)
+            yield rb
+
+
+def scan_stripe_files(
+    spark: SparkSession,
+    manifest: dict,
+    entries: list[tuple[str, tuple[str, ...]]],
+    schema: dict[str, str],
+    names: list[str],
+    preds: list[tuple] = (),
+    keysets: dict[tuple[str, ...], pa.Array] | None = None,
+    colmap: dict[str, list[str]] | None = None,
+    accs: tuple = (None, None, None),
+) -> DataFrame:
+    """Decode (file, applicable delete set) entries of `manifest` into a
+    DataFrame of `names` typed by `schema`, one size-balanced bin per task
+    slot (file_bins, scan_bins). `keysets` maps a delete set to its keys;
+    a file whose set is absent from it is read unmasked."""
+    key_col = (manifest.get("layout") or {}).get("key_col", "doc_id")
+    keysets = keysets or {}
+    coltypes = schema if colmap else None
+
+    def read_bin(entries_):
+        for path, appl in entries_:
+            yield from decode_file(
+                path, preds, names, keysets.get(appl), key_col, colmap, coltypes, accs
+            )
+
+    bins = file_bins(manifest, entries, spark.sparkContext.defaultParallelism)
+    out_schema = ", ".join(f"{n} {_spark_type_str(schema[n])}" for n in names)
+    return scan_bins(spark, bins, read_bin, out_schema)
+
+
 EXPORT_META_SCHEMA = "pid string, stripes long, file string, n_rows long, orc_bytes long"
 
 
@@ -1029,15 +1090,14 @@ def export_orc(
         raise ValueError(f"no committed files for snapshot {snapshot}")
     os.makedirs(out_dir, exist_ok=True)
 
-    def export_partition(batches):
+    def export_bin(entries):
         from pyspark import TaskContext
 
         from .orcexport import OrcFileWriter
 
-        # a pid's stripe rows can split across tasks at parquet row-group
-        # boundaries, so the output name is (pid, taskPartition)-scoped:
-        # no cross-task rename races, still O(#partitions) files, and a
-        # retried task regenerates the identical name (idempotent)
+        # the output name is (pid, task)-scoped: a retried task regenerates
+        # the identical name (idempotent), and files of one pid packed into
+        # different bins never race on a rename
         task_part = TaskContext.get().partitionId()
         writers: dict[str, tuple[OrcFileWriter, str, str]] = {}
         metas = []
@@ -1057,8 +1117,13 @@ def export_orc(
                 }
             )
 
+        def batches():
+            for path, _ in entries:
+                with pq.ParquetFile(path) as pf:
+                    yield from pf.iter_batches(columns=["pid", "blob", "footer"])
+
         try:
-            for batch in batches:
+            for batch in batches():
                 for i in range(batch.num_rows):
                     pid = str(batch.column("pid")[i])
                     footer = footer_from_json(str(batch.column("footer")[i]))
@@ -1085,8 +1150,8 @@ def export_orc(
         if metas:
             yield pa.RecordBatch.from_pylist(metas)
 
-    sdf = spark.read.parquet(*files).select("pid", "stripe_id", "blob", "footer")
-    return sdf.mapInArrow(export_partition, EXPORT_META_SCHEMA)
+    bins = file_bins(m, [(f, ()) for f in files], spark.sparkContext.defaultParallelism)
+    return scan_bins(spark, bins, export_bin, EXPORT_META_SCHEMA)
 
 
 def import_orc(

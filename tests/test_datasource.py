@@ -1,7 +1,7 @@
 """tokstripe Python Data Source: the warehouse as a first-class Spark
 format. Read-path contract: results identical to decode_table / the raw
-table for every filter shape, with PLANNING-TIME pruning visible as the
-task count. Write-path contract: atomic manifest commit, append-refusal,
+table for every filter shape, with PLANNING-TIME pruning visible in the
+planned files and the task count. Write-path contract: atomic manifest commit, append-refusal,
 overwrite, and exactly-once streaming across checkpoint replay."""
 
 import os
@@ -61,16 +61,33 @@ def test_pushed_filters_are_exact(spark, ds_wh):
         assert want.exceptAll(got).count() == 0, i
 
 
+def _planned_files(wh, schema, *filters):
+    """Data files the format's reader packs into its partitions after
+    consuming `filters` (every one must be pushed)."""
+    from orc_spark.datasource import TokstripeReader
+
+    r = TokstripeReader({"path": wh}, schema)
+    assert list(r.pushFilters(list(filters))) == []
+    return [f for p in r.partitions() for f, _ in p.files]
+
+
 def test_planning_time_pruning_reduces_tasks(spark, ds_wh):
+    from pyspark.sql.datasource import EqualTo
+
     wh, _ = ds_wh
     full = _fmt(spark, wh).load()
     n_full = full.rdd.getNumPartitions()
-    n_src = full.where(F.col("source") == "books").rdd.getNumPartitions()
     n_point = full.where(F.col("doc_id") == "doc-0000001000").rdd.getNumPartitions()
-    # source equality = partition-key prune (1 of 4 sources); point lookup =
-    # range + sidecar bloom prune down to the single containing file
-    assert n_src < n_full
-    assert n_point <= 2
+    # source equality = partition-key prune (1 of 5 sources): pruned files
+    # never enter a partition's bin
+    books = _planned_files(wh, full.schema, EqualTo(("source",), "books"))
+    every = _planned_files(wh, full.schema)
+    assert len(set(every)) == len(every) == 20
+    assert 0 < len(books) < len(every)
+    assert all("pid=books#" in f for f in books)
+    # point lookup = range + sidecar bloom prune down to the single
+    # containing file, so one task
+    assert n_point <= 2 and n_point < n_full
     # absent-but-in-range key: everything pruned at planning, 0 rows
     assert full.where(F.col("doc_id") == "doc-0000001000x").count() == 0
 

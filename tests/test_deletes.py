@@ -96,6 +96,11 @@ def test_noop_delete_commits_without_delete_file(spark, wh):
     assert res["n_deleted"] == 0
     assert not res.get("delete_files")
     assert decode_table(spark, wh, snapshot=res["snapshot_id"]).count() == 400
+    # a second no-match delete in a row gets its own default name
+    res2 = deletes.delete_where(spark, wh, ("n_tok", 100000, 200000))
+    assert res2["snapshot_id"] != res["snapshot_id"]
+    assert Warehouse(wh).current_snapshot_id() == res2["snapshot_id"]
+    assert decode_table(spark, wh).count() == 400
 
 
 def test_time_travel_and_rollback(spark, wh):

@@ -41,11 +41,12 @@ def wh(spark, tmp_path):
 
 
 def test_add_column_null_fills(spark, wh):
-    m = evolve_schema(wh, add={"lang": "string"})
+    m = evolve_schema(wh, add={"lang": "string", "tags": "array<int>"})
     snap = m["snapshot_id"]
     got = decode_table(spark, wh, snapshot=snap)
-    assert got.columns == ["doc_id", "tokens", "source", "n_tok", "lang"]
-    assert got.where(F.col("lang").isNull()).count() == 300
+    assert got.columns == ["doc_id", "tokens", "source", "n_tok", "lang", "tags"]
+    assert dict(got.dtypes)["tags"] == "array<int>"
+    assert got.where(F.col("lang").isNull() & F.col("tags").isNull()).count() == 300
     # old data untouched
     assert got.select(F.sum("n_tok")).collect()[0][0] == \
         _df(spark).select(F.sum("n_tok")).collect()[0][0]

@@ -224,9 +224,10 @@ def test_delete_read_plans(spark, tmp_path):
     assert "SortMergeJoin" not in plan  # small delete side must broadcast
 
 
-def test_upsert_read_plan_unions_without_shuffle(spark, tmp_path):
-    """a seq-grouped upsert read is a UNION of per-group mapInArrow scans —
-    still no join and no shuffle on the inline path."""
+def test_upsert_read_plan_is_one_scan_without_shuffle(spark, tmp_path):
+    """an upsert read whose files carry different seq-scoped delete sets is
+    ONE mapInArrow scan (each file applies its own inline mask) — no
+    union, no join and no shuffle on the inline path."""
     from orc_spark import deletes
     from orc_spark.pipeline import decode_table, encode_table
 
@@ -246,6 +247,7 @@ def test_upsert_read_plan_unions_without_shuffle(spark, tmp_path):
     ).withColumn("n_tok", F.size("tokens").cast("int"))
     snap = deletes.upsert(spark, wh, upd, salt_buckets=2)["snapshot_id"]
     plan = _plan(decode_table(spark, wh, snapshot=snap))
-    assert "Union" in plan
+    assert plan.count("MapInArrow") == 1
+    assert "Union" not in plan
     assert "Join" not in plan
     assert "Exchange" not in plan
