@@ -1,9 +1,41 @@
-"""Change-data-capture reads — the Iceberg changelog-scan analog.
+"""Change-data-capture — the one answer to "which commits change rows".
+
+Every reader of row changes plans through this module: the batch
+changelog (`changes_between`), the tokstripe CDC stream
+(`readStream.option("mode", "cdc")`) and the append stream (the default
+`readStream`). Each commit's manifest records what it did
+(`operation(m)`), and `plan_changes` reads that record one way for all of
+them (Delta Lake's rule: the log entry, not a diff against a neighbour,
+says what a commit changed):
+
+  * append  — INSERTS every file of the commit;
+  * upsert  — INSERTS only its new files (partition seq == the upsert's
+    seq), plus the DELETE pre-images of the keys it replaced;
+  * delete  — DELETE pre-images only (it shares its parent's files);
+  * evolve / replace (compaction, materialization) / stage (an upsert's
+    staging commit) change no logical rows and yield nothing.
+
+DELETE pre-images are the rows as they were LAST VISIBLE: the commit's new
+delete files (those its recorded parent — `delete_parent` /
+`upsert_parent` — does not list) select keys out of the PARENT's files,
+minus the keys the parent's own applicable deletes already hide. One size
+rule, deletes.INLINE_DELETE_MAX, bounds the work: at most that many new
+keys are loaded on the driver to bloom/range-prune the parent's files
+(above it every parent file is a task) and prune each stripe in the
+worker (above it the worker filters decoded rows with an exact `is_in`
+mask). The keys load in the worker that reads the task, and the parent's
+deletes load there only where they meet them, so a pre-image costs
+memory in the commit's own key count, never in the parent's accumulated
+deletes.
+
+Every task reads under the BOUND schema (to_snapshot's, or the stream's)
+through `resolve_colmap`: the bound snapshot's evolution aliases plus
+those of the commit the task came from, so renames resolve forward and
+columns a file lacks null-fill.
 
 `changes_between(spark, wh, from_snapshot, to_snapshot)` returns every row
 change committed AFTER `from_snapshot` up to and including `to_snapshot`,
-as a DataFrame of the table's columns (in `to_snapshot`'s schema — older
-commits' files resolve through the evolution alias mapping) plus:
+as a DataFrame of the table's columns (in `to_snapshot`'s schema) plus:
 
     _change_type      'insert' | 'delete'  (an upsert's updated key emits
                       the old version as delete + the new as insert, the
@@ -11,53 +43,190 @@ commits' files resolve through the evolution alias mapping) plus:
     _commit_snapshot  the snapshot that made the change
     _commit_ordinal   its commit-log position (the stream offset)
 
-Metadata does the planning, data reads stay bounded by what changed:
-
-  * INSERTS of a commit = the data files it added (manifest diff against
-    the previous visible commit) decoded directly — no full-table scan;
-    an upsert's own seq-scoped delete never applies to them, so this is
-    a plain decode of just the new files.
-  * DELETES of a commit = the keys in its new delete files, emitted as
-    the rows were LAST VISIBLE (decoded from the parent snapshot with an
-    IN-set key predicate — bloom/range pruned point lookups, honoring the
-    parent's own deletes). Delete keys load driver-side to build the
-    predicate: fine for the operational deletes CDC serves; a delete of
-    half the table is better consumed as a new base.
-  * compaction / materialization / expiry / schema evolution / rollback
-    commits change no logical rows and emit nothing; `stage` snapshots
-    (upsert staging) are skipped — their rows emit through the upsert.
-  * an EXPIRED snapshot inside the range is an error (its pre-images are
-    gone), exactly Iceberg's incremental-read-past-expired failure.
-
-Row-change semantics need the merge-on-read machinery (deletes.py) — on a
-pre-deletes warehouse every commit is pure appends and CDC degrades to
-"every commit's files are inserts", which is still exact.
+An EXPIRED snapshot (or expired parent) inside a changelog range is an
+error — its pre-images are gone, exactly Iceberg's
+incremental-read-past-expired failure; the append stream skips it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from typing import NamedTuple
 
+from pyspark.sql import DataFrame, SparkSession
+
+from . import deletes as _deletes
 from .warehouse import Warehouse
 
+NO_CHANGE = ("evolve", "replace", "stage")
+TAG_COLS = "_change_type string, _commit_snapshot string, _commit_ordinal int"
+TAG_NAMES = ["_change_type", "_commit_snapshot", "_commit_ordinal"]
 
-def _to_schema_names(df: DataFrame, to_schema: dict, to_colmap: dict) -> DataFrame:
-    """Rename/extend a parent-snapshot DataFrame into to_snapshot's schema:
-    aliases rename forward, added columns null-fill, dropped columns drop."""
-    cols = set(df.columns)
-    out = []
-    for n, t in to_schema.items():
-        if n in cols:
-            out.append(F.col(n))
+
+def operation(m: dict) -> str:
+    """How a snapshot came to be (Iceberg's snapshot operation): append
+    (encode / stream / import), delete or upsert (deletes.py), evolve
+    (evolution.py), replace (compaction / materialization, maintenance.py)
+    or stage (an upsert's staging commit)."""
+    if m.get("compacted_from") or m.get("materialized_from"):
+        return "replace"
+    return m.get("operation") or "append"
+
+
+class ChangeTask(NamedTuple):
+    """One data file to decode for one commit's change."""
+
+    file: str
+    size: int                    # enc_bytes, for bin packing
+    dels: tuple[str, ...]        # deletes applicable to `file` where it is read
+    change: str                  # 'insert' | 'delete'
+    snap: str
+    ordinal: int
+    colmap: dict | None          # its commit's evolution mapping (resolve_colmap)
+    key_col: str
+    keys_from: tuple[str, ...] = ()  # pre-images: the commit's new delete files
+
+
+def _tasks(m, files, change, snap, ordinal, key_col, keys_from=()):
+    from .pipeline import file_sizes
+
+    size = file_sizes(m)
+    colmap = m.get("column_mapping") or None
+    return [
+        ChangeTask(f, size[f], appl, change, snap, ordinal, colmap, key_col,
+                   keys_from)
+        for f, appl in _deletes.applicable_deletes(m, files).items()
+    ]
+
+
+def _pre_images(wh, m, snap, ordinal, key_col) -> list[ChangeTask]:
+    from .pipeline import plan_scan_files
+
+    parent = m.get("delete_parent") or m.get("upsert_parent")
+    pm = wh.read_manifest(parent) if parent else None
+    if pm is None:
+        raise ValueError(
+            f"parent {parent!r} of {snap!r} is expired — CDC pre-images "
+            "are gone"
+        )
+    old = set(_deletes.delete_files_of(pm))
+    new = tuple(p for p in _deletes.delete_files_of(m) if p not in old)
+    if not new:
+        return []
+    files = [p["file"] for p in pm["partitions"].values()]
+    if _deletes.count_delete_keys(list(new)) <= _deletes.INLINE_DELETE_MAX:
+        keys = _deletes.load_delete_keys(list(new), key_col).drop_null()
+        files = plan_scan_files(pm, [("in", key_col, keys.to_pylist())]) \
+            if len(keys) else []
+    return _tasks(pm, files, "delete", snap, ordinal, key_col, new)
+
+
+def plan_changes(wh: Warehouse, commits, cdc: bool = True) -> list[ChangeTask]:
+    """The change tasks of `commits`, (ordinal, snapshot) commit-log
+    entries (see module docstring). `cdc=False` is the append stream's
+    view: inserts only, and expired commits are skipped instead of
+    raising."""
+    tasks: list[ChangeTask] = []
+    for ordinal, snap in commits:
+        m = wh.read_manifest(snap)
+        if m is None:
+            # an upsert's stage manifest is removed once the upsert commits
+            # (its rows emit through the upsert)
+            if cdc and not snap.endswith("-stage"):
+                raise ValueError(
+                    f"snapshot {snap!r} (ordinal {ordinal}) inside the CDC "
+                    "range is expired — its row pre-images are gone"
+                )
             continue
-        alias = next((a for a in (to_colmap or {}).get(n, ()) if a in cols), None)
-        if alias is not None:
-            out.append(F.col(alias).alias(n))
-        else:
-            from .pipeline import _spark_type_str
+        op = operation(m)
+        if op in NO_CHANGE:
+            continue
+        key_col = (m.get("layout") or {}).get("key_col", "doc_id")
+        if cdc and op in ("delete", "upsert"):
+            tasks += _pre_images(wh, m, snap, ordinal, key_col)
+        if op == "delete":
+            continue
+        files = [
+            p["file"] for p in m["partitions"].values()
+            if op != "upsert" or p.get("seq", 0) == m.get("seq")
+        ]
+        tasks += _tasks(m, files, "insert", snap, ordinal, key_col)
+    return tasks
 
-            out.append(F.lit(None).cast(_spark_type_str(t)).alias(n))
-    return df.select(*out)
+
+def resolve_colmap(names, bound: dict | None, own: dict | None) -> dict:
+    """The alias lists a change task's file reads `names` through: each
+    name's aliases in the bound snapshot's mapping, then the aliases the
+    task's own commit records for any of those names (a materialize or
+    reencode clears the bound mapping, but older files still store their
+    commit's names). Never None, so a column the file lacks null-fills."""
+    bound, own = bound or {}, own or {}
+    out = {}
+    for n in names:
+        chain = [n, *bound.get(n, ())]
+        out[n] = list(dict.fromkeys(
+            chain[1:] + [a for c in chain for a in own.get(c, ())]
+        ))
+    return out
+
+
+def read_tasks(tasks, schema: dict, colmap: dict | None, tag: bool = True):
+    """Executor side of every change read: decode each task's file
+    (pipeline.decode_file) into Arrow batches of the bound `schema` (name
+    -> type) under its `colmap` (resolve_colmap), then, with `tag`,
+    append the TAG_NAMES columns. A pre-image keeps only its commit's keys
+    the parent still showed; any other task drops its applicable
+    deletes."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from .pipeline import decode_file
+
+    names = list(schema)
+    visible, masks = {}, {}
+
+    def visible_keys(t):
+        # the commit's new keys minus those the parent's deletes already
+        # hide in this file, which load only where they meet the new keys
+        if (t.keys_from, t.dels) not in visible:
+            keys = _deletes.load_delete_keys(list(t.keys_from), t.key_col).drop_null()
+            if t.dels and len(keys):
+                gone = _deletes.load_delete_keys(list(t.dels), t.key_col, among=keys)
+                keys = keys.filter(pc.invert(pc.is_in(keys, value_set=gone)))
+            visible[t.keys_from, t.dels] = keys
+        return visible[t.keys_from, t.dels]
+
+    for t in tasks:
+        preds, mask, keep = [], None, None
+        if t.keys_from:
+            keep = visible_keys(t)
+            if not len(keep):
+                continue
+            if len(keep) <= _deletes.INLINE_DELETE_MAX:
+                # few enough to prune stripes by stats and bloom
+                preds, keep = [("in", t.key_col, keep.to_pylist())], None
+        elif t.dels:
+            # an insert's own commit's deletes are seq-scoped away from its
+            # new files, so only unscoped (legacy) entries land here
+            if t.dels not in masks:
+                masks[t.dels] = _deletes.load_delete_keys(list(t.dels), t.key_col)
+            mask = masks[t.dels]
+        for rb in decode_file(
+            t.file, preds, names, mask, t.key_col,
+            resolve_colmap(names, colmap, t.colmap), schema,
+        ):
+            if keep is not None:
+                rb = rb.filter(pc.is_in(rb.column(t.key_col), value_set=keep))
+            if tag:
+                n = rb.num_rows
+                rb = pa.RecordBatch.from_arrays(
+                    rb.columns + [
+                        pa.array([t.change] * n, pa.string()),
+                        pa.array([t.snap] * n, pa.string()),
+                        pa.array([t.ordinal] * n, pa.int32()),
+                    ],
+                    names=names + TAG_NAMES,
+                )
+            yield rb
 
 
 def changes_between(
@@ -67,8 +236,9 @@ def changes_between(
     to_snapshot: str | None = None,
 ) -> DataFrame:
     """The changelog from (exclusive) `from_snapshot` to (inclusive)
-    `to_snapshot` (default CURRENT). See module docstring."""
-    from . import deletes as _deletes
+    `to_snapshot` (default CURRENT): one manifest-driven scan of every
+    change task in the range. See module docstring."""
+    from .pipeline import _spark_type_str, file_bins, scan_bins
 
     wh = Warehouse(warehouse_path)
     to_snapshot = wh.resolve_snapshot(to_snapshot)
@@ -86,86 +256,15 @@ def changes_between(
     to_m = wh.read_manifest(to_snapshot)
     if not to_m:
         raise ValueError(f"no manifest for {to_snapshot!r}")
-    to_schema = to_m["schema"]
-    to_colmap = to_m.get("column_mapping")
-    key_col = (to_m.get("layout") or {}).get("key_col", "doc_id")
-
-    prev_snap = from_snapshot
-    prev_m = wh.read_manifest(from_snapshot)
-    if not prev_m:
+    if not wh.read_manifest(from_snapshot):
         raise ValueError(f"no manifest for {from_snapshot!r} (expired?)")
-    chunks: list[DataFrame] = []
-    names = list(to_schema.keys())
-
-    def tag(df, change, snap, ordinal):
-        return df.select(
-            *names,
-            F.lit(change).alias("_change_type"),
-            F.lit(snap).alias("_commit_snapshot"),
-            F.lit(ordinal).alias("_commit_ordinal"),
-        )
-
-    for ordinal in range(i_from + 1, i_to + 1):
-        snap = log[ordinal]
-        m = wh.read_manifest(snap)
-        if m is None:
-            if snap.endswith("-stage"):
-                continue  # upsert staging: rows emit through the dest
-            raise ValueError(
-                f"snapshot {snap!r} (ordinal {ordinal}) inside the CDC "
-                "range is expired — its row pre-images are gone"
-            )
-        op = m.get("operation") or "append"
-        if op in ("stage", "evolve") or m.get("compacted_from") \
-                or m.get("materialized_from"):
-            continue  # no logical row change
-
-        # DELETES first (changelog order: old version out, new version in)
-        prev_files = {p["file"] for p in prev_m["partitions"].values()}
-        prev_dels = set(_deletes.delete_files_of(prev_m))
-        new_dels = [
-            p for p in _deletes.delete_files_of(m) if p not in prev_dels
-        ]
-        if new_dels:
-            from .pipeline import decode_table
-
-            keys = _deletes.load_delete_keys(new_dels, key_col).to_pylist()
-            if keys:
-                old = decode_table(
-                    spark, warehouse_path, snapshot=prev_snap,
-                    predicate=(key_col, keys),
-                )
-                chunks.append(
-                    tag(_to_schema_names(old, to_schema, to_colmap),
-                        "delete", snap, ordinal)
-                )
-        # INSERTS: the files this commit added
-        new_files = [
-            p["file"] for p in m["partitions"].values()
-            if p["file"] not in prev_files
-        ]
-        if new_files:
-            from .pipeline import scan_stripe_files
-
-            # plain decode under to_snapshot's schema: its alias mapping
-            # resolves older stored names, added columns null-fill
-            ins = scan_stripe_files(
-                spark, m, [(f, ()) for f in new_files], to_schema, names,
-                colmap=to_colmap or None,
-            )
-            chunks.append(tag(ins, "insert", snap, ordinal))
-        prev_snap, prev_m = snap, m
-
-    if not chunks:
-        from .pipeline import _spark_type_str
-
-        empty = ", ".join(
-            [f"{n} {_spark_type_str(t)}" for n, t in to_schema.items()]
-            + ["_change_type string", "_commit_snapshot string",
-               "_commit_ordinal int"]
-        )
-        return spark.createDataFrame([], empty)
-    out = chunks[0]
-    for c in chunks[1:]:
-        out = out.unionByName(c)
-    return out
+    schema, colmap = to_m["schema"], to_m.get("column_mapping")
+    tasks = plan_changes(wh, list(enumerate(log))[i_from + 1:i_to + 1])
+    bins = file_bins(
+        {t.file: t.size for t in tasks}, tasks,
+        spark.sparkContext.defaultParallelism,
+    )
+    cols = ", ".join(f"{n} {_spark_type_str(t)}" for n, t in schema.items())
+    return scan_bins(
+        spark, bins, lambda b: read_tasks(b, schema, colmap), f"{cols}, {TAG_COLS}"
+    )

@@ -58,11 +58,12 @@ and `commit(messages, batchId)` publishes them as snapshot
 already-committed batch manifest and DELETES its re-staged files instead of
 committing twice. `readStream` tails committed snapshots as micro-batches
 (append semantics); with `.option("mode", "cdc")` it becomes a CHANGELOG
-stream instead: each commit's inserts decode from just the files it added
-and its delete pre-images decode from the parent snapshot via pruned
-IN-set point lookups, emitted with `_change_type` / `_commit_snapshot` /
+stream instead, emitted with `_change_type` / `_commit_snapshot` /
 `_commit_ordinal` — the streaming twin of `cdc.changes_between`, same
-offsets, exactly-once across restarts.
+offsets, exactly-once across restarts. Both modes plan through
+cdc.plan_changes, the one rule for which commits change rows (the append
+stream keeps only its insert tasks), and read size-balanced bins of those
+tasks like the batch reader.
 
 KNOWN UPSTREAM SHARP EDGE (Spark 4.1, `spark.sql.python.filterPushdown
 .enabled`): use ONE action per `load()` when mixing filtered and
@@ -191,12 +192,11 @@ class TokstripeDataSource(DataSource):
             f"{n} {_spark_type_str(t)}" for n, t in manifest["schema"].items()
         )
         if self.options.get("mode") == "cdc":
+            from .cdc import TAG_COLS
+
             # changelog stream (readStream + mode=cdc): table columns plus
             # change attribution, same shape as cdc.changes_between
-            cols += (
-                ", _change_type string, _commit_snapshot string, "
-                "_commit_ordinal int"
-            )
+            cols += ", " + TAG_COLS
         return cols
 
     def reader(self, schema: StructType) -> "TokstripeReader":
@@ -212,26 +212,9 @@ class TokstripeDataSource(DataSource):
         return TokstripeStreamReader(self.options, schema)
 
 
-class _FilePartition(InputPartition):
-    def __init__(self, path: str, dels: tuple = (), change: str = "",
-                 snap: str = "", ordinal: int = -1, keys: tuple = (),
-                 kcol: str = "", colmap: dict | None = None):
-        self.path = path
-        self.dels = dels  # delete files applicable to THIS file (seq-scoped)
-        # CDC-stream extras (mode="cdc"): change type + commit attribution,
-        # pre-image key IN-set (delete partitions), and the source commit's
-        # evolution mapping for name resolution
-        self.change = change
-        self.snap = snap
-        self.ordinal = ordinal
-        self.keys = keys
-        self.kcol = kcol
-        self.colmap = colmap
-
-
 class _BinPartition(InputPartition):
-    def __init__(self, files: list[tuple[str, tuple[str, ...]]]):
-        self.files = files  # (data file, its seq-scoped delete set)
+    def __init__(self, files: list):
+        self.files = files  # one pipeline.file_bins bin of its reader's entries
 
 
 class _TokstripeReaderBase(DataSourceReader):
@@ -391,7 +374,7 @@ class _TokstripeReaderBase(DataSourceReader):
         return None
 
     def partitions(self):
-        from .pipeline import file_bins, plan_scan_files
+        from .pipeline import file_bins, file_sizes, plan_scan_files
 
         preds = self._preds + self._hint_preds
         files = plan_scan_files(self._manifest, preds) if preds else list(self._dels_of)
@@ -400,7 +383,7 @@ class _TokstripeReaderBase(DataSourceReader):
         # SparkContext, so the planning host's cores stand in for
         # defaultParallelism (equal under local[*])
         bins = file_bins(
-            self._manifest, [(f, self._dels_of[f]) for f in files],
+            file_sizes(self._manifest), [(f, self._dels_of[f]) for f in files],
             os.cpu_count() or 1,
         )
         # empty scan: the API needs >= 1 partition; an empty bin reads
@@ -466,31 +449,50 @@ class TokstripeDataSourceNoPushdown(TokstripeDataSource):
 
 
 class TokstripeStreamReader(DataSourceStreamReader):
-    """Tail the warehouse as a stream: every snapshot that commits becomes a
-    micro-batch (one task per data file). The offset is a single integer —
-    a position in the warehouse's append-only commit log
-    (Warehouse.commit_log), so checkpoints stay O(1) no matter how long the
-    warehouse's tail grows (the previous full-name-list offset grew without
-    bound). Snapshot publication is atomic (one manifest rename), so a
-    logged snapshot is complete; snapshots must not be re-committed after
-    publication when consumed this way (encode_table commits once at the
-    end of a job; stream-writer epochs are final). Use
-    .option("snapshot_prefix", ...) to tail one logical stream (e.g. a
-    stream writer's '<name>-e' epochs) out of a shared warehouse — the
-    prefix filter applies at planning, positions are warehouse-global."""
+    """Tail the warehouse as a stream: each micro-batch covers the commits
+    logged since the last one, planned by cdc.plan_changes — the same
+    change tasks as the batch changelog, packed into size-balanced bins
+    (pipeline.file_bins), one partition each. The default APPEND stream
+    (Iceberg incremental-append-scan semantics) delivers only the insert
+    tasks: every file of an append, an upsert's NEW files; delete, evolve,
+    compaction / materialization and stage commits deliver nothing (no
+    retractions, no re-delivery of shared or rewritten files), and expired
+    commits are skipped. With .option("mode", "cdc") it is a CHANGELOG
+    stream: delete pre-images too, plus the `_change_type` /
+    `_commit_snapshot` / `_commit_ordinal` columns, and an expired commit
+    in range raises.
 
-    CDC_COLS = ("_change_type", "_commit_snapshot", "_commit_ordinal")
+    The offset is a single integer — a position in the warehouse's
+    append-only commit log (Warehouse.commit_log), so checkpoints stay
+    O(1) no matter how long the warehouse's tail grows. Snapshot
+    publication is atomic (one manifest rename), so a logged snapshot is
+    complete; snapshots must not be re-committed after publication when
+    consumed this way (encode_table commits once at the end of a job;
+    stream-writer epochs are final). Use .option("snapshot_prefix", ...)
+    to tail one logical stream (e.g. a stream writer's '<name>-e' epochs)
+    out of a shared warehouse — the prefix filter applies at planning,
+    positions are warehouse-global."""
 
     def __init__(self, options, schema: StructType):
+        from .cdc import TAG_NAMES
+
         self._wh_path = options.get("path")
         if not self._wh_path:
             raise ValueError("tokstripe requires .option('path', <warehouse dir>)")
         self._prefix = options.get("snapshot_prefix", "")
         self._cdc = options.get("mode") == "cdc"
-        self._names = [f.name for f in schema.fields]
-        self._types = {f.name: f.dataType.simpleString() for f in schema.fields}
-        if self._cdc:
-            self._names = [n for n in self._names if n not in self.CDC_COLS]
+        tags = TAG_NAMES if self._cdc else ()
+        self._schema = {
+            f.name: f.dataType.simpleString()
+            for f in schema.fields if f.name not in tags
+        }
+        # the mapping of the snapshot the schema was bound from; every
+        # commit's files resolve through it (cdc.resolve_colmap)
+        wh = self._wh()
+        snap = wh.resolve_snapshot(options.get("snapshot"))
+        self._colmap = ((wh.read_manifest(snap) if snap else None) or {}).get(
+            "column_mapping"
+        )
 
     def _wh(self):
         from .warehouse import Warehouse
@@ -504,8 +506,11 @@ class TokstripeStreamReader(DataSourceStreamReader):
         return {"pos": len(self._wh().commit_log())}
 
     def partitions(self, start: dict, end: dict):
+        from .cdc import plan_changes
+        from .pipeline import file_bins
+
         wh = self._wh()
-        log = wh.commit_log()
+        commits = list(enumerate(wh.commit_log()))
         # legacy (pre-log) checkpoints carry name-lists under "seen"; honor
         # them at BOTH bounds — a replayed legacy batch (start AND end
         # legacy) must re-deliver exactly its original names, not everything
@@ -513,159 +518,27 @@ class TokstripeStreamReader(DataSourceStreamReader):
         # overhang (duplicates, breaking exactly-once)
         if "seen" in end:
             in_end = set(end["seen"])
-            cand = [s for s in log if s in in_end]
+            commits = [c for c in commits if c[1] in in_end]
         else:
-            cand = log[: end.get("pos", len(log))]
+            commits = commits[: end.get("pos", len(commits))]
         if "seen" in start:
             in_start = set(start["seen"])
-            new = [s for s in cand if s not in in_start]
+            commits = [c for c in commits if c[1] not in in_start]
         else:
             # pos start with legacy end cannot occur (offsets only move
             # forward from legacy to pos); slice is the pos/pos fast path
-            new = cand[start.get("pos", 0):]
-        new = [s for s in new if s.startswith(self._prefix)]
-        # this is an APPEND stream (Iceberg incremental-append-scan
-        # semantics, deletes.py): 'delete' snapshots share their parent's
-        # data files verbatim — emitting one would re-deliver the whole
-        # parent table, so they are metadata-only here; 'stage' snapshots
-        # are an upsert's staging commit (their files deliver exactly once
-        # through the upsert dest); an 'upsert' delivers only its NEW
-        # files (partition seq == the upsert's seq). Retractions are out
-        # of scope for an append stream, as in Iceberg.
-        if self._cdc:
-            parts = self._cdc_partitions(wh, log, new)
-            return parts or [_FilePartition("")]
-        out = []
-        for s in new:
-            m = wh.read_manifest(s)
-            if m is None:  # expired, or a removed stage manifest
-                continue
-            op = m.get("operation")
-            if op in ("delete", "stage"):
-                continue
-            parts = m.get("partitions", {}).values()
-            if op == "upsert":
-                seq = m.get("seq")
-                files = [p["file"] for p in parts if p.get("seq", 0) == seq]
-            else:
-                files = [p["file"] for p in parts]
-            # evolution-aware: this commit's alias mapping resolves its
-            # files' stored stream names against the bound read schema
-            cm = m.get("column_mapping") or None
-            out += [_FilePartition(f, colmap=cm) for f in files]
-        return out or [_FilePartition("")]
+            commits = commits[start.get("pos", 0):]
+        commits = [c for c in commits if c[1].startswith(self._prefix)]
+        tasks = plan_changes(wh, commits, cdc=self._cdc)
+        # planning runs in a Python worker: the host's cores stand in for
+        # defaultParallelism, as in the batch reader
+        bins = file_bins({t.file: t.size for t in tasks}, tasks, os.cpu_count() or 1)
+        return [_BinPartition(b) for b in bins] or [_BinPartition([])]
 
-    def _cdc_partitions(self, wh, log, new):
-        """Changelog planning (mode='cdc'), mirroring cdc.changes_between:
-        per commit, inserts = the files it added (decoded directly), delete
-        pre-images = its new delete keys read from the PARENT snapshot via
-        the pruned IN-set scan, honoring the parent's own deletes. Pre-image
-        keys ride in the partition (driver-planned); a delete commit whose
-        key set exceeds deletes.INLINE_DELETE_MAX fails loudly — consume a
-        table-rewrite-sized delete as a new base, not a change stream."""
-        from . import deletes as _deletes
-        from .pipeline import plan_scan_files
+    def read(self, partition: _BinPartition):
+        from .cdc import read_tasks
 
-        out = []
-        for s in new:
-            m = wh.read_manifest(s)
-            if m is None:
-                if s.endswith("-stage"):
-                    continue
-                raise ValueError(
-                    f"snapshot {s!r} in the CDC stream range is expired — "
-                    "its row pre-images are gone"
-                )
-            op = m.get("operation") or "append"
-            if op in ("stage", "evolve") or m.get("compacted_from") \
-                    or m.get("materialized_from"):
-                continue
-            ordinal = log.index(s)
-            kcol = (m.get("layout") or {}).get("key_col", "doc_id")
-            colmap = m.get("column_mapping") or None
-            parent_name = m.get("delete_parent") or m.get("upsert_parent")
-            if op in ("delete", "upsert"):
-                pm = wh.read_manifest(parent_name) if parent_name else None
-                if pm is None:
-                    raise ValueError(
-                        f"parent {parent_name!r} of {s!r} is expired — "
-                        "CDC pre-images are gone"
-                    )
-                pdels = set(_deletes.delete_files_of(pm))
-                new_dels = [
-                    p for p in _deletes.delete_files_of(m) if p not in pdels
-                ]
-                if new_dels:
-                    n_keys = _deletes.count_delete_keys(new_dels)
-                    if n_keys > _deletes.INLINE_DELETE_MAX:
-                        raise ValueError(
-                            f"delete commit {s!r} removes {n_keys} keys — "
-                            "above the CDC stream's in-partition bound; "
-                            "re-baseline the consumer or use batch "
-                            "cdc.changes_between"
-                        )
-                    keys = tuple(
-                        _deletes.load_delete_keys(new_dels, kcol).to_pylist()
-                    )
-                    if keys:
-                        hit_files = plan_scan_files(
-                            pm, [("in", kcol, list(keys))]
-                        )
-                        for f, appl in _deletes.applicable_deletes(
-                            pm, hit_files
-                        ).items():
-                            out.append(_FilePartition(
-                                f, dels=appl, change="delete", snap=s,
-                                ordinal=ordinal, keys=keys, kcol=kcol,
-                                colmap=pm.get("column_mapping"),
-                            ))
-            parts = m.get("partitions", {}).values()
-            if op == "upsert":
-                seq = m.get("seq")
-                ins = [p["file"] for p in parts if p.get("seq", 0) == seq]
-            elif op == "delete":
-                ins = []
-            else:
-                ins = [p["file"] for p in parts]
-            out += [
-                _FilePartition(f, change="insert", snap=s, ordinal=ordinal,
-                               colmap=colmap)
-                for f in ins
-            ]
-        return out
-
-    def read(self, partition: _FilePartition):
-        if not partition.path:
-            return
-        import pyarrow as pa
-
-        from . import deletes as _deletes
-        from .pipeline import decode_file
-
-        names = self._names
-        kcol = partition.kcol or "doc_id"
-        preds = [("in", kcol, list(partition.keys))] if partition.keys else []
-        keyset = (
-            _deletes.load_delete_keys(list(partition.dels), kcol)
-            if partition.dels else None
-        )
-        colmap = partition.colmap
-        for rb in decode_file(
-            partition.path, preds, names, keyset, kcol, colmap,
-            self._types if colmap else None,
-        ):
-            if self._cdc:
-                n = rb.num_rows
-                rb = pa.RecordBatch.from_arrays(
-                    list(rb.columns)
-                    + [
-                        pa.array([partition.change] * n, pa.string()),
-                        pa.array([partition.snap] * n, pa.string()),
-                        pa.array([partition.ordinal] * n, pa.int32()),
-                    ],
-                    names=names + list(self.CDC_COLS),
-                )
-            yield rb
+        yield from read_tasks(partition.files, self._schema, self._colmap, self._cdc)
 
     def commit(self, end: dict) -> None:
         pass  # snapshots are durable; nothing to release

@@ -128,19 +128,28 @@ def count_delete_keys(files: list[str]) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
-def load_delete_keys(files: list[str], key_col: str):
+def load_delete_keys(files: list[str], key_col: str, among=None):
     """Materialize the delete-key column as ONE arrow array (driver-side;
     callers gate on count_delete_keys first). Distinct not required —
-    `is_in` semantics don't care about duplicates."""
+    `is_in` semantics don't care about duplicates. With `among` (an arrow
+    array), only those keys are kept, read batch by batch, so memory is
+    bounded by `among` rather than by the delete files."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    cols = [pq.read_table(f, columns=[key_col]).column(key_col) for f in files]
+    chunks, typ = [], None
+    for f in files:
+        with pq.ParquetFile(f) as pf:
+            typ = pf.schema_arrow.field(key_col).type
+            for b in pf.iter_batches(columns=[key_col]):
+                k = b.column(0)
+                chunks.append(
+                    k if among is None else k.filter(pc.is_in(k, value_set=among))
+                )
     # delete files of different writers may differ in the key field's
     # nullability, which concat_tables rejects: concatenate the arrays
-    return pa.chunked_array(
-        [c for col in cols for c in col.chunks], type=cols[0].type
-    ).combine_chunks()
+    return pa.chunked_array(chunks, type=typ).combine_chunks()
 
 
 def _write_delete_files(keys_df, warehouse_path: str, dest: str) -> list[str]:

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .cdc import operation
 from .warehouse import Warehouse
 
 SNAPSHOTS_SCHEMA = (
@@ -66,19 +67,12 @@ def snapshots_table(spark: SparkSession, warehouse_path: str) -> DataFrame:
             continue
         parts = m.get("partitions", {})
         status = "current" if snap == current else "committed"
-        # Iceberg's snapshots.operation analog: how this snapshot came to
-        # be — append (encode/stream/import), delete/upsert (deletes.py),
-        # evolve (evolution.py), replace (compaction/materialization)
-        if m.get("compacted_from") or m.get("materialized_from"):
-            op = "replace"
-        else:
-            op = m.get("operation") or "append"
         rows.append((
             ordinal,
             snap,
             m.get("parent"),
             status,
-            op,
+            operation(m),
             len(parts),
             sum(int(p.get("stripes") or 0) for p in parts.values()),
             sum(int(p.get("n_rows") or 0) for p in parts.values()),

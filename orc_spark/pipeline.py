@@ -951,16 +951,21 @@ def decode_blob_batches(
 MAX_BIN_BYTES = 128 << 20
 
 
-def file_bins(manifest: dict, entries: list[tuple], slots: int) -> list[list[tuple]]:
-    """Pack (file, ...) entries into size-balanced bins, one Spark task
-    each: greedy largest-first by the manifest's `enc_bytes` into the
-    lightest bin. min(#files, max(slots, total / MAX_BIN_BYTES)) bins — one
-    per task slot, more only when bins would exceed Spark's split size."""
-    size = {p["file"]: p.get("enc_bytes") or 0 for p in manifest["partitions"].values()}
+def file_sizes(manifest: dict) -> dict[str, int]:
+    """Data file -> its `enc_bytes`, the weight file_bins packs by."""
+    return {p["file"]: p.get("enc_bytes") or 0 for p in manifest["partitions"].values()}
+
+
+def file_bins(size: dict[str, int], entries: list, slots: int) -> list[list]:
+    """Pack entries whose first field is a data file into size-balanced
+    bins, one Spark task each: greedy largest-first by `size[file]` into
+    the lightest bin. min(#entries, max(slots, total / MAX_BIN_BYTES))
+    bins — one per task slot, more only when bins would exceed Spark's
+    split size."""
     total = sum(size.get(e[0], 0) for e in entries)
     n = min(len(entries), max(slots, -(-total // MAX_BIN_BYTES)))
     heap = [(0, i) for i in range(n)]
-    bins: list[list[tuple]] = [[] for _ in range(n)]
+    bins: list[list] = [[] for _ in range(n)]
     for e in sorted(entries, key=lambda e: (-size.get(e[0], 0), e[0])):
         load, i = heapq.heappop(heap)
         bins[i].append(e)
@@ -1042,7 +1047,7 @@ def scan_stripe_files(
                 path, preds, names, keysets.get(appl), key_col, colmap, coltypes, accs
             )
 
-    bins = file_bins(manifest, entries, spark.sparkContext.defaultParallelism)
+    bins = file_bins(file_sizes(manifest), entries, spark.sparkContext.defaultParallelism)
     out_schema = ", ".join(f"{n} {_spark_type_str(schema[n])}" for n in names)
     return scan_bins(spark, bins, read_bin, out_schema)
 
@@ -1150,7 +1155,9 @@ def export_orc(
         if metas:
             yield pa.RecordBatch.from_pylist(metas)
 
-    bins = file_bins(m, [(f, ()) for f in files], spark.sparkContext.defaultParallelism)
+    bins = file_bins(
+        file_sizes(m), [(f, ()) for f in files], spark.sparkContext.defaultParallelism
+    )
     return scan_bins(spark, bins, export_bin, EXPORT_META_SCHEMA)
 
 

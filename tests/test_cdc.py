@@ -192,3 +192,215 @@ def test_changelog_errors(spark, wh):
     expire_snapshots(wh, [d1])
     with pytest.raises(ValueError, match="expired"):
         changes_between(spark, wh, "c0", u)
+
+
+def _drain(spark, wh, out, ckpt, **opts):
+    """One availableNow run of a tokstripe stream into a parquet sink."""
+    from orc_spark.datasource import register
+
+    register(spark)
+    rdr = spark.readStream.format("tokstripe").option("path", wh)
+    for k, v in opts.items():
+        rdr = rdr.option(k, v)
+    q = (
+        rdr.load().writeStream.format("parquet")
+        .option("path", out).option("checkpointLocation", ckpt)
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    return spark.read.parquet(out)
+
+
+def test_changelog_after_materialize_is_only_the_delete(spark, wh, tmp_path):
+    """A delete committed after a materialization emits its one pre-image
+    and nothing else: its pre-images come from its recorded parent, and the
+    rewrite commit itself changes no rows (it used to re-emit every
+    rewritten row as an insert of the next commit)."""
+    from orc_spark.maintenance import materialize_deletes
+
+    d1 = deletes.delete_where(spark, wh, ("n_tok", 5, 8))["snapshot_id"]
+    materialize_deletes(spark, wh, snapshot=d1, salt_buckets=4, stripe_tokens=800)
+    d = deletes.delete_where(spark, wh, ("doc_id", ["d00200"]))["snapshot_id"]
+    batch = changes_between(spark, wh, d1, d)
+    rows = batch.collect()
+    assert [(r["_change_type"], r["doc_id"], r["_commit_snapshot"]) for r in rows] \
+        == [("delete", "d00200", d)]
+    # the CDC stream's tail over the same range is the same changelog
+    got = _drain(spark, wh, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
+                 mode="cdc")
+    i_d1 = Warehouse(wh).commit_log().index(d1)
+    tail = got.where(F.col("_commit_ordinal") > i_d1).select(*batch.columns)
+    assert tail.collect() == rows
+
+
+def test_changelog_across_evolution_and_materialize(spark, tmp_path):
+    """Every change task reads under the bound schema, through its own
+    commit's aliases too: a delete whose parent predates a materialization
+    (which clears the alias mapping) still renames forward and null-fills,
+    and a stream bound after an ADD and a RENAME replays the commits
+    before them."""
+    from orc_spark.maintenance import materialize_deletes
+
+    w = str(tmp_path / "wh")
+    encode_table(spark, _df(spark, 60), w, snapshot="e0", salt_buckets=2,
+                 stripe_tokens=800, weight_col=None)
+    ev = evolve_schema(w, snapshot="e0", rename={"n_tok": "tok_count"},
+                       add={"lang": "string"})["snapshot_id"]
+    d = deletes.delete_where(spark, w, ("doc_id", ["d00005"]))["snapshot_id"]
+    got = _drain(spark, w, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
+                 mode="cdc")
+    base = got.where("_commit_snapshot = 'e0'")
+    assert base.where("tok_count IS NOT NULL AND lang IS NULL").count() == 60
+    assert got.where("_change_type = 'delete'").count() == 1
+    m = materialize_deletes(spark, w, snapshot=d, salt_buckets=2,
+                            stripe_tokens=800)["snapshot_id"]
+    assert not Warehouse(w).read_manifest(m).get("column_mapping")
+    rows = changes_between(spark, w, ev, m).collect()
+    assert [(r["_change_type"], r["doc_id"], r["tok_count"], r["lang"])
+            for r in rows] == [("delete", "d00005", 7, None)]
+    # the rewrite changes no rows: a restarted stream emits nothing new
+    got = _drain(spark, w, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
+                 mode="cdc")
+    assert got.count() == 61
+
+
+def test_append_stream_skips_evolve_and_rewrite_commits(spark, wh, tmp_path):
+    """An append stream delivers each row once: a schema evolution and a
+    materialization share or rewrite existing rows, so they deliver
+    nothing; only the later append's 40 rows follow the base 300."""
+    from orc_spark.maintenance import materialize_deletes
+
+    out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+    assert _drain(spark, wh, out, ckpt).count() == 300
+    ev = evolve_schema(wh, snapshot="c0", add={"lang": "string"})["snapshot_id"]
+    materialize_deletes(spark, wh, snapshot=ev, salt_buckets=4, stripe_tokens=800)
+    want = _df(spark, 340)
+    encode_table(spark, want.where("doc_id >= 'd00300'"), wh, snapshot="c1",
+                 salt_buckets=2, stripe_tokens=800, resume=False)
+    got = _drain(spark, wh, out, ckpt).select(*want.columns)
+    assert got.count() == 340
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_pre_images_above_inline_bound_load_in_workers(spark, wh, monkeypatch):
+    """Above deletes.INLINE_DELETE_MAX a delete's pre-images plan without
+    loading its keys on the driver: every parent file becomes a task and
+    the worker reading it loads the keys. The worker filters decoded rows
+    by them exactly, and loads the parent's deletes (also above the bound
+    here) only where they meet them. The changelog is unchanged."""
+    from orc_spark.cdc import plan_changes, read_tasks
+
+    d1 = deletes.delete_where(spark, wh, ("n_tok", 5, 8))["snapshot_id"]
+    live = [f"d{i:05d}" for i in range(300) if not 3 <= i % 19 <= 6]
+    d2 = deletes.delete_where(spark, wh, ("doc_id", live[::12][:20]))
+    assert d2["n_deleted"] == 20
+    d2 = d2["snapshot_id"]
+    want = changes_between(spark, wh, "c0", d2).collect()
+    assert sum(r["_commit_snapshot"] == d2 for r in want) == 20
+
+    monkeypatch.setattr(deletes, "INLINE_DELETE_MAX", 5)
+    w = Warehouse(wh)
+    (d1_dels,) = deletes.delete_files_of(w.read_manifest(d1))
+    assert deletes.count_delete_keys([d1_dels]) > 5
+    tasks = plan_changes(w, [(w.commit_log().index(d2), d2)])
+    assert sorted(t.file for t in tasks) == sorted(w.committed_files(d1))
+    assert all(t.dels == (d1_dels,) for t in tasks)
+
+    # the worker side, in this process
+    loads = []
+    real_load = deletes.load_delete_keys
+
+    def worker_load(files, key_col, among=None):
+        loads.append((tuple(files), among is not None))
+        return real_load(files, key_col, among)
+
+    monkeypatch.setattr(deletes, "load_delete_keys", worker_load)
+    schema = w.read_manifest(d2)["schema"]
+    rows = [r for rb in read_tasks(tasks, schema, None) for r in rb.to_pylist()]
+    assert sorted(r["doc_id"] for r in rows) == live[::12][:20]
+    assert {among for files, among in loads if files == (d1_dels,)} == {True}
+
+    def driver_load(files, key_col, among=None):
+        raise AssertionError(f"driver loaded delete keys of {files}")
+
+    monkeypatch.setattr(deletes, "load_delete_keys", driver_load)
+    got = changes_between(spark, wh, "c0", d2).collect()
+    assert sorted(got) == sorted(want)
+
+
+def test_plan_changes_reads_each_commit_record(tmp_path, monkeypatch):
+    """The planner alone over a hand-committed chain (no Spark, no data
+    files): per ordinal, the exact insert and delete pre-image tasks."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from orc_spark.cdc import plan_changes
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    schema = {"doc_id": "string"}
+
+    def part(name, lo, hi, **kw):
+        return {"file": f"/x/{name}", "enc_bytes": 10,
+                "min_doc_id": lo, "max_doc_id": hi, **kw}
+
+    def dfile(name, keys, seq):
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({"doc_id": keys}), path)
+        return {"path": path, "seq": seq}
+
+    base = {"p0": part("a", "a", "m"), "p1": part("b", "n", "z")}
+    del1, del2 = dfile("del1", ["b"], 1), dfile("del2", ["p"], 2)
+    del3 = dfile("del3", ["c"], 1)
+    wh.commit("c0", base, schema)                                        # 0
+    wh.commit("d1", base, schema, extra={                                # 1
+        "operation": "delete", "delete_parent": "c0", "delete_files": [del1]})
+    wh.commit("u2-stage", {"s0": part("s", "p", "q")}, schema,           # 2
+              extra={"operation": "stage"}, advance_current=False)
+    upserted = {**base, "s0@u2": part("s", "p", "q", seq=2)}
+    wh.commit("u2", upserted, schema, extra={                            # 3
+        "operation": "upsert", "upsert_parent": "d1", "seq": 2,
+        "delete_files": [del1, del2]})
+    os.remove(wh.manifest_file("u2-stage"))  # as deletes.upsert does
+    wh.commit("ev", upserted, {**schema, "lang": "string"}, extra={      # 4
+        "operation": "evolve", "column_mapping": {"lang": []},
+        "delete_files": [del1, del2]})
+    wh.commit("cmp", {"p0": part("cmp", "a", "z")}, schema,              # 5
+              extra={"compacted_from": ["ev"]})
+    wh.commit("mat", {"p0": part("mat", "a", "z")}, schema,              # 6
+              extra={"materialized_from": "ev"})
+    wh.commit("mat-d", {"p0": part("mat", "a", "z")}, schema, extra={    # 7
+        "operation": "delete", "delete_parent": "mat", "delete_files": [del3]})
+    wh.commit("c1", {"p0": part("c1", "a", "z")}, schema)                # 8
+
+    def plan(cdc=True):
+        return {
+            (t.ordinal, t.change, t.file, t.dels, t.keys_from)
+            for t in plan_changes(wh, enumerate(wh.commit_log()), cdc=cdc)
+        }
+
+    inserts = {
+        (0, "insert", "/x/a", (), ()), (0, "insert", "/x/b", (), ()),
+        (3, "insert", "/x/s", (), ()),  # only the upsert's own seq
+        (8, "insert", "/x/c1", (), ()),
+    }
+    assert plan() == inserts | {
+        # 'b' lies only in /x/a's key range
+        (1, "delete", "/x/a", (), (del1["path"],)),
+        # read from the parent d1, masked by d1's own delete
+        (3, "delete", "/x/b", (del1["path"],), (del2["path"],)),
+        # read from the recorded parent mat, not the neighbour in the log
+        (7, "delete", "/x/mat", (), (del3["path"],)),
+    }
+    assert plan(cdc=False) == inserts  # the append stream's view
+
+    # above the inline bound the driver does not prune: every parent file
+    monkeypatch.setattr(deletes, "INLINE_DELETE_MAX", 0)
+    assert {t.file for t in plan_changes(wh, [(1, "d1")])} == {"/x/a", "/x/b"}
+
+    # an expired commit fails a changelog, the append stream skips it
+    os.remove(wh.manifest_file("d1"))
+    with pytest.raises(ValueError, match="expired"):
+        plan()
+    assert plan(cdc=False) == inserts

@@ -198,7 +198,7 @@ def test_stream_reader_legacy_offset_replay(tmp_path):
     rdr = TokstripeStreamReader({"path": wh.path}, StructType([]))
 
     def files(parts):
-        return sorted(p.path for p in parts if p.path)
+        return sorted(t.file for p in parts for t in p.files)
 
     # replayed legacy batch: exactly end-seen minus start-seen, even though
     # s3 committed after the legacy end offset was recorded

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from orc_spark import deletes
 from orc_spark.datasource import register
 from orc_spark.fixtures import tokens_arrow
-from orc_spark.pipeline import decode_table, encode_table, file_bins
+from orc_spark.pipeline import decode_table, encode_table, file_bins, file_sizes
 from orc_spark.warehouse import Warehouse
 
 
@@ -20,15 +20,16 @@ def test_file_bins_balance_largest_first():
     sizes = [90, 70, 50, 40, 30, 20, 10, 5]
     m = {"partitions": {f"p{i}": {"file": f"f{i}", "enc_bytes": s}
                         for i, s in enumerate(sizes)}}
+    size = file_sizes(m)
     entries = [(f"f{i}", ()) for i in range(len(sizes))]
-    bins = file_bins(m, entries, 3)
+    bins = file_bins(size, entries, 3)
     assert sorted(e for b in bins for e in b) == sorted(entries)
     loads = sorted(sum(sizes[int(f[1:])] for f, _ in b) for b in bins)
     assert loads == [100, 105, 110]  # greedy LPT: 90+20 | 70+30+5 | 50+40+10
-    assert bins == file_bins(m, list(reversed(entries)), 3)  # order-free
+    assert bins == file_bins(size, list(reversed(entries)), 3)  # order-free
     # never more bins than files; an empty scan has no bins
-    assert len(file_bins(m, entries[:2], 8)) == 2
-    assert file_bins(m, [], 4) == []
+    assert len(file_bins(size, entries[:2], 8)) == 2
+    assert file_bins(size, [], 4) == []
 
 
 @pytest.fixture(scope="module")
