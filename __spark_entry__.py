@@ -286,7 +286,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dsv2_scan": _dsv2,
         "dsv2_events_scan": _dsv2_events,
         # merge-on-read deletes: survivors of delete_where(n_tok 30..70),
-        # inline-mask == anti-join == format read == materialized rewrite,
+        # decode_table == format read == materialized rewrite,
         # parent snapshot time-travels to the full table
         "delete_scan": _delete_scan,
         "upsert_scan": _upsert_scan,

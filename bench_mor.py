@@ -6,10 +6,9 @@ bench.py and BASELINE.md use), local[$SPARK_GRAFT_CPUS]:
 
   decode_clean        full decode+count of the base snapshot (baseline)
   decode_mor_inline   same read after delete_where removed ~1% of keys —
-                      the inline is_in-mask path (zero extra shuffle)
-  decode_mor_anti     same snapshot forced through the left_anti path
-  decode_after_upsert read of an upsert snapshot (seq-grouped: 2 scan
-                      branches + union, seq-scoped delete mask)
+                      the per-task is_in mask (zero extra shuffle)
+  decode_after_upsert read of an upsert snapshot (one scan, each file
+                      masked by its seq-scoped delete set)
   cdc_small_delete    cdc.changes_between for one small delete commit
                       (pre-images via pruned IN-set point lookups)
 
@@ -95,11 +94,6 @@ def main() -> None:
     )
     queries["decode_mor_inline"] = wall(
         lambda: decode_table(spark, wh, snapshot=d1["snapshot_id"]).count()
-    )
-    queries["decode_mor_anti"] = wall(
-        lambda: decode_table(
-            spark, wh, snapshot=d1["snapshot_id"], delete_inline_max=0
-        ).count()
     )
     queries["decode_after_upsert"] = wall(
         lambda: decode_table(spark, wh, snapshot=u1["snapshot_id"]).count()

@@ -16,12 +16,15 @@ levels through `DataSourceReader.pushFilters`:
   - planning time (driver): accepted filters run the manifest range prune +
     sidecar key-bloom prune (pipeline.plan_scan_files), so pruned files
     never become input partitions — Spark schedules NO task for them;
-  - surviving data files pack into the same size-balanced bins as
-    decode_table (pipeline.file_bins), one `InputPartition` per bin;
-    `read()` streams each file's stripes through the shared decode path
-    (pipeline.decode_file): stripe-stats skip, stripe-bloom skip, the
-    exact arrow row filter, then the file's merge-on-read delete mask —
-    yielding Arrow RecordBatches straight into Spark's arrow ingestion;
+  - the read is decode_table's: `partitions()` plans with
+    pipeline.plan_table (surviving files, each with its seq-scoped delete
+    set) and packs them into the same size-balanced bins
+    (pipeline.file_bins), one `InputPartition` per bin; `read()` runs
+    pipeline.read_table_bin: stripe-stats skip, stripe-bloom skip, the
+    exact arrow row filter, then the file's merge-on-read delete mask,
+    whose keys the task loads once per delete set (planning never opens a
+    delete file) — yielding Arrow RecordBatches straight into Spark's
+    arrow ingestion;
   - filters fully handled here (EqualTo / In / >= / <= with int/str probes
     on scalar int/string columns, int/float probes on float/double columns)
     are consumed, so Spark does not re-evaluate them; strict < / > are used
@@ -224,7 +227,7 @@ class _TokstripeReaderBase(DataSourceReader):
     then stays empty and every file of the snapshot becomes a partition."""
 
     def __init__(self, options, schema: StructType):
-        from .pipeline import _spark_type_str
+        from .pipeline import _spark_type_str, check_columns
         from .warehouse import Warehouse
 
         if options.get("mode") == "cdc":
@@ -243,9 +246,7 @@ class _TokstripeReaderBase(DataSourceReader):
         # the schema Spark asked for (defaults to schema(); may be a user-
         # narrowed subset => stream-level column pruning in decode_stripe)
         self._names = [f.name for f in schema.fields]
-        unknown = [n for n in self._names if n not in manifest["schema"]]
-        if unknown:
-            raise ValueError(f"columns {unknown} not in snapshot schema")
+        check_columns(self._names, manifest["schema"])
         self._raw_types = dict(manifest["schema"])  # arrow strings keep ts unit
         self._types = {
             n: _spark_type_str(t) for n, t in manifest["schema"].items()
@@ -255,27 +256,7 @@ class _TokstripeReaderBase(DataSourceReader):
         self._colmap = manifest.get("column_mapping") or None
         self._preds: list[tuple] = []       # exact: engine fully evaluates
         self._hint_preds: list[tuple] = []  # prune-only: Spark re-evaluates
-        # merge-on-read deletes (deletes.py): entries are seq-scoped (an
-        # upsert's delete file applies only to files BELOW its seq), so
-        # every planned file carries its applicable delete set. Small key
-        # sets load once at planning and ship in the reader (it is
-        # serialized to every task); large sets load per task in read() —
-        # the same per-task equality-delete merge Iceberg readers do,
-        # memory-bounded by the set size (materialize_deletes is the
-        # remedy for huge ones)
-        from . import deletes as _deletes
-
         self._key_col = (manifest.get("layout") or {}).get("key_col", "doc_id")
-        self._dels_of = _deletes.applicable_deletes(
-            manifest, [p["file"] for p in manifest["partitions"].values()]
-        )
-        self._keysets = {}  # delete set -> arrow key array, when small
-        paths = sorted({p for appl in self._dels_of.values() for p in appl})
-        if paths and _deletes.count_delete_keys(paths) <= _deletes.INLINE_DELETE_MAX:
-            self._keysets = {
-                appl: _deletes.load_delete_keys(list(appl), self._key_col)
-                for appl in set(self._dels_of.values()) if appl
-            }
 
     # -- planning ---------------------------------------------------------
 
@@ -374,18 +355,14 @@ class _TokstripeReaderBase(DataSourceReader):
         return None
 
     def partitions(self):
-        from .pipeline import file_bins, file_sizes, plan_scan_files
+        from .pipeline import file_bins, file_sizes, plan_table
 
-        preds = self._preds + self._hint_preds
-        files = plan_scan_files(self._manifest, preds) if preds else list(self._dels_of)
+        entries = plan_table(self._manifest, self._preds + self._hint_preds)
         # the same size-balanced bins as decode_table, one InputPartition
         # each. The planner runs in a Python worker that cannot reach the
         # SparkContext, so the planning host's cores stand in for
         # defaultParallelism (equal under local[*])
-        bins = file_bins(
-            file_sizes(self._manifest), [(f, self._dels_of[f]) for f in files],
-            os.cpu_count() or 1,
-        )
+        bins = file_bins(file_sizes(self._manifest), entries, os.cpu_count() or 1)
         # empty scan: the API needs >= 1 partition; an empty bin reads
         # nothing
         return [_BinPartition(b) for b in bins] or [_BinPartition([])]
@@ -393,18 +370,12 @@ class _TokstripeReaderBase(DataSourceReader):
     # -- execution (executor-side) ---------------------------------------
 
     def read(self, partition: _BinPartition):
-        from . import deletes as _deletes
-        from .pipeline import decode_file
+        from .pipeline import read_table_bin
 
-        preds = self._preds + self._hint_preds
-        keysets = dict(self._keysets)
-        for path, appl in partition.files:
-            if appl and appl not in keysets:
-                keysets[appl] = _deletes.load_delete_keys(list(appl), self._key_col)
-            yield from decode_file(
-                path, preds, self._names, keysets.get(appl), self._key_col,
-                self._colmap, self._raw_types if self._colmap else None,
-            )
+        yield from read_table_bin(
+            partition.files, self._preds + self._hint_preds, self._names,
+            self._key_col, self._colmap, self._raw_types,
+        )
 
 
 class TokstripeReaderNoPushdown(_TokstripeReaderBase):

@@ -32,13 +32,15 @@ warehouse's manifest tree:
     entries stay bare strings = apply to every file. Readers attach each
     file's applicable delete set to it (applicable_deletes), so mixed
     chains (delete → upsert → delete) read exactly in one scan.
-  * Reads stay exact and scale-shaped. `decode_table` applies deletes one
-    of two ways, chosen by the total delete-key count (read from parquet
-    footers, O(#delete files) driver-side): small sets ship in the task
-    closure as an arrow `is_in` mask inside the decode kernel (zero extra
-    shuffle — the common case: deletes are tiny next to the table); large
-    sets become a `left_anti` join against the delete-file DataFrame, and
-    Spark broadcasts or sort-merges as size dictates — the 100-TB path.
+  * Reads merge deletes one way. Every table read (`decode_table`, the
+    tokstripe format) plans (file, applicable delete set) entries from the
+    manifest alone; the task reading a file loads the keys of each
+    distinct delete set of its bin once and drops matching rows with an
+    arrow `is_in` mask inside the decode kernel — zero extra shuffle, no
+    delete file opened on the driver, Iceberg's per-task equality-delete
+    merge. The cost is memory: a task holds the delete keys of every file
+    in its bin, so long delete chains are what `materialize_deletes` is
+    for.
   * Lifecycle is manifest-rooted like everything else: delete files are
     invisible until the manifest rename (a crash mid-`delete_where` leaves
     age-gated orphans that `vacuum_orphans` collects), `vacuum` treats
@@ -61,10 +63,11 @@ from .warehouse import Warehouse
 
 DELETES_DIRNAME = "_deletes"
 
-# Above this many total delete keys, decode_table switches from the
-# in-kernel is_in mask (keys in the task closure) to a left_anti join.
-# 100k string keys is ~a few MB in the closure — well under broadcast
-# etiquette; the join path has no ceiling.
+# CDC's pre-image bound (cdc.py): a delete commit with at most this many
+# new keys prunes its parent's files by them on the driver and its
+# stripes by an IN predicate in the worker; above it every parent file is
+# a task and the worker filters decoded rows exactly. Table reads do not
+# use it: they always load delete keys per task.
 INLINE_DELETE_MAX = 100_000
 
 
@@ -121,16 +124,16 @@ def max_seq(manifest: dict) -> int:
 
 
 def count_delete_keys(files: list[str]) -> int:
-    """Total rows across delete files from parquet footers only — the
-    driver-side O(#files) sizing read that picks the apply strategy."""
+    """Total rows across delete files from parquet footers only — an
+    O(#files) sizing read (a commit's n_deleted, CDC's pre-image bound)."""
     import pyarrow.parquet as pq
 
     return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def load_delete_keys(files: list[str], key_col: str, among=None):
-    """Materialize the delete-key column as ONE arrow array (driver-side;
-    callers gate on count_delete_keys first). Distinct not required —
+    """Materialize the delete-key column as ONE arrow array (in the worker
+    for reads). Distinct not required —
     `is_in` semantics don't care about duplicates. With `among` (an arrow
     array), only those keys are kept, read batch by batch, so memory is
     bounded by `among` rather than by the delete files."""
@@ -348,9 +351,9 @@ def upsert(
     sequence number `seq = max_seq(parent) + 1`, and one delete file of
     `df_new`'s keys is committed AT that seq — seq-scoped, so readers
     merge it into files BELOW seq (the old versions) but never into the
-    upsert's own files (which carry the new versions). Reads stay the
-    engine's merge-on-read paths (inline mask per file / anti-join per
-    applicable-delete set); `materialize_deletes` folds the chain flat.
+    upsert's own files (which carry the new versions). Reads merge each
+    file's applicable delete set per task, like any delete (module
+    docstring); `materialize_deletes` folds the chain flat.
 
     The new files stage under snapshot `<dest>-stage` (its manifest is
     removed after the atomic dest commit; the append stream reader skips

@@ -21,15 +21,17 @@ Physical plan (SURVEY.md §3.3) — one shuffle total:
 Decode plan — no shuffle, and no Spark file listing or schema inference
 (the manifest already holds the file list and STRIPE_FILE_SCHEMA):
 
-  plan_scan_files (driver: manifest range + sidecar bloom prune)
-    -> file_bins                      surviving files, each with its
-                                      seq-scoped delete set, packed largest
-                                      first into one size-balanced bin per
-                                      task slot
-    -> spark.range(n_bins).mapInArrow task i opens bin i's files with
-                                      pyarrow and streams their (blob,
-                                      footer) row groups through the decode
-                                      kernel, then the file's delete mask
+  plan_table (driver: manifest range + sidecar bloom prune, then each
+             surviving file's seq-scoped delete set)
+    -> file_bins                      those entries packed largest first
+                                      into one size-balanced bin per task
+                                      slot
+    -> spark.range(n_bins).mapInArrow task i runs read_table_bin: opens bin
+                                      i's files with pyarrow, streams their
+                                      (blob, footer) row groups through the
+                                      decode kernel, then masks each file
+                                      by its delete set, whose keys the
+                                      task loads once
 
 Scale notes (designed for 10^12 rows / 1000 executors, tested on local[32]):
 - the salt spreads each source over S buckets, defusing long-token-array skew
@@ -642,7 +644,6 @@ def decode_table(
     columns: list[str] | None = None,
     predicate: tuple | list | None = None,
     prune_metrics: dict | None = None,
-    delete_inline_max: int | None = None,
 ) -> DataFrame:
     """Read committed stripes back into the original rows. Column projection
     prunes at the stream level (untouched columns are never decompressed).
@@ -675,19 +676,17 @@ def decode_table(
     'stripes_seen'/'stripes_skipped' are Spark accumulators — read
     `.value` after an action on the returned DataFrame.
 
-    Merge-on-read deletes (deletes.py): when the snapshot's manifest lists
-    `delete_files`, rows whose layout key appears in them are dropped —
-    inline (an arrow `is_in` mask inside the decode kernel, zero extra
-    shuffle) when the total delete-key count (parquet footers, driver-side)
-    is ≤ `delete_inline_max` (default deletes.INLINE_DELETE_MAX), else via
-    a `left_anti` join against the delete files (the unbounded path; Spark
-    broadcasts or sort-merges by size). Both are exact; the `delete_scan`
-    gate runs each against the other and the SQL oracle."""
+    This is the same table read as `spark.read.format("tokstripe")`:
+    validation, then plan_table (files + each file's seq-scoped delete
+    set, from the manifest alone), then one scan_bins of read_table_bin.
+    Merge-on-read deletes (deletes.py) apply inside the decode kernel as
+    an arrow `is_in` mask per file; each task loads the keys of each
+    distinct delete set of its bin once, so the driver never opens a
+    delete file and a task holds the delete keys of its bin's files."""
     wh = Warehouse(warehouse_path)
     snapshot = wh.resolve_snapshot(snapshot)
     manifest = wh.read_manifest(snapshot)
-    files = wh.committed_files(snapshot)
-    if not files:
+    if not manifest or not manifest["partitions"]:
         # distinct from "every file pruned" below: a snapshot with nothing
         # committed is a caller error, not an empty query result
         raise ValueError(f"no committed files for snapshot {snapshot}")
@@ -699,73 +698,80 @@ def decode_table(
         if _spark_type_str(schema[p[1]]).startswith("array"):
             raise ValueError(f"predicate on array column {p[1]!r} unsupported")
     names = columns or list(schema.keys())
+    check_columns(names, schema)
     out_schema = ", ".join(f"{n} {_spark_type_str(schema[n])}" for n in names)
-    if preds:
-        files = plan_scan_files(manifest, preds, prune_metrics)
-        if not files:  # every partition pruned: empty result, no job
-            return spark.createDataFrame([], out_schema)
+    entries = plan_table(manifest, preds, prune_metrics)
+    if not entries:  # every partition pruned: empty result, no job
+        return spark.createDataFrame([], out_schema)
     accs = (None, None, None)
     if prune_metrics is not None:
         accs = tuple(spark.sparkContext.accumulator(0) for _ in range(3))
         prune_metrics.update(zip(
             ("stripes_seen", "stripes_skipped", "stripes_bloom_skipped"), accs
         ))
-
-    # merge-on-read deletes (deletes.py): delete entries are SEQ-SCOPED, so
-    # each file carries its own applicable delete set. The apply strategy
-    # is picked once from the TOTAL key count (parquet footers,
-    # driver-side): an inline is_in mask inside the decode kernel (zero
-    # extra shuffle) vs a left_anti join per delete set (the unbounded
-    # path; Spark broadcasts or sort-merges by size).
-    from . import deletes as _deletes
-
     key_col = (manifest.get("layout") or {}).get("key_col", "doc_id")
-    dels_of = _deletes.applicable_deletes(manifest, files)
-    all_del_paths = sorted({p for appl in dels_of.values() for p in appl})
-    keysets: dict[tuple[str, ...], pa.Array] = {}
-    anti_join = False
-    if all_del_paths:
-        n_del = _deletes.count_delete_keys(all_del_paths)
-        cap = (
-            delete_inline_max
-            if delete_inline_max is not None
-            else _deletes.INLINE_DELETE_MAX
-        )
-        if n_del > cap:
-            anti_join = True
-        elif n_del:
-            keysets = {
-                appl: _deletes.load_delete_keys(list(appl), key_col)
-                for appl in set(dels_of.values()) if appl
-            }
     # {} normalizes to None: with the evolution invariant that every
     # added/renamed column keeps a mapping entry, an empty mapping means
     # "no evolution residue" — plain decode path
     colmap = manifest.get("column_mapping") or None
 
-    def scan(entries, cols: list[str]) -> DataFrame:
-        return scan_stripe_files(
-            spark, manifest, entries, schema, cols, preds, keysets, colmap, accs
-        )
+    bins = file_bins(file_sizes(manifest), entries, spark.sparkContext.defaultParallelism)
+    return scan_bins(
+        spark, bins,
+        lambda b: read_table_bin(b, preds, names, key_col, colmap, schema, accs),
+        out_schema,
+    )
 
-    if not anti_join:
-        # ONE scan: every file carries its own inline delete set
-        return scan([(f, dels_of[f]) for f in files], names)
-    groups: dict[tuple[str, ...], list[str]] = {}
-    for f in files:
-        groups.setdefault(dels_of[f], []).append(f)
-    res = None
-    for appl, gfiles in groups.items():
-        if appl:
-            inner = names if key_col in names else names + [key_col]
-            dk = spark.read.parquet(*appl).select(key_col).distinct()
-            df = scan([(f, ()) for f in gfiles], inner).join(
-                dk, on=key_col, how="left_anti"
-            ).select(*names)
-        else:
-            df = scan([(f, ()) for f in gfiles], names)
-        res = df if res is None else res.unionByName(df)
-    return res
+
+def check_columns(names: list[str], schema: dict) -> None:
+    """Every requested column of a table read must be in the snapshot."""
+    unknown = [n for n in names if n not in schema]
+    if unknown:
+        raise ValueError(f"columns {unknown} not in snapshot schema")
+
+
+def plan_table(
+    manifest: dict, preds: list[tuple], prune_metrics: dict | None = None
+) -> list[tuple[str, tuple[str, ...]]]:
+    """The planning half of every table read (decode_table, the tokstripe
+    batch reader): (file, applicable delete set) entries — the files
+    plan_scan_files keeps when there are predicates, every committed file
+    otherwise, each with its seq-scoped delete-file paths
+    (deletes.applicable_deletes). Reads the manifest and, for key IN-sets,
+    the sidecar blooms; never a delete file."""
+    from . import deletes as _deletes
+
+    if preds:
+        files = plan_scan_files(manifest, preds, prune_metrics)
+    else:
+        files = [p["file"] for p in manifest["partitions"].values()]
+    dels_of = _deletes.applicable_deletes(manifest, files)
+    return [(f, dels_of[f]) for f in files]
+
+
+def read_table_bin(
+    entries: list[tuple[str, tuple[str, ...]]],
+    preds: list[tuple],
+    names: list[str],
+    key_col: str = "doc_id",
+    colmap: dict[str, list[str]] | None = None,
+    coltypes: dict[str, str] | None = None,
+    accs: tuple = (None, None, None),
+):
+    """The executing half of every table read: decode one file_bins bin of
+    plan_table entries through decode_file, each file masked by its delete
+    set. Each distinct delete set loads once per call, in the worker — the
+    per-task equality-delete merge Iceberg readers do — so a task holds the
+    keys of its bin's delete sets, and a file with none loads nothing."""
+    from . import deletes as _deletes
+
+    keysets: dict[tuple[str, ...], pa.Array] = {}
+    for path, appl in entries:
+        if appl and appl not in keysets:
+            keysets[appl] = _deletes.load_delete_keys(list(appl), key_col)
+        yield from decode_file(
+            path, preds, names, keysets.get(appl), key_col, colmap, coltypes, accs
+        )
 
 
 def plan_scan_files(
@@ -1001,9 +1007,9 @@ def decode_file(
 ):
     """Executor side of a stripe-file read: stream one data file's
     (blob, footer) row groups through decode_blob_batches, then drop the
-    rows whose `key_col` is in `keyset` (the file's inline merge-on-read
-    delete set). Predicate and key columns not in `names` are decoded for
-    the filters and dropped after."""
+    rows whose `key_col` is in `keyset` (the keys of the file's
+    merge-on-read delete set). Predicate and key columns not in `names`
+    are decoded for the filters and dropped after."""
     nk = keyset is not None and key_col not in names
     inner = names + [key_col] if nk else names
     read_cols = list(dict.fromkeys(inner + [p[1] for p in preds]))
@@ -1014,42 +1020,12 @@ def decode_file(
         ):
             if keyset is not None:
                 # null keys are kept: is_in(null)=null -> fill False ->
-                # invert True matches left_anti's null-join semantics
+                # invert True (a null key equals no delete key, as in SQL)
                 hit = pc.fill_null(pc.is_in(rb.column(key_col), value_set=keyset), False)
                 rb = rb.filter(pc.invert(hit))
                 if nk:
                     rb = rb.select(names)
             yield rb
-
-
-def scan_stripe_files(
-    spark: SparkSession,
-    manifest: dict,
-    entries: list[tuple[str, tuple[str, ...]]],
-    schema: dict[str, str],
-    names: list[str],
-    preds: list[tuple] = (),
-    keysets: dict[tuple[str, ...], pa.Array] | None = None,
-    colmap: dict[str, list[str]] | None = None,
-    accs: tuple = (None, None, None),
-) -> DataFrame:
-    """Decode (file, applicable delete set) entries of `manifest` into a
-    DataFrame of `names` typed by `schema`, one size-balanced bin per task
-    slot (file_bins, scan_bins). `keysets` maps a delete set to its keys;
-    a file whose set is absent from it is read unmasked."""
-    key_col = (manifest.get("layout") or {}).get("key_col", "doc_id")
-    keysets = keysets or {}
-    coltypes = schema if colmap else None
-
-    def read_bin(entries_):
-        for path, appl in entries_:
-            yield from decode_file(
-                path, preds, names, keysets.get(appl), key_col, colmap, coltypes, accs
-            )
-
-    bins = file_bins(file_sizes(manifest), entries, spark.sparkContext.defaultParallelism)
-    out_schema = ", ".join(f"{n} {_spark_type_str(schema[n])}" for n in names)
-    return scan_bins(spark, bins, read_bin, out_schema)
 
 
 EXPORT_META_SCHEMA = "pid string, stripes long, file string, n_rows long, orc_bytes long"
@@ -1090,8 +1066,8 @@ def export_orc(
             "via compact_snapshots(mode='reencode') (or "
             "materialize_deletes) so every stream carries current names"
         )
-    files = wh.committed_files(snapshot)
-    if not files:
+    entries = plan_table(m, []) if m else []
+    if not entries:
         raise ValueError(f"no committed files for snapshot {snapshot}")
     os.makedirs(out_dir, exist_ok=True)
 
@@ -1155,9 +1131,7 @@ def export_orc(
         if metas:
             yield pa.RecordBatch.from_pylist(metas)
 
-    bins = file_bins(
-        file_sizes(m), [(f, ()) for f in files], spark.sparkContext.defaultParallelism
-    )
+    bins = file_bins(file_sizes(m), entries, spark.sparkContext.defaultParallelism)
     return scan_bins(spark, bins, export_bin, EXPORT_META_SCHEMA)
 
 

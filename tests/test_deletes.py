@@ -63,18 +63,15 @@ def test_delete_where_drops_matching_keys_only(spark, wh):
     assert decode_table(spark, wh, snapshot="base").count() == 400
 
 
-def test_inline_and_anti_join_paths_agree(spark, wh):
+def test_projection_without_key_applies_deletes(spark, wh):
     snap = deletes.delete_where(spark, wh, ("n_tok", 10, 15))["snapshot_id"]
-    inline = decode_table(spark, wh, snapshot=snap)
-    anti = decode_table(spark, wh, snapshot=snap, delete_inline_max=0)
-    assert inline.exceptAll(anti).count() == 0
-    assert anti.exceptAll(inline).count() == 0
-    # column projection without the key still applies deletes on both paths
-    for kw in ({}, {"delete_inline_max": 0}):
-        cols = decode_table(spark, wh, snapshot=snap, columns=["source", "n_tok"], **kw)
-        assert cols.columns == ["source", "n_tok"]
-        assert cols.where("n_tok BETWEEN 10 AND 15").count() == 0
-        assert cols.count() == inline.count()
+    full = decode_table(spark, wh, snapshot=snap)
+    # the key is decoded for the delete mask and dropped after
+    cols = decode_table(spark, wh, snapshot=snap, columns=["source", "n_tok"])
+    assert cols.columns == ["source", "n_tok"]
+    assert cols.where("n_tok BETWEEN 10 AND 15").count() == 0
+    assert cols.exceptAll(full.select("source", "n_tok")).count() == 0
+    assert cols.count() == full.count()
 
 
 def test_deletes_accumulate_and_compose_with_pushdown(spark, wh):
@@ -288,10 +285,6 @@ def test_upsert_replaces_and_inserts(spark, wh):
     w = Warehouse(wh)
     assert w.read_manifest(f"{snap}-stage") is None
     assert w.current_snapshot_id() == snap
-    # anti-join parity on the seq-scoped read
-    anti = decode_table(spark, wh, snapshot=snap, delete_inline_max=0)
-    assert got.exceptAll(anti).count() == 0
-    assert anti.exceptAll(got).count() == 0
 
 
 def test_upsert_chain_with_deletes(spark, wh):
@@ -319,11 +312,7 @@ def test_upsert_chain_with_deletes(spark, wh):
     assert got2.count() == 402
     assert _ids(got2.where("source = 's9'")) == {"d90000", "d90001"}
     assert got2.where("doc_id = 'd90000'").collect()[0]["tokens"] == [42]
-    # the whole chain forced through the anti-join path agrees
-    anti = decode_table(spark, wh, snapshot=u2, delete_inline_max=0)
-    assert got2.exceptAll(anti).count() == 0
-    assert anti.exceptAll(got2).count() == 0
-    # and the tokstripe format sees the same final state
+    # the tokstripe format sees the same final state
     from orc_spark.datasource import register
 
     register(spark)

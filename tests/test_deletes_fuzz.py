@@ -1,8 +1,9 @@
 """Randomized delete/upsert chain fuzz: seeded op sequences over one
 warehouse, checked after every op against a driver-side dict model of the
-table — both apply paths (inline mask and forced anti-join). Catches
-seq-scoping mistakes (a delete leaking into later upserts' files, an
-upsert resurrecting an older delete) that single-shot tests can miss."""
+table — through both table-read surfaces (decode_table and the tokstripe
+format). Catches seq-scoping mistakes (a delete leaking into later
+upserts' files, an upsert resurrecting an older delete) that single-shot
+tests can miss."""
 
 import random
 
@@ -10,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from orc_spark import deletes
+from orc_spark.datasource import register
 from orc_spark.pipeline import decode_table, encode_table
 
 
@@ -35,13 +37,19 @@ def fuzz_wh(spark, tmp_path_factory):
 
 
 def _check(spark, wh, snap, model):
-    for kw in ({}, {"delete_inline_max": 0}):
+    register(spark)
+    reads = {
+        "decode_table": lambda: decode_table(spark, wh, snapshot=snap),
+        "tokstripe": lambda: spark.read.format("tokstripe")
+        .option("path", wh).option("snapshot", snap).load(),
+    }
+    for surface, read in reads.items():
         got = {
             r["doc_id"]: (tuple(r["tokens"]), r["source"], r["n_tok"])
-            for r in decode_table(spark, wh, snapshot=snap, **kw).collect()
+            for r in read().collect()
         }
         assert got == model, (
-            f"{'anti' if kw else 'inline'} path diverged at {snap}: "
+            f"{surface} read diverged at {snap}: "
             f"{len(got)} rows vs model {len(model)}"
         )
 

@@ -191,11 +191,10 @@ def test_whole_stage_codegen_covers_textops(spark):
 
 
 def test_delete_read_plans(spark, tmp_path):
-    """merge-on-read delete scan shapes: the inline path must stay a pure
-    mapInArrow scan (NO join, NO shuffle — the delete keys ride in the task
-    closure), and the forced anti-join path must plan a BROADCAST anti-join
-    (the delete side is small), never a cartesian. A regression here turns
-    every delete-table scan into a 100-TB shuffle."""
+    """merge-on-read delete scan shape: a delete read must stay a pure
+    mapInArrow scan (NO join, NO shuffle — each task loads its files'
+    delete keys and masks inside the decode kernel). A regression here
+    turns every delete-table scan into a 100-TB shuffle."""
     from orc_spark import deletes
     from orc_spark.pipeline import decode_table, encode_table
 
@@ -212,22 +211,15 @@ def test_delete_read_plans(spark, tmp_path):
     encode_table(spark, df, wh, snapshot="p0", salt_buckets=2, stripe_tokens=200)
     snap = deletes.delete_where(spark, wh, ("n_tok", 2, 2))["snapshot_id"]
 
-    inline = decode_table(spark, wh, snapshot=snap)
-    plan = _plan(inline)
+    plan = _plan(decode_table(spark, wh, snapshot=snap))
     assert "Join" not in plan
     assert "Exchange" not in plan  # zero-shuffle scan
-
-    anti = decode_table(spark, wh, snapshot=snap, delete_inline_max=0)
-    plan = _plan(anti)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan  # small delete side must broadcast
 
 
 def test_upsert_read_plan_is_one_scan_without_shuffle(spark, tmp_path):
     """an upsert read whose files carry different seq-scoped delete sets is
-    ONE mapInArrow scan (each file applies its own inline mask) — no
-    union, no join and no shuffle on the inline path."""
+    ONE mapInArrow scan (each file applies its own mask) — no union, no
+    join and no shuffle."""
     from orc_spark import deletes
     from orc_spark.pipeline import decode_table, encode_table
 

@@ -1,4 +1,5 @@
-"""Manifest-driven scan (pipeline.file_bins / scan_bins / decode_file): every
+"""Manifest-driven scan (pipeline.plan_table / file_bins / scan_bins /
+read_table_bin): every
 Spark read of stripe files runs from the manifest's file list — no Spark
 file listing, no schema inference — in size-balanced bins, one task each,
 with each file carrying its own seq-scoped delete set."""
@@ -69,11 +70,12 @@ def _rows(df):
     )
 
 
-def test_scan_with_mixed_delete_sets_is_exact(spark, tmp_path):
+def test_scan_with_mixed_delete_sets_is_exact(spark, tmp_path, monkeypatch):
     """delete → upsert → delete leaves three different delete sets: the
     base files carry (d1, u, d2), the upsert's files only (d2). One scan
-    reads them all, equal to the row model, on the inline path, the
-    anti-join path and the tokstripe format."""
+    reads them all, equal to the row model, through decode_table and the
+    tokstripe format — and the driver never sizes or loads a delete
+    set: the tasks load them."""
     wh = str(tmp_path / "mix_wh")
     t = tokens_arrow(600, seed=5)
     encode_table(spark, spark.createDataFrame(t.to_pandas()), wh,
@@ -107,10 +109,15 @@ def test_scan_with_mixed_delete_sets_is_exact(spark, tmp_path):
     files = [p["file"] for p in m["partitions"].values()]
     assert len(set(deletes.applicable_deletes(m, files).values())) == 2
     want = sorted((k,) + v for k, v in model.items())
-    inline = decode_table(spark, wh, snapshot=d2)
-    assert "Union" not in inline._jdf.queryExecution().optimizedPlan().toString()
-    assert _rows(inline) == want
-    assert _rows(decode_table(spark, wh, snapshot=d2, delete_inline_max=0)) == want
+
+    def driver_load(files, *a, **k):
+        raise AssertionError(f"driver opened delete files {files}")
+
+    monkeypatch.setattr(deletes, "count_delete_keys", driver_load)
+    monkeypatch.setattr(deletes, "load_delete_keys", driver_load)
+    read = decode_table(spark, wh, snapshot=d2)
+    assert "Union" not in read._jdf.queryExecution().optimizedPlan().toString()
+    assert _rows(read) == want
     register(spark)
     fmt = spark.read.format("tokstripe").option("path", wh).option("snapshot", d2).load()
     assert _rows(fmt) == want
@@ -130,3 +137,13 @@ def test_missing_data_file_fails_read_with_its_path(spark, tmp_path):
     with pytest.raises(Exception) as e:
         df.count()
     assert victim in str(e.value)
+
+
+def test_unknown_column_is_a_value_error_on_both_reads(spark, wide_wh):
+    wh, _ = wide_wh
+    with pytest.raises(ValueError, match=r"columns \['nope'\] not in snapshot schema"):
+        decode_table(spark, wh, columns=["doc_id", "nope"])
+    register(spark)
+    with pytest.raises(Exception, match=r"columns \['nope'\] not in snapshot schema"):
+        spark.read.format("tokstripe").option("path", wh).schema(
+            "doc_id string, nope int").load().collect()
