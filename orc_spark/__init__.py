@@ -20,3 +20,7 @@ Layers:
 """
 
 __version__ = "0.1.0"
+
+from . import worker as _worker
+
+_worker.bootstrap()

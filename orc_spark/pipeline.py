@@ -441,8 +441,12 @@ def encode_table(
     # tasks than cores under-fills the machine: alternated A/B at 322M
     # tokens measured parallelism/2 tasks clearly worst (19.0 vs 21.3
     # median Mtok/s unpinned; pinned 1v4-core protocol +11% at 2 tasks per
-    # core). Default to one task per slot; the pinned scaling protocol
-    # passes 2/core explicitly.
+    # core). More tasks than slots no longer pay the ~0.14 s per-task
+    # worker start (worker.py), and on t-bench at local[4] 2 tasks per
+    # slot tie with 1 (0.96-1.00 vs 0.98-1.08 s median encode, overlapping
+    # ranges), while 4 and 10 per slot still lose (1.07 and 1.37 s).
+    # Default to one task per slot; the pinned scaling protocol passes
+    # 2/core explicitly.
     num_partitions = num_partitions or max(
         spark.sparkContext.defaultParallelism, 2
     )

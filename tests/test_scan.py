@@ -13,7 +13,9 @@ from pyspark.sql import functions as F
 from orc_spark import deletes
 from orc_spark.datasource import register
 from orc_spark.fixtures import tokens_arrow
-from orc_spark.pipeline import decode_table, encode_table, file_bins, file_sizes
+from orc_spark.pipeline import (
+    decode_table, encode_table, file_bins, file_sizes, read_table_bin, scan_bins,
+)
 from orc_spark.warehouse import Warehouse
 
 
@@ -147,3 +149,47 @@ def test_unknown_column_is_a_value_error_on_both_reads(spark, wide_wh):
     with pytest.raises(Exception, match=r"columns \['nope'\] not in snapshot schema"):
         spark.read.format("tokstripe").option("path", wh).schema(
             "doc_id string, nope int").load().collect()
+
+
+def test_reused_worker_task_rereads_no_zip_directory(spark, wide_wh):
+    """An engine task on a reused Python worker starts with no zip-directory
+    re-read (stdlib 3.11 re-reads 16 at every task's invalidate_caches) and
+    a frozen import-time heap (orc_spark.worker.bootstrap)."""
+    wh, _ = wide_wh
+    files = Warehouse(wh).committed_files("w")
+    names = ["doc_id", "n_tok"]
+
+    def probe_bin(entries):
+        import gc
+        import os
+        import zipimport
+
+        read = zipimport._read_directory
+        if not hasattr(read, "calls"):  # first task in this worker: count from here
+            def read(archive, _read=read):
+                read.calls += 1
+                return _read(archive)
+            read.calls = read.tasks = 0
+            zipimport._read_directory = read
+        read.tasks += 1
+        start = read.calls
+        rows = sum(b.num_rows for b in read_table_bin(entries, [], names))
+        yield pa.RecordBatch.from_pylist([{
+            "pid": os.getpid(), "seq": read.tasks, "start": start,
+            "end": read.calls, "frozen": gc.get_freeze_count(), "rows": rows,
+        }])
+
+    # 40 one-file tasks on 4 slots: Python workers are reused
+    out = scan_bins(spark, [[(f, ())] for f in files], probe_bin,
+                    "pid long, seq long, start long, end long, frozen long, rows long"
+                    ).collect()
+    assert sum(r.rows for r in out) == 1000
+    by_pid: dict[int, list] = {}
+    for r in out:
+        by_pid.setdefault(r.pid, []).append(r)
+    setup_reads = []  # zip-directory reads between one task's end and the next's start
+    for tasks in by_pid.values():
+        tasks.sort(key=lambda r: r.seq)
+        setup_reads += [b.start - a.end for a, b in zip(tasks, tasks[1:])]
+    assert setup_reads and setup_reads == [0] * len(setup_reads)
+    assert min(r.frozen for r in out) > 0
