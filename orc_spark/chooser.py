@@ -15,7 +15,11 @@ Decisions mirror the reference ORC writer's observed heuristics (SURVEY.md
 - strings: dictionary when distinct/total <= 0.8 (the Java ORC writer default
   `orc.dictionary.key.threshold=0.8`, probe-confirmed: 4-distinct strings
   dictionary-encode, 50k-distinct do not), else direct. FSST (our addition)
-  is turned on when a sample compresses below 90%.
+  is turned on by a cost trial on a sample of the payload it would compress
+  (the sorted dictionary blob or the concatenated values): FSST must shrink
+  the sample below 90% and beat plain zstd by 10% after the zstd wrapper.
+  The trial runs only on columns holding at least FSST_MIN_SHARE of the
+  stripe's encoded bytes (stripe.encode_stripe's second pass).
 - every encoded stream then passes through maybe_compress (zstd) and keeps
   the wrapper only if it shrinks — the same role as ORC's block compression.
 """
@@ -29,6 +33,10 @@ from .codecs.compression import compress
 
 DICT_THRESHOLD = 0.8
 FSST_GAIN = 0.90
+# the FSST trial runs only on string columns holding at least this share of
+# the stripe's encoded bytes: FSST at best removes the whole column, so a
+# smaller column cannot move the stripe by 1%
+FSST_MIN_SHARE = 0.01
 FSST_VS_ZSTD = 0.90  # FSST must beat plain zstd by >=10% to be worth its CPU
 FSST_SAMPLE = 1 << 13
 
@@ -95,25 +103,35 @@ def choose_float(arr) -> dict:
     return {"method": "split" if split_c < raw_c else "raw"}
 
 
+def string_encoding(n: int, n_distinct: int) -> str:
+    """'dictionary' when distinct/total <= DICT_THRESHOLD, else 'direct'."""
+    return "dictionary" if n > 0 and (n_distinct / n) <= DICT_THRESHOLD else "direct"
+
+
 def choose_string(n: int, n_distinct: int, sample: bytes) -> dict:
-    """String column plan from cardinality + a byte sample. The trial-trained
-    FSST table rides along in the plan so the encoder does not train twice
-    (training is the costliest pure-Python step in the whole stripe path)."""
-    use_dict = n > 0 and (n_distinct / n) <= DICT_THRESHOLD
+    """Both string decisions in one plan: the encoding from cardinality and
+    the FSST trial on `sample`, with the trained table riding along.
+    stripe.encode_stripe makes the two decisions in separate passes (the
+    trial only where the column's share of the stripe can matter); this
+    one-shot form is what the per-stream kernel replay times."""
     table = fsst_worthwhile(sample)
     return {
-        "encoding": "dictionary" if use_dict else "direct",
+        "encoding": string_encoding(n, n_distinct),
         "fsst": table is not None,
         "fsst_table": table,
     }
 
 
 def fsst_worthwhile(sample: bytes) -> list[bytes] | None:
-    """Train on a sample; return the table only if FSST pays AFTER the zstd
-    wrapper every stream gets anyway. Cost-based: on id-like strings zstd
-    alone is within ~4% of FSST+zstd (FSST then just burns ~40% of stripe
-    CPU), while on natural text FSST+zstd wins by ~27% — the trial measures
-    exactly this on the sample."""
+    """Train on a sample of the payload FSST would compress; return the
+    table only if FSST pays AFTER the zstd wrapper every stream gets anyway.
+    Cost-based: on id-like strings zstd alone is within ~4% of FSST+zstd,
+    while on natural text FSST+zstd wins by ~27% — the trial measures
+    exactly this on the sample. A trial is not free: on t-bench's 40
+    stripes the 80 trials (doc_id and source, each 0.01-0.51% of its
+    stripe) took 0.40 of 1.00 s of single-thread encode_stripe and kept
+    FSST on none, which is why encode_stripe skips columns below
+    FSST_MIN_SHARE."""
     if len(sample) < 256:
         return None
     sample = sample[:FSST_SAMPLE]

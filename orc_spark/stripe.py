@@ -17,6 +17,13 @@ streams of requested columns. The stripe footer is a JSON dict (schema,
 per-column encodings, stream directory with offsets, value stats) — the
 file-level analogue lives in warehouse.py manifests.
 
+encode_stripe works in two passes. Pass 1 encodes every column with FSST
+off (the dictionary-vs-direct rule and the zstd wrapper as above). Pass 2
+runs chooser.fsst_worthwhile only on string columns holding at least
+chooser.FSST_MIN_SHARE of the stripe's encoded bytes, and re-encodes a
+column whose trial keeps FSST. Every other column keeps its pass-1 streams;
+offsets are assigned after pass 2, in schema order.
+
 Runs inside Spark Python workers via df.mapInArrow — all kernels are the
 vectorized numpy codecs from orc_spark.codecs; no per-row Python.
 """
@@ -41,25 +48,42 @@ from .codecs.rlev2 import decode_rlev2, encode_rlev2
 FORMAT_VERSION = 1
 
 
-class _BlobWriter:
-    def __init__(self) -> None:
-        self.parts: list[bytes] = []
-        self.pos = 0
+class _Streams:
+    """One column's encoded streams. Offsets are assigned when encode_stripe
+    lays the columns out, so a column can be re-encoded without moving the
+    others."""
 
-    def add(self, column: str, kind: str, raw: bytes, meta: dict) -> dict:
+    def __init__(self, column: str) -> None:
+        self.column = column
+        self.entries: list[dict] = []
+        self.parts: list[bytes] = []
+
+    def add(self, kind: str, raw: bytes, meta: dict) -> None:
         data, comp = maybe_compress(raw)
-        entry = {
-            "column": column,
-            "kind": kind,
-            "off": self.pos,
-            "clen": len(data),
-            "rlen": len(raw),
-            "comp": comp,
-            **meta,
-        }
+        self.entries.append(
+            {
+                "column": self.column,
+                "kind": kind,
+                "off": 0,
+                "clen": len(data),
+                "rlen": len(raw),
+                "comp": comp,
+                **meta,
+            }
+        )
         self.parts.append(data)
-        self.pos += len(data)
-        return entry
+
+    @property
+    def nbytes(self) -> int:
+        return sum(map(len, self.parts))
+
+
+def _strip_nulls(w: _Streams, arr: pa.Array) -> pa.Array:
+    """Write the PRESENT stream of a column with nulls; return its values."""
+    if arr.null_count:
+        w.add("PRESENT", encode_present(~np.asarray(arr.is_null())), {})
+        arr = arr.drop_null()
+    return arr
 
 
 def _int_stats(arr: np.ndarray) -> dict:
@@ -72,19 +96,18 @@ def _int_stats(arr: np.ndarray) -> dict:
     }
 
 
-def _encode_int_column(w: _BlobWriter, name: str, arr: pa.Array, streams: list, col_meta: dict):
-    if arr.null_count:
-        valid = ~np.asarray(arr.is_null())
-        streams.append(w.add(name, "PRESENT", encode_present(valid), {}))
-        arr = arr.drop_null()
+def _add_int_data(w: _Streams, np_vals: np.ndarray) -> None:
+    plan = chooser.choose_int(np_vals)
+    raw = encode_int_stream(np_vals, plan["codec"], plan["signed"])
+    w.add("DATA", raw, {"codec": plan["codec"], "signed": plan["signed"], "n": len(np_vals)})
+
+
+def _encode_int_column(w: _Streams, arr: pa.Array, col_meta: dict) -> None:
+    arr = _strip_nulls(w, arr)
     np_vals = np.ascontiguousarray(
         arr.cast(pa.int64()).to_numpy(zero_copy_only=False), dtype=np.int64
     )
-    plan = chooser.choose_int(np_vals)
-    raw = encode_int_stream(np_vals, plan["codec"], plan["signed"])
-    streams.append(
-        w.add(name, "DATA", raw, {"codec": plan["codec"], "signed": plan["signed"], "n": len(np_vals)})
-    )
+    _add_int_data(w, np_vals)
     col_meta.update(encoding="DIRECT", stats=_int_stats(np_vals))
 
 
@@ -97,64 +120,43 @@ def _float_stats(arr: np.ndarray) -> dict:
     return {"min": float(arr.min()), "max": float(arr.max()), "n": int(len(arr))}
 
 
-def _encode_float_column(w: _BlobWriter, name: str, arr: pa.Array, streams: list, col_meta: dict):
-    if arr.null_count:
-        valid = ~np.asarray(arr.is_null())
-        streams.append(w.add(name, "PRESENT", encode_present(valid), {}))
-        arr = arr.drop_null()
-    np_vals = np.ascontiguousarray(arr.to_numpy(zero_copy_only=False))
+def _add_float_data(w: _Streams, np_vals: np.ndarray) -> None:
     plan = chooser.choose_float(np_vals)
     raw = encode_floats(np_vals, plan["method"])
-    streams.append(
-        w.add(name, "DATA", raw, {"method": plan["method"], "n": len(np_vals)})
-    )
+    w.add("DATA", raw, {"method": plan["method"], "n": len(np_vals)})
+
+
+def _encode_float_column(w: _Streams, arr: pa.Array, col_meta: dict) -> None:
+    arr = _strip_nulls(w, arr)
+    np_vals = np.ascontiguousarray(arr.to_numpy(zero_copy_only=False))
+    _add_float_data(w, np_vals)
     col_meta.update(encoding="DIRECT", stats=_float_stats(np_vals))
 
 
-def _encode_timestamp_column(w: _BlobWriter, name: str, arr: pa.Array, streams: list, col_meta: dict):
-    """Timestamps ride the integer pipeline as their epoch counts (the unit
-    lives in the type string): time-ordered streams are exactly where RLEv2
-    DELTA shines, and integer min/max stats make time-range stripe pruning
-    work unchanged ([ORCv1] encodes timestamps as integer seconds+nanos for
-    the same reason; one stream suffices at a fixed unit)."""
-    if arr.null_count:
-        valid = ~np.asarray(arr.is_null())
-        streams.append(w.add(name, "PRESENT", encode_present(valid), {}))
-        arr = arr.drop_null()
-    ints = arr.cast(pa.int64())
-    np_vals = np.ascontiguousarray(ints.to_numpy(zero_copy_only=False), dtype=np.int64)
-    plan = chooser.choose_int(np_vals)
-    raw = encode_int_stream(np_vals, plan["codec"], plan["signed"])
-    streams.append(
-        w.add(name, "DATA", raw, {"codec": plan["codec"], "signed": plan["signed"], "n": len(np_vals)})
-    )
-    col_meta.update(encoding="DIRECT", stats=_int_stats(np_vals))
-
-
-def _encode_string_column(w: _BlobWriter, name: str, arr: pa.Array, streams: list, col_meta: dict):
-    if arr.null_count:
-        valid = ~np.asarray(arr.is_null())
-        streams.append(w.add(name, "PRESENT", encode_present(valid), {}))
-        arr = arr.drop_null()
+def _encode_string_column(
+    w: _Streams, arr: pa.Array, col_meta: dict, table: list[bytes] | None = None
+) -> bytes:
+    """Encode with FSST off (table None) or with a trained FSST table.
+    Returns the head of the byte payload FSST would compress — the sorted
+    dictionary blob or the concatenated values — as the trial's sample."""
+    arr = _strip_nulls(w, arr)
     n = len(arr)
     offs, data = scodec.to_offsets_bytes(arr)
     n_distinct = len(pc.unique(arr)) if n else 0
-    plan = chooser.choose_string(n, n_distinct, bytes(data[: chooser.FSST_SAMPLE]))
-    if plan["encoding"] == "dictionary":
-        parts, dict_size = scodec.encode_dictionary(arr, plan["fsst"], plan.get("fsst_table"))
-        streams.append(w.add(name, "DATA", parts["DATA"], {"codec": "rle2", "signed": False, "n": n}))
-        streams.append(
-            w.add(name, "DICTIONARY_DATA", parts["DICTIONARY_DATA"], {"fsst": plan["fsst"]})
-        )
-        streams.append(
-            w.add(name, "DICT_LENGTH", parts["DICT_LENGTH"], {"codec": "rle2", "signed": False, "n": dict_size})
-        )
+    use_fsst = table is not None
+    if chooser.string_encoding(n, n_distinct) == "dictionary":
+        parts, dict_size = scodec.encode_dictionary(arr, use_fsst, table)
+        payload = parts["DICTIONARY_DATA"]
+        w.add("DATA", parts["DATA"], {"codec": "rle2", "signed": False, "n": n})
+        w.add("DICTIONARY_DATA", payload, {"fsst": use_fsst})
+        w.add("DICT_LENGTH", parts["DICT_LENGTH"], {"codec": "rle2", "signed": False, "n": dict_size})
         col_meta.update(encoding="DICTIONARY", dict_size=dict_size)
     else:
-        parts = scodec.encode_direct(arr, plan["fsst"], plan.get("fsst_table"))
-        streams.append(w.add(name, "LENGTH", parts["LENGTH"], {"codec": "rle2", "signed": False, "n": n}))
-        streams.append(w.add(name, "DATA", parts["DATA"], {"fsst": plan["fsst"]}))
-        col_meta.update(encoding="FSST" if plan["fsst"] else "DIRECT")
+        parts = scodec.encode_direct(arr, use_fsst, table)
+        payload = parts["DATA"]
+        w.add("LENGTH", parts["LENGTH"], {"codec": "rle2", "signed": False, "n": n})
+        w.add("DATA", payload, {"fsst": use_fsst})
+        col_meta.update(encoding="FSST" if use_fsst else "DIRECT")
     col_meta["stats"] = {"n_distinct": int(n_distinct), "bytes": int(len(data))}
     if len(arr) and not arr.null_count:
         # UTF-8 binary order == codepoint order, so these bounds are
@@ -163,24 +165,18 @@ def _encode_string_column(w: _BlobWriter, name: str, arr: pa.Array, streams: lis
         mm = pc.min_max(arr)
         col_meta["stats"]["min"] = mm["min"].as_py()
         col_meta["stats"]["max"] = mm["max"].as_py()
+    return payload[: chooser.FSST_SAMPLE]
 
 
-def _encode_list_column(w: _BlobWriter, name: str, arr: pa.Array, streams: list, col_meta: dict):
-    if arr.null_count:
-        valid = ~np.asarray(arr.is_null())
-        streams.append(w.add(name, "PRESENT", encode_present(valid), {}))
-        arr = arr.drop_null()
+def _encode_list_column(w: _Streams, arr: pa.Array, col_meta: dict) -> None:
+    arr = _strip_nulls(w, arr)
     child_t = arr.type.value_type
     if pa.types.is_floating(child_t):
         # float child: LENGTH + float DATA (raw/split chosen per stream)
         lens = np.asarray(arr.value_lengths(), dtype=np.int64)
         flat = np.ascontiguousarray(arr.flatten().to_numpy(zero_copy_only=False))
-        streams.append(w.add(name, "LENGTH", encode_rlev2(lens, signed=False), {"codec": "rle2", "signed": False, "n": len(lens)}))
-        plan = chooser.choose_float(flat)
-        raw = encode_floats(flat, plan["method"])
-        streams.append(
-            w.add(name, "DATA", raw, {"method": plan["method"], "n": len(flat)})
-        )
+        w.add("LENGTH", encode_rlev2(lens, signed=False), {"codec": "rle2", "signed": False, "n": len(lens)})
+        _add_float_data(w, flat)
         col_meta.update(
             encoding="DIRECT",
             stats={**_float_stats(flat), "n_values": int(len(flat))},
@@ -192,47 +188,67 @@ def _encode_list_column(w: _BlobWriter, name: str, arr: pa.Array, streams: list,
     # whole stats+pack pipeline in uint32 (half the memory traffic of the
     # previous int64 widening — the dominant byte stream of the table)
     flat = np.ascontiguousarray(arr.flatten().to_numpy(zero_copy_only=False))
-    streams.append(w.add(name, "LENGTH", encode_rlev2(lens, signed=False), {"codec": "rle2", "signed": False, "n": len(lens)}))
-    plan = chooser.choose_int(flat)
-    raw = encode_int_stream(flat, plan["codec"], plan["signed"])
-    streams.append(
-        w.add(name, "DATA", raw, {"codec": plan["codec"], "signed": plan["signed"], "n": len(flat)})
-    )
+    w.add("LENGTH", encode_rlev2(lens, signed=False), {"codec": "rle2", "signed": False, "n": len(lens)})
+    _add_int_data(w, flat)
     col_meta.update(encoding="DIRECT", stats={**_int_stats(flat), "n_values": int(len(flat))})
 
 
+def _encode_column(
+    name: str, arr: pa.Array, table: list[bytes] | None = None
+) -> tuple[_Streams, dict, bytes | None]:
+    """(streams, column footer, FSST trial sample — None unless a string)."""
+    t = arr.type
+    w = _Streams(name)
+    col_meta: dict = {"type": str(t), "null_count": int(arr.null_count)}
+    sample = None
+    if pa.types.is_integer(t) or pa.types.is_timestamp(t):
+        # timestamps ride the integer pipeline as their epoch counts (the
+        # unit lives in the type string): time-ordered streams are exactly
+        # where RLEv2 DELTA shines, and integer min/max stats make time-range
+        # stripe pruning work unchanged ([ORCv1] encodes timestamps as
+        # integer seconds+nanos for the same reason; one stream suffices at a
+        # fixed unit)
+        _encode_int_column(w, arr, col_meta)
+    elif pa.types.is_floating(t):
+        if t.bit_width < 32:
+            raise TypeError(f"half-precision column {name!r} unsupported")
+        _encode_float_column(w, arr, col_meta)
+    elif pa.types.is_string(t) or pa.types.is_large_string(t):
+        sample = _encode_string_column(w, arr, col_meta, table)
+    elif pa.types.is_list(t) or pa.types.is_large_list(t):
+        _encode_list_column(w, arr, col_meta)
+    else:
+        raise TypeError(f"unsupported column type {t} for {name!r}")
+    col_meta["streams"] = w.entries
+    return w, col_meta, sample
+
+
 def encode_stripe(batch: pa.RecordBatch) -> tuple[bytes, dict]:
-    """Encode one RecordBatch into (blob, footer)."""
-    w = _BlobWriter()
-    columns = {}
-    for name, arr in zip(batch.schema.names, batch.columns):
-        arr = arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-        t = arr.type
-        streams: list[dict] = []
-        col_meta: dict = {"type": str(t), "null_count": int(arr.null_count)}
-        if pa.types.is_integer(t):
-            _encode_int_column(w, name, arr, streams, col_meta)
-        elif pa.types.is_floating(t):
-            if t.bit_width < 32:
-                raise TypeError(f"half-precision column {name!r} unsupported")
-            _encode_float_column(w, name, arr, streams, col_meta)
-        elif pa.types.is_timestamp(t):
-            _encode_timestamp_column(w, name, arr, streams, col_meta)
-        elif pa.types.is_string(t) or pa.types.is_large_string(t):
-            _encode_string_column(w, name, arr, streams, col_meta)
-        elif pa.types.is_list(t) or pa.types.is_large_list(t):
-            _encode_list_column(w, name, arr, streams, col_meta)
-        else:
-            raise TypeError(f"unsupported column type {t} for {name!r}")
-        col_meta["streams"] = streams
-        columns[name] = col_meta
+    """Encode one RecordBatch into (blob, footer), in the two passes the
+    module docstring describes."""
+    arrays = {
+        name: arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+        for name, arr in zip(batch.schema.names, batch.columns)
+    }
+    encoded = {name: _encode_column(name, arr) for name, arr in arrays.items()}
+    floor = chooser.FSST_MIN_SHARE * sum(w.nbytes for w, _, _ in encoded.values())
+    for name, (w, _, sample) in encoded.items():
+        if sample is not None and w.nbytes >= floor:
+            table = chooser.fsst_worthwhile(sample)
+            if table is not None:
+                encoded[name] = _encode_column(name, arrays[name], table)
+    pos = 0
+    for w, _, _ in encoded.values():
+        for entry, data in zip(w.entries, w.parts):
+            entry["off"] = pos
+            pos += len(data)
     footer = {
         "version": FORMAT_VERSION,
         "n_rows": batch.num_rows,
-        "columns": columns,
+        "columns": {name: col_meta for name, (_, col_meta, _) in encoded.items()},
         "schema": {n: str(batch.schema.field(n).type) for n in batch.schema.names},
     }
-    return b"".join(w.parts), footer
+    return b"".join(p for w, _, _ in encoded.values() for p in w.parts), footer
 
 
 def _get_stream(blob: bytes, streams: list[dict], kind: str) -> tuple[bytes, dict] | None:

@@ -1,10 +1,15 @@
 """Stripe encode/decode: all column types, projection, nulls, dictionary
 threshold behavior, and the size gate at stripe granularity."""
 
+import hashlib
+
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 
+from orc_spark import chooser
+from orc_spark.codecs import fsst
 from orc_spark.fixtures import tokens_arrow
 from orc_spark.stripe import decode_stripe, encode_stripe, footer_from_json, footer_to_json
 
@@ -187,3 +192,153 @@ def test_list_float_roundtrip_bit_exact():
     flat_a = np.asarray(b.column("emb").drop_null().flatten().to_numpy(zero_copy_only=False))
     flat_b = np.asarray(got.drop_null().flatten().to_numpy(zero_copy_only=False))
     assert np.array_equal(flat_a.view("u4"), flat_b.view("u4"))
+
+
+# --- the FSST trial: run only where FSST can move the stripe -----------------
+
+# sha256 over the blobs + footer JSON of tokens_arrow(2000, 42) grouped by
+# source and sorted by doc_id, recorded before the trial moved to its own pass
+TBENCH_STRIPES_SHA256 = "7476b97a16931698109225406eb1d3d31eb5d31fd2537ad765af2ff89b23a399"
+
+WORDS = (
+    "spark window merge table column vector stream value data small join filter "
+    "big group hash customer sort order slow line part fast row the agg key query "
+    "a scan batch"
+).split()
+
+
+@pytest.fixture
+def trials(monkeypatch):
+    """Samples passed to chooser.fsst_worthwhile (the real trial still runs)."""
+    samples = []
+    real = chooser.fsst_worthwhile
+
+    def spy(sample):
+        samples.append(sample)
+        return real(sample)
+
+    monkeypatch.setattr(chooser, "fsst_worthwhile", spy)
+    return samples
+
+
+def _stream_bytes(blob: bytes, col: dict) -> list[bytes]:
+    return [blob[s["off"] : s["off"] + s["clen"]] for s in col["streams"]]
+
+
+def test_tbench_stripes_byte_pinned_with_no_trial(trials):
+    """doc_id and source are < 1% of every t-bench-shaped stripe, so no trial
+    runs — and the bytes are exactly those of the one-pass encoder, whose
+    trials on them never kept FSST."""
+    tbl = tokens_arrow(2000, 42)
+    h = hashlib.sha256()
+    for src in sorted(set(tbl.column("source").to_pylist())):
+        part = tbl.filter(pc.equal(tbl["source"], src)).sort_by("doc_id")
+        blob, footer = encode_stripe(part.combine_chunks().to_batches()[0])
+        h.update(blob)
+        h.update(footer_to_json(footer).encode())
+    assert h.hexdigest() == TBENCH_STRIPES_SHA256
+    assert trials == []
+
+
+def _documents_batch(n: int = 500) -> pa.RecordBatch:
+    rng = np.random.RandomState(3)
+    text = [" ".join(rng.choice(WORDS, rng.randint(10, 101))) for _ in range(n)]
+    return pa.record_batch(
+        {
+            "doc_id": pa.array(np.arange(n), type=pa.int64()),
+            "text": pa.array(text),
+            "lang": pa.array(rng.choice(["en", "de", "fr", "zh"], n)),
+            "source": pa.array([f"src{i % 4}" for i in range(n)]),
+            "n_chars": pa.array([len(t) for t in text], type=pa.int64()),
+        }
+    )
+
+
+def test_documents_stripe_trials_only_text(trials):
+    """The long free-text column is nearly the whole stripe and is trialed on
+    its value bytes; lang and source (dictionary columns < 1%) are not."""
+    batch = _documents_batch()
+    encode_stripe(batch)
+    payload = "".join(batch.column("text").to_pylist()).encode()
+    assert trials == [payload[: chooser.FSST_SAMPLE]]
+
+
+def test_kept_fsst_reencodes_only_that_column(monkeypatch):
+    """A column whose trial keeps FSST is re-encoded with the trained table;
+    every other column keeps its FSST-off streams byte for byte, laid out
+    contiguously in schema order."""
+    batch = _documents_batch()
+    plain_blob, plain = encode_stripe(batch)
+    monkeypatch.setattr(chooser, "fsst_worthwhile", fsst.train)
+    blob, footer = encode_stripe(batch)
+    assert footer["columns"]["text"]["encoding"] == "FSST"
+    assert [s.get("fsst") for s in footer["columns"]["text"]["streams"]] == [None, True]
+    offs = [s["off"] for c in footer["columns"].values() for s in c["streams"]]
+    lens = [s["clen"] for c in footer["columns"].values() for s in c["streams"]]
+    assert offs == list(np.cumsum([0] + lens[:-1])) and sum(lens) == len(blob)
+    for name in ("doc_id", "lang", "source", "n_chars"):
+        assert _stream_bytes(blob, footer["columns"][name]) == _stream_bytes(
+            plain_blob, plain["columns"][name]
+        ), name
+    out = decode_stripe(blob, footer_from_json(footer_to_json(footer)))
+    for name in batch.schema.names:
+        assert out.column(name).cast(batch.column(name).type).equals(batch.column(name)), name
+
+
+def test_dictionary_trial_samples_the_dictionary_blob(trials):
+    """FSST on a dictionary column compresses the sorted dictionary blob, so
+    the trial samples that blob, not the raw values: a 3-word dictionary
+    (6 bytes) is under the 256-byte floor and never trains."""
+    rng = np.random.RandomState(7)
+    batch = pa.record_batch(
+        {
+            "id": pa.array(np.arange(2000), type=pa.int32()),
+            "lang": pa.array(rng.choice(["en", "de", "fr"], 2000)),
+        }
+    )
+    blob, footer = encode_stripe(batch)
+    assert trials == [b"deenfr"]
+    lang = footer["columns"]["lang"]
+    assert lang["encoding"] == "DICTIONARY"
+    assert [s.get("fsst") for s in lang["streams"] if s["kind"] == "DICTIONARY_DATA"] == [False]
+    assert decode_stripe(blob, footer).column("lang").equals(batch.column("lang"))
+
+
+def _share_batch(n_pad: int, pad: np.ndarray, n_rows: int = 400) -> pa.RecordBatch:
+    """An id-like string column beside a list column holding n_pad values."""
+    offs = np.full(n_rows + 1, n_pad, dtype=np.int32)
+    offs[0] = 0
+    return pa.record_batch(
+        {
+            "s": pa.array([f"key-{i:08d}" for i in range(n_rows)]),
+            "pad": pa.ListArray.from_arrays(pa.array(offs), pa.array(pad[:n_pad])),
+        }
+    )
+
+
+def test_trial_share_boundary(trials):
+    """Bisect the pad size to two adjacent stripes: the string column holds
+    at least FSST_MIN_SHARE of one (trial runs) and less of the other (trial
+    skipped). Alone in a stripe, the same column always runs the trial."""
+    pad = np.random.RandomState(0).randint(0, 1 << 20, 200_000).astype(np.int32)
+
+    def share(n_pad: int) -> float:
+        trials.clear()
+        blob, footer = encode_stripe(_share_batch(n_pad, pad))
+        assert footer["columns"]["s"]["encoding"] == "DIRECT"  # trial rejected FSST
+        s_bytes = sum(s["clen"] for s in footer["columns"]["s"]["streams"])
+        return s_bytes / len(blob)
+
+    lo, hi = 0, len(pad)
+    assert share(lo) >= chooser.FSST_MIN_SHARE > share(hi)
+    while hi - lo > 1:
+        mid = (lo + hi) // 2
+        if share(mid) >= chooser.FSST_MIN_SHARE:
+            lo = mid
+        else:
+            hi = mid
+    assert share(lo) >= chooser.FSST_MIN_SHARE and len(trials) == 1
+    assert share(hi) < chooser.FSST_MIN_SHARE and trials == []
+    trials.clear()
+    encode_stripe(_share_batch(hi, pad).select(["s"]))
+    assert len(trials) == 1
