@@ -168,7 +168,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _schema_evolution(spark, sf_dir):
         _ship(spark)
         # metadata-only rename+add, then an upsert under the new names:
-        # old-name and new-name stripes decode through the alias mapping,
+        # old-name and new-name stripes resolve through the field IDs,
         # added column null-fills in pre-add files
         from orc_spark.flagship import schema_evolution_summary
 

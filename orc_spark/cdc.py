@@ -28,10 +28,10 @@ deletes load there only where they meet them, so a pre-image costs
 memory in the commit's own key count, never in the parent's accumulated
 deletes.
 
-Every task reads under the BOUND schema (to_snapshot's, or the stream's)
-through `resolve_colmap`: the bound snapshot's evolution aliases plus
-those of the commit the task came from, so renames resolve forward and
-columns a file lacks null-fill.
+Every task reads under the BOUND schema (to_snapshot's, or the stream's):
+the planner maps its file to the bound {name: field_id} through the IDs
+of the manifest listing it (evolution.stored_names), so a renamed column
+reads forward and a column the file lacks null-fills.
 
 `changes_between(spark, wh, from_snapshot, to_snapshot)` returns every row
 change committed AFTER `from_snapshot` up to and including `to_snapshot`,
@@ -55,7 +55,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 
 from . import deletes as _deletes
-from .warehouse import Warehouse
+from .warehouse import Warehouse, current_ids
 
 NO_CHANGE = ("evolve", "replace", "stage")
 TAG_COLS = "_change_type string, _commit_snapshot string, _commit_ordinal int"
@@ -81,24 +81,24 @@ class ChangeTask(NamedTuple):
     change: str                  # 'insert' | 'delete'
     snap: str
     ordinal: int
-    colmap: dict | None          # its commit's evolution mapping (resolve_colmap)
+    stored: dict | None          # its column map (evolution.stored_names)
     key_col: str
     keys_from: tuple[str, ...] = ()  # pre-images: the commit's new delete files
 
 
-def _tasks(m, files, change, snap, ordinal, key_col, keys_from=()):
+def _tasks(m, files, bound, change, snap, ordinal, key_col, keys_from=()):
+    from .evolution import column_maps
     from .pipeline import file_sizes
 
-    size = file_sizes(m)
-    colmap = m.get("column_mapping") or None
+    size, maps = file_sizes(m), column_maps(m, bound)
     return [
-        ChangeTask(f, size[f], appl, change, snap, ordinal, colmap, key_col,
+        ChangeTask(f, size[f], appl, change, snap, ordinal, maps[f], key_col,
                    keys_from)
         for f, appl in _deletes.applicable_deletes(m, files).items()
     ]
 
 
-def _pre_images(wh, m, snap, ordinal, key_col) -> list[ChangeTask]:
+def _pre_images(wh, m, bound, snap, ordinal, key_col) -> list[ChangeTask]:
     from .pipeline import plan_scan_files
 
     parent = m.get("delete_parent") or m.get("upsert_parent")
@@ -117,12 +117,15 @@ def _pre_images(wh, m, snap, ordinal, key_col) -> list[ChangeTask]:
         keys = _deletes.load_delete_keys(list(new), key_col).drop_null()
         files = plan_scan_files(pm, [("in", key_col, keys.to_pylist())]) \
             if len(keys) else []
-    return _tasks(pm, files, "delete", snap, ordinal, key_col, new)
+    return _tasks(pm, files, bound, "delete", snap, ordinal, key_col, new)
 
 
-def plan_changes(wh: Warehouse, commits, cdc: bool = True) -> list[ChangeTask]:
+def plan_changes(
+    wh: Warehouse, commits, bound: dict, cdc: bool = True
+) -> list[ChangeTask]:
     """The change tasks of `commits`, (ordinal, snapshot) commit-log
-    entries (see module docstring). `cdc=False` is the append stream's
+    entries, each file mapped to the `bound` {name: field_id} it is read
+    under (see module docstring). `cdc=False` is the append stream's
     view: inserts only, and expired commits are skipped instead of
     raising."""
     tasks: list[ChangeTask] = []
@@ -142,37 +145,21 @@ def plan_changes(wh: Warehouse, commits, cdc: bool = True) -> list[ChangeTask]:
             continue
         key_col = (m.get("layout") or {}).get("key_col", "doc_id")
         if cdc and op in ("delete", "upsert"):
-            tasks += _pre_images(wh, m, snap, ordinal, key_col)
+            tasks += _pre_images(wh, m, bound, snap, ordinal, key_col)
         if op == "delete":
             continue
         files = [
             p["file"] for p in m["partitions"].values()
             if op != "upsert" or p.get("seq", 0) == m.get("seq")
         ]
-        tasks += _tasks(m, files, "insert", snap, ordinal, key_col)
+        tasks += _tasks(m, files, bound, "insert", snap, ordinal, key_col)
     return tasks
 
 
-def resolve_colmap(names, bound: dict | None, own: dict | None) -> dict:
-    """The alias lists a change task's file reads `names` through: each
-    name's aliases in the bound snapshot's mapping, then the aliases the
-    task's own commit records for any of those names (a materialize or
-    reencode clears the bound mapping, but older files still store their
-    commit's names). Never None, so a column the file lacks null-fills."""
-    bound, own = bound or {}, own or {}
-    out = {}
-    for n in names:
-        chain = [n, *bound.get(n, ())]
-        out[n] = list(dict.fromkeys(
-            chain[1:] + [a for c in chain for a in own.get(c, ())]
-        ))
-    return out
-
-
-def read_tasks(tasks, schema: dict, colmap: dict | None, tag: bool = True):
+def read_tasks(tasks, schema: dict, tag: bool = True):
     """Executor side of every change read: decode each task's file
     (pipeline.decode_file) into Arrow batches of the bound `schema` (name
-    -> type) under its `colmap` (resolve_colmap), then, with `tag`,
+    -> type) under its column map, then, with `tag`,
     append the TAG_NAMES columns. A pre-image keeps only its commit's keys
     the parent still showed; any other task drops its applicable
     deletes."""
@@ -211,8 +198,7 @@ def read_tasks(tasks, schema: dict, colmap: dict | None, tag: bool = True):
                 masks[t.dels] = _deletes.load_delete_keys(list(t.dels), t.key_col)
             mask = masks[t.dels]
         for rb in decode_file(
-            t.file, preds, names, mask, t.key_col,
-            resolve_colmap(names, colmap, t.colmap), schema,
+            t.file, preds, names, mask, t.key_col, t.stored, schema,
         ):
             if keep is not None:
                 rb = rb.filter(pc.is_in(rb.column(t.key_col), value_set=keep))
@@ -258,13 +244,14 @@ def changes_between(
         raise ValueError(f"no manifest for {to_snapshot!r}")
     if not wh.read_manifest(from_snapshot):
         raise ValueError(f"no manifest for {from_snapshot!r} (expired?)")
-    schema, colmap = to_m["schema"], to_m.get("column_mapping")
-    tasks = plan_changes(wh, list(enumerate(log))[i_from + 1:i_to + 1])
+    schema = to_m["schema"]
+    commits = list(enumerate(log))[i_from + 1:i_to + 1]
+    tasks = plan_changes(wh, commits, current_ids(to_m))
     bins = file_bins(
         {t.file: t.size for t in tasks}, tasks,
         spark.sparkContext.defaultParallelism,
     )
     cols = ", ".join(f"{n} {_spark_type_str(t)}" for n, t in schema.items())
     return scan_bins(
-        spark, bins, lambda b: read_tasks(b, schema, colmap), f"{cols}, {TAG_COLS}"
+        spark, bins, lambda b: read_tasks(b, schema), f"{cols}, {TAG_COLS}"
     )

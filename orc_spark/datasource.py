@@ -251,9 +251,6 @@ class _TokstripeReaderBase(DataSourceReader):
         self._types = {
             n: _spark_type_str(t) for n, t in manifest["schema"].items()
         }
-        # schema evolution (evolution.py): current name -> prior stored
-        # names; resolved per stripe in the shared decode kernel
-        self._colmap = manifest.get("column_mapping") or None
         self._preds: list[tuple] = []       # exact: engine fully evaluates
         self._hint_preds: list[tuple] = []  # prune-only: Spark re-evaluates
         self._key_col = (manifest.get("layout") or {}).get("key_col", "doc_id")
@@ -374,7 +371,7 @@ class _TokstripeReaderBase(DataSourceReader):
 
         yield from read_table_bin(
             partition.files, self._preds + self._hint_preds, self._names,
-            self._key_col, self._colmap, self._raw_types,
+            self._key_col, self._raw_types,
         )
 
 
@@ -431,7 +428,8 @@ class TokstripeStreamReader(DataSourceStreamReader):
     commits are skipped. With .option("mode", "cdc") it is a CHANGELOG
     stream: delete pre-images too, plus the `_change_type` /
     `_commit_snapshot` / `_commit_ordinal` columns, and an expired commit
-    in range raises.
+    in range raises. Every commit's files are read under the field IDs of
+    the snapshot the stream's schema was bound from (evolution.py).
 
     The offset is a single integer — a position in the warehouse's
     append-only commit log (Warehouse.commit_log), so checkpoints stay
@@ -457,13 +455,18 @@ class TokstripeStreamReader(DataSourceStreamReader):
             f.name: f.dataType.simpleString()
             for f in schema.fields if f.name not in tags
         }
-        # the mapping of the snapshot the schema was bound from; every
-        # commit's files resolve through it (cdc.resolve_colmap)
+        self._snapshot = options.get("snapshot")
+        self._bound = self._bind()
+
+    def _bind(self) -> dict | None:
+        """The bound {name: field_id}, None on an empty warehouse (bound at
+        the first planned batch); a user-schema name it lacks null-fills."""
+        from .warehouse import current_ids
+
         wh = self._wh()
-        snap = wh.resolve_snapshot(options.get("snapshot"))
-        self._colmap = ((wh.read_manifest(snap) if snap else None) or {}).get(
-            "column_mapping"
-        )
+        snap = wh.resolve_snapshot(self._snapshot)
+        m = wh.read_manifest(snap) if snap else None
+        return {**dict.fromkeys(self._schema), **current_ids(m)} if m else None
 
     def _wh(self):
         from .warehouse import Warehouse
@@ -500,7 +503,9 @@ class TokstripeStreamReader(DataSourceStreamReader):
             # forward from legacy to pos); slice is the pos/pos fast path
             commits = commits[start.get("pos", 0):]
         commits = [c for c in commits if c[1].startswith(self._prefix)]
-        tasks = plan_changes(wh, commits, cdc=self._cdc)
+        if self._bound is None:
+            self._bound = self._bind()
+        tasks = plan_changes(wh, commits, self._bound or {}, cdc=self._cdc)
         # planning runs in a Python worker: the host's cores stand in for
         # defaultParallelism, as in the batch reader
         bins = file_bins({t.file: t.size for t in tasks}, tasks, os.cpu_count() or 1)
@@ -509,7 +514,7 @@ class TokstripeStreamReader(DataSourceStreamReader):
     def read(self, partition: _BinPartition):
         from .cdc import read_tasks
 
-        yield from read_tasks(partition.files, self._schema, self._colmap, self._cdc)
+        yield from read_tasks(partition.files, self._schema, self._cdc)
 
     def commit(self, end: dict) -> None:
         pass  # snapshots are durable; nothing to release

@@ -266,8 +266,6 @@ def delete_where(
     # (all have seq <= max_seq) but not to files a LATER upsert commits at
     # a higher seq — otherwise re-inserting a once-deleted key would
     # silently resurrect the old delete. Exactly Iceberg's sequence rule.
-    from .evolution import inherited_meta
-
     seq = max_seq(manifest) + 1
     out = wh.commit(
         dest,
@@ -279,9 +277,9 @@ def delete_where(
             + [{"path": p, "seq": seq} for p in new_files],
             "operation": "delete",
             "delete_parent": snapshot,
-            **inherited_meta(manifest),
         },
         advance_current=branch is None,
+        ids=manifest,
     )
     if branch is not None:
         wh.set_ref(branch, dest, kind="branch")
@@ -398,6 +396,7 @@ def upsert(
         key_blooms=key_blooms,
         extra={"operation": "stage", "stage_for": dest},
         advance_current=False,  # never the table's default read
+        ids=manifest,  # written under the parent's schema (checked above)
     )
     staged = wh.read_manifest(stage)
 
@@ -412,8 +411,6 @@ def upsert(
     dels = list(manifest.get("delete_files") or [])
     dels += [{"path": p, "seq": seq} for p in new_files]
 
-    from .evolution import inherited_meta
-
     out = wh.commit(
         dest,
         merged,
@@ -424,9 +421,9 @@ def upsert(
             "operation": "upsert",
             "upsert_parent": snapshot,
             "seq": seq,
-            **inherited_meta(manifest),
         },
         advance_current=branch is None,
+        ids=manifest,
     )
     if branch is not None:
         wh.set_ref(branch, dest, kind="branch")

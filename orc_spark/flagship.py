@@ -546,8 +546,8 @@ def schema_evolution_summary(
     stored name) and ADD a column (lang, null-filled in pre-add files) →
     UPSERT an inserted slice written under the NEW names with lang
     populated → aggregate the mixed table. Old-name stripes and new-name
-    stripes decode through the same alias mapping; the DuckDB oracle
-    recomputes the final table, so a misresolved alias, a wrong null
+    stripes resolve through the same field IDs; the DuckDB oracle
+    recomputes the final table, so a misresolved rename, a wrong null
     fill, or a version leak flips the value hash. In-gate: tokstripe
     format parity on the evolved schema and time travel to the pre-
     evolution snapshot (old column name intact)."""

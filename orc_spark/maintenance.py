@@ -56,7 +56,7 @@ from .pipeline import (
     decode_table,
     encode_table,
 )
-from .warehouse import Warehouse
+from .warehouse import Warehouse, current_ids
 
 
 def _load_source_manifests(wh: Warehouse, snapshots: list[str]) -> list[dict]:
@@ -195,6 +195,7 @@ def compact_snapshots(
             key_col=layout.get("key_col", "doc_id"),
             source_col=layout.get("source_col", "source"),
             weight_col=layout.get("weight_col", "n_tok"),
+            ids=wh.carry_ids(manifests[0], schema),
         )
         return wh.commit(dest_snapshot, {}, schema, extra=extra)
     if mode != "concat":
@@ -207,20 +208,12 @@ def compact_snapshots(
                 "use maintenance.materialize_deletes (or mode='reencode') "
                 "to rewrite it first"
             )
-        if m["schema"] != schema or (m.get("column_mapping") or {}) != (
-            manifests[0].get("column_mapping") or {}
-        ):
+        if current_ids(m) != current_ids(manifests[0]):
             raise ValueError(
                 f"snapshot {s!r} has a different schema/evolution state "
                 "than the first source: concat copies blobs verbatim — "
                 "use mode='reencode' to unify schemas"
             )
-    # blobs keep their stored stream names, so the dest must inherit the
-    # sources' evolution mapping (evolution.py); reencode writes fresh
-    # streams under current names and clears it
-    if manifests[0].get("column_mapping"):
-        extra["column_mapping"] = manifests[0]["column_mapping"]
-        extra["retired_names"] = manifests[0].get("retired_names") or []
 
     # pid -> ordered source files + parsed key ranges (driver-side metadata
     # only: O(#pids), the same scale class as an Iceberg manifest rewrite)
@@ -229,11 +222,20 @@ def compact_snapshots(
         "tinyint", "smallint", "int", "bigint",
     )
     plan: dict[str, list[str]] = {}
+    sid: dict[str, int] = {}
     lo: dict[str, object] = {}
     hi: dict[str, object] = {}
+    schemas = manifests[0]["schemas"]
     for m in manifests:
         for pid, part in m["partitions"].items():
             plan.setdefault(pid, []).append(part["file"])
+            # blobs keep their write-time names: a pid's sources share one
+            # {name: field_id}, indexed in the first source's `schemas`
+            ids = m["schemas"][part["schema_id"]]
+            j = schemas.index(ids) if ids in schemas else -1
+            if j < 0 or sid.setdefault(pid, j) != j:
+                raise ValueError(f"pid {pid!r} has source files written under "
+                                 "different schemas — use mode='reencode'")
             mn, mx = part.get("min_doc_id"), part.get("max_doc_id")
             if mn is None or mx is None or mn == "" or mx == "":
                 continue
@@ -278,10 +280,11 @@ def compact_snapshots(
             for k, v in (("min_doc_id", lo.get(p)), ("max_doc_id", hi.get(p))):
                 d[k] = v if isinstance(v, str) else ("" if v is None else json.dumps(v))
             d["compacted"] = True
+            d["schema_id"] = sid[p]
             parts[p] = d
     else:
         parts = {}
-    return wh.commit(dest_snapshot, parts, schema, extra=extra)
+    return wh.commit(dest_snapshot, parts, schema, extra=extra, ids=manifests[0])
 
 
 def materialize_deletes(
@@ -325,6 +328,7 @@ def materialize_deletes(
         key_col=layout.get("key_col", "doc_id"),
         source_col=layout.get("source_col", "source"),
         weight_col=layout.get("weight_col", "n_tok"),
+        ids=wh.carry_ids(m, m["schema"]),
     )
     return wh.commit(
         dest_snapshot,

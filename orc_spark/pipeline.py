@@ -54,7 +54,6 @@ from __future__ import annotations
 import heapq
 import json
 import os
-import re
 import time
 import uuid
 
@@ -66,8 +65,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .codecs import bloom as bloomc
+from .evolution import column_maps, fill_type
 from .stripe import decode_stripe, encode_stripe, footer_from_json, footer_to_json
-from .warehouse import Warehouse
+from .warehouse import Warehouse, current_ids
 
 META_SCHEMA = (
     "pid string, file string, stripes long, n_rows long, n_tokens long, "
@@ -394,6 +394,7 @@ def encode_table(
     key_blooms: bool = True,
     extra: dict | None = None,
     advance_current: bool = True,
+    ids: dict | None = None,
 ) -> dict:
     """Encode a (doc_id, tokens, n_tok, source) DataFrame into the warehouse;
     returns the committed manifest. Resumable: committed partitions are
@@ -412,7 +413,10 @@ def encode_table(
 
     `key_blooms=False` skips the stripe/file key bloom filters (and their
     ~1% encode CPU): IN-set point lookups then fall back to range stats +
-    exact row filtering — correct, just unpruned under the salt."""
+    exact row filtering — correct, just unpruned under the salt.
+
+    `ids`: the field IDs to commit under (Warehouse.commit); a rewrite
+    passes its source's, the default carries CURRENT's by name."""
     wh = Warehouse(warehouse_path)
     schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     dfp = with_pid(df, salt_buckets, key_col, source_col)
@@ -427,7 +431,8 @@ def encode_table(
             if v is not None:
                 adopted[pid] = {**v, "file": f, "adopted": True, "encode_s": 0.0}
         if adopted:
-            wh.commit(snapshot, adopted, schema, advance_current=advance_current)
+            wh.commit(snapshot, adopted, schema, ids=ids,
+                      advance_current=advance_current)
             committed |= set(adopted)
     if committed:
         if len(committed) <= 1000:
@@ -472,6 +477,7 @@ def encode_table(
         snapshot, partitions, schema,
         extra={"layout": layout, **(extra or {})},
         advance_current=advance_current,
+        ids=ids,
     )
 
 
@@ -714,15 +720,10 @@ def decode_table(
             ("stripes_seen", "stripes_skipped", "stripes_bloom_skipped"), accs
         ))
     key_col = (manifest.get("layout") or {}).get("key_col", "doc_id")
-    # {} normalizes to None: with the evolution invariant that every
-    # added/renamed column keeps a mapping entry, an empty mapping means
-    # "no evolution residue" — plain decode path
-    colmap = manifest.get("column_mapping") or None
-
     bins = file_bins(file_sizes(manifest), entries, spark.sparkContext.defaultParallelism)
     return scan_bins(
         spark, bins,
-        lambda b: read_table_bin(b, preds, names, key_col, colmap, schema, accs),
+        lambda b: read_table_bin(b, preds, names, key_col, schema, accs),
         out_schema,
     )
 
@@ -736,29 +737,26 @@ def check_columns(names: list[str], schema: dict) -> None:
 
 def plan_table(
     manifest: dict, preds: list[tuple], prune_metrics: dict | None = None
-) -> list[tuple[str, tuple[str, ...]]]:
+) -> list[tuple[str, tuple[str, ...], dict | None]]:
     """The planning half of every table read (decode_table, the tokstripe
-    batch reader): (file, applicable delete set) entries — the files
-    plan_scan_files keeps when there are predicates, every committed file
-    otherwise, each with its seq-scoped delete-file paths
-    (deletes.applicable_deletes). Reads the manifest and, for key IN-sets,
-    the sidecar blooms; never a delete file."""
+    batch reader): (file, applicable delete set, column map) entries — the
+    files plan_scan_files keeps when there are predicates, every committed
+    file otherwise, each with its seq-scoped delete-file paths
+    (deletes.applicable_deletes) and evolution.stored_names. Reads the
+    manifest and, for key IN-sets, the sidecar blooms; never a delete file."""
     from . import deletes as _deletes
 
-    if preds:
-        files = plan_scan_files(manifest, preds, prune_metrics)
-    else:
-        files = [p["file"] for p in manifest["partitions"].values()]
+    maps = column_maps(manifest, current_ids(manifest))
+    files = plan_scan_files(manifest, preds, prune_metrics) if preds else list(maps)
     dels_of = _deletes.applicable_deletes(manifest, files)
-    return [(f, dels_of[f]) for f in files]
+    return [(f, dels_of[f], maps[f]) for f in files]
 
 
 def read_table_bin(
-    entries: list[tuple[str, tuple[str, ...]]],
+    entries: list[tuple[str, tuple[str, ...], dict | None]],
     preds: list[tuple],
     names: list[str],
     key_col: str = "doc_id",
-    colmap: dict[str, list[str]] | None = None,
     coltypes: dict[str, str] | None = None,
     accs: tuple = (None, None, None),
 ):
@@ -770,11 +768,11 @@ def read_table_bin(
     from . import deletes as _deletes
 
     keysets: dict[tuple[str, ...], pa.Array] = {}
-    for path, appl in entries:
+    for path, appl, stored in entries:
         if appl and appl not in keysets:
             keysets[appl] = _deletes.load_delete_keys(list(appl), key_col)
         yield from decode_file(
-            path, preds, names, keysets.get(appl), key_col, colmap, coltypes, accs
+            path, preds, names, keysets.get(appl), key_col, stored, coltypes, accs
         )
 
 
@@ -834,26 +832,6 @@ def plan_scan_files(
     return files
 
 
-def _null_array(spark_type: str, n: int):
-    """All-null arrow array of the arrow type matching a manifest spark
-    type — the read shape of a schema-evolution ADDed column in files
-    written before the add (evolution.py)."""
-    import pyarrow as pa
-
-    prim = {
-        "tinyint": pa.int8(), "smallint": pa.int16(), "int": pa.int32(),
-        "bigint": pa.int64(), "float": pa.float32(), "double": pa.float64(),
-        "string": pa.string(), "boolean": pa.bool_(),
-        "timestamp": pa.timestamp("us"),
-    }
-    if spark_type in prim:
-        return pa.nulls(n, prim[spark_type])
-    m = re.match(r"array<(\w+)>", spark_type)
-    if m and m.group(1) in prim:
-        return pa.nulls(n, pa.list_(prim[m.group(1)]))
-    raise TypeError(f"cannot null-fill added column of type {spark_type!r}")
-
-
 def decode_blob_batches(
     batches,
     preds: list[tuple],
@@ -862,7 +840,7 @@ def decode_blob_batches(
     acc_seen=None,
     acc_skip=None,
     acc_bloom=None,
-    colmap: dict[str, list[str]] | None = None,
+    stored: dict[str, str | None] | None = None,
     coltypes: dict[str, str] | None = None,
 ):
     """Decode a stream of (blob, footer) Arrow batches into RecordBatches of
@@ -871,15 +849,19 @@ def decode_blob_batches(
     is decompressed), then the exact arrow row filter. Shared by every
     stripe-file read through decode_file.
 
-    `colmap` (evolution.py `column_mapping`: current name -> prior stored
-    names, newest first) resolves schema evolution PER STRIPE: stripe
-    footers key streams by the name current at write time, so a renamed
-    column reads under whichever name this stripe stored, and an added
-    column null-fills (type from `coltypes`, the manifest schema) in
-    stripes that predate it. Predicates translate the same way for the
-    stats/bloom skips; a stripe that lacks the column entirely cannot be
-    excluded by stats and falls through to the exact row filter, where the
-    null fill matches nothing."""
+    `stored` is the file's column map (evolution.stored_names, one per
+    file): read name -> the name the file stores it under, None for a
+    column the file lacks, which null-fills (type from `coltypes`, the
+    bound schema). The stripes are decoded under the stored names and
+    renamed; stripe predicates translate the same way, once. A predicate
+    on a column the file lacks cannot exclude a stripe and falls through to
+    the exact row filter, where the null fill matches nothing."""
+    spreds, decode_cols = preds, read_cols
+    if stored is not None:
+        spreds = [(p[0], stored[p[1]]) + tuple(p[2:]) for p in preds if stored[p[1]]]
+        decode_cols = [stored[c] for c in read_cols if stored[c]]
+        fill = [(c, fill_type(coltypes[c])) for c in read_cols if not stored[c]]
+        out_names = [c for c in read_cols if stored[c]] + [c for c, _ in fill]
     for batch in batches:
         blobs = batch.column("blob")
         footers = batch.column("footer")
@@ -887,24 +869,6 @@ def decode_blob_batches(
             footer = footer_from_json(str(footers[i]))
             if acc_seen is not None:
                 acc_seen.add(1)
-            fcols = footer["columns"]
-
-            def _stored(c):
-                if c in fcols or colmap is None:
-                    return c if c in fcols else None
-                return next(
-                    (a for a in colmap.get(c, ()) if a in fcols), None
-                )
-
-            spreds = preds
-            if colmap is not None and preds:
-                spreds = []
-                for p in preds:
-                    s = _stored(p[1])
-                    if s is not None:
-                        spreds.append((p[0], s) + tuple(p[2:]))
-                    # else: this stripe has no data for the column — stats
-                    # cannot exclude it; the row filter decides
             if spreds and not all(
                 stripe_matches_pred(footer, p) for p in spreds
             ):
@@ -923,30 +887,12 @@ def decode_blob_batches(
                 if acc_bloom is not None:
                     acc_bloom.add(1)
                 continue
-            if colmap is None:
-                rb = decode_stripe(blobs[i].as_buffer(), footer, columns=read_cols)
-            else:
-                import pyarrow as pa
-
-                stored = [(c, _stored(c)) for c in read_cols]
-                present = [(c, s) for c, s in stored if s is not None]
-                arrays, outn = [], []
-                if present:
-                    dec = decode_stripe(
-                        blobs[i].as_buffer(), footer,
-                        columns=[s for _, s in present],
-                    )
-                    for j, (c, _) in enumerate(present):
-                        arrays.append(dec.column(j))
-                        outn.append(c)
-                n_rows = footer["n_rows"]
-                for c, s in stored:
-                    if s is None:
-                        arrays.append(_null_array((coltypes or {})[c], n_rows))
-                        outn.append(c)
-                rb = pa.RecordBatch.from_arrays(arrays, names=outn)
-                if outn != read_cols:
-                    rb = rb.select(read_cols)
+            rb = decode_stripe(blobs[i].as_buffer(), footer, columns=decode_cols)
+            if stored is not None:
+                nulls = [pa.nulls(footer["n_rows"], t) for _, t in fill]
+                rb = pa.RecordBatch.from_arrays(
+                    rb.columns + nulls, names=out_names
+                ).select(read_cols)
             if preds:
                 rb = rb.filter(_row_mask(rb, preds))
                 if rb.num_rows == 0:
@@ -1005,22 +951,23 @@ def decode_file(
     names: list[str],
     keyset: pa.Array | None = None,
     key_col: str = "doc_id",
-    colmap: dict[str, list[str]] | None = None,
+    stored: dict[str, str | None] | None = None,
     coltypes: dict[str, str] | None = None,
     accs: tuple = (None, None, None),
 ):
     """Executor side of a stripe-file read: stream one data file's
-    (blob, footer) row groups through decode_blob_batches, then drop the
-    rows whose `key_col` is in `keyset` (the keys of the file's
-    merge-on-read delete set). Predicate and key columns not in `names`
-    are decoded for the filters and dropped after."""
+    (blob, footer) row groups through decode_blob_batches (under its
+    column map `stored`), then drop the rows whose `key_col` is in
+    `keyset` (the keys of the file's merge-on-read delete set). Predicate
+    and key columns not in `names` are decoded for the filters and
+    dropped after."""
     nk = keyset is not None and key_col not in names
     inner = names + [key_col] if nk else names
     read_cols = list(dict.fromkeys(inner + [p[1] for p in preds]))
     with pq.ParquetFile(path) as pf:
         for rb in decode_blob_batches(
             pf.iter_batches(columns=["blob", "footer"]), preds, read_cols,
-            inner, *accs, colmap=colmap, coltypes=coltypes,
+            inner, *accs, stored=stored, coltypes=coltypes,
         ):
             if keyset is not None:
                 # null keys are kept: is_in(null)=null -> fill False ->
@@ -1056,21 +1003,21 @@ def export_orc(
     # the exporter streams RAW stripe blobs, so snapshots whose correct
     # read requires merge-on-read state would export WRONG files: deleted
     # rows would resurrect, renamed columns would ship under per-file
-    # stale names. Fold the state flat first; the rewrite clears both.
+    # stale names. Fold the state flat first: a rewrite writes current names.
     if m.get("delete_files"):
         raise ValueError(
             f"snapshot {snapshot!r} carries merge-on-read delete files — "
             "exporting raw stripes would resurrect deleted rows; run "
             "maintenance.materialize_deletes first"
         )
-    if m.get("column_mapping"):
+    entries = plan_table(m, []) if m else []
+    if any(stored is not None for _, _, stored in entries):
         raise ValueError(
             f"snapshot {snapshot!r} has unmaterialized schema evolution — "
             "raw stripes store per-file WRITE-TIME column names; rewrite "
             "via compact_snapshots(mode='reencode') (or "
             "materialize_deletes) so every stream carries current names"
         )
-    entries = plan_table(m, []) if m else []
     if not entries:
         raise ValueError(f"no committed files for snapshot {snapshot}")
     os.makedirs(out_dir, exist_ok=True)
@@ -1103,7 +1050,7 @@ def export_orc(
             )
 
         def batches():
-            for path, _ in entries:
+            for path, _, _ in entries:
                 with pq.ParquetFile(path) as pf:
                     yield from pf.iter_batches(columns=["pid", "blob", "footer"])
 

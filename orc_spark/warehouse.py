@@ -28,10 +28,23 @@ list; per-file stats live in the stripe footers inside the data files.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import tempfile
 import time
+
+# a manifest's field IDs (evolution.py): its {name: field_id} schema
+# versions and the index of the current one
+ID_KEYS = ("schemas", "schema_id")
+
+
+def current_ids(m: dict) -> dict[str, int]:
+    """{name: field_id} of the manifest's current schema."""
+    if "schemas" not in m:
+        raise ValueError(f"manifest {m.get('snapshot_id')!r} has no field IDs "
+                         "(written before the table kept them); re-encode it")
+    return m["schemas"][m["schema_id"]]
 
 
 class Warehouse:
@@ -61,6 +74,30 @@ class Warehouse:
         if not os.path.exists(f):
             return None
         return json.load(open(f))
+
+    def last_field_id(self) -> int:
+        """The largest field ID in any manifest: the last one handed out, on
+        any branch (IDs are table-wide, so a changelog that crosses a
+        rollback never reads one column as another)."""
+        return max((
+            f for n in os.listdir(self.manifest_dir)
+            if n.startswith("snap-") and n.endswith(".json")
+            for s in json.load(open(os.path.join(self.manifest_dir, n))).get("schemas", ())
+            for f in s.values()
+        ), default=0)
+
+    def carry_ids(self, parent: dict | None, schema: dict) -> dict:
+        """ID_KEYS of a commit of `schema` on `parent` (None: a fresh
+        table): a name of the parent's current schema keeps its ID, a new
+        name gets a fresh one; an unchanged mapping keeps the schema ID."""
+        cur = current_ids(parent) if parent is not None else {}
+        new = [n for n in schema if n not in cur]
+        fresh = dict(zip(new, itertools.count(self.last_field_id() + 1))) if new else {}
+        ids = {n: cur[n] if n in cur else fresh[n] for n in schema}
+        if parent is not None and ids == cur:
+            return {k: parent[k] for k in ID_KEYS}
+        schemas = parent["schemas"] if parent is not None else []
+        return {"schemas": schemas + [ids], "schema_id": len(schemas)}
 
     def commit_log(self) -> list[str]:
         """Snapshot names in COMMIT order — the warehouse's tiny append-only
@@ -112,7 +149,7 @@ class Warehouse:
             with open(logf, "a") as fh:
                 fh.write(snapshot + "\n")
 
-    def commit(self, snapshot: str, partitions: dict[str, dict], schema: dict, extra: dict | None = None, advance_current: bool = True) -> dict:
+    def commit(self, snapshot: str, partitions: dict[str, dict], schema: dict, extra: dict | None = None, advance_current: bool = True, ids: dict | None = None) -> dict:
         """Atomically (tmp+rename) write the manifest and advance CURRENT.
 
         `partitions` maps pid -> {file, n_rows, n_tokens, enc_bytes, metrics…}
@@ -121,15 +158,30 @@ class Warehouse:
         `advance_current=False` commits without moving the CURRENT pointer —
         for staging snapshots (deletes.upsert) that must never become the
         table's default read, even through a crash window.
+
+        Field IDs (evolution.py) reach a manifest only here: those of `ids`
+        (a shared-files commit's parent, carry_ids of a rewrite's source),
+        by default CURRENT's carried by name (carry_ids), as suits an
+        append. An entry without a `schema_id` gets the manifest's.
         """
-        manifest = self.read_manifest(snapshot) or {
-            "snapshot_id": snapshot,
-            "parent": self.current_snapshot_id(),
-            "schema": schema,
-            "created_at": time.time(),
-            "partitions": {},
-        }
-        manifest["partitions"].update(partitions)
+        manifest = self.read_manifest(snapshot)
+        if manifest is None:
+            parent = self.current_snapshot_id()
+            if ids is None:
+                ids = self.carry_ids(self.read_manifest(parent) if parent else None, schema)
+            manifest = {
+                "snapshot_id": snapshot,
+                "parent": parent,
+                "schema": schema,
+                "created_at": time.time(),
+                "partitions": {},
+                **{k: ids[k] for k in ID_KEYS},
+            }
+        current_ids(manifest)  # a manifest without IDs fails here
+        manifest["partitions"].update(
+            (pid, {"schema_id": manifest["schema_id"], **p})
+            for pid, p in partitions.items()
+        )
         manifest["committed_at"] = time.time()
         if extra:
             manifest.update(extra)

@@ -10,7 +10,7 @@ from orc_spark.cdc import changes_between
 from orc_spark.evolution import evolve_schema
 from orc_spark.maintenance import expire_snapshots
 from orc_spark.pipeline import decode_table, encode_table
-from orc_spark.warehouse import Warehouse
+from orc_spark.warehouse import Warehouse, current_ids
 
 
 def _df(spark, n=300):
@@ -194,12 +194,14 @@ def test_changelog_errors(spark, wh):
         changes_between(spark, wh, "c0", u)
 
 
-def _drain(spark, wh, out, ckpt, **opts):
+def _drain(spark, wh, out, ckpt, schema=None, **opts):
     """One availableNow run of a tokstripe stream into a parquet sink."""
     from orc_spark.datasource import register
 
     register(spark)
     rdr = spark.readStream.format("tokstripe").option("path", wh)
+    if schema is not None:
+        rdr = rdr.schema(schema)
     for k, v in opts.items():
         rdr = rdr.option(k, v)
     q = (
@@ -254,7 +256,9 @@ def test_changelog_across_evolution_and_materialize(spark, tmp_path):
     assert got.where("_change_type = 'delete'").count() == 1
     m = materialize_deletes(spark, w, snapshot=d, salt_buckets=2,
                             stripe_tokens=800)["snapshot_id"]
-    assert not Warehouse(w).read_manifest(m).get("column_mapping")
+    # the rewrite keeps the renamed column's field ID
+    assert current_ids(Warehouse(w).read_manifest(m))["tok_count"] == \
+        current_ids(Warehouse(w).read_manifest("e0"))["n_tok"]
     rows = changes_between(spark, w, ev, m).collect()
     assert [(r["_change_type"], r["doc_id"], r["tok_count"], r["lang"])
             for r in rows] == [("delete", "d00005", 7, None)]
@@ -262,6 +266,98 @@ def test_changelog_across_evolution_and_materialize(spark, tmp_path):
     got = _drain(spark, w, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
                  mode="cdc")
     assert got.count() == 61
+
+
+def _rewrite_after_evolve(spark, w, **evolve):
+    """e0 (60 rows) and e1 (40 rows) encoded, `evolve` applied to e1, one
+    of e1's keys deleted, then the delete materialized: the rewrite's
+    snapshot."""
+    from orc_spark.maintenance import materialize_deletes
+
+    for snap, rows in (("e0", "doc_id < 'd00060'"), ("e1", "doc_id >= 'd00060'")):
+        encode_table(spark, _df(spark, 100).where(rows), w, snapshot=snap,
+                     salt_buckets=2, stripe_tokens=800, weight_col=None)
+    evolve_schema(w, snapshot="e1", **evolve)
+    d = deletes.delete_where(spark, w, ("doc_id", ["d00065"]))["snapshot_id"]
+    return materialize_deletes(spark, w, snapshot=d, salt_buckets=2,
+                               stripe_tokens=800)["snapshot_id"]
+
+
+def test_rename_before_a_rewrite_reads_forward(spark, tmp_path):
+    """A column renamed before a materialize keeps its values in files
+    older than the rename, for batch CDC and for a CDC stream bound after
+    the rewrite (the alias mapping the rewrite cleared used to null-fill
+    all of e1's 40 inserts)."""
+    w = str(tmp_path / "wh")
+    m = _rewrite_after_evolve(spark, w, rename={"n_tok": "tok_count"})
+    n_tok = {r["doc_id"]: r["n_tok"] for r in _df(spark, 100).collect()}
+    rows = changes_between(spark, w, "e0", m).collect()
+    assert sorted((r["_change_type"], r["doc_id"], r["tok_count"]) for r in rows) \
+        == [("delete", "d00065", n_tok["d00065"])] + sorted(
+            ("insert", d, v) for d, v in n_tok.items() if d >= "d00060")
+    got = _drain(spark, w, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
+                 mode="cdc")
+    ins = got.where("_change_type = 'insert'").collect()
+    assert sorted((r["doc_id"], r["tok_count"]) for r in ins) == sorted(n_tok.items())
+
+
+def test_drop_before_a_rewrite_then_re_add_reads_null(spark, tmp_path):
+    """A name dropped before a materialize and added after it is a new
+    column: batch CDC reads NULL for it in every row of files written
+    before the add (it used to read the dropped column's bytes)."""
+    w = str(tmp_path / "wh")
+    m = _rewrite_after_evolve(spark, w, drop=["n_tok"])
+    ev = evolve_schema(w, snapshot=m, add={"n_tok": "int"})["snapshot_id"]
+    rows = changes_between(spark, w, "e0", ev).collect()
+    assert sorted(r["_change_type"] for r in rows) == ["delete"] + ["insert"] * 40
+    assert {r["_commit_snapshot"] for r in rows if r["_change_type"] == "insert"} \
+        == {"e1"}
+    assert [r["n_tok"] for r in rows] == [None] * 41
+
+
+@pytest.mark.parametrize("steps, mode", [
+    ([{"rename": {"n_tok": "tok_count"}}], "materialize"),
+    ([{"rename": {"n_tok": "tok_count"}}], "reencode"),
+    ([{"drop": ["n_tok"]}, {"add": {"n_tok": "int"}}], "materialize"),
+], ids=["rename-materialize", "rename-reencode", "re_add-materialize"])
+def test_rewrite_of_an_older_snapshot_keeps_its_ids(spark, tmp_path, steps, mode):
+    """A rewrite of a snapshot that is not CURRENT takes its field IDs from
+    that snapshot, not from what CURRENT did to its names since: after a
+    delete on the rewrite, the changelog reads e0's n_tok values (with
+    CURRENT's IDs the rewrite's n_tok got a fresh ID, and every e0 insert
+    read NULL)."""
+    from orc_spark.maintenance import compact_snapshots, materialize_deletes
+
+    w = str(tmp_path / "wh")
+    for snap, rows in (("c0", "doc_id < 'd00030'"), ("e0", "doc_id >= 'd00030'")):
+        encode_table(spark, _df(spark, 60).where(rows), w, snapshot=snap,
+                     salt_buckets=2, stripe_tokens=800, weight_col=None)
+    snap = "e0"
+    for step in steps:
+        snap = evolve_schema(w, snapshot=snap, **step)["snapshot_id"]
+    if mode == "materialize":
+        r = materialize_deletes(spark, w, snapshot="e0", salt_buckets=2,
+                                stripe_tokens=800)["snapshot_id"]
+    else:
+        r = compact_snapshots(spark, w, ["e0"], "r", mode="reencode",
+                              salt_buckets=2, stripe_tokens=800)["snapshot_id"]
+    d = deletes.delete_where(spark, w, ("doc_id", ["d00035"]), snapshot=r)
+    n_tok = {r["doc_id"]: r["n_tok"] for r in _df(spark, 60).collect()}
+    rows = changes_between(spark, w, "c0", d["snapshot_id"]).collect()
+    assert sorted((r["_change_type"], r["doc_id"], r["n_tok"]) for r in rows) \
+        == [("delete", "d00035", n_tok["d00035"])] + sorted(
+            ("insert", k, v) for k, v in n_tok.items() if k >= "d00030")
+
+
+def test_stream_schema_column_the_table_lacks_reads_null(spark, wh, tmp_path):
+    """A column of a stream's user-given schema that the snapshot lacks
+    null-fills, whatever its type (boolean and array<bigint> are no ADD
+    types, but a read can still ask for them)."""
+    got = _drain(spark, wh, str(tmp_path / "sink"), str(tmp_path / "ckpt"),
+                 schema="doc_id string, n_tok int, flag boolean, "
+                        "ids array<bigint>")
+    assert got.count() == 300
+    assert got.where("flag IS NULL AND ids IS NULL AND n_tok > 0").count() == 300
 
 
 def test_append_stream_skips_evolve_and_rewrite_commits(spark, wh, tmp_path):
@@ -302,7 +398,8 @@ def test_pre_images_above_inline_bound_load_in_workers(spark, wh, monkeypatch):
     w = Warehouse(wh)
     (d1_dels,) = deletes.delete_files_of(w.read_manifest(d1))
     assert deletes.count_delete_keys([d1_dels]) > 5
-    tasks = plan_changes(w, [(w.commit_log().index(d2), d2)])
+    bound = current_ids(w.read_manifest(d2))
+    tasks = plan_changes(w, [(w.commit_log().index(d2), d2)], bound)
     assert sorted(t.file for t in tasks) == sorted(w.committed_files(d1))
     assert all(t.dels == (d1_dels,) for t in tasks)
 
@@ -316,7 +413,7 @@ def test_pre_images_above_inline_bound_load_in_workers(spark, wh, monkeypatch):
 
     monkeypatch.setattr(deletes, "load_delete_keys", worker_load)
     schema = w.read_manifest(d2)["schema"]
-    rows = [r for rb in read_tasks(tasks, schema, None) for r in rb.to_pylist()]
+    rows = [r for rb in read_tasks(tasks, schema) for r in rb.to_pylist()]
     assert sorted(r["doc_id"] for r in rows) == live[::12][:20]
     assert {among for files, among in loads if files == (d1_dels,)} == {True}
 
@@ -364,7 +461,7 @@ def test_plan_changes_reads_each_commit_record(tmp_path, monkeypatch):
         "delete_files": [del1, del2]})
     os.remove(wh.manifest_file("u2-stage"))  # as deletes.upsert does
     wh.commit("ev", upserted, {**schema, "lang": "string"}, extra={      # 4
-        "operation": "evolve", "column_mapping": {"lang": []},
+        "operation": "evolve",
         "delete_files": [del1, del2]})
     wh.commit("cmp", {"p0": part("cmp", "a", "z")}, schema,              # 5
               extra={"compacted_from": ["ev"]})
@@ -377,7 +474,7 @@ def test_plan_changes_reads_each_commit_record(tmp_path, monkeypatch):
     def plan(cdc=True):
         return {
             (t.ordinal, t.change, t.file, t.dels, t.keys_from)
-            for t in plan_changes(wh, enumerate(wh.commit_log()), cdc=cdc)
+            for t in plan_changes(wh, enumerate(wh.commit_log()), {}, cdc=cdc)
         }
 
     inserts = {
@@ -397,7 +494,7 @@ def test_plan_changes_reads_each_commit_record(tmp_path, monkeypatch):
 
     # above the inline bound the driver does not prune: every parent file
     monkeypatch.setattr(deletes, "INLINE_DELETE_MAX", 0)
-    assert {t.file for t in plan_changes(wh, [(1, "d1")])} == {"/x/a", "/x/b"}
+    assert {t.file for t in plan_changes(wh, [(1, "d1")], {})} == {"/x/a", "/x/b"}
 
     # an expired commit fails a changelog, the append stream skips it
     os.remove(wh.manifest_file("d1"))

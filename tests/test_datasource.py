@@ -68,7 +68,7 @@ def _planned_files(wh, schema, *filters):
 
     r = TokstripeReader({"path": wh}, schema)
     assert list(r.pushFilters(list(filters))) == []
-    return [f for p in r.partitions() for f, _ in p.files]
+    return [f for p in r.partitions() for f, *_ in p.files]
 
 
 def test_planning_time_pruning_reduces_tasks(spark, ds_wh):

@@ -1,6 +1,7 @@
 """Schema evolution (evolution.py): add/drop/rename are metadata-only
-commits; readers resolve per stripe through the alias mapping, null-fill
-added columns, and refuse ambiguous name reuse. Mixed-file tables (old
+commits; a column is its field ID, so readers resolve each file's
+write-time names through its schema's IDs, null-fill columns a file
+lacks, and a re-added name is a new column. Mixed-file tables (old
 stripes under old names + post-evolution upsert stripes under new names)
 are the hard case and get their own assertions."""
 
@@ -67,15 +68,60 @@ def test_rename_reads_old_files_and_guards(spark, wh):
     # old name is gone from the read schema
     with pytest.raises(ValueError, match="not in table schema"):
         decode_table(spark, wh, snapshot=snap, predicate=("n_tok", 5, 9))
-    # reusing a retired name is refused — it is still stored in files
-    with pytest.raises(ValueError, match="stored in data files"):
-        evolve_schema(wh, snapshot=snap, add={"n_tok": "int"})
-    with pytest.raises(ValueError, match="stored in data files"):
-        evolve_schema(wh, snapshot=snap, rename={"tok_count": "n_tok"})
+    # a name that collides with a live column is refused
+    with pytest.raises(ValueError, match="live column"):
+        evolve_schema(wh, snapshot=snap, add={"tok_count": "int"})
+    with pytest.raises(ValueError, match="live column"):
+        evolve_schema(wh, snapshot=snap, rename={"tokens": "tok_count"})
+    # the old name is free: re-added, it is a new column, NULL in every
+    # file written before the add (the files still store the old n_tok)
+    re_add = evolve_schema(wh, snapshot=snap, add={"n_tok": "int"})
+    got = decode_table(spark, wh, snapshot=re_add["snapshot_id"])
+    assert got.where("n_tok IS NULL AND tok_count IS NOT NULL").count() == 300
+    # renaming back keeps the field ID: the values read again
+    back = evolve_schema(wh, snapshot=snap, rename={"tok_count": "n_tok"})
+    got = decode_table(spark, wh, snapshot=back["snapshot_id"])
+    assert got.select(F.sum("n_tok")).collect()[0][0] == \
+        _df(spark).select(F.sum("n_tok")).collect()[0][0]
     # time travel: the parent still reads the OLD schema
     assert "n_tok" in decode_table(
         spark, wh, snapshot=snapshot_as_of(wh, ordinal=0)
     ).columns
+
+
+def test_drop_and_re_add_in_one_call_reads_null(spark, wh):
+    """Dropping a column and adding the same name in one evolution makes a
+    NEW column: every row written before reads NULL, through decode_table
+    and through the tokstripe format (the old name-based reuse guard let
+    this through and both returned the dropped column's values)."""
+    from orc_spark.datasource import register
+
+    snap = evolve_schema(wh, drop=["n_tok"], add={"n_tok": "int"})["snapshot_id"]
+    got = decode_table(spark, wh, snapshot=snap)
+    assert got.columns == ["doc_id", "tokens", "source", "n_tok"]
+    assert got.where("n_tok IS NULL").count() == 300
+    register(spark)
+    fmt = (
+        spark.read.format("tokstripe")
+        .option("path", wh).option("snapshot", snap).load()
+    )
+    assert fmt.where("n_tok IS NULL").count() == 300
+    assert decode_table(spark, wh, snapshot=snap, predicate=("n_tok", 0, 99)).count() == 0
+
+
+def test_add_rejects_types_it_cannot_fill_or_write(spark, wh):
+    """An ADD type that the null fill cannot build or the stripe encoder
+    cannot write is refused at evolve time (it used to commit, and every
+    later read of a pre-add file raised TypeError)."""
+    w = Warehouse(wh)
+    n = len(w.commit_log())
+    for typ in ("date", "decimal(10,2)", "bogus", "boolean", "array<string>"):
+        with pytest.raises(ValueError, match="cannot add"):
+            evolve_schema(wh, add={"x": typ})
+    assert len(w.commit_log()) == n  # nothing committed
+    snap = evolve_schema(wh, add={"x": "timestamp", "y": "array<double>"})["snapshot_id"]
+    got = decode_table(spark, wh, snapshot=snap)
+    assert got.where("x IS NULL AND y IS NULL").count() == 300
 
 
 def test_drop_column(spark, wh):
@@ -144,9 +190,11 @@ def test_concat_guards_and_inherits_mapping(spark, wh, tmp_path):
     # concat of sources in DIFFERENT evolution states is refused
     with pytest.raises(ValueError, match="cannot compact|schema/evolution"):
         compact_snapshots(spark, w2, ["e0", ev["snapshot_id"]], "c0")
-    # concat of one evolved source inherits the mapping
+    # concat of one evolved source keeps its field IDs, and each dest file
+    # keeps the schema ID its copied blobs were written under
     m = compact_snapshots(spark, w2, [ev["snapshot_id"]], "c1")
-    assert m.get("column_mapping") == {"tok_count": ["n_tok"]}
+    assert (m["schemas"], m["schema_id"]) == (ev["schemas"], ev["schema_id"])
+    assert {p["schema_id"] for p in m["partitions"].values()} == {0}
     got = decode_table(spark, w2, snapshot="c1")
     assert got.select(F.sum("tok_count")).collect()[0][0] == \
         _df(spark).select(F.sum("n_tok")).collect()[0][0]

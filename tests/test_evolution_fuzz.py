@@ -1,8 +1,12 @@
 """Randomized schema-evolution chain fuzz: seeded sequences of
-rename/add/drop interleaved with upserts and deletes, checked after every
-commit against a driver-side model. The hard invariants: alias chains keep
-resolving across mixed-name files, added columns null-fill exactly until a
-write populates them, drops never leak back, and merge-on-read composes."""
+rename/add/drop interleaved with upserts, deletes, materializations and
+reencode compactions, checked after every commit against a driver-side
+model. The hard invariants: a renamed field keeps resolving across
+mixed-name files and across rewrites, added columns null-fill exactly
+until a write populates them, a dropped name that is added again (later
+or in the same call, before or after a rewrite) is a NEW column that is
+null in every row written before the add, drops never leak back, and
+merge-on-read composes."""
 
 import random
 
@@ -11,6 +15,7 @@ from pyspark.sql import functions as F
 
 from orc_spark import deletes
 from orc_spark.evolution import evolve_schema
+from orc_spark.maintenance import compact_snapshots, materialize_deletes
 from orc_spark.pipeline import decode_table, encode_table
 
 BASE_COLS = ["doc_id", "tokens", "source", "n_tok"]
@@ -29,9 +34,16 @@ def _base_rows(n=150):
     ]
 
 
+OPS = ["rename", "add", "drop", "upsert", "delete", "materialize", "reencode",
+       "readd"]
+
+
 def test_random_evolution_chains(spark, tmp_path):
-    rng = random.Random(31337)
-    wh = str(tmp_path / "wh")
+    for seed in (31337, 4242):
+        _chain(spark, str(tmp_path / f"wh{seed}"), random.Random(seed))
+
+
+def _chain(spark, wh, rng):
     rows = [(d, t, s, len(t)) for d, t, s, _ in _base_rows()]
     df = spark.createDataFrame(
         rows, "doc_id string, tokens array<int>, source string, n_tok int"
@@ -50,28 +62,56 @@ def test_random_evolution_chains(spark, tmp_path):
     next_col = [0]
     next_key = [0]
     protected = {"doc_id", "source"}
-    for step in range(8):
-        op = rng.choice(["rename", "add", "drop", "upsert", "delete"])
+    used = set(schema) - protected  # every name a column has ever had
+
+    def new_name():
+        # half the time a name an earlier (dropped or renamed) column had
+        old = sorted(used - set(schema))
+        if old and rng.random() < 0.5:
+            return rng.choice(old)
+        next_col[0] += 1
+        used.add(f"c{next_col[0]}")
+        return f"c{next_col[0]}"
+
+    ops = [rng.choice(OPS) for _ in range(10)]
+    for op in ("materialize", "reencode", "readd"):  # each at least once
+        if op not in ops:
+            ops.insert(rng.randrange(len(ops) + 1), op)
+    for step, op in enumerate(ops):
+        if op in ("materialize", "reencode") and not model:
+            continue  # nothing left to rewrite
         if op == "rename":
             cands = [c for c in schema if c not in protected]
             old = rng.choice(cands)
-            new = f"c{next_col[0]}"
-            next_col[0] += 1
+            new = new_name()
             snap = evolve_schema(wh, snapshot=snap, rename={old: new})[
                 "snapshot_id"
             ]
             schema = {new if k == old else k: v for k, v in schema.items()}
             for r in model.values():
                 r[new] = r.pop(old)
-        elif op == "add":
-            new = f"c{next_col[0]}"
-            next_col[0] += 1
-            snap = evolve_schema(wh, snapshot=snap, add={new: "int"})[
-                "snapshot_id"
-            ]
+        elif op in ("add", "readd"):
+            free, drop = sorted(used - set(schema)), []
+            if op == "add":
+                new = new_name()
+            elif free:
+                new = rng.choice(free)
+            else:  # drop a column and add its name back in the same call
+                new = rng.choice([c for c in schema if c not in protected])
+                drop = [new]
+            snap = evolve_schema(wh, snapshot=snap, drop=drop,
+                                 add={new: "int"})["snapshot_id"]
+            schema.pop(new, None)
             schema[new] = "int"
             for r in model.values():
                 r[new] = None
+        elif op == "materialize":
+            snap = materialize_deletes(spark, wh, snapshot=snap, salt_buckets=2,
+                                       stripe_tokens=300)["snapshot_id"]
+        elif op == "reencode":
+            snap = compact_snapshots(spark, wh, [snap], f"r{step}",
+                                     mode="reencode", salt_buckets=2,
+                                     stripe_tokens=300)["snapshot_id"]
         elif op == "drop":
             cands = [c for c in schema if c not in protected]
             if len(cands) <= 1:

@@ -180,7 +180,7 @@ def test_reused_worker_task_rereads_no_zip_directory(spark, wide_wh):
         }])
 
     # 40 one-file tasks on 4 slots: Python workers are reused
-    out = scan_bins(spark, [[(f, ())] for f in files], probe_bin,
+    out = scan_bins(spark, [[(f, (), None)] for f in files], probe_bin,
                     "pid long, seq long, start long, end long, frozen long, rows long"
                     ).collect()
     assert sum(r.rows for r in out) == 1000
