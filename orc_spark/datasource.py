@@ -535,7 +535,7 @@ def _encode_task(options, schema: StructType, snapshot: str, batches):
     from pyspark import TaskContext
 
     from .codecs import bloom as bloomc
-    from .pipeline import _make_encoder
+    from .pipeline import REDUCE_TIMERS, _make_encoder
 
     key_col = options.get("key_col", "doc_id")
     source_col = options.get("source_col", "source")
@@ -577,7 +577,7 @@ def _encode_task(options, schema: StructType, snapshot: str, batches):
     metas = {}
     for meta_batch in encode(with_pid(b) for b in batches):
         for row in meta_batch.to_pylist():
-            metas[row["pid"]] = row
+            metas[row["pid"]] = {k: v for k, v in row.items() if k not in REDUCE_TIMERS}
     return metas
 
 

@@ -345,7 +345,7 @@ def upsert(
     `df_new` replaces the existing row with the same key (all rows of it,
     on duplicate-key tables — equality-delete semantics) and keys not
     present append. Zero rewrite of existing data: `df_new` encodes
-    through the full single-shuffle pipeline into NEW files committed at
+    through the full encode pipeline into NEW files committed at
     sequence number `seq = max_seq(parent) + 1`, and one delete file of
     `df_new`'s keys is committed AT that seq — seq-scoped, so readers
     merge it into files BELOW seq (the old versions) but never into the

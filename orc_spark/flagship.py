@@ -698,7 +698,7 @@ def orc_import_summary(
     """Interchange-SOURCE gate, the mirror of orc_export_summary: write the
     derived tokens table as standard ORC with SPARK'S OWN ORC WRITER
     (orc-core, zstd), ingest those foreign ORC files through
-    pipeline.import_orc (spark.read.orc → the single-shuffle encode
+    pipeline.import_orc (spark.read.orc → the exchange encode
     pipeline) into a fresh warehouse, decode, and aggregate per source.
     Export proves any ORC reader consumes the warehouse; THIS proves the
     warehouse consumes any ORC writer — a reference ORC user's existing

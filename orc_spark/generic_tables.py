@@ -4,7 +4,7 @@ The canonical corpus is (doc_id, tokens, n_tok, source) — but a user of an
 ORC-style engine brings event logs (timestamps, doubles) and embedding
 tables (float vectors) too. These queries encode the sandbox's `events` and
 `embeddings` parquet tables into a temp warehouse through the SAME
-single-shuffle pipeline (pipeline.encode_table with a named layout), decode
+encode pipeline (pipeline.encode_table with a named layout), decode
 them back, and aggregate the decoded rows; the DuckDB oracles compute the
 identical aggregates from the raw parquet. A single bit lost anywhere in the
 float / timestamp / list<float> encode→decode path flips the value hash.

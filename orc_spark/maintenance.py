@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -433,6 +434,11 @@ def vacuum_orphans(
         orphan_files) and are KEPT unless `include_uncommitted=True`
         (deleting them is safe — resume re-encodes — but wastes work).
 
+    An encode's exchange directory (exchange.py) is removed with its
+    files once older than `min_age_s`: a running encode's is younger, and
+    a finished one removes its own, so an old one was left by a killed
+    driver.
+
     Committed files are never touched: the manifest set is the root of
     reachability, exactly like Iceberg's metadata tree. Returns
     {'files_deleted', 'bytes_deleted', 'kept_adoptable'}."""
@@ -477,6 +483,19 @@ def vacuum_orphans(
                 bytes_deleted += sz
             except OSError:
                 pass
+    stages = os.listdir(wh.exchange_dir) if os.path.isdir(wh.exchange_dir) else []
+    for name in stages:
+        stage = os.path.join(wh.exchange_dir, name)
+        try:
+            if now - os.path.getmtime(stage) < min_age_s:
+                continue
+            files = [os.path.join(stage, f) for f in os.listdir(stage)]
+            sizes = [os.path.getsize(f) for f in files]
+        except OSError:
+            continue  # its encode ended and removed it meanwhile
+        shutil.rmtree(stage, ignore_errors=True)
+        deleted += len(files)
+        bytes_deleted += sum(sizes)
     return {
         "files_deleted": deleted,
         "bytes_deleted": bytes_deleted,

@@ -1,22 +1,28 @@
-"""Spark pipeline: salted repartition -> mapInArrow encode -> Iceberg-emulated
-commit; mirror decode path; round-trip verifier.
+"""Spark pipeline: Arrow-exchange encode -> Iceberg-emulated commit; mirror
+decode path; round-trip verifier.
 
-Physical plan (SURVEY.md §3.3) — one shuffle total:
+Encode plan (exchange.py) — two one-stage jobs, no Spark shuffle:
 
-  scan (parquet, column-pruned by Catalyst)
-    -> repartition(N, pid)            pid = source + '#' + xxhash64(doc_id)%S
-    -> mapInArrow(encode)             numpy codecs per Arrow batch; each task
-                                      keeps one writer per pid (pids are
-                                      clustered per 8k-row Arrow batch — no
-                                      cluster-wide sort of the payload);
-                                      rows re-sort by doc_id per stripe, so
-                                      stripe CONTENT is deterministic while
-                                      stripe BOUNDARIES follow arrival order
-                                      (BASELINE.md "Determinism contract");
-                                      streams finished stripes straight into
-                                      per-pid parquet files (temp + atomic
-                                      rename; idempotent under task retry)
-    -> collect tiny metadata rows -> manifest commit (driver)
+  map job     one task per input split. A plain parquet scan (the
+              optimized plan is a bare parquet relation) is read in the
+              task with pyarrow, so its payload never becomes JVM rows;
+              any other DataFrame comes through mapInArrow. pid =
+              source + '#' + pmod(xxhash64(key), S), hashed in numpy
+              (codecs/xxh64.py, bit-identical to Spark's xxhash64); rows
+              cluster by pid in one stable sort and land in one Arrow IPC
+              file per task under warehouse/exchange/, one segment per
+              pid. Returns (pid, task, segment, tokens) rows.
+  driver      drops committed pids (resume), splits pids heavier than
+              max_pid_tokens into '@sub' pids, packs pids into
+              num_partitions reduce tasks, heaviest first.
+  reduce job  spark.range(R).mapInArrow: task i memory-maps its pids'
+              segments in map order and runs the stripe encoder
+              (_make_encoder): rows re-sort by key per stripe and stream
+              into per-pid parquet files (temp + atomic rename; idempotent
+              under task retry). Stripe content and stripe boundaries are
+              deterministic for a given input and input split.
+    -> collect tiny metadata rows -> manifest commit (driver); the
+       exchange directory is removed whether or not the encode succeeds
 
 Decode plan — no shuffle, and no Spark file listing or schema inference
 (the manifest already holds the file list and STRIPE_FILE_SCHEMA):
@@ -37,9 +43,9 @@ Scale notes (designed for 10^12 rows / 1000 executors, tested on local[32]):
 - the salt spreads each source over S buckets, defusing long-token-array skew
   (BASELINE.json:6); choose S so a bucket is a few GB: S ~ total_bytes /
   (n_sources * 4GiB).
-- executors write data files directly (no second shuffle, no driver funnel);
-  only O(#partitions) metadata rows cross to the driver, like an Iceberg
-  commit.
+- executors write data files directly (no shuffle, no driver funnel);
+  only O(#segments) exchange rows and O(#partitions) metadata rows cross
+  to the driver, like an Iceberg commit.
 - stripes are flushed by token count, so blob sizes stay uniform despite
   skewed document lengths; worker memory is bounded by MAX_BUFFERED_TOKENS
   across the task's open pid buffers + one Arrow batch, regardless of
@@ -54,6 +60,7 @@ from __future__ import annotations
 import heapq
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -64,6 +71,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import exchange
 from .codecs import bloom as bloomc
 from .evolution import column_maps, fill_type
 from .stripe import decode_stripe, encode_stripe, footer_from_json, footer_to_json
@@ -73,6 +81,11 @@ META_SCHEMA = (
     "pid string, file string, stripes long, n_rows long, n_tokens long, "
     "enc_bytes long, encode_s double, min_doc_id string, max_doc_id string"
 )
+# an encode's reduce rows: META_SCHEMA plus the pid's seconds in
+# encode_stripe + blooms, in file writes and in reading its segments
+# (summed into the manifest's `encode_phases`, not kept per pid)
+REDUCE_TIMERS = ("stripe_s", "write_s", "read_s")
+REDUCE_META_SCHEMA = META_SCHEMA + "".join(f", {t} double" for t in REDUCE_TIMERS)
 
 STRIPE_FILE_SCHEMA = pa.schema(
     [
@@ -87,71 +100,6 @@ STRIPE_FILE_SCHEMA = pa.schema(
 )
 
 DEFAULT_STRIPE_TOKENS = 4_000_000  # ~8 MB encoded per stripe at ~2 B/token
-
-
-def with_pid(
-    df: DataFrame,
-    salt_buckets: int,
-    key_col: str = "doc_id",
-    source_col: str | None = "source",
-) -> DataFrame:
-    """Logical partition id: explicit salt on (source, doc_id) (BASELINE.json:6).
-    Generic tables pick their own key/source columns (source_col=None salts
-    on the key alone — the pid prefix is then empty)."""
-    src = F.col(source_col) if source_col else F.lit("")
-    return df.withColumn(
-        "pid",
-        F.concat_ws(
-            "#", src, F.pmod(F.xxhash64(F.col(key_col)), F.lit(salt_buckets)).cast("string")
-        ),
-    )
-
-
-def rebalance_by_tokens(
-    dfp: DataFrame,
-    max_pid_tokens: int,
-    key_col: str = "doc_id",
-    weight_col: str | None = "n_tok",
-) -> tuple[DataFrame, dict]:
-    """Size-aware rebalance (SURVEY.md §2.2): cap each logical partition's
-    token mass. The uniform salt bounds *expected* mass, but an adversarial
-    source×bucket (a burst of giant documents hashing together) can still
-    land one task with many × the ideal share; this pass splits exactly
-    those buckets.
-
-    One column-pruned aggregation over (pid, n_tok) — at 100 TB that is a
-    narrow two-column scan with a map-side-combined shuffle onto
-    O(sources × salt_buckets) keys, and only that driver-sized key list is
-    collected. Overweight pids are re-salted into ceil(mass/cap) sub-buckets
-    by an independent hash (xxhash64 over (doc_id, 1)). Deterministic for a
-    given input, so resume runs recompute identical pid names. The per-pid
-    bound becomes max(cap(1+ε), largest single document) — rows are atomic.
-
-    Returns (df with split pids, {pid: n_splits})."""
-    w = F.sum(weight_col) if weight_col else F.count(F.lit(1))
-    mass = dfp.groupBy("pid").agg(w.alias("m")).collect()
-    splits = {
-        r["pid"]: -(-int(r["m"]) // max_pid_tokens)
-        for r in mass
-        if int(r["m"]) > max_pid_tokens
-    }
-    if not splits:
-        return dfp, {}
-    k = F.create_map(
-        *[x for pid, n in sorted(splits.items()) for x in (F.lit(pid), F.lit(n))]
-    )[F.col("pid")]
-    sub = F.pmod(F.xxhash64(F.col(key_col), F.lit(1)), k).cast("string")
-    # sub-buckets use '@', NOT the with_pid '#' separator: a source name that
-    # itself contains '#' ("a#1" bucket 2 vs "a" bucket 1 sub 2) must not
-    # collide with a split pid, or two logical partitions silently merge and
-    # the max_pid_tokens cap stops binding
-    out = dfp.withColumn(
-        "pid",
-        F.when(k.isNotNull(), F.concat_ws("@", F.col("pid"), sub)).otherwise(
-            F.col("pid")
-        ),
-    )
-    return out, splits
 
 
 class _PidWriter:
@@ -183,6 +131,8 @@ class _PidWriter:
         # ignore it if over-full (bloom_from_meta checks saturation)
         self.file_bloom = np.zeros(bloomc.FILE_BLOOM_BITS // 8, dtype=np.uint8)
         self.bloom_n = 0
+        self.stripe_s = 0.0
+        self.write_s = 0.0
         self.t0 = time.perf_counter()
 
     def _key_hashes(self, ids: pa.Array):
@@ -201,8 +151,10 @@ class _PidWriter:
         # take) instead of a cluster-wide sortWithinPartitions('pid','doc_id')
         # — the JVM sort moves the full token payload and costs ~3x the
         # pid-only clustering sort (measured at 322M tokens: 7.8s vs 2.4s on
-        # 16 cores). Stripe boundaries still follow shuffle arrival order;
-        # per-row decode equality is order-independent either way.
+        # 16 cores). Stripe boundaries follow the order the rows arrive in
+        # (map order under encode_table); per-row decode equality is
+        # order-independent either way.
+        t0 = time.perf_counter()
         tbl = tbl.take(pc.sort_indices(tbl.column(self.key_col)))
         data = tbl.drop_columns(["pid"])
         blob, footer = encode_stripe(data)
@@ -239,20 +191,26 @@ class _PidWriter:
             ],
             schema=STRIPE_FILE_SCHEMA,
         )
+        t1 = time.perf_counter()
         self.writer.write_batch(row)
+        self.write_s += time.perf_counter() - t1
+        self.stripe_s += t1 - t0
         self.stripes += 1
         self.n_rows += tbl.num_rows
         self.n_tokens += n_tok
         self.enc_bytes += len(blob)
         # native-typed key range (str for doc_id, int for int keys): the
         # manifest file-pruning range test compares in the key's own order,
-        # so integer keys don't fall into string collation
-        ids = tbl.column(self.key_col)
-        lo, hi = ids[0].as_py(), ids[-1].as_py()
-        self.min_doc = lo if self.min_doc is None else min(self.min_doc, lo)
-        self.max_doc = hi if self.max_doc is None else max(self.max_doc, hi)
+        # so integer keys don't fall into string collation. Null keys sort
+        # last and are outside every range: min_max skips them
+        mm = pc.min_max(tbl.column(self.key_col))
+        lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        if lo is not None:
+            self.min_doc = lo if self.min_doc is None else min(self.min_doc, lo)
+            self.max_doc = hi if self.max_doc is None else max(self.max_doc, hi)
 
     def close(self) -> dict:
+        t0 = time.perf_counter()
         self.writer.close()
         if self.bloom_n:
             # puffin-style sidecar, written BEFORE the data file becomes
@@ -269,6 +227,7 @@ class _PidWriter:
                 )
             os.replace(side_tmp, self.final + ".bloom.json")
         os.replace(self.tmp, self.final)  # atomic: file is complete or absent
+        self.write_s += time.perf_counter() - t0
         return {
             "pid": self.pid,
             "file": self.final,
@@ -279,10 +238,17 @@ class _PidWriter:
             "encode_s": time.perf_counter() - self.t0,
             # non-string keys (int event/vec ids) render via json.dumps so the
             # string-typed META_SCHEMA row still carries them; file_matches
-            # parses them back with the manifest schema's key type
-            "min_doc_id": self.min_doc if isinstance(self.min_doc, str) else json.dumps(self.min_doc),
-            "max_doc_id": self.max_doc if isinstance(self.max_doc, str) else json.dumps(self.max_doc),
+            # parses them back with the manifest schema's key type. A file
+            # of null keys only has no range: "" (cannot exclude)
+            "min_doc_id": _render_key(self.min_doc),
+            "max_doc_id": _render_key(self.max_doc),
+            "stripe_s": self.stripe_s,
+            "write_s": self.write_s,
         }
+
+
+def _render_key(v) -> str:
+    return "" if v is None else v if isinstance(v, str) else json.dumps(v)
 
 
 MAX_BUFFERED_TOKENS = 16_000_000  # global per-task cap across open pid buffers
@@ -298,8 +264,10 @@ def _make_encoder(
 ):
     """Multi-writer partition encoder: rows arrive in ARBITRARY pid order
     (no cluster-wide sort!) — each Arrow batch is clustered by pid locally
-    (a ~8k-row Arrow sort, vectorized C++) and appended to that pid's
-    buffer; stripes flush when a pid's buffer reaches stripe_tokens.
+    (a ~8k-row Arrow sort, vectorized C++; skipped for a batch of one pid,
+    which is every batch encode_table's reduce feeds it) and appended to
+    that pid's buffer; stripes flush when a pid's buffer reaches
+    stripe_tokens.
 
     This removes the JVM sortWithinPartitions from the encode plan — an
     O(n log n) full-row sort pass over the entire token payload whose
@@ -324,11 +292,7 @@ def _make_encoder(
                 # target — decode-side worker memory is bounded by stripe
                 # size, so this must not scale with batch luck
                 tbl = pa.Table.from_batches(bufs[pid])
-                if weight_col:
-                    wt = np.asarray(tbl.column(weight_col), dtype=np.int64)
-                else:
-                    wt = np.ones(tbl.num_rows, dtype=np.int64)
-                csum = np.cumsum(wt)
+                csum = np.cumsum(exchange.weights(tbl, weight_col))
                 start = 0
                 while start < tbl.num_rows:
                     base = int(csum[start - 1]) if start else 0
@@ -342,18 +306,14 @@ def _make_encoder(
                 bufs[pid], buf_tokens[pid] = [], 0
 
         for batch in batches:
-            pids_arr = batch.column("pid")
-            order = pc.sort_indices(pids_arr)
-            batch = batch.take(order)
             pids = np.asarray(batch.column("pid"))
+            if (pids[1:] != pids[:-1]).any():
+                batch = batch.take(pc.sort_indices(batch.column("pid")))
+                pids = np.asarray(batch.column("pid"))
             bounds = np.nonzero(pids[1:] != pids[:-1])[0] + 1
             starts = np.r_[0, bounds]
             ends = np.r_[bounds, len(pids)]
-            if weight_col:
-                ntoks = np.asarray(batch.column(weight_col), dtype=np.int64)
-            else:
-                ntoks = np.ones(len(pids), dtype=np.int64)
-            csum = np.r_[0, np.cumsum(ntoks)]
+            csum = np.r_[0, np.cumsum(exchange.weights(batch, weight_col))]
             for s, e in zip(starts.tolist(), ends.tolist()):
                 pid = str(pids[s])
                 if pid not in writers:
@@ -399,13 +359,15 @@ def encode_table(
     """Encode a (doc_id, tokens, n_tok, source) DataFrame into the warehouse;
     returns the committed manifest. Resumable: committed partitions are
     skipped, complete-but-uncommitted files from a killed run are adopted.
-    `max_pid_tokens` enables the size-aware rebalance: overweight logical
-    partitions are split before the (single) shuffle. The split decision runs
-    on the FULL input — before the resume filter — so a resumed run derives
-    the same pid names as the killed one.
+    `max_pid_tokens` enables the size-aware rebalance (SURVEY.md §2.2): a
+    logical partition whose token mass exceeds it is split into
+    ceil(mass/cap) `@sub` partitions by an independent hash of the key, so
+    the per-pid bound becomes max(cap(1+ε), largest single row). The
+    masses come from the map job over the FULL input — before the resume
+    filter — so a resumed run derives the same pid names as the killed one.
 
     Any table encodes through the same path by naming its own layout:
-    `key_col` (stripe sort + manifest min/max range, any orderable type),
+    `key_col` (stripe sort + manifest min/max range; string or integral),
     `source_col` (pid prefix = partition key; None salts on the key alone)
     and `weight_col` (stripe sizing mass; None weighs every row 1). The
     layout is recorded in the manifest so decode-side pruning knows which
@@ -415,13 +377,17 @@ def encode_table(
     ~1% encode CPU): IN-set point lookups then fall back to range stats +
     exact row filtering — correct, just unpruned under the salt.
 
+    `num_partitions` is the number of reduce (encode) tasks, one per task
+    slot by default.
+
     `ids`: the field IDs to commit under (Warehouse.commit); a rewrite
-    passes its source's, the default carries CURRENT's by name."""
+    passes its source's, the default carries CURRENT's by name.
+
+    The manifest's `encode_phases` holds the map, plan and reduce walls
+    and the summed task seconds of each named step (exchange.py)."""
     wh = Warehouse(warehouse_path)
     schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    dfp = with_pid(df, salt_buckets, key_col, source_col)
-    if max_pid_tokens:
-        dfp, _ = rebalance_by_tokens(dfp, max_pid_tokens, key_col, weight_col)
+    exchange.check_layout(df.schema, key_col, source_col)
 
     committed = wh.committed_pids(snapshot) if resume else set()
     if resume:
@@ -434,51 +400,84 @@ def encode_table(
             wh.commit(snapshot, adopted, schema, ids=ids,
                       advance_current=advance_current)
             committed |= set(adopted)
-    if committed:
-        if len(committed) <= 1000:
-            dfp = dfp.filter(~F.col("pid").isin(*committed))
-        else:
-            skip = spark.createDataFrame([(p,) for p in committed], "pid string")
-            dfp = dfp.join(F.broadcast(skip), "pid", "left_anti")
 
-    # each encode task is a JVM Arrow-feed thread + a Python codec worker
-    # that strictly ALTERNATE (the core idles at every handoff), so fewer
-    # tasks than cores under-fills the machine: alternated A/B at 322M
-    # tokens measured parallelism/2 tasks clearly worst (19.0 vs 21.3
-    # median Mtok/s unpinned; pinned 1v4-core protocol +11% at 2 tasks per
-    # core). More tasks than slots no longer pay the ~0.14 s per-task
-    # worker start (worker.py), and on t-bench at local[4] 2 tasks per
-    # slot tie with 1 (0.96-1.00 vs 0.98-1.08 s median encode, overlapping
-    # ranges), while 4 and 10 per slot still lose (1.07 and 1.37 s).
-    # Default to one task per slot; the pinned scaling protocol passes
-    # 2/core explicitly.
-    num_partitions = num_partitions or max(
-        spark.sparkContext.defaultParallelism, 2
-    )
-    meta_df = (
-        dfp.repartition(num_partitions, "pid")
-        # NO cluster-wide sort: the encoder clusters pids per Arrow batch
-        # and keeps one writer per pid (see _make_encoder); doc_id order is
-        # restored per stripe inside _PidWriter.write_stripe
-        .mapInArrow(
-            _make_encoder(
-                warehouse_path, snapshot, stripe_tokens, key_col, weight_col,
-                key_blooms,
-            ),
-            META_SCHEMA,
+    slots = spark.sparkContext.defaultParallelism
+    stage = os.path.join(wh.exchange_dir, f"{snapshot}-{uuid.uuid4().hex[:12]}")
+    os.makedirs(stage)
+    args = (stage, salt_buckets, key_col, source_col, weight_col, frozenset(committed))
+    try:
+        t0 = time.perf_counter()
+        splits = exchange.parquet_splits(df, slots)
+        if splits is not None:
+            # a plain parquet scan: each map task reads its row groups with
+            # pyarrow, so the payload never becomes JVM rows
+            target = _arrow_schema(spark, df)
+            maps = scan_bins(
+                spark, list(range(len(splits))),
+                lambda i: exchange.map_task(exchange.read_split(splits[i], target), i, *args),
+                exchange.MAP_META_SCHEMA,
+            )
+        else:
+            def run_map(batches):
+                from pyspark import TaskContext
+
+                yield from exchange.map_task(batches, TaskContext.get().partitionId(), *args)
+
+            maps = df.mapInArrow(run_map, exchange.MAP_META_SCHEMA)
+        segments = [r.asDict() for r in maps.collect()]
+        t1 = time.perf_counter()
+        bins = exchange.plan_reduce(
+            segments, max_pid_tokens, committed, num_partitions or slots
         )
-    )
-    rows = meta_df.collect()
-    partitions = {r["pid"]: r.asDict() for r in rows}
-    for p in partitions.values():
+        t2 = time.perf_counter()
+        encoder = _make_encoder(
+            warehouse_path, snapshot, stripe_tokens, key_col, weight_col, key_blooms
+        )
+
+        def reduce_bin(units):
+            read_s: dict[str, float] = {}
+            for mb in encoder(exchange.read_segments(units, key_col, read_s)):
+                yield pa.RecordBatch.from_pylist(
+                    [{**r, "read_s": read_s.get(r["pid"], 0.0)} for r in mb.to_pylist()]
+                )
+
+        rows = scan_bins(spark, bins, reduce_bin, REDUCE_META_SCHEMA).collect() if bins else []
+        t3 = time.perf_counter()
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    tasks = {r["task"]: r for r in segments}
+    phases = {
+        "map_s": t1 - t0, "plan_s": t2 - t1, "reduce_s": t3 - t2,
+        "map_tasks": len(tasks), "reduce_tasks": len(bins),
+        "map": {k: sum(r[k] for r in tasks.values()) for k in exchange.MAP_TIMERS},
+        "reduce": {k: sum(r[k] for r in rows) for k in REDUCE_TIMERS},
+    }
+    partitions = {}
+    for r in rows:
+        p = {k: v for k, v in r.asDict().items() if k not in REDUCE_TIMERS}
         p["tokens_per_s"] = p["n_tokens"] / p["encode_s"] if p["encode_s"] else None
+        partitions[p["pid"]] = p
     layout = {"key_col": key_col, "source_col": source_col, "weight_col": weight_col}
     return wh.commit(
         snapshot, partitions, schema,
-        extra={"layout": layout, **(extra or {})},
+        extra={"layout": layout, "encode_phases": phases, **(extra or {})},
         advance_current=advance_current,
         ids=ids,
     )
+
+
+def _arrow_schema(spark: SparkSession, df: DataFrame) -> pa.Schema:
+    """The Arrow schema mapInArrow hands `df`'s rows to Python in:
+    timestamps in the session time zone."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    sch = to_arrow_schema(df.schema)
+    return pa.schema([
+        f.with_type(pa.timestamp(f.type.unit, tz))
+        if pa.types.is_timestamp(f.type) and f.type.tz else f
+        for f in sch
+    ])
 
 
 _ARROW_TO_SPARK = {
@@ -912,14 +911,10 @@ def file_sizes(manifest: dict) -> dict[str, int]:
     return {p["file"]: p.get("enc_bytes") or 0 for p in manifest["partitions"].values()}
 
 
-def file_bins(size: dict[str, int], entries: list, slots: int) -> list[list]:
-    """Pack entries whose first field is a data file into size-balanced
-    bins, one Spark task each: greedy largest-first by `size[file]` into
-    the lightest bin. min(#entries, max(slots, total / MAX_BIN_BYTES))
-    bins — one per task slot, more only when bins would exceed Spark's
-    split size."""
-    total = sum(size.get(e[0], 0) for e in entries)
-    n = min(len(entries), max(slots, -(-total // MAX_BIN_BYTES)))
+def pack_bins(size: dict, entries: list, n: int) -> list[list]:
+    """Pack entries into `n` balanced bins: greedy largest-first by
+    `size[entry[0]]` into the lightest bin (ties by entry[0], so the
+    packing is deterministic)."""
     heap = [(0, i) for i in range(n)]
     bins: list[list] = [[] for _ in range(n)]
     for e in sorted(entries, key=lambda e: (-size.get(e[0], 0), e[0])):
@@ -927,6 +922,15 @@ def file_bins(size: dict[str, int], entries: list, slots: int) -> list[list]:
         bins[i].append(e)
         heapq.heappush(heap, (load + size.get(e[0], 0), i))
     return bins
+
+
+def file_bins(size: dict[str, int], entries: list, slots: int) -> list[list]:
+    """Pack entries whose first field is a data file into size-balanced
+    bins, one Spark task each (pack_bins by `size[file]`).
+    min(#entries, max(slots, total / MAX_BIN_BYTES)) bins — one per task
+    slot, more only when bins would exceed Spark's split size."""
+    total = sum(size.get(e[0], 0) for e in entries)
+    return pack_bins(size, entries, min(len(entries), max(slots, -(-total // MAX_BIN_BYTES))))
 
 
 def scan_bins(spark: SparkSession, bins: list, read_bin, schema: str) -> DataFrame:
@@ -1096,7 +1100,7 @@ def import_orc(
     """Interchange source, symmetric with export_orc: ingest standard ORC
     files — written by ANY conforming writer (liborc, Spark's orc-core, or
     this engine's own exporter) — into the warehouse through the same
-    single-shuffle encode pipeline. `spark.read.orc` (the JVM orc-core
+    exchange encode pipeline. `spark.read.orc` (the JVM orc-core
     reader) does the container/stream decode with full predicate/schema
     handling; everything downstream (salting, rebalance, codec choice,
     resume, blooms) is exactly encode_table, so a reference ORC user's

@@ -74,14 +74,16 @@ def get_spark(
         builder
         # the executor JVM co-resides with the Python codec workers, so its
         # background threads compete with the actual encode work. Measured at
-        # pinned 4 cores (3 alternated pairs, 322M tokens): +3.5% encode
-        # throughput, neutral at 1 core. Components: GC threads capped (the
-        # default scales with cores and steals codec-worker time), shuffle
-        # checksum optionally off (see below), bigger shuffle buffers (fewer
-        # flush/fetch round trips for the ~GB-scale token shuffle).
+        # pinned 4 cores (3 alternated pairs, 322M tokens, when the encode
+        # still shuffled its rows): +3.5% encode throughput, neutral at 1
+        # core. Components: GC threads capped (the default scales with cores
+        # and steals codec-worker time), shuffle checksum optionally off
+        # (see below), bigger shuffle buffers (fewer flush/fetch round trips
+        # for the shuffles that remain: verify, joins, aggregations).
         #
-        # Shuffle checksums stay ON by default: they are the only
-        # shuffle-corruption detection a plain encode run has. Callers that
+        # Shuffle checksums stay ON by default: they are a plain run's only
+        # detection of a corrupted shuffle block (an encode's input plan may
+        # still shuffle, and so do joins and aggregations). Callers that
         # run the pipeline's own decode bit-equality verify (job.py
         # --verify, bench.py, bench_scaling.py) set
         # ORC_SPARK_SHUFFLE_CHECKSUM=false — there the checksum pass is a
@@ -105,9 +107,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.sql.parquet.compression.codec", "zstd")
-        # zstd shuffle blocks: ~2x smaller than lz4 — the encode pipeline is
-        # bandwidth-bound, and at cluster scale shuffle bytes are network
-        # bytes (measured +22% encode throughput at 4 pinned cores);
+        # zstd shuffle blocks: ~2x smaller than lz4 — at cluster scale
+        # shuffle bytes are network bytes (measured +22% encode throughput
+        # at 4 pinned cores when the encode still shuffled its rows; the
+        # encode's Arrow exchange files are not Spark shuffle blocks);
         # ORC_SPARK_IO_CODEC overrides for benchmarking A/Bs
         .config(
             "spark.io.compression.codec",

@@ -12,6 +12,9 @@ blocked — SURVEY.md [PROBE-4]), so the Iceberg surface the north rule names
                                              + encode metrics (committed
                                              atomically after the job)
     manifests/CURRENT                        pointer to the latest snapshot
+    exchange/<snapshot>-<id>/map-*.arrow     an encode's per-pid Arrow
+                                             segments (exchange.py); gone
+                                             when the encode ends
 
 Resumability (BASELINE.json:6 "resumes from its last committed checkpoint"):
 - a partition is COMMITTED when it appears in a manifest;
@@ -52,6 +55,9 @@ class Warehouse:
         self.path = path
         self.data_dir = os.path.join(path, "data")
         self.manifest_dir = os.path.join(path, "manifests")
+        # an encode's Arrow exchange files (exchange.py), removed when it
+        # ends; never listed by a planner or by orphan_files
+        self.exchange_dir = os.path.join(path, "exchange")
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.manifest_dir, exist_ok=True)
 

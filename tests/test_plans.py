@@ -1,6 +1,6 @@
 """Physical-plan assertions: filters push to the parquet scan, projections
-prune columns, small dims broadcast, and the encode pipeline contains exactly
-one shuffle. These guard the properties that matter at 100 TB — a regression
+prune columns, small dims broadcast, and the encode pipeline runs no
+shuffle. These guard the properties that matter at 100 TB — a regression
 here is a silent 10-100x cost at scale even though results stay correct."""
 
 import os
@@ -54,27 +54,40 @@ def test_topk_cosine_broadcasts_queries(spark):
     assert "Broadcast" in plan
 
 
-def test_encode_plan_has_single_shuffle(spark):
-    from orc_spark.pipeline import with_pid
-    from orc_spark.pipeline import META_SCHEMA, _make_encoder
+def test_encode_of_parquet_runs_no_shuffle(spark, tmp_path):
+    """An encode of a plain parquet input is two one-stage jobs, the map
+    (each task reads its row groups with pyarrow) and the reduce (each
+    task reads its pids' Arrow segments): no Spark shuffle, and the token
+    payload never becomes JVM rows. Read from the status tracker by job
+    group."""
+    import time
 
-    df = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(F.lit(1)).alias("tokens"),
-        F.lit(1).alias("n_tok"),
-        F.col("source"),
-    )
-    enc = (
-        with_pid(df, 8)
-        .repartition(8, "pid")
-        .mapInArrow(_make_encoder("/tmp/x", "s", 1000), META_SCHEMA)
-    )
-    plan = _plan(enc)
-    assert plan.count("Exchange") == 1
-    # no cluster-wide sort of the payload: pids cluster per Arrow batch
-    # inside the encoder (multi-writer), and no global ordering either
-    assert "Sort" not in plan
-    assert "rangepartitioning" not in plan.lower()
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from orc_spark.fixtures import tokens_arrow
+    from orc_spark.pipeline import encode_table
+
+    t = tokens_arrow(2000, seed=3)
+    pq.write_table(t, str(tmp_path / "in.parquet"), row_group_size=500)
+    df = spark.read.schema(from_arrow_schema(t.schema)).parquet(str(tmp_path / "in.parquet"))
+    sc = spark.sparkContext
+    sc.setJobGroup("encode-no-shuffle", "encode-no-shuffle")
+    try:
+        encode_table(spark, df, str(tmp_path / "wh"), "s", salt_buckets=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    deadline = time.time() + 30
+    while True:  # the status listener catches up asynchronously
+        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup("encode-no-shuffle")]
+        if all(j is not None and j.status == "SUCCEEDED" for j in jobs) or time.time() > deadline:
+            break
+        time.sleep(0.1)
+    assert len(jobs) == 2
+    assert [len(j.stageIds) for j in jobs] == [1, 1]
+    map_stage = st.getStageInfo(min(jobs, key=lambda j: j.jobId).stageIds[0])
+    assert map_stage.numTasks == 4  # one per row group
 
 
 def test_simhash_no_row_amplification(spark):

@@ -1,23 +1,33 @@
 """Skew handling: the salted pid must spread a pathologically skewed source
 (one source = 90% of tokens, with some giant documents) evenly enough that
 no single logical partition dominates — the property that keeps 1000-executor
-runs from stalling on one straggler task (BASELINE.json:6)."""
+runs from stalling on one straggler task (BASELINE.json:6). Every case runs
+encode_table and reads the pids back from what it stored."""
 
 import os
 import sys
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
-from orc_spark.pipeline import with_pid
+from orc_spark.pipeline import decode_file, encode_table
 
 SALT = 16
+
+
+def pid_rows(df, wh, **kw) -> dict[str, tuple[list[str], int]]:
+    """encode_table of df, then each stored pid's (sorted doc_ids, Σ n_tok)."""
+    m = encode_table(df.sparkSession, df, wh, snapshot="s", salt_buckets=SALT, **kw)
+    out = {}
+    for pid, part in m["partitions"].items():
+        t = pa.Table.from_batches(list(decode_file(part["file"], [], ["doc_id", "n_tok"])))
+        out[pid] = (sorted(t.column("doc_id").to_pylist()), int(pc.sum(t.column("n_tok")).as_py()))
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -40,25 +50,20 @@ def skewed_df(spark, tmp_path_factory):
     return spark.read.parquet(str(p))
 
 
-def test_salt_spreads_dominant_source(skewed_df):
-    pids = (
-        with_pid(skewed_df, SALT)
-        .groupBy("pid")
-        .agg(F.sum("n_tok").alias("tok"))
-        .collect()
-    )
-    total = sum(r["tok"] for r in pids)
-    biggest = max(r["tok"] for r in pids)
+def test_salt_spreads_dominant_source(skewed_df, tmp_path):
+    mass = {p: m for p, (_, m) in pid_rows(skewed_df, str(tmp_path)).items()}
+    total = sum(mass.values())
+    biggest = max(mass.values())
     # unsalted, the 'cc' partition would hold ~90%; salted, no pid should
     # hold more than a few times the ideal share
-    n_cc_pids = len([r for r in pids if r["pid"].startswith("cc#")])
+    n_cc_pids = len([p for p in mass if p.startswith("cc#")])
     assert n_cc_pids == SALT  # every salt bucket of the hot source is used
     assert biggest / total < 4 / SALT
 
 
-def test_salt_is_deterministic(skewed_df):
-    a = sorted(with_pid(skewed_df, SALT).select("doc_id", "pid").collect())
-    b = sorted(with_pid(skewed_df, SALT).select("doc_id", "pid").collect())
+def test_salt_is_deterministic(skewed_df, tmp_path):
+    a = pid_rows(skewed_df, str(tmp_path / "a"))
+    b = pid_rows(skewed_df, str(tmp_path / "b"))
     assert a == b
 
 
@@ -87,25 +92,22 @@ def giant_doc_df(spark, tmp_path_factory):
     return spark.read.parquet(str(p))
 
 
-def test_rebalance_caps_pid_token_mass(giant_doc_df):
-    from orc_spark.pipeline import rebalance_by_tokens
-
+def test_rebalance_caps_pid_token_mass(giant_doc_df, tmp_path):
     cap = 1_000_000  # hot source: 80M tokens over 16 salt buckets = 5M each
-    dfp = with_pid(giant_doc_df, SALT)
-    before = {
-        r["pid"]: r["m"]
-        for r in dfp.groupBy("pid").agg(F.sum("n_tok").alias("m")).collect()
-    }
+    before = {p: m for p, (_, m) in pid_rows(giant_doc_df, str(tmp_path / "a")).items()}
     assert max(before.values()) > 2 * cap  # salt alone leaves >2x stragglers
 
-    out, splits = rebalance_by_tokens(dfp, cap)
-    after = {
-        r["pid"]: r["m"]
-        for r in out.groupBy("pid").agg(F.sum("n_tok").alias("m")).collect()
-    }
+    after = {p: m for p, (_, m) in pid_rows(
+        giant_doc_df, str(tmp_path / "b"), max_pid_tokens=cap).items()}
+    splits: dict[str, set] = {}
+    for p in after:
+        if "@" in p:
+            base, sub = p.rsplit("@", 1)
+            splits.setdefault(base, set()).add(int(sub))
     # every overweight pid was split by its ceil(mass/cap) factor
     assert splits and all(pid.startswith("hot#") for pid in splits)
-    assert all(k == -(-before[pid] // cap) for pid, k in splits.items())
+    assert all(subs == set(range(-(-before[pid] // cap))) for pid, subs in splits.items())
+    assert {p for p, m in before.items() if m > cap} == set(splits)
     # sub-salting is uniform, not exact bin packing: allow sampling slack
     # over the largest-single-doc floor
     assert max(after.values()) <= 1.8 * cap
@@ -114,22 +116,17 @@ def test_rebalance_caps_pid_token_mass(giant_doc_df):
     assert sum(after.values()) == sum(before.values())
 
 
-def test_rebalance_is_deterministic(giant_doc_df):
-    from orc_spark.pipeline import rebalance_by_tokens
-
-    dfp = with_pid(giant_doc_df, SALT)
-    a, sa = rebalance_by_tokens(dfp, 1_000_000)
-    b, sb = rebalance_by_tokens(dfp, 1_000_000)
-    assert sa == sb
-    assert sorted(a.select("doc_id", "pid").collect()) == sorted(
-        b.select("doc_id", "pid").collect()
-    )
+def test_rebalance_is_deterministic(giant_doc_df, tmp_path):
+    a = pid_rows(giant_doc_df, str(tmp_path / "a"), max_pid_tokens=1_000_000)
+    b = pid_rows(giant_doc_df, str(tmp_path / "b"), max_pid_tokens=1_000_000)
+    assert any("@" in p for p in a)
+    assert a == b
 
 
 def test_rebalance_resume_rederives_same_pids(giant_doc_df, tmp_path_factory):
-    """Kill/resume with rebalance on: the mass aggregation runs on the FULL
-    input before the resume filter, so a resumed run derives identical split
-    pid names and only re-encodes what is missing."""
+    """Kill/resume with rebalance on: the pid masses come from the map job
+    over the FULL input before the resume filter, so a resumed run derives
+    identical split pid names and only re-encodes what is missing."""
     from orc_spark.pipeline import decode_table, encode_table, verify_roundtrip
     from orc_spark.warehouse import Warehouse
 
@@ -176,7 +173,7 @@ def test_rebalanced_encode_roundtrips(giant_doc_df, tmp_path_factory):
         stripe_tokens=500_000,
         max_pid_tokens=1_000_000,
     )
-    # split pids use '@' (distinct from with_pid's '#': a source name that
+    # split pids use '@' (distinct from the salt's '#': a source name that
     # contains '#' must not make a split pid collide with a salt pid)
     assert any("@" in p for p in manifest["partitions"])
     assert all(
