@@ -41,18 +41,22 @@ levels through `DataSourceReader.pushFilters`:
     Catalyst's column pruning, so the full-schema default decodes all
     columns; project with .schema for stream-level pruning).
 
-Write path — executor tasks stream stripes into per-(pid, task) data files
-with the SAME tmp+atomic-rename writers the pipeline uses (`_PidWriter`:
-stripe split at stripe_tokens, key-sorted stripe content, stripe + sidecar
-blooms), and the driver commits the collected partition metadata as one
-atomic manifest (`DataSourceWriter.commit`) — Iceberg-style: data files are
-invisible until the manifest rename. A failed job aborts by sweeping
-in-progress temp files; already-renamed files are harmless orphans outside
-the manifest. The writer does NOT reshuffle (Spark's DSv2 Python API cannot
-require a distribution): rows are bucketed into pids per incoming batch, so
-pre-`repartition(source, key)` upstream for one-file-per-pid layout; without
-it each task writes its own pid@wN files (more, smaller files — same
-correctness, metadata still O(#files)).
+Write path — each task is an in-task map and reduce over the encode
+exchange (exchange.py): it clusters its rows by pid with encode_table's pid
+rule into a stage of its own under the warehouse's exchange directory, then
+streams each pid through the SAME stripe writer and tmp+atomic-rename data
+files the pipeline uses (`_PidWriter`: stripe split at stripe_tokens,
+key-sorted stripe content, stripe + sidecar blooms) as pid '<pid>@w<task>'.
+The driver commits the collected partition metadata as one atomic manifest
+(`DataSourceWriter.commit`) — Iceberg-style: data files are invisible until
+the manifest rename. A failed job aborts by sweeping in-progress temp
+files; already-renamed files are harmless orphans outside the manifest.
+The writer does NOT reshuffle (Spark's DSv2 Python API cannot require a
+distribution): every task writes its own pid@wN files, so
+pre-`repartition(source, key)` upstream for one file per pid; without it
+there are more, smaller files — same correctness, metadata still
+O(#files). A key or source column the pid rule cannot hash is refused when
+the writer is created, before any task runs.
 
 Streaming — `writeStream.format("tokstripe")` gives exactly-once micro-batch
 encode: each task stages files under a per-invocation unique snapshot name,
@@ -89,6 +93,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql.datasource import (
@@ -525,64 +530,95 @@ class _CommitMsg(WriterCommitMessage):
         self.partitions = partitions
 
 
+def _layout(options, schema: StructType) -> dict:
+    """The writer's encode layout from its options: source_col and
+    weight_col "" mean none, and a weight column the frame lacks weighs
+    every row 1. A key or source column the pid rule cannot hash raises
+    ValueError (exchange.check_layout), so the writers' constructors refuse
+    it before any task runs."""
+    from .exchange import check_layout
+
+    weight_col = options.get("weight_col", "n_tok") or None
+    lay = {
+        "key_col": options.get("key_col", "doc_id"),
+        "source_col": options.get("source_col", "source") or None,
+        "weight_col": weight_col if weight_col in schema.fieldNames() else None,
+    }
+    check_layout(schema, lay["key_col"], lay["source_col"])
+    return lay
+
+
 def _encode_task(options, schema: StructType, snapshot: str, batches):
-    """Executor-side shared write path (batch + streaming): bucket rows into
-    pids, stream stripes through the pipeline's per-pid writers (stripe
-    split, key-sorted content, blooms, tmp+atomic rename), return the
+    """Executor-side shared write path (batch + streaming): an in-task map
+    and reduce over the encode exchange. The task clusters its rows by pid
+    (exchange.map_task, the pid rule encode_table uses) into a stage of its
+    own under the warehouse's exchange directory, then streams each pid's
+    segments through the pipeline's stripe writer as '<pid>@w<task>'. The
+    stage is removed whether or not the task succeeds. Returns the
     partition metadata dicts."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
     from pyspark import TaskContext
 
-    from .codecs import bloom as bloomc
+    from . import exchange
     from .pipeline import REDUCE_TIMERS, _make_encoder
+    from .warehouse import Warehouse
 
-    key_col = options.get("key_col", "doc_id")
-    source_col = options.get("source_col", "source")
-    if source_col == "":
-        source_col = None
-    weight_col = options.get("weight_col", "n_tok")
-    if weight_col == "":
-        weight_col = None
-    salt = int(options.get("salt_buckets", "32"))
-    stripe_tokens = int(options.get("stripe_tokens", "4000000"))
-    field_names = [f.name for f in schema.fields]
-    if weight_col is not None and weight_col not in field_names:
-        weight_col = None
+    lay = _layout(options, schema)
+    key_col = lay["key_col"]
     tid = TaskContext.get().partitionId() if TaskContext.get() else 0
-
-    def with_pid(rb: pa.RecordBatch) -> pa.RecordBatch:
-        keys = rb.column(key_col)
-        if pa.types.is_string(keys.type) or pa.types.is_large_string(keys.type):
-            h1, _ = bloomc.hash_pairs_str_array(keys)
-        else:
-            h1, _ = bloomc.hash_pairs_int(
-                keys.cast(pa.int64()).to_numpy(zero_copy_only=False)
-            )
-        bucket = pc.cast(pa.array((h1 % salt).astype("int64")), pa.string())
-        if source_col is not None:
-            pid = pc.binary_join_element_wise(
-                rb.column(source_col).cast(pa.string()), bucket, "#b"
-            )
-        else:
-            pid = pc.binary_join_element_wise(
-                pa.array(["all"] * rb.num_rows), bucket, "#b"
-            )
-        pid = pc.binary_join_element_wise(pid, f"w{tid}", "@")
-        return rb.append_column("pid", pid)
-
-    encode = _make_encoder(
-        options.get("path"), snapshot, stripe_tokens, key_col, weight_col
+    stage = os.path.join(
+        Warehouse(options.get("path")).exchange_dir,
+        f"{snapshot}-w{tid}-{uuid.uuid4().hex[:12]}",
     )
-    metas = {}
-    for meta_batch in encode(with_pid(b) for b in batches):
-        for row in meta_batch.to_pylist():
-            metas[row["pid"]] = {k: v for k, v in row.items() if k not in REDUCE_TIMERS}
-    return metas
+    os.makedirs(stage)
+    try:
+        segments = [
+            r for mb in exchange.map_task(
+                batches, tid, stage, int(options.get("salt_buckets", "32")),
+                key_col, lay["source_col"], lay["weight_col"], frozenset(),
+            ) for r in mb.to_pylist()
+        ]
+        encode = _make_encoder(
+            options.get("path"), snapshot,
+            int(options.get("stripe_tokens", "4000000")), key_col, lay["weight_col"],
+        )
+        metas = {}
+        for units in exchange.plan_reduce(segments, None, set(), 1):
+            groups = exchange.read_segments(units, key_col, {})
+            for mb in encode((f"{pid}@w{tid}", bs) for pid, bs in groups):
+                for row in mb.to_pylist():
+                    metas[row["pid"]] = {k: v for k, v in row.items() if k not in REDUCE_TIMERS}
+        return metas
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
 
 
-def _schema_dict(schema: StructType) -> dict:
-    return {f.name: f.dataType.simpleString() for f in schema.fields}
+def _commit(options, schema: StructType, snapshot: str, messages) -> None:
+    """Publish the tasks' data files as one manifest for `snapshot`."""
+    from .warehouse import Warehouse
+
+    partitions = {}
+    for m in messages:
+        if m is not None:
+            partitions.update(m.partitions)
+    Warehouse(options.get("path")).commit(
+        snapshot, partitions,
+        {f.name: f.dataType.simpleString() for f in schema.fields},
+        extra={"layout": _layout(options, schema)},
+    )
+
+
+def _remove_staged(messages) -> None:
+    """Delete the data files (and their bloom sidecars) the tasks' commit
+    messages name: an epoch that must not be published."""
+    for m in messages:
+        if m is None:
+            continue
+        for p in m.partitions.values():
+            for f in (p["file"], p["file"] + ".bloom.json"):
+                try:
+                    os.remove(f)
+                except OSError:
+                    pass
 
 
 class TokstripeWriter(DataSourceArrowWriter):
@@ -597,6 +633,7 @@ class TokstripeWriter(DataSourceArrowWriter):
         self.schema = schema
         self.overwrite = overwrite
         self.snapshot = self.options.get("snapshot") or f"ds-{uuid.uuid4().hex[:12]}"
+        _layout(self.options, schema)
         from .warehouse import Warehouse
 
         wh = Warehouse(self.options.get("path"))
@@ -612,27 +649,14 @@ class TokstripeWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages):
-        from .warehouse import Warehouse
-
-        wh = Warehouse(self.options.get("path"))
         if self.overwrite:
+            from .warehouse import Warehouse
+
             try:
-                os.remove(wh.manifest_file(self.snapshot))
+                os.remove(Warehouse(self.options.get("path")).manifest_file(self.snapshot))
             except OSError:
                 pass
-        partitions = {}
-        for m in messages:
-            if m is not None:
-                partitions.update(m.partitions)
-        layout = {
-            "key_col": self.options.get("key_col", "doc_id"),
-            "source_col": self.options.get("source_col", "source") or None,
-            "weight_col": self.options.get("weight_col", "n_tok") or None,
-        }
-        wh.commit(
-            self.snapshot, partitions, _schema_dict(self.schema),
-            extra={"layout": layout},
-        )
+        _commit(self.options, self.schema, self.snapshot, messages)
 
     def abort(self, messages):
         _sweep_inprogress(self.options.get("path"))
@@ -668,6 +692,7 @@ class TokstripeStreamWriter(DataSourceStreamArrowWriter):
         self.options = dict(options)
         self.schema = schema
         self.base = self.options.get("snapshot", "stream")
+        _layout(self.options, schema)
 
     def _epoch_snapshot(self, batch_id: int) -> str:
         return f"{self.base}-e{batch_id:06d}"
@@ -681,43 +706,16 @@ class TokstripeStreamWriter(DataSourceStreamArrowWriter):
     def commit(self, messages, batchId: int):
         from .warehouse import Warehouse
 
-        wh = Warehouse(self.options.get("path"))
         snap = self._epoch_snapshot(batchId)
-        partitions = {}
-        for m in messages:
-            if m is not None:
-                partitions.update(m.partitions)
-        if wh.read_manifest(snap):
+        if Warehouse(self.options.get("path")).read_manifest(snap):
             # replayed epoch after restart: already published exactly once —
             # drop the re-staged files
-            for p in partitions.values():
-                try:
-                    os.remove(p["file"])
-                    side = p["file"] + ".bloom.json"
-                    if os.path.exists(side):
-                        os.remove(side)
-                except OSError:
-                    pass
+            _remove_staged(messages)
             return
-        layout = {
-            "key_col": self.options.get("key_col", "doc_id"),
-            "source_col": self.options.get("source_col", "source") or None,
-            "weight_col": self.options.get("weight_col", "n_tok") or None,
-        }
-        wh.commit(snap, partitions, _schema_dict(self.schema), extra={"layout": layout})
+        _commit(self.options, self.schema, snap, messages)
 
     def abort(self, messages, batchId: int):
         # remove staged files of the failed epoch (they are referenced only
         # by the never-published commit messages) + temp leftovers
-        for m in messages:
-            if m is None:
-                continue
-            for p in m.partitions.values():
-                try:
-                    os.remove(p["file"])
-                    side = p["file"] + ".bloom.json"
-                    if os.path.exists(side):
-                        os.remove(side)
-                except OSError:
-                    pass
+        _remove_staged(messages)
         _sweep_inprogress(self.options.get("path"))

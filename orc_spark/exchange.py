@@ -13,7 +13,11 @@ in the warehouse instead of a Spark row shuffle.
           committed pids (resume) and packs the rest into reduce tasks,
           heaviest first (`plan_reduce`).
   reduce  task i memory-maps its pids' segments in map order
-          (`read_segments`) and feeds them to the stripe encoder.
+          (`read_segments`) and feeds them to the stripe encoder one pid
+          at a time.
+
+The tokstripe format writers (datasource.py) run the same map and reduce
+inside each write task, with one reduce unit list and no resume.
 
 The pid rule is Spark's `concat_ws('#', source, pmod(xxhash64(key), S))`
 and the split rule `concat_ws('@', pid, pmod(xxhash64(key, 1), k))`, with
@@ -249,12 +253,12 @@ def plan_reduce(
 
 
 def read_segments(units, key_col: str, read_s: dict):
-    """Stream a reduce task's units as Arrow batches carrying their `pid`
-    column: each unit's segments in map order, memory-mapped, a split unit
-    keeping only its sub-pid's rows. Seconds spent here add to
-    read_s[pid]."""
+    """Stream a reduce task's units as (pid, Arrow batches) groups: each
+    unit's segments in map order, memory-mapped, a split unit keeping only
+    its sub-pid's rows. Seconds spent here add to read_s[pid]."""
     files = {}
-    for name, sub, k, segs in units:
+
+    def batches(name, sub, k, segs):
         for path, seg in segs:
             t0 = time.perf_counter()
             if path not in files:
@@ -262,7 +266,9 @@ def read_segments(units, key_col: str, read_s: dict):
             rb = files[path].get_batch(seg)
             if k:
                 rb = rb.filter(pa.array(sub_of(rb.column(key_col), k) == sub))
-            rb = rb.append_column("pid", pa.array([name] * rb.num_rows, pa.string()))
             read_s[name] = read_s.get(name, 0.0) + time.perf_counter() - t0
             if rb.num_rows:
                 yield rb
+
+    for unit in units:
+        yield unit[0], batches(*unit)

@@ -16,11 +16,14 @@ Encode plan (exchange.py) — two one-stage jobs, no Spark shuffle:
               max_pid_tokens into '@sub' pids, packs pids into
               num_partitions reduce tasks, heaviest first.
   reduce job  spark.range(R).mapInArrow: task i memory-maps its pids'
-              segments in map order and runs the stripe encoder
-              (_make_encoder): rows re-sort by key per stripe and stream
-              into per-pid parquet files (temp + atomic rename; idempotent
-              under task retry). Stripe content and stripe boundaries are
-              deterministic for a given input and input split.
+              segments in map order and streams them, one pid at a time,
+              through the stripe writer (_make_encoder): only the current
+              pid is buffered, it is cut into stripes of stripe_tokens,
+              rows re-sort by key per stripe and stream into the pid's
+              parquet file (temp + atomic rename; idempotent under task
+              retry). Stripe content and stripe boundaries depend only on
+              the pid's own rows in map order: deterministic for a given
+              input and input split, whatever the packing.
     -> collect tiny metadata rows -> manifest commit (driver); the
        exchange directory is removed whether or not the encode succeeds
 
@@ -47,9 +50,10 @@ Scale notes (designed for 10^12 rows / 1000 executors, tested on local[32]):
   only O(#segments) exchange rows and O(#partitions) metadata rows cross
   to the driver, like an Iceberg commit.
 - stripes are flushed by token count, so blob sizes stay uniform despite
-  skewed document lengths; worker memory is bounded by MAX_BUFFERED_TOKENS
-  across the task's open pid buffers + one Arrow batch, regardless of
-  partition size (streaming ParquetWriter per pid).
+  skewed document lengths; a map task holds one chunk
+  (exchange.MAP_CHUNK_BYTES) and a reduce task one pid's buffer (under
+  stripe_tokens + one batch), regardless of partition size (streaming
+  ParquetWriter per pid).
 - decode is the mirror image: executors read data files directly, the
   driver ships only the bin list, and columns prune at the stream level
   (only requested columns' bytes are decompressed).
@@ -152,12 +156,11 @@ class _PidWriter:
         # — the JVM sort moves the full token payload and costs ~3x the
         # pid-only clustering sort (measured at 322M tokens: 7.8s vs 2.4s on
         # 16 cores). Stripe boundaries follow the order the rows arrive in
-        # (map order under encode_table); per-row decode equality is
-        # order-independent either way.
+        # (map order); per-row decode equality is order-independent either
+        # way.
         t0 = time.perf_counter()
         tbl = tbl.take(pc.sort_indices(tbl.column(self.key_col)))
-        data = tbl.drop_columns(["pid"])
-        blob, footer = encode_stripe(data)
+        blob, footer = encode_stripe(tbl)
         # key bloom: one vectorized hash pass feeds BOTH the stripe-level
         # bloom (stripe footer stats, sized to this stripe's rows) and the
         # file-level bloom (OR-accumulated, written as a sidecar at close)
@@ -251,9 +254,6 @@ def _render_key(v) -> str:
     return "" if v is None else v if isinstance(v, str) else json.dumps(v)
 
 
-MAX_BUFFERED_TOKENS = 16_000_000  # global per-task cap across open pid buffers
-
-
 def _make_encoder(
     warehouse_path: str,
     snapshot: str,
@@ -262,76 +262,46 @@ def _make_encoder(
     weight_col: str | None = "n_tok",
     key_blooms: bool = True,
 ):
-    """Multi-writer partition encoder: rows arrive in ARBITRARY pid order
-    (no cluster-wide sort!) — each Arrow batch is clustered by pid locally
-    (a ~8k-row Arrow sort, vectorized C++; skipped for a batch of one pid,
-    which is every batch encode_table's reduce feeds it) and appended to
-    that pid's buffer; stripes flush when a pid's buffer reaches
-    stripe_tokens.
+    """Sequential stripe writer: takes (pid, Arrow batches) groups, each pid
+    once (the exchange clusters rows by pid), and streams each pid's rows
+    into its own data file. Only the current pid is buffered: it flushes
+    when the buffer reaches stripe_tokens and when the pid's rows end, so a
+    pid's stripe boundaries depend only on its own rows in map order."""
 
-    This removes the JVM sortWithinPartitions from the encode plan — an
-    O(n log n) full-row sort pass over the entire token payload whose
-    removal measured +15-20% job throughput at 322M tokens. Worker memory
-    stays bounded: per-pid buffers are capped collectively by
-    MAX_BUFFERED_TOKENS (largest buffer flushes early as a smaller stripe —
-    RLEv2 blocks are 512 values, so size is unaffected)."""
+    def flush(writer: _PidWriter, buf: list[pa.RecordBatch]) -> None:
+        # split the buffer at stripe_tokens boundaries so stripe size has a
+        # UNIFORM upper bound (stripe_tokens + one row) even when a single
+        # Arrow batch delivers a multiple of the target — decode-side worker
+        # memory is bounded by stripe size, so this must not scale with
+        # batch luck
+        tbl = pa.Table.from_batches(buf)
+        csum = np.cumsum(exchange.weights(tbl, weight_col))
+        start = 0
+        while start < tbl.num_rows:
+            base = int(csum[start - 1]) if start else 0
+            end = min(
+                int(np.searchsorted(csum, base + stripe_tokens, side="left")) + 1,
+                tbl.num_rows,
+            )
+            writer.write_stripe(tbl.slice(start, end - start))
+            start = end
 
-    def encode_partition(batches):
-        writers: dict[str, _PidWriter] = {}
-        bufs: dict[str, list[pa.RecordBatch]] = {}
-        buf_tokens: dict[str, int] = {}
-        total_buffered = 0
+    def encode_partition(groups):
         metas: list[dict] = []
-
-        def flush(pid: str) -> None:
-            nonlocal total_buffered
-            if bufs[pid]:
-                # split the buffer at stripe_tokens boundaries so stripe
-                # size has a UNIFORM upper bound (stripe_tokens + one row)
-                # even when a single Arrow batch delivers a multiple of the
-                # target — decode-side worker memory is bounded by stripe
-                # size, so this must not scale with batch luck
-                tbl = pa.Table.from_batches(bufs[pid])
-                csum = np.cumsum(exchange.weights(tbl, weight_col))
-                start = 0
-                while start < tbl.num_rows:
-                    base = int(csum[start - 1]) if start else 0
-                    end = min(
-                        int(np.searchsorted(csum, base + stripe_tokens, side="left")) + 1,
-                        tbl.num_rows,
-                    )
-                    writers[pid].write_stripe(tbl.slice(start, end - start))
-                    start = end
-                total_buffered -= buf_tokens[pid]
-                bufs[pid], buf_tokens[pid] = [], 0
-
-        for batch in batches:
-            pids = np.asarray(batch.column("pid"))
-            if (pids[1:] != pids[:-1]).any():
-                batch = batch.take(pc.sort_indices(batch.column("pid")))
-                pids = np.asarray(batch.column("pid"))
-            bounds = np.nonzero(pids[1:] != pids[:-1])[0] + 1
-            starts = np.r_[0, bounds]
-            ends = np.r_[bounds, len(pids)]
-            csum = np.r_[0, np.cumsum(exchange.weights(batch, weight_col))]
-            for s, e in zip(starts.tolist(), ends.tolist()):
-                pid = str(pids[s])
-                if pid not in writers:
-                    writers[pid] = _PidWriter(
-                        warehouse_path, snapshot, pid, key_col, key_blooms
-                    )
-                    bufs[pid], buf_tokens[pid] = [], 0
-                bufs[pid].append(batch.slice(s, e - s))
-                seg = int(csum[e] - csum[s])
-                buf_tokens[pid] += seg
-                total_buffered += seg
-                if buf_tokens[pid] >= stripe_tokens:
-                    flush(pid)
-            while total_buffered >= MAX_BUFFERED_TOKENS:
-                flush(max(buf_tokens, key=buf_tokens.get))
-        for pid in writers:
-            flush(pid)
-            metas.append(writers[pid].close())
+        for pid, batches in groups:
+            writer, buf, buffered = None, [], 0
+            for batch in batches:
+                if writer is None:
+                    writer = _PidWriter(warehouse_path, snapshot, pid, key_col, key_blooms)
+                buf.append(batch)
+                buffered += int(exchange.weights(batch, weight_col).sum())
+                if buffered >= stripe_tokens:
+                    flush(writer, buf)
+                    buf, buffered = [], 0
+            if buf:
+                flush(writer, buf)
+            if writer is not None:
+                metas.append(writer.close())
         if metas:
             yield pa.RecordBatch.from_pylist(metas)
 
@@ -562,8 +532,9 @@ def file_matches(
     manifest-pruning analog): key-column (doc_id) predicates test the
     partition's [min_doc_id, max_doc_id] range (stripes are key-sorted, so
     it is tight); source-column predicates test the pid's source prefix —
-    pid is source + '#' + bucket[@sub] (with_pid / rebalance_by_tokens),
-    and neither suffix contains '#', so rsplit recovers the source exactly.
+    pid is source + '#' + bucket[@sub][@w<task>] (exchange.pid_groups /
+    plan_reduce / the format writers), and no suffix contains '#', so
+    rsplit recovers the source exactly.
     Source pruning is PARTITION-KEY pruning: an equality/IN predicate on
     source skips every non-matching file without opening it. `key_parse`
     (e.g. int) restores non-string manifest key ranges to their native

@@ -133,6 +133,82 @@ def test_batch_write_roundtrip_and_modes(spark, tmp_path):
     assert decode_table(spark, wh, "w1").count() == 100
 
 
+@pytest.mark.parametrize("source_col", ["source", ""])
+def test_format_writer_uses_encode_tables_pid_rule(spark, tmp_path, source_col):
+    """One pid rule: a one-task format write names each pid as encode_table
+    does, plus its task suffix, and puts the same rows in it."""
+    register(spark)
+    wh = str(tmp_path / "wh")
+    df = spark.createDataFrame(tokens_arrow(600, seed=13).to_pandas())
+    m = encode_table(spark, df, wh, "e", salt_buckets=3, source_col=source_col or None)
+    (
+        df.coalesce(1).write.format("tokstripe").mode("append")
+        .option("path", wh).option("snapshot", "f")
+        .option("salt_buckets", "3").option("source_col", source_col).save()
+    )
+    f = Warehouse(wh).read_manifest("f")
+    assert {p: v["n_rows"] for p, v in f["partitions"].items()} == {
+        f"{p}@w0": v["n_rows"] for p, v in m["partitions"].items()}
+    assert f["layout"] == m["layout"]
+
+
+def test_format_writers_refuse_unhashable_layout_before_any_task(spark, tmp_path):
+    """A double key is refused when the writer is created: no Spark job runs
+    under the write's job group and no data file is written."""
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+    from orc_spark.datasource import TokstripeStreamWriter
+
+    register(spark)
+    wh = str(tmp_path / "wh")
+    df = spark.range(10).select(
+        F.col("id").cast("double").alias("doc_id"),
+        F.array(F.col("id").cast("int")).alias("tokens"),
+        F.lit("s").alias("source"),
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("fmt-unhashable", "fmt-unhashable")
+    try:
+        with pytest.raises(Exception, match="ValueError.*key column 'doc_id' \\(double\\)"):
+            df.write.format("tokstripe").mode("append").option("path", wh).option(
+                "snapshot", "x").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("fmt-unhashable")) == []
+    assert [f for _, _, fs in os.walk(wh) for f in fs] == []
+    schema = StructType([StructField("doc_id", DoubleType()), StructField("source", StringType())])
+    with pytest.raises(ValueError, match="key column 'doc_id'"):
+        TokstripeStreamWriter({"path": wh}, schema)
+
+
+def test_failed_format_writer_task_cleans_up(tmp_path, monkeypatch):
+    """A task whose input fails after two batches (both already written to
+    its stage) leaves no exchange stage and no in-progress file."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from orc_spark import exchange
+    from orc_spark.datasource import _encode_task
+
+    monkeypatch.setattr(exchange, "MAP_CHUNK_BYTES", 1)
+    t = tokens_arrow(300, seed=2)
+    wh = str(tmp_path / "wh")
+    exchange_dir = Warehouse(wh).exchange_dir
+
+    def batches():
+        for i, b in enumerate(t.to_batches(max_chunksize=50)):
+            if i == 2:
+                (stage,) = os.listdir(exchange_dir)
+                # the first two batches are already in the task's map file
+                assert len(os.listdir(os.path.join(exchange_dir, stage))) == 1
+                raise RuntimeError("input failed")
+            yield b
+
+    with pytest.raises(RuntimeError, match="input failed"):
+        _encode_task({"path": wh}, from_arrow_schema(t.schema), "f", batches())
+    assert os.listdir(exchange_dir) == []
+    assert not [f for _, _, fs in os.walk(wh) for f in fs if ".inprogress-" in f]
+
+
 def test_write_then_read_format_with_bloom_point_lookup(spark, tmp_path):
     register(spark)
     wh = str(tmp_path / "bwh")

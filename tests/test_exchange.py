@@ -153,6 +153,35 @@ def test_stored_stripes_byte_identical(spark, pinned_input, tmp_path, feed):
     assert not os.listdir(Warehouse(str(tmp_path / "wh")).exchange_dir)
 
 
+def pid_stripes_sha(manifest) -> dict:
+    """sha256 over each pid's (stripe_id, blob, footer) rows."""
+    out = {}
+    for pid, p in manifest["partitions"].items():
+        t = pq.read_table(p["file"])
+        h = hashlib.sha256()
+        for sid, blob, footer in sorted(zip(*(t.column(c).to_pylist()
+                                              for c in ("stripe_id", "blob", "footer")))):
+            h.update(str(sid).encode())
+            h.update(blob)
+            h.update(footer.encode())
+        out[pid] = (p["stripes"], h.hexdigest())
+    return out
+
+
+def test_stripe_boundaries_do_not_depend_on_packing(spark, pinned_input, tmp_path):
+    """Every pid (45k-72k tokens in three map segments here) spans two or
+    three stripes; packing all 20 pids into one reduce task or spreading
+    them over four must store the same stripes for each pid."""
+    got = [
+        pid_stripes_sha(encode_table(
+            spark, pinned_input, str(tmp_path / f"wh{n}"), "s", salt_buckets=4,
+            stripe_tokens=30_000, num_partitions=n))
+        for n in (1, 4)
+    ]
+    assert len(got[0]) == 20 and all(n >= 2 for n, _ in got[0].values())
+    assert got[0] == got[1]
+
+
 def test_reduce_failure_leaves_no_stage_and_no_commit(spark, pinned_input, tmp_path):
     """A column the stripe encoder refuses fails every reduce task after
     the map job wrote its segments."""

@@ -112,19 +112,21 @@ def test_manifest_is_valid_json_on_disk(encoded):
     assert m["partitions"]
 
 
-def test_multi_writer_encoder_interleaved_pids(tmp_path, monkeypatch):
-    """The encoder needs NO pid-sorted input: feed batches whose pids
-    interleave adversarially, with a buffer cap that forces early flushes,
-    and assert per-pid files hold exactly their rows (no overwrite-on-reopen,
-    the failure mode a single-writer encoder would hit)."""
+def test_format_writer_task_clusters_interleaved_pids(tmp_path, monkeypatch):
+    """The format writer's task needs NO pid-sorted input: its in-task
+    exchange clusters batches whose pids interleave fully, a pid spanning
+    several map chunks and segments, into one file per pid holding exactly
+    that pid's rows, cut into stripes of at most stripe_tokens plus one
+    row."""
     import numpy as np
     import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    from orc_spark import pipeline
-    from orc_spark.pipeline import STRIPE_FILE_SCHEMA, _make_encoder
+    from orc_spark import exchange
+    from orc_spark.datasource import _encode_task
     from orc_spark.stripe import decode_stripe, footer_from_json
 
-    monkeypatch.setattr(pipeline, "MAX_BUFFERED_TOKENS", 500)
+    monkeypatch.setattr(exchange, "MAP_CHUNK_BYTES", 2_000)
 
     def batch(rows):  # rows: list of (doc_id, tokens, source)
         return pa.record_batch(
@@ -133,7 +135,6 @@ def test_multi_writer_encoder_interleaved_pids(tmp_path, monkeypatch):
                 "tokens": pa.array([r[1] for r in rows], type=pa.list_(pa.int32())),
                 "n_tok": pa.array([len(r[1]) for r in rows], type=pa.int32()),
                 "source": pa.array([r[2] for r in rows]),
-                "pid": pa.array([f"{r[2]}#0" for r in rows]),
             }
         )
 
@@ -144,21 +145,30 @@ def test_multi_writer_encoder_interleaved_pids(tmp_path, monkeypatch):
     ]
     rng.shuffle(rows)  # pids arrive fully interleaved
     batches = [batch(rows[i : i + 50]) for i in range(0, 300, 50)]
+    # every batch is a map chunk of its own: each pid spans six segments
+    assert all(b.nbytes >= exchange.MAP_CHUNK_BYTES for b in batches)
 
-    enc = _make_encoder(str(tmp_path), "t", stripe_tokens=10_000)
-    metas = [m for rb in enc(iter(batches)) for m in rb.to_pylist()]
-    assert {m["pid"] for m in metas} == {"a#0", "b#0", "c#0"}
-    assert all(m["stripes"] >= 2 for m in metas)  # the cap forced early flushes
+    stripe_tokens = 500
+    metas = _encode_task(
+        {"path": str(tmp_path), "salt_buckets": "1", "stripe_tokens": str(stripe_tokens)},
+        from_arrow_schema(batches[0].schema), "t", iter(batches),
+    )
+    assert set(metas) == {"a#0@w0", "b#0@w0", "c#0@w0"}
+    assert sum(m["n_rows"] for m in metas.values()) == len(rows)
 
     got = {}
-    for m in metas:
+    for pid, m in metas.items():
         t = pq.read_table(m["file"])
+        assert m["stripes"] == t.num_rows >= 2
         for blob, fj in zip(t.column("blob").to_pylist(), t.column("footer").to_pylist()):
-            rb = decode_stripe(blob, footer_from_json(fj))
-            for r in rb.to_pylist():
+            stripe = decode_stripe(blob, footer_from_json(fj)).to_pylist()
+            assert {r["source"] for r in stripe} == {pid[0]}
+            n = [r["n_tok"] for r in stripe]
+            assert sum(n) - max(n) <= stripe_tokens
+            for r in stripe:
                 got[r["doc_id"]] = (r["tokens"], r["source"])
-    expect = {d: (t_, s) for d, t_, s in rows}
-    assert got == expect
+    assert got == {d: (t_, s) for d, t_, s in rows}
+    assert os.listdir(os.path.join(tmp_path, "exchange")) == []
 
 
 def test_row_digest_distinguishes_null_shapes(spark):
