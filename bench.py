@@ -37,6 +37,12 @@ def _sf() -> float:
         return 0.1
 
 
+def _rounded(v):
+    if isinstance(v, dict):
+        return {k: _rounded(x) for k, x in v.items()}
+    return round(v, 4) if isinstance(v, float) else v
+
+
 def main() -> None:
     import pyarrow.parquet as pq
 
@@ -122,6 +128,9 @@ def main() -> None:
                 "bytes_per_token": round(enc_bytes / int(n_tokens), 4),
                 "encode_tokens_per_s": round(int(n_tokens) / queries["encode"], 1),
                 "decode_tokens_per_s": round(int(n_tokens) / queries["decode"], 1),
+                # the timed encode's layers: map, plan and reduce walls,
+                # task counts and summed task seconds per step
+                "encode_phases": _rounded(manifest["encode_phases"]),
             }
         )
     )

@@ -14,7 +14,7 @@ bundled Java orc-core), per SURVEY.md.
 Layers:
   codecs/    pure numpy encode/decode kernels (no Spark dependency)
   chooser    per-stream codec auto-selection from value statistics
-  stripe     Arrow RecordBatch <-> encoded stripe blobs (runs inside mapInArrow)
+  stripe     Arrow RecordBatch <-> encoded stripe blobs (runs in Python tasks)
   exchange   the encode's Arrow exchange: numpy pids, per-pid segments
   pipeline   Spark DataFrame pipeline: salted exchange -> encode -> warehouse
   warehouse  Iceberg-emulated snapshot/manifest commit log with resume

@@ -571,12 +571,10 @@ def _encode_task(options, schema: StructType, snapshot: str, batches):
     )
     os.makedirs(stage)
     try:
-        segments = [
-            r for mb in exchange.map_task(
-                batches, tid, stage, int(options.get("salt_buckets", "32")),
-                key_col, lay["source_col"], lay["weight_col"], frozenset(),
-            ) for r in mb.to_pylist()
-        ]
+        segments = list(exchange.map_task(
+            batches, tid, stage, int(options.get("salt_buckets", "32")),
+            key_col, lay["source_col"], lay["weight_col"], frozenset(),
+        ))
         encode = _make_encoder(
             options.get("path"), snapshot,
             int(options.get("stripe_tokens", "4000000")), key_col, lay["weight_col"],
@@ -584,9 +582,8 @@ def _encode_task(options, schema: StructType, snapshot: str, batches):
         metas = {}
         for units in exchange.plan_reduce(segments, None, set(), 1):
             groups = exchange.read_segments(units, key_col, {})
-            for mb in encode((f"{pid}@w{tid}", bs) for pid, bs in groups):
-                for row in mb.to_pylist():
-                    metas[row["pid"]] = {k: v for k, v in row.items() if k not in REDUCE_TIMERS}
+            for row in encode((f"{pid}@w{tid}", bs) for pid, bs in groups):
+                metas[row["pid"]] = {k: v for k, v in row.items() if k not in REDUCE_TIMERS}
         return metas
     finally:
         shutil.rmtree(stage, ignore_errors=True)

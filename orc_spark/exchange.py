@@ -7,7 +7,7 @@ in the warehouse instead of a Spark row shuffle.
           row's pid in numpy (`pid_groups`), clusters its rows by pid with
           one stable sort and writes one Arrow IPC file under the
           exchange directory, one record batch (a segment) per pid per
-          chunk. It returns a MAP_META_SCHEMA row per segment.
+          chunk. It returns one metadata dict per segment.
   plan    the driver sums each pid's token mass from those rows, splits
           pids heavier than `max_pid_tokens` into `@sub` pids, drops
           committed pids (resume) and packs the rest into reduce tasks,
@@ -162,7 +162,7 @@ def map_task(
     """One map task: cluster `tables` (an iterator of Arrow tables or
     batches) by pid, chunk by chunk, into one IPC file of per-pid segments
     under `stage`. Rows of a pid in `skip` (committed) are dropped. Yields
-    MAP_META_SCHEMA rows; the task's timers repeat on each of its rows."""
+    one MAP_META_SCHEMA dict per segment; the task's timers repeat on each."""
     t = dict.fromkeys(MAP_TIMERS, 0.0)
     path = os.path.join(stage, f"map-{task:05d}-{uuid.uuid4().hex[:8]}.arrow")
     writer, rows, seg = None, [], 0
@@ -217,8 +217,8 @@ def map_task(
         t0 = time.perf_counter()
         writer.close()
         t["write_s"] += time.perf_counter() - t0
-    if rows:
-        yield pa.RecordBatch.from_pylist([{**r, **t} for r in rows])
+    for r in rows:
+        yield {**r, **t}
 
 
 def plan_reduce(

@@ -15,8 +15,9 @@ count, and tiny stripes under-amortize their footers. These are the Iceberg
   order. Stripe count is preserved; what collapses is the FILE count —
   exactly the per-epoch fragmentation the stream sink creates. One Spark
   stage, no shuffle: the pid->files plan is O(#pids) driver metadata,
-  executors stream file-to-file, only META rows return (same commit
-  discipline as encode_table).
+  packed by the sources' encoded bytes into one bin per task slot
+  (pipeline.run_tasks); executors stream file-to-file, only metadata
+  dicts return (same commit discipline as encode_table).
 - **reencode**: decode the union of the source snapshots and push it back
   through encode_table — full codec cost, but tiny stripes re-pack to
   `stripe_tokens` and codec choices re-fit the merged distribution. Use
@@ -31,7 +32,7 @@ deleted rows) — `materialize_deletes` / `mode="reencode"` rewrite those
 through the full decode (deletes applied) -> encode pipeline instead.
 
 At 100 TB: concat tasks are pure streaming copies (memory = one Arrow row
-group), one task per pid, no shuffle, no driver funnel; expiry is a metadata
+group), one pid at a time, no shuffle, no driver funnel; expiry is a metadata
 walk + delete fan-out. Both idempotent — concat re-runs skip committed pids
 via the warehouse resume contract, expiry re-runs are no-ops.
 """
@@ -52,10 +53,11 @@ from pyspark.sql import SparkSession
 from .codecs import bloom as bloomc
 from .pipeline import (
     DEFAULT_STRIPE_TOKENS,
-    META_SCHEMA,
     STRIPE_FILE_SCHEMA,
     decode_table,
     encode_table,
+    pack_bins,
+    run_tasks,
 )
 from .warehouse import Warehouse, current_ids
 
@@ -223,6 +225,7 @@ def compact_snapshots(
         "tinyint", "smallint", "int", "bigint",
     )
     plan: dict[str, list[str]] = {}
+    size: dict[str, int] = {}
     sid: dict[str, int] = {}
     lo: dict[str, object] = {}
     hi: dict[str, object] = {}
@@ -230,6 +233,7 @@ def compact_snapshots(
     for m in manifests:
         for pid, part in m["partitions"].items():
             plan.setdefault(pid, []).append(part["file"])
+            size[pid] = size.get(pid, 0) + (part.get("enc_bytes") or 0)
             # blobs keep their write-time names: a pid's sources share one
             # {name: field_id}, indexed in the first source's `schemas`
             ids = m["schemas"][part["schema_id"]]
@@ -248,43 +252,22 @@ def compact_snapshots(
                 hi[pid] = mx
 
     committed = wh.committed_pids(dest_snapshot)  # idempotent re-run
-    todo = sorted(p for p in plan if p not in committed)
-    if todo:
-        rows = spark.createDataFrame(
-            [(p, json.dumps(plan[p])) for p in todo], "pid string, files string"
-        )
-        n_tasks = min(len(todo), spark.sparkContext.defaultParallelism)
-
-        def run(batches):
-            for b in batches:
-                out = [
-                    _concat_pid(
-                        warehouse_path,
-                        dest_snapshot,
-                        b.column("pid")[i].as_py(),
-                        json.loads(b.column("files")[i].as_py()),
-                    )
-                    for i in range(b.num_rows)
-                ]
-                for r in out:  # META_SCHEMA parity for the commit below
-                    r["min_doc_id"] = r["max_doc_id"] = ""
-                yield pa.RecordBatch.from_pylist(out)
-
-        metas = (
-            rows.repartition(n_tasks, "pid").mapInArrow(run, META_SCHEMA).collect()
-        )
-        parts = {}
-        for r in metas:
-            d = r.asDict()
-            p = d["pid"]
-            # "" = no recorded range (file_matches treats it as cannot-exclude)
-            for k, v in (("min_doc_id", lo.get(p)), ("max_doc_id", hi.get(p))):
-                d[k] = v if isinstance(v, str) else ("" if v is None else json.dumps(v))
-            d["compacted"] = True
-            d["schema_id"] = sid[p]
-            parts[p] = d
-    else:
-        parts = {}
+    todo = [(p, plan[p]) for p in plan if p not in committed]
+    # one single-stage job: pids packed on the driver by their sources'
+    # encoded bytes, one bin per task slot
+    bins = pack_bins(size, todo, min(len(todo), spark.sparkContext.defaultParallelism))
+    parts = {}
+    for d in run_tasks(
+        spark, bins,
+        lambda units: (_concat_pid(warehouse_path, dest_snapshot, p, fs) for p, fs in units),
+    ):
+        p = d["pid"]
+        # "" = no recorded range (file_matches treats it as cannot-exclude)
+        for k, v in (("min_doc_id", lo.get(p)), ("max_doc_id", hi.get(p))):
+            d[k] = v if isinstance(v, str) else ("" if v is None else json.dumps(v))
+        d["compacted"] = True
+        d["schema_id"] = sid[p]
+        parts[p] = d
     return wh.commit(dest_snapshot, parts, schema, extra=extra, ids=manifests[0])
 
 

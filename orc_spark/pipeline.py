@@ -11,20 +11,22 @@ Encode plan (exchange.py) — two one-stage jobs, no Spark shuffle:
               (codecs/xxh64.py, bit-identical to Spark's xxhash64); rows
               cluster by pid in one stable sort and land in one Arrow IPC
               file per task under warehouse/exchange/, one segment per
-              pid. Returns (pid, task, segment, tokens) rows.
+              pid. Returns (pid, task, segment, tokens) dicts.
   driver      drops committed pids (resume), splits pids heavier than
               max_pid_tokens into '@sub' pids, packs pids into
               num_partitions reduce tasks, heaviest first.
-  reduce job  spark.range(R).mapInArrow: task i memory-maps its pids'
-              segments in map order and streams them, one pid at a time,
-              through the stripe writer (_make_encoder): only the current
-              pid is buffered, it is cut into stripes of stripe_tokens,
-              rows re-sort by key per stripe and stream into the pid's
-              parquet file (temp + atomic rename; idempotent under task
-              retry). Stripe content and stripe boundaries depend only on
-              the pid's own rows in map order: deterministic for a given
-              input and input split, whatever the packing.
-    -> collect tiny metadata rows -> manifest commit (driver); the
+  reduce job  run_tasks (a plain RDD job, as is the map of a parquet
+              input; no Catalyst plan, no Arrow round trip): task i
+              memory-maps its pids' segments in map order and streams
+              them, one pid at a time, through the stripe writer
+              (_make_encoder): only the current pid is buffered, it is
+              cut into stripes of stripe_tokens, rows re-sort by key per
+              stripe and stream into the pid's parquet file (temp +
+              atomic rename; idempotent under task retry). Stripe
+              content and stripe boundaries depend only on the pid's own
+              rows in map order: deterministic for a given input and
+              input split, whatever the packing.
+    -> collect tiny metadata dicts -> manifest commit (driver); the
        exchange directory is removed whether or not the encode succeeds
 
 Decode plan — no shuffle, and no Spark file listing or schema inference
@@ -81,15 +83,10 @@ from .evolution import column_maps, fill_type
 from .stripe import decode_stripe, encode_stripe, footer_from_json, footer_to_json
 from .warehouse import Warehouse, current_ids
 
-META_SCHEMA = (
-    "pid string, file string, stripes long, n_rows long, n_tokens long, "
-    "enc_bytes long, encode_s double, min_doc_id string, max_doc_id string"
-)
-# an encode's reduce rows: META_SCHEMA plus the pid's seconds in
-# encode_stripe + blooms, in file writes and in reading its segments
-# (summed into the manifest's `encode_phases`, not kept per pid)
+# a reduce task's per-pid seconds in encode_stripe + blooms, in file
+# writes and in reading its segments (summed into the manifest's
+# `encode_phases`, not kept per pid)
 REDUCE_TIMERS = ("stripe_s", "write_s", "read_s")
-REDUCE_META_SCHEMA = META_SCHEMA + "".join(f", {t} double" for t in REDUCE_TIMERS)
 
 STRIPE_FILE_SCHEMA = pa.schema(
     [
@@ -240,7 +237,7 @@ class _PidWriter:
             "enc_bytes": self.enc_bytes,
             "encode_s": time.perf_counter() - self.t0,
             # non-string keys (int event/vec ids) render via json.dumps so the
-            # string-typed META_SCHEMA row still carries them; file_matches
+            # manifest's string-typed range carries them; file_matches
             # parses them back with the manifest schema's key type. A file
             # of null keys only has no range: "" (cannot exclude)
             "min_doc_id": _render_key(self.min_doc),
@@ -263,8 +260,9 @@ def _make_encoder(
     key_blooms: bool = True,
 ):
     """Sequential stripe writer: takes (pid, Arrow batches) groups, each pid
-    once (the exchange clusters rows by pid), and streams each pid's rows
-    into its own data file. Only the current pid is buffered: it flushes
+    once (the exchange clusters rows by pid), streams each pid's rows into
+    its own data file and yields the file's metadata dict (_PidWriter.close)
+    as the pid ends. Only the current pid is buffered: it flushes
     when the buffer reaches stripe_tokens and when the pid's rows end, so a
     pid's stripe boundaries depend only on its own rows in map order."""
 
@@ -287,7 +285,6 @@ def _make_encoder(
             start = end
 
     def encode_partition(groups):
-        metas: list[dict] = []
         for pid, batches in groups:
             writer, buf, buffered = None, [], 0
             for batch in batches:
@@ -301,9 +298,7 @@ def _make_encoder(
             if buf:
                 flush(writer, buf)
             if writer is not None:
-                metas.append(writer.close())
-        if metas:
-            yield pa.RecordBatch.from_pylist(metas)
+                yield writer.close()
 
     return encode_partition
 
@@ -382,19 +377,20 @@ def encode_table(
             # a plain parquet scan: each map task reads its row groups with
             # pyarrow, so the payload never becomes JVM rows
             target = _arrow_schema(spark, df)
-            maps = scan_bins(
+            segments = run_tasks(
                 spark, list(range(len(splits))),
                 lambda i: exchange.map_task(exchange.read_split(splits[i], target), i, *args),
-                exchange.MAP_META_SCHEMA,
             )
         else:
             def run_map(batches):
                 from pyspark import TaskContext
 
-                yield from exchange.map_task(batches, TaskContext.get().partitionId(), *args)
+                rows = list(exchange.map_task(batches, TaskContext.get().partitionId(), *args))
+                if rows:
+                    yield pa.RecordBatch.from_pylist(rows)
 
             maps = df.mapInArrow(run_map, exchange.MAP_META_SCHEMA)
-        segments = [r.asDict() for r in maps.collect()]
+            segments = [r.asDict() for r in maps.collect()]
         t1 = time.perf_counter()
         bins = exchange.plan_reduce(
             segments, max_pid_tokens, committed, num_partitions or slots
@@ -406,12 +402,10 @@ def encode_table(
 
         def reduce_bin(units):
             read_s: dict[str, float] = {}
-            for mb in encoder(exchange.read_segments(units, key_col, read_s)):
-                yield pa.RecordBatch.from_pylist(
-                    [{**r, "read_s": read_s.get(r["pid"], 0.0)} for r in mb.to_pylist()]
-                )
+            for r in encoder(exchange.read_segments(units, key_col, read_s)):
+                yield {**r, "read_s": read_s.get(r["pid"], 0.0)}
 
-        rows = scan_bins(spark, bins, reduce_bin, REDUCE_META_SCHEMA).collect() if bins else []
+        rows = run_tasks(spark, bins, reduce_bin)
         t3 = time.perf_counter()
     finally:
         shutil.rmtree(stage, ignore_errors=True)
@@ -424,7 +418,7 @@ def encode_table(
     }
     partitions = {}
     for r in rows:
-        p = {k: v for k, v in r.asDict().items() if k not in REDUCE_TIMERS}
+        p = {k: v for k, v in r.items() if k not in REDUCE_TIMERS}
         p["tokens_per_s"] = p["n_tokens"] / p["encode_s"] if p["encode_s"] else None
         partitions[p["pid"]] = p
     layout = {"key_col": key_col, "source_col": source_col, "weight_col": weight_col}
@@ -904,13 +898,36 @@ def file_bins(size: dict[str, int], entries: list, slots: int) -> list[list]:
     return pack_bins(size, entries, min(len(entries), max(slots, -(-total // MAX_BIN_BYTES))))
 
 
+def run_tasks(spark: SparkSession, items: list, fn) -> list[dict]:
+    """Task i of one plain RDD job runs `fn(items[i])` in its Python
+    worker; returns the dicts every task yielded, in task order. For jobs
+    that hand back only metadata (the encode's map and reduce, concat
+    compaction): no DataFrame, Catalyst plan, Arrow batches or Row objects,
+    which cost a fixed ~0.04 s per job (BENCH.md §13)."""
+    if not items:
+        return []
+    sc = spark.sparkContext
+    # Spark pools Python workers by environment; its SQL runner (mapInArrow)
+    # adds this variable when the conf is on. Without it here, these jobs
+    # start and keep a second pool of workers (BENCH.md §13)
+    if spark.conf.get("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled") == "true":
+        sc.environment["SPARK_SIMPLIFIED_TRACEBACK"] = "1"
+
+    def run(it):
+        for i in it:
+            yield from fn(items[i])
+
+    return sc.parallelize(range(len(items)), len(items)).mapPartitions(run).collect()
+
+
 def scan_bins(spark: SparkSession, bins: list, read_bin, schema: str) -> DataFrame:
-    """The manifest-driven scan under every Spark read of stripe files:
-    task i of a `spark.range(len(bins))` runs `read_bin(bins[i])` in its
-    Python worker and yields Arrow batches of `schema`. The manifest
-    already holds the file list and STRIPE_FILE_SCHEMA, so building this
-    DataFrame starts no Spark job — no file listing, no schema inference —
-    and the blobs never pass through a JVM parquet scan."""
+    """The manifest-driven scan under every Spark read of stripe files that
+    must return a DataFrame: task i of a `spark.range(len(bins))` runs
+    `read_bin(bins[i])` in its Python worker and yields Arrow batches of
+    `schema`. The manifest already holds the file list and
+    STRIPE_FILE_SCHEMA, so building this DataFrame starts no Spark job — no
+    file listing, no schema inference — and the blobs never pass through a
+    JVM parquet scan. A job that only returns metadata uses run_tasks."""
 
     def run(batches):
         for b in batches:

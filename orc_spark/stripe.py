@@ -24,8 +24,9 @@ chooser.FSST_MIN_SHARE of the stripe's encoded bytes, and re-encodes a
 column whose trial keeps FSST. Every other column keeps its pass-1 streams;
 offsets are assigned after pass 2, in schema order.
 
-Runs inside Spark Python workers via df.mapInArrow — all kernels are the
-vectorized numpy codecs from orc_spark.codecs; no per-row Python.
+Runs inside Spark Python workers (encode reduce tasks, decode bins) — all
+kernels are the vectorized numpy codecs from orc_spark.codecs; no per-row
+Python.
 """
 
 from __future__ import annotations

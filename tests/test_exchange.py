@@ -194,6 +194,27 @@ def test_reduce_failure_leaves_no_stage_and_no_commit(spark, pinned_input, tmp_p
     assert w.read_manifest("s") is None and w.current_snapshot_id() is None
 
 
+def test_map_failure_leaves_no_stage_and_no_commit(spark, tmp_path):
+    """A parquet input with a corrupt data page and an intact footer: the
+    driver plans it, and the map task that reads the page fails."""
+    t = tokens_arrow(3000, seed=11)
+    path = str(tmp_path / "in.parquet")
+    pq.write_table(t, path, row_group_size=1024)
+    col = pq.ParquetFile(path).metadata.row_group(1).column(1)
+    assert col.path_in_schema.startswith("tokens")
+    with open(path, "r+b") as fh:
+        fh.seek(col.data_page_offset)
+        fh.write(b"\xff" * 32)
+    df = spark.read.schema(from_arrow_schema(t.schema)).parquet(path)
+    assert len(exchange.parquet_splits(df, 4)) == 3
+    wh = str(tmp_path / "wh")
+    with pytest.raises(Exception, match="deserialize thrift"):
+        encode_table(spark, df, wh, "s", salt_buckets=4)
+    w = Warehouse(wh)
+    assert os.listdir(w.exchange_dir) == []
+    assert w.read_manifest("s") is None and w.current_snapshot_id() is None
+
+
 def test_exchange_dirs_are_invisible_and_vacuumed(spark, pinned_input, tmp_path):
     wh = str(tmp_path / "wh")
     m = encode_table(spark, pinned_input, wh, "s", salt_buckets=4)
@@ -253,9 +274,9 @@ def test_map_rows_are_clustered_in_input_order(tmp_path):
     """One map task writes one segment per pid per chunk, rows in input
     order, and drops the rows of skipped (committed) pids."""
     t = tokens_arrow(500, seed=5)
-    rows = [r for rb in exchange.map_task(
+    rows = list(exchange.map_task(
         iter([t.slice(0, 250), t.slice(250)]), 7, str(tmp_path), 4, "doc_id",
-        "source", "n_tok", frozenset({"web#0"})) for r in rb.to_pylist()]
+        "source", "n_tok", frozenset({"web#0"})))
     pids = numpy_pids(t, 4, "doc_id", "source")
     assert {r["pid"] for r in rows} == set(pids) - {"web#0"}
     assert sum(r["n_rows"] for r in rows) == sum(p != "web#0" for p in pids)

@@ -54,40 +54,102 @@ def test_topk_cosine_broadcasts_queries(spark):
     assert "Broadcast" in plan
 
 
-def test_encode_of_parquet_runs_no_shuffle(spark, tmp_path):
-    """An encode of a plain parquet input is two one-stage jobs, the map
-    (each task reads its row groups with pyarrow) and the reduce (each
-    task reads its pids' Arrow segments): no Spark shuffle, and the token
-    payload never becomes JVM rows. Read from the status tracker by job
-    group."""
-    import time
+def _jobs_and_sql(spark, group: str, fn):
+    """Run `fn` under Spark job group `group`; return the group's jobs and
+    the number of Spark SQL executions `fn` started, read once the
+    listener bus has drained."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n0 = store.executionsCount()
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = sorted((st.getJobInfo(j) for j in st.getJobIdsForGroup(group)),
+                  key=lambda j: j.jobId)
+    assert all(j.status == "SUCCEEDED" for j in jobs)
+    return jobs, store.executionsCount() - n0
 
+
+def _parquet_input(spark, path: str, n_docs: int, seed: int):
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
     from orc_spark.fixtures import tokens_arrow
+
+    t = tokens_arrow(n_docs, seed=seed)
+    pq.write_table(t, path, row_group_size=500)
+    return spark.read.schema(from_arrow_schema(t.schema)).parquet(path)
+
+
+def test_encode_of_parquet_runs_no_shuffle(spark, tmp_path):
+    """An encode of a plain parquet input is two one-stage jobs, the map
+    (each task reads its row groups with pyarrow) and the reduce (each
+    task reads its pids' Arrow segments): no Spark shuffle, the token
+    payload never becomes JVM rows, and neither job is a Spark SQL query
+    (both are plain RDD jobs that return metadata dicts)."""
     from orc_spark.pipeline import encode_table
 
-    t = tokens_arrow(2000, seed=3)
-    pq.write_table(t, str(tmp_path / "in.parquet"), row_group_size=500)
-    df = spark.read.schema(from_arrow_schema(t.schema)).parquet(str(tmp_path / "in.parquet"))
-    sc = spark.sparkContext
-    sc.setJobGroup("encode-no-shuffle", "encode-no-shuffle")
-    try:
-        encode_table(spark, df, str(tmp_path / "wh"), "s", salt_buckets=4)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    st = sc.statusTracker()
-    deadline = time.time() + 30
-    while True:  # the status listener catches up asynchronously
-        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup("encode-no-shuffle")]
-        if all(j is not None and j.status == "SUCCEEDED" for j in jobs) or time.time() > deadline:
-            break
-        time.sleep(0.1)
+    df = _parquet_input(spark, str(tmp_path / "in.parquet"), 2000, 3)
+    jobs, sql = _jobs_and_sql(
+        spark, "encode-no-shuffle",
+        lambda: encode_table(spark, df, str(tmp_path / "wh"), "s", salt_buckets=4),
+    )
     assert len(jobs) == 2
     assert [len(j.stageIds) for j in jobs] == [1, 1]
-    map_stage = st.getStageInfo(min(jobs, key=lambda j: j.jobId).stageIds[0])
+    map_stage = spark.sparkContext.statusTracker().getStageInfo(jobs[0].stageIds[0])
     assert map_stage.numTasks == 4  # one per row group
+    assert sql == 0
+
+
+def test_concat_compaction_is_one_stage(spark, tmp_path):
+    """Concat compaction packs its pids on the driver and copies them in
+    one single-stage job: no shuffle and no Spark SQL query."""
+    from orc_spark.maintenance import compact_snapshots
+    from orc_spark.pipeline import encode_table
+
+    wh = str(tmp_path / "wh")
+    for i in range(2):
+        df = _parquet_input(spark, str(tmp_path / f"in{i}.parquet"), 600, i)
+        encode_table(spark, df, wh, f"e{i}", salt_buckets=4)
+    out = {}
+    jobs, sql = _jobs_and_sql(
+        spark, "concat-one-stage",
+        lambda: out.update(compact_snapshots(spark, wh, ["e0", "e1"], "c")),
+    )
+    assert len(jobs) == 1 and len(jobs[0].stageIds) == 1
+    stage = spark.sparkContext.statusTracker().getStageInfo(jobs[0].stageIds[0])
+    assert stage.numTasks == min(len(out["partitions"]), spark.sparkContext.defaultParallelism)
+    assert sql == 0
+    assert sum(p["n_rows"] for p in out["partitions"].values()) == 1200
+
+
+def test_run_tasks_shares_the_sql_worker_pool(spark):
+    """Spark pools Python workers by their environment: a run_tasks job
+    must run in the same pool as a mapInArrow job, or a session that does
+    both keeps (and first starts) two pools of workers."""
+    import pyarrow as pa
+
+    from orc_spark.pipeline import run_tasks
+
+    def _pool_secret():
+        """The secret of the worker pool the calling task runs in."""
+        import os
+
+        return os.environ["PYTHON_WORKER_FACTORY_SECRET"]
+
+    rdd = {r["s"] for r in run_tasks(spark, [0, 1], lambda i: [{"s": _pool_secret()}])}
+
+    def arrow_job(batches):
+        for _ in batches:
+            yield pa.RecordBatch.from_pylist([{"s": _pool_secret()}])
+
+    sql = {r["s"] for r in spark.range(2, numPartitions=2).mapInArrow(arrow_job, "s string").collect()}
+    assert len(rdd) == 1 and rdd == sql
 
 
 def test_simhash_no_row_amplification(spark):
