@@ -8,9 +8,12 @@ the scale factor implied by $SPARK_GRAFT_SF_DIR (sf0.1 → 20,000 docs /
 writer on, so bytes_per_token and tokens/sec are directly comparable), plus
 wall times for representative operator queries over the testdata tables.
 
-Encode is timed on the SECOND run (fresh snapshot, same session): the first
-run pays Python-worker startup + allocator warm-up that a long-running
-cluster job amortizes away.
+Each phase is timed warm: encode on the SECOND run (fresh snapshot, same
+session), decode and verify after one untimed run each. A first run pays
+Python-worker startup, allocator warm-up and the session's one-time job
+set-up (the first mapInArrow job) that a long-running cluster job
+amortizes away. The input is written in 8192-row groups, so the encode's
+map job spreads over the cores.
 """
 
 from __future__ import annotations
@@ -63,7 +66,7 @@ def main() -> None:
     work = tempfile.mkdtemp(prefix="orc_spark_bench_")
     inp = os.path.join(work, "input.parquet")
     tbl = tokens_arrow(n_docs)
-    pq.write_table(tbl, inp)
+    pq.write_table(tbl, inp, row_group_size=8192)
     n_tokens = tbl.column("n_tok").to_pandas().sum()
     df = spark.read.parquet(inp)
 
@@ -79,9 +82,11 @@ def main() -> None:
     # target-partition-size)) — task parallelism comes from num_partitions,
     # not from S, so a small-input bench should not fragment into 160 pids
     salt = 8
-    # warm-up run (snapshot w), then the timed run (snapshot b)
+    # warm-up runs (snapshot w), then the timed runs (snapshot b)
     wh = os.path.join(work, "wh")
     encode_table(spark, df, wh, snapshot="w", salt_buckets=salt, stripe_tokens=4_000_000)
+    decode_table(spark, wh, snapshot="w").count()
+    assert verify_roundtrip(df, decode_table(spark, wh, snapshot="w"))["ok"]
     shutil.rmtree(wh)
     manifest = timed(
         "encode",

@@ -11,8 +11,9 @@ Usage (sandbox, synthesizing the canonical input at the input_hint shape):
   python job.py --docs 20000 --warehouse /tmp/wh --cpus 8
 
 Prints one JSON line of run metrics (tokens/sec, bytes/token, partitions).
-Re-running with the same --snapshot resumes from the last committed
-checkpoint (already-committed partitions are skipped, orphan files adopted).
+Re-running with the same --snapshot resumes: a committed snapshot is
+reported as is with no encode job, and a killed run's complete data files
+are adopted so only the missing partitions encode before the one commit.
 """
 
 from __future__ import annotations

@@ -12,8 +12,9 @@ says what a commit changed):
   * upsert  — INSERTS only its new files (partition seq == the upsert's
     seq), plus the DELETE pre-images of the keys it replaced;
   * delete  — DELETE pre-images only (it shares its parent's files);
-  * evolve / replace (compaction, materialization) / stage (an upsert's
-    staging commit) change no logical rows and yield nothing.
+  * evolve / replace (compaction, materialization) / stage (the staging
+    commit an upsert made before upserts committed once; older logs still
+    hold them) change no logical rows and yield nothing.
 
 DELETE pre-images are the rows as they were LAST VISIBLE: the commit's new
 delete files (those its recorded parent — `delete_parent` /
@@ -66,7 +67,7 @@ def operation(m: dict) -> str:
     """How a snapshot came to be (Iceberg's snapshot operation): append
     (encode / stream / import), delete or upsert (deletes.py), evolve
     (evolution.py), replace (compaction / materialization, maintenance.py)
-    or stage (an upsert's staging commit)."""
+    or stage (an older upsert's staging commit)."""
     if m.get("compacted_from") or m.get("materialized_from"):
         return "replace"
     return m.get("operation") or "append"
@@ -132,8 +133,8 @@ def plan_changes(
     for ordinal, snap in commits:
         m = wh.read_manifest(snap)
         if m is None:
-            # an upsert's stage manifest is removed once the upsert commits
-            # (its rows emit through the upsert)
+            # an older upsert's stage manifest was removed once the upsert
+            # committed (its rows emit through the upsert)
             if cdc and not snap.endswith("-stage"):
                 raise ValueError(
                     f"snapshot {snap!r} (ordinal {ordinal}) inside the CDC "

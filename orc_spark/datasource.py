@@ -61,11 +61,11 @@ the writer is created, before any task runs.
 Streaming — `writeStream.format("tokstripe")` gives exactly-once micro-batch
 encode: each task stages files under a per-invocation unique snapshot name,
 and `commit(messages, batchId)` publishes them as snapshot
-`<snapshot>-e<batchId>`; a replayed epoch (driver restart) detects the
-already-committed batch manifest and DELETES its re-staged files instead of
-committing twice. `readStream` tails committed snapshots as micro-batches
-(append semantics); with `.option("mode", "cdc")` it becomes a CHANGELOG
-stream instead, emitted with `_change_type` / `_commit_snapshot` /
+`<snapshot>-e<batchId>`; the commit creates the batch manifest
+put-if-absent, so a replayed epoch (driver restart) finds its commit refused
+and DELETES its re-staged files instead of committing twice. `readStream`
+tails committed snapshots as micro-batches (append semantics); with
+`.option("mode", "cdc")` it becomes a CHANGELOG stream instead, emitted with `_change_type` / `_commit_snapshot` /
 `_commit_ordinal` — the streaming twin of `cdc.changes_between`, same
 offsets, exactly-once across restarts. Both modes plan through
 cdc.plan_changes, the one rule for which commits change rows (the append
@@ -438,11 +438,10 @@ class TokstripeStreamReader(DataSourceStreamReader):
 
     The offset is a single integer — a position in the warehouse's
     append-only commit log (Warehouse.commit_log), so checkpoints stay
-    O(1) no matter how long the warehouse's tail grows. Snapshot
-    publication is atomic (one manifest rename), so a logged snapshot is
-    complete; snapshots must not be re-committed after publication when
-    consumed this way (encode_table commits once at the end of a job;
-    stream-writer epochs are final). Use .option("snapshot_prefix", ...)
+    O(1) no matter how long the warehouse's tail grows. A snapshot is
+    published by one create-once manifest commit (Warehouse.commit), so a
+    logged snapshot is complete and never changes afterwards. Use
+    .option("snapshot_prefix", ...)
     to tail one logical stream (e.g. a stream writer's '<name>-e' epochs)
     out of a shared warehouse — the prefix filter applies at planning,
     positions are warehouse-global."""
@@ -681,8 +680,9 @@ def _sweep_inprogress(warehouse_path: str) -> None:
 class TokstripeStreamWriter(DataSourceStreamArrowWriter):
     """Micro-batch sink with exactly-once across driver restarts: tasks
     stage data files under a unique per-invocation snapshot name; commit
-    publishes them as '<snapshot>-e<batchId>'. A replayed epoch sees the
-    batch manifest already committed and deletes its re-staged files
+    publishes them as '<snapshot>-e<batchId>'. The commit is the replay
+    check: it creates the batch manifest put-if-absent, and a replayed
+    epoch, whose commit raises SnapshotExists, deletes its re-staged files
     instead of double-publishing."""
 
     def __init__(self, options, schema: StructType):
@@ -701,15 +701,14 @@ class TokstripeStreamWriter(DataSourceStreamArrowWriter):
         )
 
     def commit(self, messages, batchId: int):
-        from .warehouse import Warehouse
+        from .warehouse import SnapshotExists
 
-        snap = self._epoch_snapshot(batchId)
-        if Warehouse(self.options.get("path")).read_manifest(snap):
+        try:
+            _commit(self.options, self.schema, self._epoch_snapshot(batchId), messages)
+        except SnapshotExists:
             # replayed epoch after restart: already published exactly once —
             # drop the re-staged files
             _remove_staged(messages)
-            return
-        _commit(self.options, self.schema, snap, messages)
 
     def abort(self, messages, batchId: int):
         # remove staged files of the failed epoch (they are referenced only

@@ -353,13 +353,13 @@ def upsert(
     file's applicable delete set per task, like any delete (module
     docstring); `materialize_deletes` folds the chain flat.
 
-    The new files stage under snapshot `<dest>-stage` (its manifest is
-    removed after the atomic dest commit; the append stream reader skips
-    'stage' operations, and delivers the upsert's NEW files exactly once
-    via the dest snapshot). Returns the committed manifest plus
+    The new files are written under `dest`'s file names by the encode's
+    file-writing half (pipeline.encode_files) and published with the
+    delete file by dest's one commit, which also carries their
+    `encode_phases`. Returns the committed manifest plus
     `n_upserted` (distinct keys written). `branch=` scopes the commit to a
     branch ref (see delete_where): CURRENT stays put, the branch advances."""
-    from .pipeline import DEFAULT_STRIPE_TOKENS, encode_table
+    from .pipeline import DEFAULT_STRIPE_TOKENS, encode_files
 
     wh = Warehouse(warehouse_path)
     if branch is not None:
@@ -381,24 +381,21 @@ def upsert(
         dest = f"{_root(snapshot)}-u{seq}"
     if wh.read_manifest(dest):
         raise ValueError(f"snapshot {dest!r} already exists")
-    stage = f"{dest}-stage"
-
-    encode_table(
+    parts, phases = encode_files(
         spark,
         df_new,
         warehouse_path,
-        stage,
+        dest,
         salt_buckets=salt_buckets,
         stripe_tokens=stripe_tokens or DEFAULT_STRIPE_TOKENS,
+        num_partitions=None,
+        max_pid_tokens=None,
         key_col=key_col,
         source_col=layout.get("source_col", "source"),
         weight_col=layout.get("weight_col", "n_tok"),
         key_blooms=key_blooms,
-        extra={"operation": "stage", "stage_for": dest},
-        advance_current=False,  # never the table's default read
-        ids=manifest,  # written under the parent's schema (checked above)
+        skip=frozenset(),
     )
-    staged = wh.read_manifest(stage)
 
     new_files = _write_delete_files(
         df_new.select(key_col).distinct(), warehouse_path, dest
@@ -406,7 +403,7 @@ def upsert(
     n_upserted = count_delete_keys(new_files)
 
     merged = dict(manifest["partitions"])  # parent files shared verbatim
-    for pid, part in staged["partitions"].items():
+    for pid, part in parts.items():
         merged[f"{pid}@u{seq}"] = {**part, "seq": seq}
     dels = list(manifest.get("delete_files") or [])
     dels += [{"path": p, "seq": seq} for p in new_files]
@@ -421,18 +418,12 @@ def upsert(
             "operation": "upsert",
             "upsert_parent": snapshot,
             "seq": seq,
+            "encode_phases": phases,
         },
         advance_current=branch is None,
-        ids=manifest,
+        ids=manifest,  # written under the parent's schema (checked above)
     )
     if branch is not None:
         wh.set_ref(branch, dest, kind="branch")
-    # drop the stage manifest: its files are reachable through dest now
-    # (expire/vacuum reference-check against surviving manifests); the
-    # commit-log line keeps its ordinal, readers skip missing manifests
-    try:
-        os.remove(wh.manifest_file(stage))
-    except OSError:
-        pass
     out["n_upserted"] = n_upserted
     return out

@@ -10,7 +10,7 @@ in the warehouse instead of a Spark row shuffle.
           chunk. It returns one metadata dict per segment.
   plan    the driver sums each pid's token mass from those rows, splits
           pids heavier than `max_pid_tokens` into `@sub` pids, drops
-          committed pids (resume) and packs the rest into reduce tasks,
+          pids a resume adopted and packs the rest into reduce tasks,
           heaviest first (`plan_reduce`).
   reduce  task i memory-maps its pids' segments in map order
           (`read_segments`) and feeds them to the stripe encoder one pid
@@ -161,7 +161,7 @@ def map_task(
 ):
     """One map task: cluster `tables` (an iterator of Arrow tables or
     batches) by pid, chunk by chunk, into one IPC file of per-pid segments
-    under `stage`. Rows of a pid in `skip` (committed) are dropped. Yields
+    under `stage`. Rows of a pid in `skip` (adopted) are dropped. Yields
     one MAP_META_SCHEMA dict per segment; the task's timers repeat on each."""
     t = dict.fromkeys(MAP_TIMERS, 0.0)
     path = os.path.join(stage, f"map-{task:05d}-{uuid.uuid4().hex[:8]}.arrow")
@@ -222,11 +222,11 @@ def map_task(
 
 
 def plan_reduce(
-    segments, max_pid_tokens: int | None, committed: set, n_tasks: int
+    segments, max_pid_tokens: int | None, skip: set, n_tasks: int
 ) -> list[list[tuple]]:
     """The driver's plan from the map rows: each pid's token mass, the
     split of every pid heavier than `max_pid_tokens` into ceil(mass/cap)
-    `@sub` pids (each taken at mass/k), committed pids dropped, and the
+    `@sub` pids (each taken at mass/k), the pids in `skip` dropped, and the
     rest packed heaviest first into at most `n_tasks` reduce tasks. A
     reduce unit is (pid, sub, k, [(file, seg), ...] of its base pid in map
     order); sub and k are None for a pid that is not split."""
@@ -246,7 +246,7 @@ def plan_reduce(
     for p in sorted(segs):
         k = splits.get(p)
         for name, sub in ([(f"{p}@{s}", s) for s in range(k)] if k else [(p, None)]):
-            if name not in committed:
+            if name not in skip:
                 units.append((name, sub, k, segs[p]))
                 load[name] = mass[p] / (k or 1)
     return pack_bins(load, units, min(len(units), n_tasks))

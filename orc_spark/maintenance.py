@@ -23,18 +23,20 @@ count, and tiny stripes under-amortize their footers. These are the Iceberg
   `stripe_tokens` and codec choices re-fit the merged distribution. Use
   when stripes (not just files) are fragmented.
 
-Both commit `dest_snapshot` atomically with `compacted_from` lineage; source
-snapshots stay readable until `expire_snapshots` removes them. Expiry
-reference-checks data files against the surviving manifests because
-merge-on-read delete snapshots (deletes.py) share their parent's files;
-`concat` refuses delete-bearing sources (verbatim blob copy would resurrect
-deleted rows) — `materialize_deletes` / `mode="reencode"` rewrite those
-through the full decode (deletes applied) -> encode pipeline instead.
+Both publish `dest_snapshot` with one create-once commit that carries its
+`compacted_from` lineage, and a re-run on a committed `dest_snapshot`
+returns it unchanged; source snapshots stay readable until
+`expire_snapshots` removes them. Expiry reference-checks data files against
+the surviving manifests because merge-on-read delete snapshots (deletes.py)
+share their parent's files; `concat` refuses delete-bearing sources
+(verbatim blob copy would resurrect deleted rows) — `materialize_deletes` /
+`mode="reencode"` rewrite those through the full decode (deletes applied)
+-> encode pipeline instead.
 
 At 100 TB: concat tasks are pure streaming copies (memory = one Arrow row
 group), one pid at a time, no shuffle, no driver funnel; expiry is a metadata
-walk + delete fan-out. Both idempotent — concat re-runs skip committed pids
-via the warehouse resume contract, expiry re-runs are no-ops.
+walk + delete fan-out. Both idempotent — a concat re-run returns the
+committed dest, an expiry re-run is a no-op.
 """
 
 from __future__ import annotations
@@ -59,7 +61,7 @@ from .pipeline import (
     pack_bins,
     run_tasks,
 )
-from .warehouse import Warehouse, current_ids
+from .warehouse import Warehouse, current_ids, parse_key, render_key
 
 
 def _load_source_manifests(wh: Warehouse, snapshots: list[str]) -> list[dict]:
@@ -178,6 +180,9 @@ def compact_snapshots(
         raise ValueError("no source snapshots")
     if dest_snapshot in snapshots:
         raise ValueError("dest snapshot must not be a compaction source")
+    done = wh.read_manifest(dest_snapshot)
+    if done is not None:
+        return done  # a re-run: the one commit already happened
     manifests = _load_source_manifests(wh, snapshots)
     schema = manifests[0]["schema"]
     layout = manifests[0].get("layout") or {}
@@ -188,7 +193,7 @@ def compact_snapshots(
         df = dfs[0]
         for d in dfs[1:]:
             df = df.unionByName(d)
-        encode_table(
+        return encode_table(
             spark,
             df,
             warehouse_path,
@@ -198,9 +203,9 @@ def compact_snapshots(
             key_col=layout.get("key_col", "doc_id"),
             source_col=layout.get("source_col", "source"),
             weight_col=layout.get("weight_col", "n_tok"),
+            extra=extra,
             ids=wh.carry_ids(manifests[0], schema),
         )
-        return wh.commit(dest_snapshot, {}, schema, extra=extra)
     if mode != "concat":
         raise ValueError(f"unknown compaction mode {mode!r}")
     for s, m in zip(snapshots, manifests):
@@ -220,10 +225,7 @@ def compact_snapshots(
 
     # pid -> ordered source files + parsed key ranges (driver-side metadata
     # only: O(#pids), the same scale class as an Iceberg manifest rewrite)
-    key_col = layout.get("key_col", "doc_id")
-    key_is_int = schema.get(key_col, "string") in (
-        "tinyint", "smallint", "int", "bigint",
-    )
+    key_type = schema.get(layout.get("key_col", "doc_id"), "string")
     plan: dict[str, list[str]] = {}
     size: dict[str, int] = {}
     sid: dict[str, int] = {}
@@ -241,21 +243,18 @@ def compact_snapshots(
             if j < 0 or sid.setdefault(pid, j) != j:
                 raise ValueError(f"pid {pid!r} has source files written under "
                                  "different schemas — use mode='reencode'")
-            mn, mx = part.get("min_doc_id"), part.get("max_doc_id")
-            if mn is None or mx is None or mn == "" or mx == "":
+            mn = parse_key(part.get("min_doc_id"), key_type)
+            mx = parse_key(part.get("max_doc_id"), key_type)
+            if mn is None or mx is None:
                 continue
-            if key_is_int:
-                mn, mx = int(json.loads(mn)), int(json.loads(mx))
             if pid not in lo or mn < lo[pid]:
                 lo[pid] = mn
             if pid not in hi or mx > hi[pid]:
                 hi[pid] = mx
 
-    committed = wh.committed_pids(dest_snapshot)  # idempotent re-run
-    todo = [(p, plan[p]) for p in plan if p not in committed]
     # one single-stage job: pids packed on the driver by their sources'
     # encoded bytes, one bin per task slot
-    bins = pack_bins(size, todo, min(len(todo), spark.sparkContext.defaultParallelism))
+    bins = pack_bins(size, list(plan.items()), min(len(plan), spark.sparkContext.defaultParallelism))
     parts = {}
     for d in run_tasks(
         spark, bins,
@@ -263,8 +262,7 @@ def compact_snapshots(
     ):
         p = d["pid"]
         # "" = no recorded range (file_matches treats it as cannot-exclude)
-        for k, v in (("min_doc_id", lo.get(p)), ("max_doc_id", hi.get(p))):
-            d[k] = v if isinstance(v, str) else ("" if v is None else json.dumps(v))
+        d["min_doc_id"], d["max_doc_id"] = render_key(lo.get(p)), render_key(hi.get(p))
         d["compacted"] = True
         d["schema_id"] = sid[p]
         parts[p] = d
@@ -302,7 +300,7 @@ def materialize_deletes(
         raise ValueError(f"snapshot {dest_snapshot!r} already exists")
     layout = m.get("layout") or {}
     df = decode_table(spark, warehouse_path, snapshot=snapshot)
-    encode_table(
+    return encode_table(
         spark,
         df,
         warehouse_path,
@@ -312,17 +310,8 @@ def materialize_deletes(
         key_col=layout.get("key_col", "doc_id"),
         source_col=layout.get("source_col", "source"),
         weight_col=layout.get("weight_col", "n_tok"),
+        extra={"materialized_from": snapshot, "deletes_applied": len(dels)},
         ids=wh.carry_ids(m, m["schema"]),
-    )
-    return wh.commit(
-        dest_snapshot,
-        {},
-        m["schema"],
-        extra={
-            "layout": layout,
-            "materialized_from": snapshot,
-            "deletes_applied": len(dels),
-        },
     )
 
 
@@ -396,26 +385,18 @@ VACUUM_MIN_AGE_S = 3 * 24 * 3600.0  # Iceberg remove_orphan_files' default
 def vacuum_orphans(
     warehouse_path: str,
     min_age_s: float = VACUUM_MIN_AGE_S,
-    include_uncommitted: bool = False,
 ) -> dict:
     """Remove-orphan-files (the Iceberg `remove_orphan_files` analog):
-    delete data files and bloom sidecars on disk that NO manifest
-    references. `min_age_s` defaults to 3 days (Iceberg's
-    remove_orphan_files default) because a vacuum racing a FIRST-TIME
-    encode — which publishes no manifest until its final commit — would
-    otherwise delete the run's already-renamed data files and in-flight
-    temps out from under it; `min_age_s=0` is for tests only, safe solely
-    when no encode can be running. Three classes, handled differently:
-
-      * `*.inprogress-*` temps — always garbage once older than
-        `min_age_s` (a live task's temp is younger; production uses hours,
-        tests 0);
-      * `snap-<id>.parquet` whose id has NO manifest at all — an encode
-        that died before its first commit; deleted past `min_age_s`;
-      * complete files of a LIVE snapshot whose pid is not committed —
-        these are the resume path's ADOPTION candidates (warehouse.
-        orphan_files) and are KEPT unless `include_uncommitted=True`
-        (deleting them is safe — resume re-encodes — but wastes work).
+    delete data files, bloom sidecars and `*.inprogress-*` temps on disk
+    that NO manifest references, once they are older than `min_age_s`.
+    It defaults to 3 days (Iceberg's remove_orphan_files default) because
+    a vacuum racing an encode — which publishes no manifest until its one
+    commit — would otherwise delete the run's already-renamed data files
+    and in-flight temps out from under it, and a killed run's files are
+    what its re-run adopts; `min_age_s=0` is for tests only, safe solely
+    when no encode can be running. A committed snapshot's manifest is
+    never rewritten, so a file of it that the manifest does not list can
+    never be adopted either: it goes like any other.
 
     An encode's exchange directory (exchange.py) is removed with its
     files once older than `min_age_s`: a running encode's is younger, and
@@ -424,48 +405,33 @@ def vacuum_orphans(
 
     Committed files are never touched: the manifest set is the root of
     reachability, exactly like Iceberg's metadata tree. Returns
-    {'files_deleted', 'bytes_deleted', 'kept_adoptable'}."""
-    wh = Warehouse(warehouse_path)
-    manifests = {
-        f[len("snap-"):-len(".json")]
-        for f in os.listdir(wh.manifest_dir)
-        if f.startswith("snap-") and f.endswith(".json")
-    }
-    committed: set[str] = set()
-    for snap in manifests:
-        m = wh.read_manifest(snap)
-        committed.update(p["file"] for p in (m or {}).get("partitions", {}).values())
-        # merge-on-read delete files are manifest-reachable too (deletes.py)
-        from .deletes import delete_files_of
+    {'files_deleted', 'bytes_deleted'}."""
+    from .deletes import delete_files_of
 
-        committed.update(delete_files_of(m))
+    wh = Warehouse(warehouse_path)
+    committed: set[str] = set()
+    for f in os.listdir(wh.manifest_dir):
+        if f.startswith("snap-") and f.endswith(".json"):
+            m = wh.read_manifest(f[len("snap-"):-len(".json")])
+            committed.update(p["file"] for p in (m or {}).get("partitions", {}).values())
+            # merge-on-read delete files are manifest-reachable too (deletes.py)
+            committed.update(delete_files_of(m))
     now = time.time()
-    deleted = bytes_deleted = kept = 0
+    deleted = bytes_deleted = 0
     for root, _, files in os.walk(wh.data_dir):
         for f in files:
             full = os.path.join(root, f)
             if full in committed or full[: -len(".bloom.json")] in committed:
                 continue
             try:
-                age = now - os.path.getmtime(full)
-            except OSError:
-                continue  # raced with a concurrent delete/rename
-            if age < min_age_s:
-                continue
-            if ".inprogress-" in f:
-                pass  # always garbage past the age threshold
-            else:
-                snap = f.split("snap-", 1)[-1].split(".")[0] if "snap-" in f else None
-                if snap in manifests and not include_uncommitted:
-                    kept += 1  # adoption candidate for a resume of `snap`
+                if now - os.path.getmtime(full) < min_age_s:
                     continue
-            try:
                 sz = os.path.getsize(full)
                 os.remove(full)
                 deleted += 1
                 bytes_deleted += sz
             except OSError:
-                pass
+                pass  # raced with a concurrent delete/rename
     stages = os.listdir(wh.exchange_dir) if os.path.isdir(wh.exchange_dir) else []
     for name in stages:
         stage = os.path.join(wh.exchange_dir, name)
@@ -479,11 +445,7 @@ def vacuum_orphans(
         shutil.rmtree(stage, ignore_errors=True)
         deleted += len(files)
         bytes_deleted += sum(sizes)
-    return {
-        "files_deleted": deleted,
-        "bytes_deleted": bytes_deleted,
-        "kept_adoptable": kept,
-    }
+    return {"files_deleted": deleted, "bytes_deleted": bytes_deleted}
 
 
 def _main() -> None:

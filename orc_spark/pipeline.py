@@ -12,7 +12,7 @@ Encode plan (exchange.py) — two one-stage jobs, no Spark shuffle:
               cluster by pid in one stable sort and land in one Arrow IPC
               file per task under warehouse/exchange/, one segment per
               pid. Returns (pid, task, segment, tokens) dicts.
-  driver      drops committed pids (resume), splits pids heavier than
+  driver      drops adopted pids (resume), splits pids heavier than
               max_pid_tokens into '@sub' pids, packs pids into
               num_partitions reduce tasks, heaviest first.
   reduce job  run_tasks (a plain RDD job, as is the map of a parquet
@@ -81,7 +81,7 @@ from . import exchange
 from .codecs import bloom as bloomc
 from .evolution import column_maps, fill_type
 from .stripe import decode_stripe, encode_stripe, footer_from_json, footer_to_json
-from .warehouse import Warehouse, current_ids
+from .warehouse import INT_TYPES, Warehouse, current_ids, parse_key, render_key
 
 # a reduce task's per-pid seconds in encode_stripe + blooms, in file
 # writes and in reading its segments (summed into the manifest's
@@ -240,15 +240,11 @@ class _PidWriter:
             # manifest's string-typed range carries them; file_matches
             # parses them back with the manifest schema's key type. A file
             # of null keys only has no range: "" (cannot exclude)
-            "min_doc_id": _render_key(self.min_doc),
-            "max_doc_id": _render_key(self.max_doc),
+            "min_doc_id": render_key(self.min_doc),
+            "max_doc_id": render_key(self.max_doc),
             "stripe_s": self.stripe_s,
             "write_s": self.write_s,
         }
-
-
-def _render_key(v) -> str:
-    return "" if v is None else v if isinstance(v, str) else json.dumps(v)
 
 
 def _make_encoder(
@@ -318,12 +314,14 @@ def encode_table(
     weight_col: str | None = "n_tok",
     key_blooms: bool = True,
     extra: dict | None = None,
-    advance_current: bool = True,
     ids: dict | None = None,
 ) -> dict:
-    """Encode a (doc_id, tokens, n_tok, source) DataFrame into the warehouse;
-    returns the committed manifest. Resumable: committed partitions are
-    skipped, complete-but-uncommitted files from a killed run are adopted.
+    """Encode a (doc_id, tokens, n_tok, source) DataFrame into the warehouse
+    as snapshot `snapshot`, published by one commit; returns its manifest.
+    Resumable: an already committed snapshot is returned unchanged and no
+    job runs (a replayed stream batch, a re-run job); otherwise the
+    complete data files a killed run of it left are adopted (`resume=False`
+    re-encodes them) and only the missing partitions encode.
     `max_pid_tokens` enables the size-aware rebalance (SURVEY.md §2.2): a
     logical partition whose token mass exceeds it is split into
     ceil(mass/cap) `@sub` partitions by an independent hash of the key, so
@@ -345,31 +343,54 @@ def encode_table(
     `num_partitions` is the number of reduce (encode) tasks, one per task
     slot by default.
 
-    `ids`: the field IDs to commit under (Warehouse.commit); a rewrite
-    passes its source's, the default carries CURRENT's by name.
+    `extra` lands in the manifest (a rewrite's lineage); `ids`: the field
+    IDs to commit under (Warehouse.commit); a rewrite passes its source's,
+    the default carries CURRENT's by name.
 
     The manifest's `encode_phases` holds the map, plan and reduce walls
     and the summed task seconds of each named step (exchange.py)."""
     wh = Warehouse(warehouse_path)
-    schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    exchange.check_layout(df.schema, key_col, source_col)
-
-    committed = wh.committed_pids(snapshot) if resume else set()
+    done = wh.read_manifest(snapshot)
+    if done is not None:
+        return done
+    adopted = {}
     if resume:
-        adopted = {}
         for pid, f in wh.orphan_files(snapshot).items():
             v = wh.validate_data_file(f, key_col=key_col)
             if v is not None:
                 adopted[pid] = {**v, "file": f, "adopted": True, "encode_s": 0.0}
-        if adopted:
-            wh.commit(snapshot, adopted, schema, ids=ids,
-                      advance_current=advance_current)
-            committed |= set(adopted)
+    partitions, phases = encode_files(
+        spark, df, warehouse_path, snapshot, salt_buckets=salt_buckets,
+        stripe_tokens=stripe_tokens, num_partitions=num_partitions,
+        max_pid_tokens=max_pid_tokens, key_col=key_col, source_col=source_col,
+        weight_col=weight_col, key_blooms=key_blooms, skip=frozenset(adopted),
+    )
+    layout = {"key_col": key_col, "source_col": source_col, "weight_col": weight_col}
+    return wh.commit(
+        snapshot, {**adopted, **partitions},
+        {f.name: f.dataType.simpleString() for f in df.schema.fields},
+        extra={"layout": layout, "encode_phases": phases, **(extra or {})},
+        ids=ids,
+    )
 
+
+def encode_files(
+    spark: SparkSession, df: DataFrame, warehouse_path: str, snapshot: str, *,
+    salt_buckets: int, stripe_tokens: int, num_partitions: int | None,
+    max_pid_tokens: int | None, key_col: str, source_col: str | None,
+    weight_col: str | None, key_blooms: bool, skip: frozenset,
+) -> tuple[dict, dict]:
+    """encode_table's file-writing half, which commits nothing: the map,
+    plan and reduce jobs write one data file per pid of `df` not in `skip`
+    under `snapshot`'s file names. Returns ({pid: manifest entry},
+    encode_phases)."""
+    exchange.check_layout(df.schema, key_col, source_col)
     slots = spark.sparkContext.defaultParallelism
-    stage = os.path.join(wh.exchange_dir, f"{snapshot}-{uuid.uuid4().hex[:12]}")
+    stage = os.path.join(
+        Warehouse(warehouse_path).exchange_dir, f"{snapshot}-{uuid.uuid4().hex[:12]}"
+    )
     os.makedirs(stage)
-    args = (stage, salt_buckets, key_col, source_col, weight_col, frozenset(committed))
+    args = (stage, salt_buckets, key_col, source_col, weight_col, skip)
     try:
         t0 = time.perf_counter()
         splits = exchange.parquet_splits(df, slots)
@@ -393,7 +414,7 @@ def encode_table(
             segments = [r.asDict() for r in maps.collect()]
         t1 = time.perf_counter()
         bins = exchange.plan_reduce(
-            segments, max_pid_tokens, committed, num_partitions or slots
+            segments, max_pid_tokens, skip, num_partitions or slots
         )
         t2 = time.perf_counter()
         encoder = _make_encoder(
@@ -421,13 +442,7 @@ def encode_table(
         p = {k: v for k, v in r.items() if k not in REDUCE_TIMERS}
         p["tokens_per_s"] = p["n_tokens"] / p["encode_s"] if p["encode_s"] else None
         partitions[p["pid"]] = p
-    layout = {"key_col": key_col, "source_col": source_col, "weight_col": weight_col}
-    return wh.commit(
-        snapshot, partitions, schema,
-        extra={"layout": layout, "encode_phases": phases, **(extra or {})},
-        advance_current=advance_current,
-        ids=ids,
-    )
+    return partitions, phases
 
 
 def _arrow_schema(spark: SparkSession, df: DataFrame) -> pa.Schema:
@@ -520,7 +535,7 @@ def file_matches(
     preds: list[tuple],
     key_col: str = "doc_id",
     source_col: str | None = "source",
-    key_parse=None,
+    key_type: str | None = None,
 ) -> bool:
     """FILE-level pruning over driver-side manifest metadata (the Iceberg
     manifest-pruning analog): key-column (doc_id) predicates test the
@@ -530,14 +545,16 @@ def file_matches(
     plan_reduce / the format writers), and no suffix contains '#', so
     rsplit recovers the source exactly.
     Source pruning is PARTITION-KEY pruning: an equality/IN predicate on
-    source skips every non-matching file without opening it. `key_parse`
-    (e.g. int) restores non-string manifest key ranges to their native
-    order before the range test."""
+    source skips every non-matching file without opening it. `key_type`
+    (the manifest schema's key type) parses its rendered key ranges back
+    to their native order (parse_key) before the range test."""
     src = pid.rsplit("#", 1)[0]
     for p in preds:
         col = p[1]
         if col == key_col:
             mn, mx = part.get("min_doc_id"), part.get("max_doc_id")
+            if key_type is not None:
+                mn, mx = parse_key(mn, key_type), parse_key(mx, key_type)
             # "" or absent = no recorded range — cannot exclude, for EVERY
             # key type: compact_snapshots writes "" when a source partition
             # lacked a range, and adopted resume partitions may carry no
@@ -545,8 +562,6 @@ def file_matches(
             # would silently prune live rows
             if mn in ("", None) or mx in ("", None):
                 continue
-            if key_parse is not None:
-                mn, mx = key_parse(mn), key_parse(mx)
             if not _pred_matches_range(p, mn, mx):
                 return False
         elif source_col is not None and col == source_col:
@@ -757,24 +772,19 @@ def plan_scan_files(
     layout = manifest.get("layout") or {}
     key_col = layout.get("key_col", "doc_id")
     src_col = layout.get("source_col", "source")
-    key_parse = (
-        int
-        if _spark_type_str(schema.get(key_col, "string"))
-        in ("tinyint", "smallint", "int", "bigint")
-        else None
-    )
+    key_type = schema.get(key_col, "string")
     n_total = len(manifest["partitions"])
     files = [
         part["file"]
         for pid, part in manifest["partitions"].items()
-        if file_matches(pid, part, preds, key_col, src_col, key_parse)
+        if file_matches(pid, part, preds, key_col, src_col, key_type)
     ]
     if prune_metrics is not None:
         prune_metrics["files_total"] = n_total
         prune_metrics["files_pruned"] = n_total - len(files)
     in_key = [p for p in preds if p[0] == "in" and p[1] == key_col]
     if in_key and files:
-        key_is_str = key_parse is None
+        key_is_str = key_type not in INT_TYPES
         survivors = []
         for f in files:
             keep = True

@@ -9,10 +9,11 @@ foreachBatch, one snapshot per micro-batch:
 
 Exactly-once end to end, with no extra machinery: Spark's streaming
 checkpoint replays a failed micro-batch with the SAME batch_id, and
-`encode_table` is idempotent per snapshot (committed partitions are skipped,
-complete-but-uncommitted files adopted) — so replays converge on the
-identical committed state. Decoding the union of all `stream-*` snapshots
-reproduces every ingested row bit-identically.
+`encode_table` is idempotent per snapshot: a batch whose snapshot is
+committed returns at once (no map job runs), and one whose driver died
+before the commit adopts the complete files it left and commits once — so
+replays converge on the identical committed state. Decoding the union of
+all `stream-*` snapshots reproduces every ingested row bit-identically.
 
 Also provides the watermarked event-time rollup (`windowed_token_stats`) —
 the streaming twin of relational.events_hourly — for ingestion monitoring.

@@ -16,13 +16,19 @@ blocked — SURVEY.md [PROBE-4]), so the Iceberg surface the north rule names
                                              segments (exchange.py); gone
                                              when the encode ends
 
-Resumability (BASELINE.json:6 "resumes from its last committed checkpoint"):
-- a partition is COMMITTED when it appears in a manifest;
+Commits (BASELINE.json:6 "resumes from its last committed checkpoint"):
+- a SNAPSHOT, not a partition, is the unit of commit: every write publishes
+  its snapshot with ONE `commit`, which creates the manifest put-if-absent
+  (temp file + `os.link`; an existing name raises SnapshotExists). A
+  published manifest is never rewritten, so a reader sees a snapshot whole
+  or not at all;
 - executors write data files idempotently (deterministic content, atomic
   rename), so task retries are safe;
-- on resume, completed-but-uncommitted data files from a killed run are
-  ADOPTED after validation (footer check) — only truly missing partitions
-  re-encode. This is file-level recovery on top of Iceberg-style snapshots.
+- a re-run of a committed snapshot is a no-op (encode_table returns the
+  manifest); a re-run of one that died before its commit ADOPTS the killed
+  run's complete data files after validation (footer check) and encodes
+  only the missing partitions, all in its single commit. This is
+  file-level recovery on top of Iceberg-style snapshots.
 
 At 10^12-sequence scale the manifest stays driver-sized: one entry per logical
 partition (e.g. 20k partitions x ~200 bytes), exactly like an Iceberg manifest
@@ -40,6 +46,28 @@ import time
 # a manifest's field IDs (evolution.py): its {name: field_id} schema
 # versions and the index of the current one
 ID_KEYS = ("schemas", "schema_id")
+
+# integral key types, Spark's and Arrow's names (parse_key)
+INT_TYPES = ("tinyint", "smallint", "int", "bigint", "int8", "int16", "int32", "int64")
+
+
+class SnapshotExists(ValueError):
+    """A commit of a snapshot name that already has a manifest."""
+
+
+def render_key(v) -> str:
+    """A key-range bound as a manifest stores it: "" for no range (a file
+    of null keys only, a source without one), a string key as is, any
+    other (integral) key as its JSON text."""
+    return "" if v is None else v if isinstance(v, str) else json.dumps(v)
+
+
+def parse_key(s: str | None, key_type: str):
+    """render_key's inverse for a key column of schema type `key_type`:
+    the key's native value, or None for no recorded range."""
+    if s in ("", None):
+        return None
+    return int(s) if key_type in INT_TYPES else s
 
 
 def current_ids(m: dict) -> dict[str, int]:
@@ -112,7 +140,7 @@ class Warehouse:
         a single integer position instead of the full set of consumed names
         (which grows without bound on a long-tailed warehouse). Self-heals:
         committed manifests missing from the log (pre-log warehouses, a
-        crash between manifest rename and log append) are appended in
+        crash between manifest link and log append) are appended in
         sorted order on read; expired snapshots KEEP their line (positions
         already handed out as offsets must stay stable), and readers skip
         names whose manifest is gone. Duplicate lines (two healers racing)
@@ -146,55 +174,57 @@ class Warehouse:
         return lines
 
     def _log_commit(self, snapshot: str) -> None:
-        logf = os.path.join(self.manifest_dir, "COMMITLOG")
-        existing = (
-            set(open(logf).read().splitlines()) if os.path.exists(logf) else set()
-        )
-        if snapshot not in existing:
-            # single short O_APPEND write: atomic on POSIX, no torn lines
-            with open(logf, "a") as fh:
-                fh.write(snapshot + "\n")
+        # single short O_APPEND write: atomic on POSIX, no torn lines;
+        # commit_log() de-duplicates on read
+        with open(os.path.join(self.manifest_dir, "COMMITLOG"), "a") as fh:
+            fh.write(snapshot + "\n")
 
     def commit(self, snapshot: str, partitions: dict[str, dict], schema: dict, extra: dict | None = None, advance_current: bool = True, ids: dict | None = None) -> dict:
-        """Atomically (tmp+rename) write the manifest and advance CURRENT.
+        """Publish `snapshot`: create its manifest put-if-absent, append it
+        to the commit log and advance CURRENT. Raises SnapshotExists (and
+        changes nothing) if the snapshot already has a manifest, so of two
+        writers committing one name exactly one wins, and a published
+        manifest is never rewritten.
 
         `partitions` maps pid -> {file, n_rows, n_tokens, enc_bytes, metrics…}
         (the per-partition lineage + throughput rows the rule requires).
-        Idempotent per (snapshot, pid): re-commits merge by pid.
         `advance_current=False` commits without moving the CURRENT pointer —
-        for staging snapshots (deletes.upsert) that must never become the
-        table's default read, even through a crash window.
+        for a branch commit (deletes.py) that must not become the table's
+        default read.
 
         Field IDs (evolution.py) reach a manifest only here: those of `ids`
         (a shared-files commit's parent, carry_ids of a rewrite's source),
         by default CURRENT's carried by name (carry_ids), as suits an
         append. An entry without a `schema_id` gets the manifest's.
         """
-        manifest = self.read_manifest(snapshot)
-        if manifest is None:
-            parent = self.current_snapshot_id()
-            if ids is None:
-                ids = self.carry_ids(self.read_manifest(parent) if parent else None, schema)
-            manifest = {
-                "snapshot_id": snapshot,
-                "parent": parent,
-                "schema": schema,
-                "created_at": time.time(),
-                "partitions": {},
-                **{k: ids[k] for k in ID_KEYS},
-            }
-        current_ids(manifest)  # a manifest without IDs fails here
-        manifest["partitions"].update(
-            (pid, {"schema_id": manifest["schema_id"], **p})
-            for pid, p in partitions.items()
-        )
-        manifest["committed_at"] = time.time()
-        if extra:
-            manifest.update(extra)
+        parent = self.current_snapshot_id()
+        if ids is None:
+            ids = self.carry_ids(self.read_manifest(parent) if parent else None, schema)
+        current_ids(ids)  # a parent without IDs fails here
+        sid = ids["schema_id"]
+        now = time.time()
+        manifest = {
+            "snapshot_id": snapshot,
+            "parent": parent,
+            "schema": schema,
+            "created_at": now,
+            "partitions": {
+                pid: {"schema_id": sid, **p} for pid, p in partitions.items()
+            },
+            **{k: ids[k] for k in ID_KEYS},
+            "committed_at": now,
+            **(extra or {}),
+        }
         fd, tmp = tempfile.mkstemp(dir=self.manifest_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, self.manifest_file(snapshot))
+        try:
+            with os.fdopen(fd, "w") as fh:
+                json.dump(manifest, fh)
+            # os.link, unlike os.replace, fails on an existing name: create-once
+            os.link(tmp, self.manifest_file(snapshot))
+        except FileExistsError:
+            raise SnapshotExists(f"snapshot {snapshot!r} is already committed") from None
+        finally:
+            os.remove(tmp)
         self._log_commit(snapshot)
         if advance_current:
             fd, tmp = tempfile.mkstemp(dir=self.manifest_dir, suffix=".tmp")
@@ -203,25 +233,20 @@ class Warehouse:
             os.replace(tmp, os.path.join(self.manifest_dir, "CURRENT"))
         return manifest
 
-    def committed_pids(self, snapshot: str) -> set[str]:
-        m = self.read_manifest(snapshot)
-        return set(m["partitions"].keys()) if m else set()
-
     # -- recovery ---------------------------------------------------------
     def orphan_files(self, snapshot: str) -> dict[str, str]:
-        """Data files for this snapshot present on disk but not committed —
-        survivors of a killed run (rename is atomic, so they are complete)."""
-        committed = self.committed_pids(snapshot)
+        """{pid: data file} of this snapshot on disk — before its commit,
+        the survivors of a killed run (rename is atomic, so they are
+        complete)."""
         out = {}
         if not os.path.isdir(self.data_dir):
             return out
         for d in os.listdir(self.data_dir):
             if not d.startswith("pid="):
                 continue
-            pid = d[4:]
-            f = self.data_file(pid, snapshot)
-            if pid not in committed and os.path.exists(f):
-                out[pid] = f
+            f = self.data_file(d[4:], snapshot)
+            if os.path.exists(f):
+                out[d[4:]] = f
         return out
 
     def validate_data_file(self, path: str, key_col: str | None = None) -> dict | None:
@@ -233,8 +258,6 @@ class Warehouse:
         when any stripe lacks the stats (e.g. a nullable key) the range is
         left as the "" cannot-exclude sentinel file_matches expects."""
         try:
-            import json as _json
-
             import pyarrow.parquet as pq
 
             cols = ["pid", "n_rows", "n_tokens", "enc_bytes"]
@@ -253,7 +276,7 @@ class Warehouse:
                 mn = mx = None
                 for fj in t.column("footer").to_pylist():
                     st = (
-                        _json.loads(fj)["columns"].get(key_col, {}).get("stats")
+                        json.loads(fj)["columns"].get(key_col, {}).get("stats")
                         or {}
                     )
                     smn, smx = st.get("min"), st.get("max")
@@ -262,10 +285,7 @@ class Warehouse:
                         break
                     mn = smn if mn is None else min(mn, smn)
                     mx = smx if mx is None else max(mx, smx)
-                render = lambda v: (
-                    "" if v is None else v if isinstance(v, str) else _json.dumps(v)
-                )
-                out["min_doc_id"], out["max_doc_id"] = render(mn), render(mx)
+                out["min_doc_id"], out["max_doc_id"] = render_key(mn), render_key(mx)
             return out
         except Exception:
             return None

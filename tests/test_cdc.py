@@ -459,7 +459,7 @@ def test_plan_changes_reads_each_commit_record(tmp_path, monkeypatch):
     wh.commit("u2", upserted, schema, extra={                            # 3
         "operation": "upsert", "upsert_parent": "d1", "seq": 2,
         "delete_files": [del1, del2]})
-    os.remove(wh.manifest_file("u2-stage"))  # as deletes.upsert does
+    os.remove(wh.manifest_file("u2-stage"))  # as older upserts did
     wh.commit("ev", upserted, {**schema, "lang": "string"}, extra={      # 4
         "operation": "evolve",
         "delete_files": [del1, del2]})

@@ -276,7 +276,7 @@ def test_upsert_replaces_and_inserts(spark, wh):
     assert got.where("source = 's9'").count() == 5
     old = got.where("doc_id = 'd00005'").collect()[0]
     assert max(old["tokens"]) < 1000
-    # parent unaffected; stage manifest removed; CURRENT is the upsert
+    # parent unaffected; no stage manifest; CURRENT is the upsert
     assert decode_table(spark, wh, snapshot="base").where(
         "doc_id = 'd00012'"
     ).collect()[0]["tokens"] == _df(spark).where(

@@ -224,7 +224,8 @@ def test_exchange_dirs_are_invisible_and_vacuumed(spark, pinned_input, tmp_path)
     os.makedirs(dead)
     with open(os.path.join(dead, "map-00000-deadbeef.arrow"), "wb") as fh:
         fh.write(b"\0" * 100)
-    assert w.orphan_files("s") == {}
+    # the snapshot's files are its data files only, never exchange files
+    assert w.orphan_files("s") == {p: e["file"] for p, e in m["partitions"].items()}
     assert sorted(e[0] for e in plan_table(m, [])) == sorted(
         p["file"] for p in m["partitions"].values())
     kept = vacuum_orphans(wh, min_age_s=3600)

@@ -9,7 +9,7 @@ import pytest
 from orc_spark.evolution import column_maps, evolve_schema, fill_type, stored_names
 from orc_spark.maintenance import compact_snapshots
 from orc_spark.pipeline import plan_table
-from orc_spark.warehouse import Warehouse, current_ids
+from orc_spark.warehouse import SnapshotExists, Warehouse, current_ids
 
 SCHEMA = {"doc_id": "string", "tokens": "array<int>", "n_tok": "int"}
 
@@ -41,9 +41,11 @@ def test_commit_without_ids_inherits_by_name_from_current(wh):
     assert current_ids(m) == {"doc_id": 1, "lang": 4}
     assert m["schema_id"] == 1 and wh.last_field_id() == 4
     assert m["partitions"]["p0"]["schema_id"] == 1
-    # a resumed commit of the same snapshot stamps new entries the same way
-    m = wh.commit("c2", {"p1": _part("d")}, {"doc_id": "string"})
-    assert m["partitions"]["p1"]["schema_id"] == 1
+    # a second commit of c2 raises and leaves its manifest unchanged
+    before = open(wh.manifest_file("c2")).read()
+    with pytest.raises(SnapshotExists):
+        wh.commit("c2", {"p1": _part("d")}, {"doc_id": "string"})
+    assert open(wh.manifest_file("c2")).read() == before
 
 
 def test_rename_keeps_its_id_and_entries_keep_theirs(wh):

@@ -164,8 +164,8 @@ def test_expire_refuses_current(spark, epochs_wh):
 
 
 def test_vacuum_orphans(spark, tmp_path):
-    """vacuum deletes dead-run files and stale temps, NEVER committed files,
-    and keeps (by default) the resume path's adoption candidates."""
+    """vacuum deletes dead-run files, stale temps and a committed
+    snapshot's unlisted files past min_age_s, NEVER committed files."""
     from orc_spark.fixtures import tokens_arrow
     from orc_spark.maintenance import vacuum_orphans
 
@@ -178,8 +178,8 @@ def test_vacuum_orphans(spark, tmp_path):
     assert committed
 
     # plant garbage: a dead run's data file (no manifest), a stale temp,
-    # and an adoption candidate (complete file of the LIVE snapshot whose
-    # pid is not committed — copy a real one so it is valid parquet)
+    # and a complete file of the LIVE snapshot whose pid its manifest does
+    # not list (copy a real one so it is valid parquet)
     pid_dir = os.path.dirname(committed[0])
     dead = os.path.join(pid_dir, "snap-deadrun.parquet")
     temp = committed[0] + ".inprogress-deadbeef"
@@ -200,19 +200,17 @@ def test_vacuum_orphans(spark, tmp_path):
 
     res = vacuum_orphans(wh_path, min_age_s=0)
     assert not os.path.exists(dead) and not os.path.exists(temp)
-    assert os.path.exists(adopt)  # adoption candidate kept by default
+    # live's manifest is never rewritten, so its unlisted file is garbage
+    assert not os.path.exists(adopt)
     assert all(os.path.exists(f) for f in committed)
-    assert res["files_deleted"] == 2 and res["kept_adoptable"] == 1
+    assert res["files_deleted"] == 3
 
     # age threshold: fresh garbage survives a min_age_s vacuum
     _sh.copy(committed[0], dead)
     assert vacuum_orphans(wh_path, min_age_s=3600)["files_deleted"] == 0
     assert os.path.exists(dead)
-
-    # include_uncommitted sweeps the adoption candidate too
-    res2 = vacuum_orphans(wh_path, min_age_s=0, include_uncommitted=True)
-    assert not os.path.exists(adopt) and not os.path.exists(dead)
-    assert res2["kept_adoptable"] == 0
+    assert vacuum_orphans(wh_path, min_age_s=0)["files_deleted"] == 1
+    assert not os.path.exists(dead)
 
     # the table still decodes bit-identically after both vacuums
     dec = decode_table(spark, wh_path, "live")

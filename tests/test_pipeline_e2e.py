@@ -1,6 +1,6 @@
 """End-to-end Spark pipeline: encode -> warehouse -> decode -> bit-equality,
-plus checkpoint/resume semantics (committed partitions skipped, orphan files
-from a killed run adopted, only missing partitions re-encoded)."""
+plus checkpoint/resume semantics (a committed snapshot returned as is, orphan
+files from a killed run adopted, only missing partitions re-encoded)."""
 
 import json
 import glob
@@ -70,33 +70,39 @@ def test_projection_decode(spark, encoded):
 
 
 def test_resume_skips_committed_and_adopts_orphans(spark, encoded, tmp_path):
-    """Simulate a killed run: some partitions committed, some written but not
-    committed (orphans), some missing. Resume must re-encode ONLY the missing
-    ones, adopt orphans, and produce identical output."""
+    """Simulate a killed run: some partitions written but not committed
+    (orphans), the rest missing. Resume must adopt the orphans, re-encode
+    ONLY the missing ones, and produce identical output; a re-run of the
+    committed snapshot returns its manifest unchanged and starts no job."""
     wh1, df, m1 = encoded
     wh2 = str(tmp_path / "wh2")
     w2 = Warehouse(wh2)
     pids = sorted(m1["partitions"].keys())
-    committed, orphaned = pids[: len(pids) // 3], pids[len(pids) // 3 : 2 * len(pids) // 3]
-    pre = {}
-    for pid in committed + orphaned:
-        src = m1["partitions"][pid]["file"]
+    orphaned = pids[: 2 * len(pids) // 3]
+    for pid in orphaned:
         dst = w2.data_file(pid, "s1")
         os.makedirs(os.path.dirname(dst), exist_ok=True)
-        shutil.copy(src, dst)
-        if pid in committed:
-            pre[pid] = {**m1["partitions"][pid], "file": dst, "encode_s": -1.0}
-    w2.commit("s1", pre, m1["schema"])
+        shutil.copy(m1["partitions"][pid]["file"], dst)
 
     m2 = encode_table(spark, df, wh2, snapshot="s1", salt_buckets=SALT, stripe_tokens=100_000)
 
     assert set(m2["partitions"]) == set(pids)
-    for pid in committed:  # untouched: our sentinel survives
-        assert m2["partitions"][pid]["encode_s"] == -1.0
-    for pid in orphaned:  # adopted, not re-encoded
-        assert m2["partitions"][pid].get("adopted") is True
+    for pid in pids:  # adopted, not re-encoded; the rest encoded
+        assert m2["partitions"][pid].get("adopted", False) is (pid in orphaned)
     res = verify_roundtrip(df, decode_table(spark, wh2))
     assert res["ok"]
+
+    before = open(w2.manifest_file("s1"), "rb").read()
+    sc = spark.sparkContext
+    sc.setJobGroup("rerun-committed", "rerun-committed")
+    try:
+        m3 = encode_table(spark, df, wh2, snapshot="s1", salt_buckets=SALT,
+                          stripe_tokens=100_000)
+    finally:
+        sc.setJobGroup("after-rerun", "after-rerun")
+    assert list(sc.statusTracker().getJobIdsForGroup("rerun-committed")) == []
+    assert open(w2.manifest_file("s1"), "rb").read() == before
+    assert m3 == json.loads(before)
 
 
 def test_second_snapshot_has_parent(spark, encoded):

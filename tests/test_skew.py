@@ -139,21 +139,21 @@ def test_rebalance_resume_rederives_same_pids(giant_doc_df, tmp_path_factory):
         max_pid_tokens=1_000_000,
     )
     m1 = encode_table(spark, giant_doc_df, wh, **kwargs)
-    # simulate a killed run that committed only a third of the partitions
+    # simulate a killed run that wrote only a third of the partitions'
+    # files and died before its commit
     w = Warehouse(wh)
     pids = sorted(m1["partitions"])
-    keep = {p: {**m1["partitions"][p], "encode_s": -1.0} for p in pids[: len(pids) // 3]}
+    kept = set(pids[: len(pids) // 3])
     import os
 
     os.remove(w.manifest_file("rb"))
     for p in pids[len(pids) // 3 :]:
         os.remove(m1["partitions"][p]["file"])
-    w.commit("rb", keep, m1["schema"])
 
     m2 = encode_table(spark, giant_doc_df, wh, **kwargs)
     assert set(m2["partitions"]) == set(pids)  # identical split pid names
-    for p in keep:
-        assert m2["partitions"][p]["encode_s"] == -1.0  # committed: untouched
+    for p in pids:  # the survivors adopted, only the rest re-encoded
+        assert m2["partitions"][p].get("adopted", False) is (p in kept)
     res = verify_roundtrip(giant_doc_df, decode_table(spark, wh, snapshot="rb"))
     assert res["ok"]
 

@@ -71,8 +71,8 @@ def test_stream_restart_recovery_from_checkpoint(spark, tmp_path):
     running continuous-trigger query mid-stream, restart a fresh query from
     the same checkpointLocation, and prove the warehouse ends with no
     missing and no duplicated rows — Spark replays the in-flight batch_id
-    and encode_table's per-snapshot idempotence (committed partitions
-    skipped, complete orphans adopted) makes the replay converge."""
+    and encode_table's per-snapshot idempotence (a committed snapshot is
+    returned as is, complete orphans adopted) makes the replay converge."""
     import time
 
     inp = tmp_path / "in_restart"
