@@ -12,9 +12,8 @@ says what a commit changed):
   * upsert  — INSERTS only its new files (partition seq == the upsert's
     seq), plus the DELETE pre-images of the keys it replaced;
   * delete  — DELETE pre-images only (it shares its parent's files);
-  * evolve / replace (compaction, materialization) / stage (the staging
-    commit an upsert made before upserts committed once; older logs still
-    hold them) change no logical rows and yield nothing.
+  * evolve / replace (compaction, materialization) change no logical
+    rows and yield nothing.
 
 DELETE pre-images are the rows as they were LAST VISIBLE: the commit's new
 delete files (those its recorded parent — `delete_parent` /
@@ -58,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession
 from . import deletes as _deletes
 from .warehouse import Warehouse, current_ids
 
-NO_CHANGE = ("evolve", "replace", "stage")
+NO_CHANGE = ("evolve", "replace")
 TAG_COLS = "_change_type string, _commit_snapshot string, _commit_ordinal int"
 TAG_NAMES = ["_change_type", "_commit_snapshot", "_commit_ordinal"]
 
@@ -66,8 +65,8 @@ TAG_NAMES = ["_change_type", "_commit_snapshot", "_commit_ordinal"]
 def operation(m: dict) -> str:
     """How a snapshot came to be (Iceberg's snapshot operation): append
     (encode / stream / import), delete or upsert (deletes.py), evolve
-    (evolution.py), replace (compaction / materialization, maintenance.py)
-    or stage (an older upsert's staging commit)."""
+    (evolution.py) or replace (compaction / materialization,
+    maintenance.py)."""
     if m.get("compacted_from") or m.get("materialized_from"):
         return "replace"
     return m.get("operation") or "append"
@@ -133,9 +132,7 @@ def plan_changes(
     for ordinal, snap in commits:
         m = wh.read_manifest(snap)
         if m is None:
-            # an older upsert's stage manifest was removed once the upsert
-            # committed (its rows emit through the upsert)
-            if cdc and not snap.endswith("-stage"):
+            if cdc:
                 raise ValueError(
                     f"snapshot {snap!r} (ordinal {ordinal}) inside the CDC "
                     "range is expired — its row pre-images are gone"

@@ -49,8 +49,10 @@ files the pipeline uses (`_PidWriter`: stripe split at stripe_tokens,
 key-sorted stripe content, stripe + sidecar blooms) as pid '<pid>@w<task>'.
 The driver commits the collected partition metadata as one atomic manifest
 (`DataSourceWriter.commit`) — Iceberg-style: data files are invisible until
-the manifest rename. A failed job aborts by sweeping in-progress temp
-files; already-renamed files are harmless orphans outside the manifest.
+the commit. Either save mode, `overwrite` too, refuses a committed
+snapshot name before any task runs (a committed snapshot is never
+rewritten). A failed job aborts by sweeping in-progress temp files;
+already-renamed files are harmless orphans outside the manifest.
 The writer does NOT reshuffle (Spark's DSv2 Python API cannot require a
 distribution): every task writes its own pid@wN files, so
 pre-`repartition(source, key)` upstream for one file per pid; without it
@@ -61,8 +63,8 @@ the writer is created, before any task runs.
 Streaming — `writeStream.format("tokstripe")` gives exactly-once micro-batch
 encode: each task stages files under a per-invocation unique snapshot name,
 and `commit(messages, batchId)` publishes them as snapshot
-`<snapshot>-e<batchId>`; the commit creates the batch manifest
-put-if-absent, so a replayed epoch (driver restart) finds its commit refused
+`<snapshot>-e<batchId>`; the commit refuses a name that is already
+committed, so a replayed epoch (driver restart) finds its commit refused
 and DELETES its re-staged files instead of committing twice. `readStream`
 tails committed snapshots as micro-batches (append semantics); with
 `.option("mode", "cdc")` it becomes a CHANGELOG stream instead, emitted with `_change_type` / `_commit_snapshot` /
@@ -91,6 +93,7 @@ upgrade that fixes it surfaces here.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -428,7 +431,7 @@ class TokstripeStreamReader(DataSourceStreamReader):
     (pipeline.file_bins), one partition each. The default APPEND stream
     (Iceberg incremental-append-scan semantics) delivers only the insert
     tasks: every file of an append, an upsert's NEW files; delete, evolve,
-    compaction / materialization and stage commits deliver nothing (no
+    compaction and materialization commits deliver nothing (no
     retractions, no re-delivery of shared or rewritten files), and expired
     commits are skipped. With .option("mode", "cdc") it is a CHANGELOG
     stream: delete pre-images too, plus the `_change_type` /
@@ -438,9 +441,8 @@ class TokstripeStreamReader(DataSourceStreamReader):
 
     The offset is a single integer — a position in the warehouse's
     append-only commit log (Warehouse.commit_log), so checkpoints stay
-    O(1) no matter how long the warehouse's tail grows. A snapshot is
-    published by one create-once manifest commit (Warehouse.commit), so a
-    logged snapshot is complete and never changes afterwards. Use
+    O(1) no matter how long the warehouse's tail grows. A logged snapshot
+    is complete, logged once and never changes afterwards. Use
     .option("snapshot_prefix", ...)
     to tail one logical stream (e.g. a stream writer's '<name>-e' epochs)
     out of a shared warehouse — the prefix filter applies at planning,
@@ -488,24 +490,7 @@ class TokstripeStreamReader(DataSourceStreamReader):
         from .pipeline import file_bins
 
         wh = self._wh()
-        commits = list(enumerate(wh.commit_log()))
-        # legacy (pre-log) checkpoints carry name-lists under "seen"; honor
-        # them at BOTH bounds — a replayed legacy batch (start AND end
-        # legacy) must re-deliver exactly its original names, not everything
-        # committed since, or the following pos-based batch re-delivers the
-        # overhang (duplicates, breaking exactly-once)
-        if "seen" in end:
-            in_end = set(end["seen"])
-            commits = [c for c in commits if c[1] in in_end]
-        else:
-            commits = commits[: end.get("pos", len(commits))]
-        if "seen" in start:
-            in_start = set(start["seen"])
-            commits = [c for c in commits if c[1] not in in_start]
-        else:
-            # pos start with legacy end cannot occur (offsets only move
-            # forward from legacy to pos); slice is the pos/pos fast path
-            commits = commits[start.get("pos", 0):]
+        commits = list(enumerate(wh.commit_log()))[start["pos"]:end["pos"]]
         commits = [c for c in commits if c[1].startswith(self._prefix)]
         if self._bound is None:
             self._bound = self._bind()
@@ -592,12 +577,8 @@ def _commit(options, schema: StructType, snapshot: str, messages) -> None:
     """Publish the tasks' data files as one manifest for `snapshot`."""
     from .warehouse import Warehouse
 
-    partitions = {}
-    for m in messages:
-        if m is not None:
-            partitions.update(m.partitions)
     Warehouse(options.get("path")).commit(
-        snapshot, partitions,
+        snapshot, {pid: p for m in messages if m is not None for pid, p in m.partitions.items()},
         {f.name: f.dataType.simpleString() for f in schema.fields},
         extra={"layout": _layout(options, schema)},
     )
@@ -606,38 +587,31 @@ def _commit(options, schema: StructType, snapshot: str, messages) -> None:
 def _remove_staged(messages) -> None:
     """Delete the data files (and their bloom sidecars) the tasks' commit
     messages name: an epoch that must not be published."""
-    for m in messages:
-        if m is None:
-            continue
-        for p in m.partitions.values():
-            for f in (p["file"], p["file"] + ".bloom.json"):
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+    files = [p["file"] for m in messages if m is not None for p in m.partitions.values()]
+    for f in files + [f + ".bloom.json" for f in files]:
+        try:
+            os.remove(f)
+        except OSError:
+            pass
 
 
 class TokstripeWriter(DataSourceArrowWriter):
     """Batch writer: tasks write data files (atomic rename, idempotent under
     task retry — a retried partition regenerates the same (pid, task) file
-    names), driver publishes ONE manifest in commit(). overwrite=True
-    replaces an existing snapshot's manifest; otherwise the snapshot must
-    not already be committed."""
+    names), driver publishes ONE manifest in commit(). A committed
+    snapshot name is refused in either save mode (the tasks would rename
+    over its live files), before any task runs."""
 
     def __init__(self, options, schema: StructType, overwrite: bool):
+        from .warehouse import SnapshotExists, Warehouse
+
         self.options = dict(options)
         self.schema = schema
-        self.overwrite = overwrite
         self.snapshot = self.options.get("snapshot") or f"ds-{uuid.uuid4().hex[:12]}"
         _layout(self.options, schema)
-        from .warehouse import Warehouse
-
-        wh = Warehouse(self.options.get("path"))
-        if not overwrite and wh.read_manifest(self.snapshot):
-            raise ValueError(
-                f"snapshot {self.snapshot!r} already committed; use "
-                f"mode('overwrite') or a new snapshot name"
-            )
+        if self.snapshot in Warehouse(self.options.get("path")).commit_log():
+            raise SnapshotExists(f"snapshot {self.snapshot!r} already committed; a committed "
+                                 "snapshot is never rewritten, write a new snapshot name")
 
     def write(self, iterator):
         return _CommitMsg(
@@ -645,13 +619,6 @@ class TokstripeWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages):
-        if self.overwrite:
-            from .warehouse import Warehouse
-
-            try:
-                os.remove(Warehouse(self.options.get("path")).manifest_file(self.snapshot))
-            except OSError:
-                pass
         _commit(self.options, self.schema, self.snapshot, messages)
 
     def abort(self, messages):
@@ -662,28 +629,20 @@ def _sweep_inprogress(warehouse_path: str) -> None:
     """Remove leftover '*.inprogress-*' temp files after a failed job.
     Renamed-but-uncommitted data files stay — they are invisible to readers
     (manifest never published) and resumable jobs may adopt them."""
-    data_dir = os.path.join(warehouse_path, "data")
-    if not os.path.isdir(data_dir):
-        return
-    for d in os.listdir(data_dir):
-        pd = os.path.join(data_dir, d)
-        if not os.path.isdir(pd):
-            continue
-        for f in os.listdir(pd):
-            if ".inprogress-" in f:
-                try:
-                    os.remove(os.path.join(pd, f))
-                except OSError:
-                    pass
+    for f in glob.glob(os.path.join(glob.escape(warehouse_path), "data", "*", "*.inprogress-*")):
+        try:
+            os.remove(f)
+        except OSError:
+            pass
 
 
 class TokstripeStreamWriter(DataSourceStreamArrowWriter):
     """Micro-batch sink with exactly-once across driver restarts: tasks
     stage data files under a unique per-invocation snapshot name; commit
     publishes them as '<snapshot>-e<batchId>'. The commit is the replay
-    check: it creates the batch manifest put-if-absent, and a replayed
-    epoch, whose commit raises SnapshotExists, deletes its re-staged files
-    instead of double-publishing."""
+    check: a replayed epoch, whose name the commit log holds, deletes its
+    re-staged files instead of double-publishing. A name only an unlogged
+    manifest holds (warehouse.py) is no replay: the commit raises."""
 
     def __init__(self, options, schema: StructType):
         self.options = dict(options)
@@ -701,11 +660,14 @@ class TokstripeStreamWriter(DataSourceStreamArrowWriter):
         )
 
     def commit(self, messages, batchId: int):
-        from .warehouse import SnapshotExists
+        from .warehouse import SnapshotExists, Warehouse
 
+        name = self._epoch_snapshot(batchId)
         try:
-            _commit(self.options, self.schema, self._epoch_snapshot(batchId), messages)
+            _commit(self.options, self.schema, name, messages)
         except SnapshotExists:
+            if name not in Warehouse(self.options.get("path")).commit_log():
+                raise
             # replayed epoch after restart: already published exactly once —
             # drop the re-staged files
             _remove_staged(messages)

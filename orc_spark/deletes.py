@@ -41,6 +41,10 @@ warehouse's manifest tree:
     merge. The cost is memory: a task holds the delete keys of every file
     in its bin, so long delete chains are what `materialize_deletes` is
     for.
+  * Every write here reads the table, so its one commit (on main, or on
+    the branch for `branch=`) lands only if that ref's head is still the
+    one the write read; otherwise it raises CommitConflict and publishes
+    nothing (warehouse.py), so no concurrent write is silently lost.
   * Lifecycle is manifest-rooted like everything else: delete files are
     invisible until the manifest rename (a crash mid-`delete_where` leaves
     age-gated orphans that `vacuum_orphans` collects), `vacuum` treats
@@ -59,7 +63,7 @@ import time
 
 from pyspark.sql import SparkSession, functions as F
 
-from .warehouse import Warehouse
+from .warehouse import MAIN, Warehouse, check_ref_name
 
 DELETES_DIRNAME = "_deletes"
 
@@ -181,22 +185,28 @@ def _write_delete_files(keys_df, warehouse_path: str, dest: str) -> list[str]:
     return new_files
 
 
-def _branch_base(wh: Warehouse, branch: str, snapshot: str | None) -> str:
-    """Base snapshot of a branch-scoped write: an explicit `snapshot` wins
-    (and creates the branch at commit if it does not exist yet); otherwise
-    the branch ref's current target."""
-    if snapshot is not None:
-        return wh.resolve_snapshot(snapshot)
-    ref = wh.get_ref(branch)
-    if ref is None:
+def _base(wh: Warehouse, branch: str | None, snapshot: str | None) -> tuple[str, str | None, str]:
+    """(ref, its head, the snapshot to read) of a write that reads the
+    table: main and CURRENT, or `branch` and its head. An explicit
+    `snapshot` is read instead of the head, and creates the branch at
+    commit if it does not exist yet; the commit expects the head either
+    way. A name no branch may take (check_ref_name; `main` among them) is
+    refused."""
+    if branch is None:
+        head = wh.current_snapshot_id()
+        return MAIN, head, head if snapshot is None else wh.resolve_snapshot(snapshot)
+    check_ref_name(branch)
+    r = wh.get_ref(branch)
+    if r is not None and r["kind"] != "branch":
+        raise ValueError(f"ref {branch!r} is a tag - tags are immutable")
+    if r is None and snapshot is None:
         raise ValueError(
             f"branch {branch!r} does not exist - create it with "
             "Warehouse.set_ref(name, snapshot, kind='branch') or pass "
             "snapshot= to base the first branch write explicitly"
         )
-    if ref["kind"] != "branch":
-        raise ValueError(f"ref {branch!r} is a tag - tags are immutable")
-    return ref["snapshot"]
+    head = r and r["snapshot"]
+    return branch, head, head if snapshot is None else wh.resolve_snapshot(snapshot)
 
 
 def delete_where(
@@ -220,15 +230,13 @@ def delete_where(
     snapshots no-op deletes) with no new delete file.
 
     `branch=` makes this a BRANCH-SCOPED write (Iceberg branch commits):
-    the base defaults to the branch ref's target, CURRENT does not move,
-    and the branch ref advances to `dest` instead — main readers never see
-    the branch's deletes until someone fast-forwards (Warehouse.rollback
-    to the branch target is the publish step of write-audit-publish)."""
+    the base defaults to the branch's head, and the one commit lands on
+    the branch, so CURRENT does not move — main readers never see the
+    branch's deletes until someone fast-forwards (Warehouse.rollback to
+    the branch target is the publish step of write-audit-publish). A head
+    that moves while this runs raises CommitConflict (module docstring)."""
     wh = Warehouse(warehouse_path)
-    if branch is not None:
-        snapshot = _branch_base(wh, branch, snapshot)
-    else:
-        snapshot = wh.resolve_snapshot(snapshot)
+    ref, head, snapshot = _base(wh, branch, snapshot)
     manifest = wh.read_manifest(snapshot)
     if not manifest:
         raise ValueError(f"no manifest for snapshot {snapshot!r}")
@@ -278,11 +286,10 @@ def delete_where(
             "operation": "delete",
             "delete_parent": snapshot,
         },
-        advance_current=branch is None,
         ids=manifest,
+        ref=ref,
+        expect=head,
     )
-    if branch is not None:
-        wh.set_ref(branch, dest, kind="branch")
     out["n_deleted"] = n_deleted
     return out
 
@@ -306,18 +313,14 @@ def update_where(
     from .pipeline import decode_table
 
     wh = Warehouse(warehouse_path)
-    if branch is not None:
-        snapshot = _branch_base(wh, branch, snapshot)
-    else:
-        snapshot = wh.resolve_snapshot(snapshot)
-    df = decode_table(spark, warehouse_path, snapshot=snapshot,
+    base = _base(wh, branch, snapshot)  # the upsert expects this head
+    df = decode_table(spark, warehouse_path, snapshot=base[2],
                       predicate=predicate)
     for c, e in set_exprs.items():
         if c not in df.columns:
             raise ValueError(f"SET column {c!r} not in schema {df.columns}")
         df = df.withColumn(c, F.expr(e) if isinstance(e, str) else e)
-    return upsert(spark, warehouse_path, df, snapshot=snapshot, dest=dest,
-                  branch=branch)
+    return _upsert(spark, wh, df, base, dest)
 
 
 def _root(snapshot: str) -> str:
@@ -357,15 +360,19 @@ def upsert(
     file-writing half (pipeline.encode_files) and published with the
     delete file by dest's one commit, which also carries their
     `encode_phases`. Returns the committed manifest plus
-    `n_upserted` (distinct keys written). `branch=` scopes the commit to a
-    branch ref (see delete_where): CURRENT stays put, the branch advances."""
-    from .pipeline import DEFAULT_STRIPE_TOKENS, encode_files
-
+    `n_upserted` (distinct keys written). `branch=` commits to a branch
+    (see delete_where): CURRENT stays put, the branch advances. A head
+    that moves while this runs raises CommitConflict, as for a delete."""
     wh = Warehouse(warehouse_path)
-    if branch is not None:
-        snapshot = _branch_base(wh, branch, snapshot)
-    else:
-        snapshot = wh.resolve_snapshot(snapshot)
+    return _upsert(spark, wh, df_new, _base(wh, branch, snapshot), dest,
+                   salt_buckets, stripe_tokens, key_blooms)
+
+
+def _upsert(spark, wh: Warehouse, df_new, base: tuple, dest: str | None, salt_buckets: int = 32,
+            stripe_tokens: int | None = None, key_blooms: bool = True) -> dict:
+    from .pipeline import DEFAULT_STRIPE_TOKENS, LAYOUT, encode_files
+
+    ref, head, snapshot = base
     manifest = wh.read_manifest(snapshot)
     if not manifest:
         raise ValueError(f"no manifest for snapshot {snapshot!r}")
@@ -382,23 +389,13 @@ def upsert(
     if wh.read_manifest(dest):
         raise ValueError(f"snapshot {dest!r} already exists")
     parts, phases = encode_files(
-        spark,
-        df_new,
-        warehouse_path,
-        dest,
-        salt_buckets=salt_buckets,
-        stripe_tokens=stripe_tokens or DEFAULT_STRIPE_TOKENS,
-        num_partitions=None,
-        max_pid_tokens=None,
-        key_col=key_col,
-        source_col=layout.get("source_col", "source"),
-        weight_col=layout.get("weight_col", "n_tok"),
-        key_blooms=key_blooms,
-        skip=frozenset(),
+        spark, df_new, wh.path, dest, salt_buckets=salt_buckets,
+        stripe_tokens=stripe_tokens or DEFAULT_STRIPE_TOKENS, num_partitions=None,
+        max_pid_tokens=None, key_blooms=key_blooms, skip=frozenset(), **{**LAYOUT, **layout},
     )
 
     new_files = _write_delete_files(
-        df_new.select(key_col).distinct(), warehouse_path, dest
+        df_new.select(key_col).distinct(), wh.path, dest
     )
     n_upserted = count_delete_keys(new_files)
 
@@ -420,10 +417,9 @@ def upsert(
             "seq": seq,
             "encode_phases": phases,
         },
-        advance_current=branch is None,
         ids=manifest,  # written under the parent's schema (checked above)
+        ref=ref,
+        expect=head,
     )
-    if branch is not None:
-        wh.set_ref(branch, dest, kind="branch")
     out["n_upserted"] = n_upserted
     return out

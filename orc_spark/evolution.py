@@ -96,12 +96,14 @@ def evolve_schema(
     columns added (`{name: spark_type}`), dropped, and/or renamed
     (`{old: new}`). Pure metadata — same files, same delete files. Raises
     on layout-column changes, on a new name that collides with a live
-    column and on an ADD type outside ADD_TYPES (see module docstring)."""
+    column and on an ADD type outside ADD_TYPES (see module docstring);
+    raises CommitConflict if CURRENT moves while it runs."""
     add = add or {}
     drop = list(drop or [])
     rename = rename or {}
     wh = Warehouse(warehouse_path)
-    snapshot = wh.resolve_snapshot(snapshot)
+    head = wh.current_snapshot_id()
+    snapshot = head if snapshot is None else wh.resolve_snapshot(snapshot)
     m = wh.read_manifest(snapshot)
     if not m:
         raise ValueError(f"no manifest for snapshot {snapshot!r}")
@@ -154,4 +156,4 @@ def evolve_schema(
         extra["delete_files"] = list(m["delete_files"])
     return wh.commit(dest, dict(m["partitions"]), new_schema, extra=extra, ids={
         "schemas": m["schemas"] + [new_ids], "schema_id": len(m["schemas"]),
-    })
+    }, expect=head)

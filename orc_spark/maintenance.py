@@ -19,13 +19,14 @@ count, and tiny stripes under-amortize their footers. These are the Iceberg
   (pipeline.run_tasks); executors stream file-to-file, only metadata
   dicts return (same commit discipline as encode_table).
 - **reencode**: decode the union of the source snapshots and push it back
-  through encode_table — full codec cost, but tiny stripes re-pack to
+  through the encode pipeline — full codec cost, but tiny stripes re-pack to
   `stripe_tokens` and codec choices re-fit the merged distribution. Use
   when stripes (not just files) are fragmented.
 
 Both publish `dest_snapshot` with one create-once commit that carries its
-`compacted_from` lineage, and a re-run on a committed `dest_snapshot`
-returns it unchanged; source snapshots stay readable until
+`compacted_from` lineage, on main and only if CURRENT has not moved since
+the compaction started (CommitConflict otherwise; warehouse.py), and a
+re-run on a committed `dest_snapshot` returns it unchanged; source snapshots stay readable until
 `expire_snapshots` removes them. Expiry reference-checks data files against
 the surviving manifests because merge-on-read delete snapshots (deletes.py)
 share their parent's files; `concat` refuses delete-bearing sources
@@ -57,7 +58,7 @@ from .pipeline import (
     DEFAULT_STRIPE_TOKENS,
     STRIPE_FILE_SCHEMA,
     decode_table,
-    encode_table,
+    encode_commit,
     pack_bins,
     run_tasks,
 )
@@ -180,32 +181,23 @@ def compact_snapshots(
         raise ValueError("no source snapshots")
     if dest_snapshot in snapshots:
         raise ValueError("dest snapshot must not be a compaction source")
-    done = wh.read_manifest(dest_snapshot)
-    if done is not None:
-        return done  # a re-run: the one commit already happened
+    if dest_snapshot in wh.commit_log():
+        return wh.read_manifest(dest_snapshot)  # a re-run: the one commit already happened
+    head = wh.current_snapshot_id()
     manifests = _load_source_manifests(wh, snapshots)
     schema = manifests[0]["schema"]
     layout = manifests[0].get("layout") or {}
-    extra = {"layout": layout, "compacted_from": list(snapshots)}
+    lineage = {"compacted_from": list(snapshots)}
 
     if mode == "reencode":
         dfs = [decode_table(spark, warehouse_path, s) for s in snapshots]
         df = dfs[0]
         for d in dfs[1:]:
             df = df.unionByName(d)
-        return encode_table(
-            spark,
-            df,
-            warehouse_path,
-            dest_snapshot,
-            salt_buckets=salt_buckets,
-            stripe_tokens=stripe_tokens,
-            key_col=layout.get("key_col", "doc_id"),
-            source_col=layout.get("source_col", "source"),
-            weight_col=layout.get("weight_col", "n_tok"),
-            extra=extra,
-            ids=wh.carry_ids(manifests[0], schema),
-        )
+        return encode_commit(  # resumable: a re-run adopts a killed run's files
+            spark, df, wh, dest_snapshot, resume=True, layout=layout, extra=lineage,
+            ids=wh.carry_ids(manifests[0], schema), expect=head, salt_buckets=salt_buckets,
+            stripe_tokens=stripe_tokens, num_partitions=None, max_pid_tokens=None, key_blooms=True)
     if mode != "concat":
         raise ValueError(f"unknown compaction mode {mode!r}")
     for s, m in zip(snapshots, manifests):
@@ -245,12 +237,8 @@ def compact_snapshots(
                                  "different schemas — use mode='reencode'")
             mn = parse_key(part.get("min_doc_id"), key_type)
             mx = parse_key(part.get("max_doc_id"), key_type)
-            if mn is None or mx is None:
-                continue
-            if pid not in lo or mn < lo[pid]:
-                lo[pid] = mn
-            if pid not in hi or mx > hi[pid]:
-                hi[pid] = mx
+            if mn is not None and mx is not None:
+                lo[pid], hi[pid] = min(lo.get(pid, mn), mn), max(hi.get(pid, mx), mx)
 
     # one single-stage job: pids packed on the driver by their sources'
     # encoded bytes, one bin per task slot
@@ -266,7 +254,7 @@ def compact_snapshots(
         d["compacted"] = True
         d["schema_id"] = sid[p]
         parts[p] = d
-    return wh.commit(dest_snapshot, parts, schema, extra=extra, ids=manifests[0])
+    return wh.commit(dest_snapshot, parts, schema, extra={"layout": layout, **lineage}, ids=manifests[0], expect=head)
 
 
 def materialize_deletes(
@@ -287,9 +275,11 @@ def materialize_deletes(
     still merge-on-read) until expired; its delete files become
     collectable once no surviving manifest references them. Cost: full
     decode+encode of the LIVE rows — pay it when the delete ratio or the
-    per-read merge cost warrants, same calculus as Iceberg."""
+    per-read merge cost warrants, same calculus as Iceberg. Commits on
+    main; raises CommitConflict if CURRENT moves while it runs."""
     wh = Warehouse(warehouse_path)
-    snapshot = wh.resolve_snapshot(snapshot)
+    head = wh.current_snapshot_id()
+    snapshot = head if snapshot is None else wh.resolve_snapshot(snapshot)
     m = wh.read_manifest(snapshot)
     if not m:
         raise ValueError(f"no manifest for snapshot {snapshot!r}")
@@ -298,21 +288,12 @@ def materialize_deletes(
         dest_snapshot = f"{snapshot}-mat"
     if wh.read_manifest(dest_snapshot):
         raise ValueError(f"snapshot {dest_snapshot!r} already exists")
-    layout = m.get("layout") or {}
     df = decode_table(spark, warehouse_path, snapshot=snapshot)
-    return encode_table(
-        spark,
-        df,
-        warehouse_path,
-        dest_snapshot,
-        salt_buckets=salt_buckets,
-        stripe_tokens=stripe_tokens,
-        key_col=layout.get("key_col", "doc_id"),
-        source_col=layout.get("source_col", "source"),
-        weight_col=layout.get("weight_col", "n_tok"),
+    return encode_commit(
+        spark, df, wh, dest_snapshot, resume=True, layout=m.get("layout") or {},
         extra={"materialized_from": snapshot, "deletes_applied": len(dels)},
-        ids=wh.carry_ids(m, m["schema"]),
-    )
+        ids=wh.carry_ids(m, m["schema"]), expect=head, salt_buckets=salt_buckets,
+        stripe_tokens=stripe_tokens, num_partitions=None, max_pid_tokens=None, key_blooms=True)
 
 
 def expire_snapshots(
@@ -335,9 +316,7 @@ def expire_snapshots(
     wh = Warehouse(warehouse_path)
     cur = wh.current_snapshot_id()
     expiring = set(expire)
-    refd = {
-        r["snapshot"]: name for name, r in wh.refs().items()
-    }
+    refd = {r["snapshot"]: name for name, r in wh.refs().items()}
     for s in expire:
         if keep_current and s == cur:
             raise ValueError(f"refusing to expire CURRENT snapshot {s!r}")
@@ -357,13 +336,7 @@ def expire_snapshots(
             pass
     from .deletes import delete_files_of
 
-    live: set[str] = set()
-    for f in os.listdir(wh.manifest_dir):
-        if not (f.startswith("snap-") and f.endswith(".json")):
-            continue
-        m = wh.read_manifest(f[len("snap-"):-len(".json")])
-        live.update(p["file"] for p in (m or {}).get("partitions", {}).values())
-        live.update(delete_files_of(m))
+    live = _reachable(wh)
     for m in doomed:
         cand = [f["file"] for f in (m or {}).get("partitions", {}).values()]
         cand += delete_files_of(m)
@@ -377,6 +350,20 @@ def expire_snapshots(
                 except OSError:
                     pass
     return {"files_deleted": n, "snapshots": list(expiring)}
+
+
+def _reachable(wh: Warehouse) -> set[str]:
+    """Every data and delete file (deletes.py) a manifest on disk lists:
+    the root of reachability for expiry and vacuum."""
+    from .deletes import delete_files_of
+
+    out: set[str] = set()
+    for f in os.listdir(wh.manifest_dir):
+        if f.startswith("snap-") and f.endswith(".json"):
+            m = wh.read_manifest(f[len("snap-"):-len(".json")])
+            out.update(p["file"] for p in (m or {}).get("partitions", {}).values())
+            out.update(delete_files_of(m))
+    return out
 
 
 VACUUM_MIN_AGE_S = 3 * 24 * 3600.0  # Iceberg remove_orphan_files' default
@@ -398,6 +385,10 @@ def vacuum_orphans(
     never rewritten, so a file of it that the manifest does not list can
     never be adopted either: it goes like any other.
 
+    So are a manifest no log entry names (warehouse.py: a writer died
+    between the two, and it holds the name until it goes), the files only
+    it lists, and a commit's leftover `*.tmp`.
+
     An encode's exchange directory (exchange.py) is removed with its
     files once older than `min_age_s`: a running encode's is younger, and
     a finished one removes its own, so an old one was left by a killed
@@ -406,32 +397,32 @@ def vacuum_orphans(
     Committed files are never touched: the manifest set is the root of
     reachability, exactly like Iceberg's metadata tree. Returns
     {'files_deleted', 'bytes_deleted'}."""
-    from .deletes import delete_files_of
-
     wh = Warehouse(warehouse_path)
-    committed: set[str] = set()
-    for f in os.listdir(wh.manifest_dir):
-        if f.startswith("snap-") and f.endswith(".json"):
-            m = wh.read_manifest(f[len("snap-"):-len(".json")])
-            committed.update(p["file"] for p in (m or {}).get("partitions", {}).values())
-            # merge-on-read delete files are manifest-reachable too (deletes.py)
-            committed.update(delete_files_of(m))
     now = time.time()
     deleted = bytes_deleted = 0
+
+    def reap(full: str) -> None:
+        nonlocal deleted, bytes_deleted
+        try:
+            if now - os.path.getmtime(full) < min_age_s:
+                return
+            sz = os.path.getsize(full)
+            os.remove(full)
+            deleted += 1
+            bytes_deleted += sz
+        except OSError:
+            pass  # raced with a concurrent delete/rename
+
+    logged = set(wh.commit_log())
+    for f in os.listdir(wh.manifest_dir):
+        if f.endswith(".tmp") or (f.startswith("snap-") and f[len("snap-"):-len(".json")] not in logged):
+            reap(os.path.join(wh.manifest_dir, f))
+    committed = _reachable(wh)
     for root, _, files in os.walk(wh.data_dir):
         for f in files:
             full = os.path.join(root, f)
-            if full in committed or full[: -len(".bloom.json")] in committed:
-                continue
-            try:
-                if now - os.path.getmtime(full) < min_age_s:
-                    continue
-                sz = os.path.getsize(full)
-                os.remove(full)
-                deleted += 1
-                bytes_deleted += sz
-            except OSError:
-                pass  # raced with a concurrent delete/rename
+            if full not in committed and full[: -len(".bloom.json")] not in committed:
+                reap(full)
     stages = os.listdir(wh.exchange_dir) if os.path.isdir(wh.exchange_dir) else []
     for name in stages:
         stage = os.path.join(wh.exchange_dir, name)

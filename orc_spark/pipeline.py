@@ -81,7 +81,7 @@ from . import exchange
 from .codecs import bloom as bloomc
 from .evolution import column_maps, fill_type
 from .stripe import decode_stripe, encode_stripe, footer_from_json, footer_to_json
-from .warehouse import INT_TYPES, Warehouse, current_ids, parse_key, render_key
+from .warehouse import APPEND, INT_TYPES, Warehouse, current_ids, held, parse_key, render_key
 
 # a reduce task's per-pid seconds in encode_stripe + blooms, in file
 # writes and in reading its segments (summed into the manifest's
@@ -101,6 +101,9 @@ STRIPE_FILE_SCHEMA = pa.schema(
 )
 
 DEFAULT_STRIPE_TOKENS = 4_000_000  # ~8 MB encoded per stripe at ~2 B/token
+
+# encode_table's default layout (its key, source and weight columns)
+LAYOUT = {"key_col": "doc_id", "source_col": "source", "weight_col": "n_tok"}
 
 
 class _PidWriter:
@@ -313,8 +316,6 @@ def encode_table(
     source_col: str | None = "source",
     weight_col: str | None = "n_tok",
     key_blooms: bool = True,
-    extra: dict | None = None,
-    ids: dict | None = None,
 ) -> dict:
     """Encode a (doc_id, tokens, n_tok, source) DataFrame into the warehouse
     as snapshot `snapshot`, published by one commit; returns its manifest.
@@ -343,34 +344,49 @@ def encode_table(
     `num_partitions` is the number of reduce (encode) tasks, one per task
     slot by default.
 
-    `extra` lands in the manifest (a rewrite's lineage); `ids`: the field
-    IDs to commit under (Warehouse.commit); a rewrite passes its source's,
-    the default carries CURRENT's by name.
+    The commit is an append on main (Warehouse.commit): it never
+    conflicts, and carries CURRENT's field IDs by name.
 
     The manifest's `encode_phases` holds the map, plan and reduce walls
     and the summed task seconds of each named step (exchange.py)."""
-    wh = Warehouse(warehouse_path)
-    done = wh.read_manifest(snapshot)
-    if done is not None:
-        return done
+    return encode_commit(
+        spark, df, Warehouse(warehouse_path), snapshot, resume=resume,
+        layout={"key_col": key_col, "source_col": source_col, "weight_col": weight_col},
+        extra={}, ids=None, expect=APPEND, salt_buckets=salt_buckets,
+        stripe_tokens=stripe_tokens, num_partitions=num_partitions,
+        max_pid_tokens=max_pid_tokens, key_blooms=key_blooms,
+    )
+
+
+def encode_commit(
+    spark: SparkSession, df: DataFrame, wh: Warehouse, snapshot: str, *,
+    resume: bool, layout: dict, extra: dict, ids: dict | None, expect, **files,
+) -> dict:
+    """encode_table's body, with the inputs a rewrite of the table
+    (maintenance.py) sets: its source's `layout` (a missing column takes
+    encode_table's default), lineage in `extra`, and Warehouse.commit's
+    `ids` and `expect`. `files` are encode_files' other arguments.
+    Returns the manifest of a committed `snapshot` as is; otherwise adopts
+    a killed run's valid files, encodes the missing pids and commits both
+    once."""
+    if snapshot in wh.commit_log():
+        return wh.read_manifest(snapshot)
+    if wh.read_manifest(snapshot) is not None:
+        raise held(snapshot)  # found before the jobs, not at the commit
+    layout = {**LAYOUT, **layout}
     adopted = {}
     if resume:
         for pid, f in wh.orphan_files(snapshot).items():
-            v = wh.validate_data_file(f, key_col=key_col)
+            v = wh.validate_data_file(f, key_col=layout["key_col"])
             if v is not None:
                 adopted[pid] = {**v, "file": f, "adopted": True, "encode_s": 0.0}
     partitions, phases = encode_files(
-        spark, df, warehouse_path, snapshot, salt_buckets=salt_buckets,
-        stripe_tokens=stripe_tokens, num_partitions=num_partitions,
-        max_pid_tokens=max_pid_tokens, key_col=key_col, source_col=source_col,
-        weight_col=weight_col, key_blooms=key_blooms, skip=frozenset(adopted),
+        spark, df, wh.path, snapshot, skip=frozenset(adopted), **layout, **files
     )
-    layout = {"key_col": key_col, "source_col": source_col, "weight_col": weight_col}
     return wh.commit(
         snapshot, {**adopted, **partitions},
         {f.name: f.dataType.simpleString() for f in df.schema.fields},
-        extra={"layout": layout, "encode_phases": phases, **(extra or {})},
-        ids=ids,
+        extra={"layout": layout, "encode_phases": phases, **extra}, ids=ids, expect=expect,
     )
 
 

@@ -1,4 +1,4 @@
-"""Iceberg-emulated warehouse: data files + JSON snapshot/manifest commit log.
+"""Iceberg-emulated warehouse: data files, JSON manifests and one commit log.
 
 There is no Iceberg runtime in this sandbox (zero iceberg jars, network
 blocked — SURVEY.md [PROBE-4]), so the Iceberg surface the north rule names
@@ -9,26 +9,32 @@ blocked — SURVEY.md [PROBE-4]), so the Iceberg surface the north rule names
                                              written by executors via
                                              temp-file + atomic rename
     manifests/snap-<snapshot>.json           manifest: per-partition lineage
-                                             + encode metrics (committed
-                                             atomically after the job)
-    manifests/CURRENT                        pointer to the latest snapshot
+                                             + encode metrics, created once
+    manifests/log/<ordinal:020d>.json        the commit log
     exchange/<snapshot>-<id>/map-*.arrow     an encode's per-pid Arrow
-                                             segments (exchange.py); gone
-                                             when the encode ends
+                                             segments (exchange.py)
+
+The log (Delta Lake's, VLDB 2020) is the table's only state: numbered
+entries {snapshot, parent, ref, op}, each created put-if-absent (temp file
++ `os.link`). `op` is `commit` (on ref main or a branch), `rollback`,
+`branch` / `tag` (set_ref) or `drop` (delete_ref). CURRENT, the refs and
+`commit_log()` (whose indexes are the stream offsets) are folds over it
+(`Warehouse.state`). A warehouse without `log/` but with a pre-log
+`COMMITLOG` is refused, not migrated.
 
 Commits (BASELINE.json:6 "resumes from its last committed checkpoint"):
-- a SNAPSHOT, not a partition, is the unit of commit: every write publishes
-  its snapshot with ONE `commit`, which creates the manifest put-if-absent
-  (temp file + `os.link`; an existing name raises SnapshotExists). A
-  published manifest is never rewritten, so a reader sees a snapshot whole
-  or not at all;
+- a SNAPSHOT is the unit of commit: every write publishes it with ONE
+  `commit`, which creates the manifest put-if-absent and then claims the
+  log's next ordinal, a compare-and-swap (Warehouse.commit). The entry is
+  the commit point: a manifest no entry names (its writer died between
+  the two) is not committed, and holds its name until vacuum_orphans
+  removes it;
 - executors write data files idempotently (deterministic content, atomic
   rename), so task retries are safe;
 - a re-run of a committed snapshot is a no-op (encode_table returns the
   manifest); a re-run of one that died before its commit ADOPTS the killed
   run's complete data files after validation (footer check) and encodes
-  only the missing partitions, all in its single commit. This is
-  file-level recovery on top of Iceberg-style snapshots.
+  only the missing partitions, all in its single commit.
 
 At 10^12-sequence scale the manifest stays driver-sized: one entry per logical
 partition (e.g. 20k partitions x ~200 bytes), exactly like an Iceberg manifest
@@ -50,9 +56,41 @@ ID_KEYS = ("schemas", "schema_id")
 # integral key types, Spark's and Arrow's names (parse_key)
 INT_TYPES = ("tinyint", "smallint", "int", "bigint", "int8", "int16", "int32", "int64")
 
+# CURRENT's ref in the commit log
+MAIN = "main"
+
+# Warehouse.commit's `expect` for an append: no conflict check
+APPEND = object()
+
+# each log dir's fold (Warehouse.state) with the bytes of its entry 0 and
+# its entry count: a log whose entry 0 changed (the warehouse was removed
+# and made anew) is folded from the start
+_LOGS: dict[str, tuple[bytes, int, list[str], dict[str, dict]]] = {}
+
 
 class SnapshotExists(ValueError):
-    """A commit of a snapshot name that already has a manifest."""
+    """A commit of a snapshot name that is committed, or whose manifest
+    another writer holds."""
+
+
+class CommitConflict(ValueError):
+    """A write that read the table lost its ref's head to another commit."""
+
+
+def held(snapshot: str) -> SnapshotExists:
+    """The refusal of a commit of a name whose manifest no log entry
+    names."""
+    return SnapshotExists(
+        f"snapshot {snapshot!r} has a manifest no log entry names: another "
+        "writer is committing it, or one died doing so (vacuum_orphans "
+        "removes such a manifest once it is older than min_age_s)")
+
+
+def check_ref_name(name: str) -> None:
+    """Refuse a name no tag or branch may take: empty, `main` (CURRENT's
+    ref), one with a '/', or one that reads as a manifest's."""
+    if "/" in name or name.startswith("snap-") or name in ("", MAIN):
+        raise ValueError(f"bad ref name {name!r}")
 
 
 def render_key(v) -> str:
@@ -83,6 +121,8 @@ class Warehouse:
         self.path = path
         self.data_dir = os.path.join(path, "data")
         self.manifest_dir = os.path.join(path, "manifests")
+        # the commit log: one put-if-absent entry per commit or ref move
+        self.log_dir = os.path.join(self.manifest_dir, "log")
         # an encode's Arrow exchange files (exchange.py), removed when it
         # ends; never listed by a planner or by orphan_files
         self.exchange_dir = os.path.join(path, "exchange")
@@ -96,13 +136,7 @@ class Warehouse:
     def manifest_file(self, snapshot: str) -> str:
         return os.path.join(self.manifest_dir, f"snap-{snapshot}.json")
 
-    # -- snapshot log -----------------------------------------------------
-    def current_snapshot_id(self) -> str | None:
-        cur = os.path.join(self.manifest_dir, "CURRENT")
-        if not os.path.exists(cur):
-            return None
-        return open(cur).read().strip()
-
+    # -- manifests --------------------------------------------------------
     def read_manifest(self, snapshot: str) -> dict | None:
         f = self.manifest_file(snapshot)
         if not os.path.exists(f):
@@ -133,104 +167,134 @@ class Warehouse:
         schemas = parent["schemas"] if parent is not None else []
         return {"schemas": schemas + [ids], "schema_id": len(schemas)}
 
-    def commit_log(self) -> list[str]:
-        """Snapshot names in COMMIT order — the warehouse's tiny append-only
-        sequence (manifests/COMMITLOG, one ~30-byte line per snapshot,
-        appended by commit()). This is what lets a stream reader's offset be
-        a single integer position instead of the full set of consumed names
-        (which grows without bound on a long-tailed warehouse). Self-heals:
-        committed manifests missing from the log (pre-log warehouses, a
-        crash between manifest link and log append) are appended in
-        sorted order on read; expired snapshots KEEP their line (positions
-        already handed out as offsets must stay stable), and readers skip
-        names whose manifest is gone. Duplicate lines (two healers racing)
-        dedupe to first occurrence, so positions are stable once written."""
-        logf = os.path.join(self.manifest_dir, "COMMITLOG")
-        lines: list[str] = []
-        seen: set[str] = set()
-        if os.path.exists(logf):
-            for ln in open(logf).read().splitlines():
-                ln = ln.strip()
-                if ln and ln not in seen:
-                    seen.add(ln)
-                    lines.append(ln)
-        missing = sorted(
-            f[len("snap-"):-len(".json")]
-            for f in os.listdir(self.manifest_dir)
-            if f.startswith("snap-") and f.endswith(".json")
-            and f[len("snap-"):-len(".json")] not in seen
-        )
-        if missing:
-            # heal is best-effort: a read-only consumer (stream reader on
-            # storage mounted RO) must still get the full ordered list even
-            # when it cannot persist the healed lines
+    # -- the commit log ---------------------------------------------------
+    def log_entry(self, ordinal: int) -> str:
+        return os.path.join(self.log_dir, f"{ordinal:020d}.json")
+
+    def state(self) -> tuple[int, list[str], dict[str, dict]]:
+        """The log read and folded: (its entry count, the snapshots of its
+        commit entries in ordinal order, {ref: {'snapshot', 'kind',
+        'updated_at'}} from each ref's newest entry; `main`'s head is
+        CURRENT). Ordinals are dense and entries never change, so a
+        process folds each entry once (_LOGS) and opens only those past
+        the last it read."""
+        try:
+            with open(self.log_entry(0), "rb") as fh:
+                first = fh.read()
+        except FileNotFoundError:
+            if os.path.exists(os.path.join(self.manifest_dir, "COMMITLOG")):
+                raise ValueError(
+                    f"warehouse {self.path!r} was written before the table kept "
+                    "its commit log in manifests/log/; re-encode it") from None
+            return 0, [], {}
+        seen, n, commits, heads = _LOGS.get(self.log_dir, (first, 0, [], {}))
+        n, commits, heads = (n, list(commits), dict(heads)) if seen == first else (0, [], {})
+        while True:
             try:
-                with open(logf, "a") as fh:
-                    for name in missing:
-                        fh.write(name + "\n")
-            except OSError:
-                pass
-            lines.extend(missing)
-        return lines
+                with open(self.log_entry(n)) as fh:
+                    e = json.load(fh)
+            except FileNotFoundError:
+                break
+            n += 1
+            if e["op"] == "drop":
+                heads.pop(e["ref"], None)
+                continue
+            if e["op"] == "commit":
+                commits.append(e["snapshot"])
+            heads[e["ref"]] = {"snapshot": e["snapshot"], "updated_at": e["at"],
+                               "kind": "tag" if e["op"] == "tag" else "branch"}
+        _LOGS[self.log_dir] = (first, n, commits, heads)
+        return n, list(commits), {r: dict(h) for r, h in heads.items()}
 
-    def _log_commit(self, snapshot: str) -> None:
-        # single short O_APPEND write: atomic on POSIX, no torn lines;
-        # commit_log() de-duplicates on read
-        with open(os.path.join(self.manifest_dir, "COMMITLOG"), "a") as fh:
-            fh.write(snapshot + "\n")
+    def commit_log(self) -> list[str]:
+        """Snapshot names in commit order: the commit entries of the log, on
+        any ref. A name's index is its stream offset and `_commit_ordinal`;
+        an expired snapshot keeps its place (its manifest is gone)."""
+        return self.state()[1]
 
-    def commit(self, snapshot: str, partitions: dict[str, dict], schema: dict, extra: dict | None = None, advance_current: bool = True, ids: dict | None = None) -> dict:
-        """Publish `snapshot`: create its manifest put-if-absent, append it
-        to the commit log and advance CURRENT. Raises SnapshotExists (and
-        changes nothing) if the snapshot already has a manifest, so of two
-        writers committing one name exactly one wins, and a published
-        manifest is never rewritten.
+    def current_snapshot_id(self) -> str | None:
+        """CURRENT: the newest snapshot on ref main."""
+        return self.state()[2].get(MAIN, {}).get("snapshot")
 
-        `partitions` maps pid -> {file, n_rows, n_tokens, enc_bytes, metrics…}
-        (the per-partition lineage + throughput rows the rule requires).
-        `advance_current=False` commits without moving the CURRENT pointer —
-        for a branch commit (deletes.py) that must not become the table's
-        default read.
+    def _append(self, entry_of) -> dict:
+        """Create the log's next entry put-if-absent and return it.
+        `entry_of(commits, heads)` validates against the log as read
+        (state's view) and returns the entry's {snapshot, parent, ref, op};
+        a writer that loses the race for the ordinal re-reads the log and
+        calls it again."""
+        while True:
+            n, commits, heads = self.state()
+            entry = {**entry_of(commits, heads), "at": time.time()}
+            os.makedirs(self.log_dir, exist_ok=True)
+            if self._create(self.log_entry(n), entry):
+                return entry
 
-        Field IDs (evolution.py) reach a manifest only here: those of `ids`
-        (a shared-files commit's parent, carry_ids of a rewrite's source),
-        by default CURRENT's carried by name (carry_ids), as suits an
-        append. An entry without a `schema_id` gets the manifest's.
-        """
-        parent = self.current_snapshot_id()
-        if ids is None:
-            ids = self.carry_ids(self.read_manifest(parent) if parent else None, schema)
-        current_ids(ids)  # a parent without IDs fails here
-        sid = ids["schema_id"]
-        now = time.time()
-        manifest = {
-            "snapshot_id": snapshot,
-            "parent": parent,
-            "schema": schema,
-            "created_at": now,
-            "partitions": {
-                pid: {"schema_id": sid, **p} for pid, p in partitions.items()
-            },
-            **{k: ids[k] for k in ID_KEYS},
-            "committed_at": now,
-            **(extra or {}),
-        }
+    def _create(self, path: str, obj) -> bool:
+        """Write `obj` as JSON to `path` put-if-absent: temp file, then
+        os.link, which, unlike os.replace, fails on an existing name.
+        False if `path` exists."""
         fd, tmp = tempfile.mkstemp(dir=self.manifest_dir, suffix=".tmp")
         try:
             with os.fdopen(fd, "w") as fh:
-                json.dump(manifest, fh)
-            # os.link, unlike os.replace, fails on an existing name: create-once
-            os.link(tmp, self.manifest_file(snapshot))
+                json.dump(obj, fh)
+            os.link(tmp, path)
+            return True
         except FileExistsError:
-            raise SnapshotExists(f"snapshot {snapshot!r} is already committed") from None
+            return False
         finally:
             os.remove(tmp)
-        self._log_commit(snapshot)
-        if advance_current:
-            fd, tmp = tempfile.mkstemp(dir=self.manifest_dir, suffix=".tmp")
-            with os.fdopen(fd, "w") as fh:
-                fh.write(snapshot)
-            os.replace(tmp, os.path.join(self.manifest_dir, "CURRENT"))
+
+    def commit(self, snapshot: str, partitions: dict[str, dict], schema: dict, extra: dict | None = None, ids: dict | None = None, ref: str = MAIN, expect=APPEND) -> dict:
+        """Publish `snapshot` on `ref` (main or a branch): create its
+        manifest put-if-absent, then the log entry that commits it. Raises
+        SnapshotExists (and changes nothing) if the name is committed or
+        another writer holds its manifest. `partitions` maps pid -> {file,
+        n_rows, n_tokens, enc_bytes, metrics…}.
+
+        `expect`: the head of `ref` a write that read the table started
+        from (None: no such ref yet); a moved head raises CommitConflict,
+        naming the winner, and removes the manifest. An append (the
+        default) never conflicts. The manifest's `parent` is the head it
+        lands on (a branch's first commit: CURRENT).
+
+        Field IDs (evolution.py) reach a manifest only here: those of `ids`
+        (a shared-files commit's parent, carry_ids of a rewrite's source),
+        by default the parent's carried by name (carry_ids), as suits an
+        append. An entry without a `schema_id` gets the manifest's.
+        """
+        if ref != MAIN:
+            check_ref_name(ref)
+        manifest = None
+
+        def entry_of(commits, heads):
+            nonlocal manifest
+            if manifest is not None:  # lost the ordinal: build on the new head
+                os.remove(self.manifest_file(snapshot))
+                manifest = None
+            if snapshot in commits:
+                raise SnapshotExists(f"snapshot {snapshot!r} is already committed")
+            if heads.get(ref, {}).get("kind") == "tag":
+                raise ValueError(f"ref {ref!r} is a tag - tags are immutable")
+            head = heads.get(ref, {}).get("snapshot")
+            if expect is not APPEND and head != expect:
+                raise CommitConflict(f"{snapshot!r} was not committed: {head!r} became "
+                                     f"the head of {ref!r} after this write read {expect!r}")
+            parent = head if ref in heads else heads.get(MAIN, {}).get("snapshot")
+            m_ids = ids or self.carry_ids(self.read_manifest(parent) if parent else None, schema)
+            current_ids(m_ids)  # a parent without IDs fails here
+            now = time.time()
+            m = {
+                "snapshot_id": snapshot, "parent": parent, "schema": schema, "created_at": now,
+                "partitions": {pid: {"schema_id": m_ids["schema_id"], **p}
+                               for pid, p in partitions.items()},
+                **{k: m_ids[k] for k in ID_KEYS}, "committed_at": now, **(extra or {}),
+            }
+            if not self._create(self.manifest_file(snapshot), m):
+                raise held(snapshot)
+            manifest = m
+            return {"snapshot": snapshot, "parent": parent, "ref": ref, "op": "commit"}
+
+        self._append(entry_of)
         return manifest
 
     # -- recovery ---------------------------------------------------------
@@ -238,16 +302,9 @@ class Warehouse:
         """{pid: data file} of this snapshot on disk — before its commit,
         the survivors of a killed run (rename is atomic, so they are
         complete)."""
-        out = {}
-        if not os.path.isdir(self.data_dir):
-            return out
-        for d in os.listdir(self.data_dir):
-            if not d.startswith("pid="):
-                continue
-            f = self.data_file(d[4:], snapshot)
-            if os.path.exists(f):
-                out[d[4:]] = f
-        return out
+        files = {d[4:]: self.data_file(d[4:], snapshot)
+                 for d in os.listdir(self.data_dir) if d.startswith("pid=")}
+        return {pid: f for pid, f in files.items() if os.path.exists(f)}
 
     def validate_data_file(self, path: str, key_col: str | None = None) -> dict | None:
         """Adopt-check for orphans: parquet readable, stripe rows well-formed.
@@ -257,35 +314,22 @@ class Warehouse:
         partition participates in manifest range pruning like any other;
         when any stripe lacks the stats (e.g. a nullable key) the range is
         left as the "" cannot-exclude sentinel file_matches expects."""
-        try:
-            import pyarrow.parquet as pq
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
-            cols = ["pid", "n_rows", "n_tokens", "enc_bytes"]
-            if key_col:
-                cols.append("footer")
-            t = pq.read_table(path, columns=cols)
+        try:
+            t = pq.read_table(path, columns=["pid", "n_rows", "n_tokens", "enc_bytes"]
+                              + (["footer"] if key_col else []))
             if t.num_rows == 0:
                 return None
-            out = {
-                "n_rows": int(sum(t.column("n_rows").to_pylist())),
-                "n_tokens": int(sum(t.column("n_tokens").to_pylist())),
-                "enc_bytes": int(sum(t.column("enc_bytes").to_pylist())),
-                "stripes": t.num_rows,
-            }
+            out = {k: int(pc.sum(t[k]).as_py()) for k in ("n_rows", "n_tokens", "enc_bytes")}
+            out["stripes"] = t.num_rows
             if key_col:
-                mn = mx = None
-                for fj in t.column("footer").to_pylist():
-                    st = (
-                        json.loads(fj)["columns"].get(key_col, {}).get("stats")
-                        or {}
-                    )
-                    smn, smx = st.get("min"), st.get("max")
-                    if smn is None or smx is None:
-                        mn = mx = None
-                        break
-                    mn = smn if mn is None else min(mn, smn)
-                    mx = smx if mx is None else max(mx, smx)
-                out["min_doc_id"], out["max_doc_id"] = render_key(mn), render_key(mx)
+                st = [json.loads(f)["columns"].get(key_col, {}).get("stats") or {}
+                      for f in t["footer"].to_pylist()]
+                known = all(x.get("min") is not None and x.get("max") is not None for x in st)
+                out["min_doc_id"] = render_key(min(x["min"] for x in st) if known else None)
+                out["max_doc_id"] = render_key(max(x["max"] for x in st) if known else None)
             return out
         except Exception:
             return None
@@ -297,85 +341,76 @@ class Warehouse:
         return [p["file"] for p in m["partitions"].values()]
 
     # -- named refs (Iceberg tags/branches) -------------------------------
-    def refs_dir(self) -> str:
-        return os.path.join(self.manifest_dir, "refs")
-
     def set_ref(self, name: str, snapshot: str, kind: str = "tag") -> dict:
-        """Create or move a named ref — the Iceberg tag/branch analog. A
-        ref is one tiny JSON file (atomic tmp+rename, same discipline as
-        CURRENT): {'snapshot', 'kind', 'updated_at'}. `kind='tag'` is an
-        immutable bookmark (set_ref on an existing tag refuses — delete it
-        first); `kind='branch'` is a movable head (set_ref advances it).
-        Both PROTECT their snapshot from expire_snapshots, which is the
-        operational point of tagging (Iceberg retention semantics).
-        Resolution: decode_table / tokstripe / metadata accept a ref name
-        anywhere a snapshot name goes (resolve_snapshot)."""
+        """Create or move a named ref (Iceberg tag/branch) with one log
+        entry. `kind='tag'` is an immutable bookmark (set_ref on an
+        existing tag refuses — delete it first); `kind='branch'` is a
+        movable head (set_ref or a commit on it advances it). Both PROTECT
+        their snapshot from expire_snapshots (Iceberg retention semantics),
+        and resolve anywhere a snapshot name goes (resolve_snapshot).
+        `main` is CURRENT's ref, moved by rollback."""
         if kind not in ("tag", "branch"):
             raise ValueError(f"ref kind must be tag|branch, got {kind!r}")
-        if "/" in name or name.startswith("snap-") or not name:
-            raise ValueError(f"bad ref name {name!r}")
-        if self.read_manifest(snapshot) is None:
-            raise ValueError(f"cannot ref {snapshot!r}: no manifest")
-        existing = self.get_ref(name)
-        if existing and existing["kind"] == "tag":
-            raise ValueError(
-                f"tag {name!r} already points at {existing['snapshot']!r} "
-                "— tags are immutable, delete_ref first"
-            )
-        if existing and existing["kind"] != kind:
-            raise ValueError(f"ref {name!r} exists with kind {existing['kind']!r}")
-        os.makedirs(self.refs_dir(), exist_ok=True)
-        ref = {"snapshot": snapshot, "kind": kind, "updated_at": time.time()}
-        fd, tmp = tempfile.mkstemp(dir=self.refs_dir(), suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            json.dump(ref, fh)
-        os.replace(tmp, os.path.join(self.refs_dir(), name + ".json"))
-        return ref
+        check_ref_name(name)
+
+        def entry_of(commits, heads):
+            if snapshot not in commits or self.read_manifest(snapshot) is None:
+                raise ValueError(f"cannot ref {snapshot!r}: no manifest")
+            existing = heads.get(name)
+            if existing and existing["kind"] == "tag":
+                raise ValueError(f"tag {name!r} already points at {existing['snapshot']!r} "
+                                 "— tags are immutable, delete_ref first")
+            if existing and existing["kind"] != kind:
+                raise ValueError(f"ref {name!r} exists with kind {existing['kind']!r}")
+            return {"snapshot": snapshot, "parent": heads.get(name, {}).get("snapshot"), "ref": name, "op": kind}
+
+        e = self._append(entry_of)
+        return {"snapshot": snapshot, "kind": kind, "updated_at": e["at"]}
 
     def get_ref(self, name: str) -> dict | None:
-        f = os.path.join(self.refs_dir(), name + ".json")
-        if not os.path.exists(f):
-            return None
-        return json.load(open(f))
+        return self.refs().get(name)
 
     def refs(self) -> dict[str, dict]:
-        d = self.refs_dir()
-        if not os.path.isdir(d):
-            return {}
-        return {
-            f[:-len(".json")]: json.load(open(os.path.join(d, f)))
-            for f in sorted(os.listdir(d))
-            if f.endswith(".json")
-        }
+        """{name: {'snapshot', 'kind', 'updated_at'}} of every tag and
+        branch."""
+        return {n: r for n, r in sorted(self.state()[2].items()) if n != MAIN}
 
     def delete_ref(self, name: str) -> None:
-        try:
-            os.remove(os.path.join(self.refs_dir(), name + ".json"))
-        except OSError:
-            raise ValueError(f"no ref {name!r}") from None
+        def entry_of(commits, heads):
+            if name == MAIN or name not in heads:
+                raise ValueError(f"no ref {name!r}")
+            return {"snapshot": None, "parent": heads.get(name, {}).get("snapshot"), "ref": name, "op": "drop"}
+
+        self._append(entry_of)
 
     def resolve_snapshot(self, name: str | None) -> str | None:
         """A snapshot name, a ref name, or None (CURRENT) -> snapshot id.
         Committed snapshot names win over a same-named ref (refs cannot
-        shadow data)."""
+        shadow data). A manifest no log entry names is not committed:
+        resolving its name raises."""
+        _, commits, heads = self.state()
         if name is None:
-            return self.current_snapshot_id()
-        if self.read_manifest(name) is not None:
+            return heads.get(MAIN, {}).get("snapshot")
+        if name in commits:
             return name
-        ref = self.get_ref(name)
-        return ref["snapshot"] if ref else name
+        if name != MAIN and name in heads:
+            return heads[name]["snapshot"]
+        if os.path.exists(self.manifest_file(name)):
+            raise ValueError(f"snapshot {name!r} is not committed")
+        return name
 
     def rollback(self, snapshot: str) -> None:
-        """Move CURRENT back to an earlier committed snapshot (Iceberg
-        `rollback_to_snapshot`): pure pointer move, atomic tmp+rename, no
-        file is touched — the rolled-past snapshots stay readable by name
-        (and stay in the commit log; their ordinals are stream offsets)
-        until expire_snapshots collects them. The natural undo for a
-        merge-on-read delete: roll back to the delete's parent and every
-        row is live again."""
-        if self.read_manifest(snapshot) is None:
-            raise ValueError(f"cannot roll back to {snapshot!r}: no manifest")
-        fd, tmp = tempfile.mkstemp(dir=self.manifest_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as fh:
-            fh.write(snapshot)
-        os.replace(tmp, os.path.join(self.manifest_dir, "CURRENT"))
+        """Move CURRENT to a committed snapshot (Iceberg
+        `rollback_to_snapshot`) with one log entry on main; no file is
+        touched, and rolled-past snapshots stay readable by name (and keep
+        their commit-log ordinals) until expire_snapshots collects them.
+        Undoes a merge-on-read delete (roll back to its parent), and
+        publishes a branch (roll forward to its head)."""
+
+        def entry_of(commits, heads):
+            if snapshot not in commits or self.read_manifest(snapshot) is None:
+                raise ValueError(f"cannot roll back to {snapshot!r}: no manifest")
+            return {"snapshot": snapshot, "parent": heads.get(MAIN, {}).get("snapshot"), "ref": MAIN, "op": "rollback"}
+
+        self._append(entry_of)
+

@@ -453,13 +453,12 @@ def test_plan_changes_reads_each_commit_record(tmp_path, monkeypatch):
     wh.commit("c0", base, schema)                                        # 0
     wh.commit("d1", base, schema, extra={                                # 1
         "operation": "delete", "delete_parent": "c0", "delete_files": [del1]})
-    wh.commit("u2-stage", {"s0": part("s", "p", "q")}, schema,           # 2
-              extra={"operation": "stage"}, advance_current=False)
+    wh.commit("side", {"s0": part("s", "p", "q")}, schema,               # 2
+              extra={"operation": "evolve"}, ref="side")
     upserted = {**base, "s0@u2": part("s", "p", "q", seq=2)}
     wh.commit("u2", upserted, schema, extra={                            # 3
         "operation": "upsert", "upsert_parent": "d1", "seq": 2,
         "delete_files": [del1, del2]})
-    os.remove(wh.manifest_file("u2-stage"))  # as older upserts did
     wh.commit("ev", upserted, {**schema, "lang": "string"}, extra={      # 4
         "operation": "evolve",
         "delete_files": [del1, del2]})

@@ -101,8 +101,7 @@ def test_every_write_commits_its_snapshot_once(spark, spy, monkeypatch, tmp_path
     assert [s for s, _ in spy] == ["st-e000000"]
     assert wh.read_manifest("st-e000000") == ep
     assert not any(os.path.exists(p["file"]) for p in replay[0].partitions.values())
-    log = open(os.path.join(wh.manifest_dir, "COMMITLOG")).read().split()
-    assert log.count("st-e000000") == 1
+    assert wh.commit_log().count("st-e000000") == 1
 
     ids = tbl.column("doc_id").to_pylist()
     _once(spy, wh, "del", lambda: delete_where(

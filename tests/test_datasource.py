@@ -1,8 +1,9 @@
 """tokstripe Python Data Source: the warehouse as a first-class Spark
 format. Read-path contract: results identical to decode_table / the raw
 table for every filter shape, with PLANNING-TIME pruning visible in the
-planned files and the task count. Write-path contract: atomic manifest commit, append-refusal,
-overwrite, and exactly-once streaming across checkpoint replay."""
+planned files and the task count. Write-path contract: atomic manifest commit, refusal of a committed
+name in either save mode, and exactly-once streaming across checkpoint
+replay."""
 
 import os
 import sys
@@ -126,11 +127,22 @@ def test_batch_write_roundtrip_and_modes(spark, tmp_path):
         df.write.format("tokstripe").mode("append").option("path", wh).option(
             "snapshot", "w1"
         ).save()
-    # overwrite replaces
+    # overwrite onto a committed snapshot refuses too, before any task
+    # runs: w1's manifest and data files are byte-identical afterwards
+    files = [Warehouse(wh).manifest_file("w1")]
+    files += [p["file"] for p in man["partitions"].values()]
+    before = {f: open(f, "rb").read() for f in files}
+    with pytest.raises(Exception, match="already committed"):
+        df.limit(100).write.format("tokstripe").mode("overwrite").option(
+            "path", wh
+        ).option("snapshot", "w1").save()
+    assert {f: open(f, "rb").read() for f in files} == before
+    assert decode_table(spark, wh, "w1").count() == 800
+    # an overwrite to a fresh name commits as before
     df.limit(100).write.format("tokstripe").mode("overwrite").option(
         "path", wh
-    ).option("snapshot", "w1").save()
-    assert decode_table(spark, wh, "w1").count() == 100
+    ).option("snapshot", "w2").save()
+    assert decode_table(spark, wh, "w2").count() == 100
 
 
 @pytest.mark.parametrize("source_col", ["source", ""])
@@ -255,36 +267,6 @@ def test_stream_reader_tails_snapshots(spark, tmp_path):
     drain()
     got2 = spark.read.parquet(out)
     assert verify_roundtrip(df, got2)["ok"]  # union, no duplicates
-
-
-def test_stream_reader_legacy_offset_replay(tmp_path):
-    """Pre-log checkpoints carry name-lists ("seen") as offsets. A replayed
-    legacy batch must re-deliver EXACTLY its original names — not everything
-    committed since — or the following pos-based batch re-delivers the
-    overhang as duplicates. Pure offset arithmetic: no Spark needed."""
-    from pyspark.sql.types import StructType
-
-    from orc_spark.datasource import TokstripeStreamReader
-    from orc_spark.warehouse import Warehouse
-
-    wh = Warehouse(str(tmp_path / "legacy_wh"))
-    for s in ("s1", "s2", "s3"):
-        wh.commit(s, {"p0": {"file": f"/x/{s}.parquet", "n_rows": 1}},
-                  {"doc_id": "string"})
-    rdr = TokstripeStreamReader({"path": wh.path}, StructType([]))
-
-    def files(parts):
-        return sorted(t.file for p in parts for t in p.files)
-
-    # replayed legacy batch: exactly end-seen minus start-seen, even though
-    # s3 committed after the legacy end offset was recorded
-    assert files(rdr.partitions({"seen": ["s1"]}, {"seen": ["s1", "s2"]})) \
-        == ["/x/s2.parquet"]
-    # migration batch: legacy start, pos end -> only the overhang, once
-    assert files(rdr.partitions({"seen": ["s1", "s2"]}, rdr.latestOffset())) \
-        == ["/x/s3.parquet"]
-    # steady state: pos/pos
-    assert files(rdr.partitions({"pos": 2}, {"pos": 3})) == ["/x/s3.parquet"]
 
 
 def test_stream_writer_exactly_once(spark, tmp_path):

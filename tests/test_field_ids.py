@@ -101,7 +101,7 @@ def test_a_rewrite_carries_its_source_ids_not_currents(wh):
     evolve_schema(wh.path, "c0", dest="ev", drop=["n_tok"], add={"n_tok": "int"})
     ids = wh.carry_ids(src, SCHEMA)
     assert ids == {"schemas": src["schemas"], "schema_id": 0}
-    m = wh.commit("mat", {"p0": _part("m")}, SCHEMA, ids=ids, advance_current=False)
+    m = wh.commit("mat", {"p0": _part("m")}, SCHEMA, ids=ids, ref="side")
     assert current_ids(m)["n_tok"] == 3 and m["partitions"]["p0"]["schema_id"] == 0
     # the default (CURRENT's, by name) gives the re-added column instead
     assert current_ids(wh.commit("app", {}, SCHEMA))["n_tok"] == 4

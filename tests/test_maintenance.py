@@ -281,3 +281,31 @@ def test_compaction_and_expiry_under_concurrent_stream_reader(spark, tmp_path):
     assert got2.count() == 900
     assert got2.exceptAll(want012).count() == 0
     assert want012.exceptAll(got2).count() == 0
+
+
+def test_a_killed_reencode_is_resumed_by_its_rerun(spark, tmp_path, monkeypatch):
+    """A rewrite resumes like encode_table: a run that dies before its
+    commit leaves its data files, and the re-run adopts every one of them
+    and commits once."""
+    wh = str(tmp_path / "wh")
+    for e in range(2):
+        encode_table(spark, _epoch_df(spark, e, n=200), wh, snapshot=f"e{e}",
+                     salt_buckets=2, stripe_tokens=2_000)
+
+    def killed(self, *a, **kw):
+        raise RuntimeError("driver killed before its commit")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(Warehouse, "commit", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            compact_snapshots(spark, wh, ["e0", "e1"], "re", mode="reencode", salt_buckets=2)
+    w = Warehouse(wh)
+    left = w.orphan_files("re")
+    assert left and "re" not in w.commit_log()
+    m = compact_snapshots(spark, wh, ["e0", "e1"], "re", mode="reencode", salt_buckets=2)
+    assert {p: d["file"] for p, d in m["partitions"].items()} == left
+    assert all(d["adopted"] for d in m["partitions"].values())
+    assert m["compacted_from"] == ["e0", "e1"] and w.commit_log().count("re") == 1
+    got = decode_table(spark, wh, "re")
+    want = decode_table(spark, wh, "e0").unionByName(decode_table(spark, wh, "e1"))
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0

@@ -140,13 +140,14 @@ def test_rebalance_resume_rederives_same_pids(giant_doc_df, tmp_path_factory):
     )
     m1 = encode_table(spark, giant_doc_df, wh, **kwargs)
     # simulate a killed run that wrote only a third of the partitions'
-    # files and died before its commit
+    # files and died before its commit: no manifest, no log entry
     w = Warehouse(wh)
     pids = sorted(m1["partitions"])
     kept = set(pids[: len(pids) // 3])
     import os
+    import shutil
 
-    os.remove(w.manifest_file("rb"))
+    shutil.rmtree(w.manifest_dir)
     for p in pids[len(pids) // 3 :]:
         os.remove(m1["partitions"][p]["file"])
 
