@@ -46,6 +46,24 @@ def _rounded(v):
     return round(v, 4) if isinstance(v, float) else v
 
 
+def disk_bytes(wh: str, manifest: dict) -> dict:
+    """Bytes on disk of one encoded snapshot: its data files, their bloom
+    sidecars, and the manifests plus commit log of the warehouse."""
+    files = [p["file"] for p in manifest["partitions"].values()]
+    meta = 0
+    for root, _, names in os.walk(os.path.join(wh, "manifests")):
+        meta += sum(os.path.getsize(os.path.join(root, n)) for n in names)
+    return {
+        "data_files": sum(os.path.getsize(f) for f in files),
+        "sidecars": sum(
+            os.path.getsize(f + ".bloom.json")
+            for f in files
+            if os.path.exists(f + ".bloom.json")
+        ),
+        "manifest_log": meta,
+    }
+
+
 def main() -> None:
     import pyarrow.parquet as pq
 
@@ -94,6 +112,7 @@ def main() -> None:
             spark, df, wh, snapshot="b", salt_buckets=salt, stripe_tokens=4_000_000
         ),
     )
+    disk = disk_bytes(wh, manifest)
     timed("decode", lambda: decode_table(spark, wh, snapshot="b").count())
     res = timed("verify", lambda: verify_roundtrip(df, decode_table(spark, wh, snapshot="b")))
     assert res["ok"], "bit-equality verify FAILED"
@@ -131,6 +150,12 @@ def main() -> None:
                 "n_tokens": int(n_tokens),
                 "enc_bytes": int(enc_bytes),
                 "bytes_per_token": round(enc_bytes / int(n_tokens), 4),
+                # the same snapshot on disk: stripe files, bloom sidecars,
+                # manifests + commit log (enc_bytes counts blobs only)
+                "disk_bytes": disk,
+                "disk_bytes_per_token": {
+                    k: round(v / int(n_tokens), 4) for k, v in disk.items()
+                },
                 "encode_tokens_per_s": round(int(n_tokens) / queries["encode"], 1),
                 "decode_tokens_per_s": round(int(n_tokens) / queries["decode"], 1),
                 # the timed encode's layers: map, plan and reduce walls,

@@ -41,12 +41,8 @@ def bit_length(values: np.ndarray) -> np.ndarray:
 
     Exact for the full 64-bit range (no float log2 edge cases).
     """
-    if values.dtype in (np.uint32, np.uint16, np.uint8):
-        # always < 2^53: frexp directly, no uint64 widening copy
-        _, e = np.frexp(values.astype(np.float64))
-        return e.astype(np.int64)
-    v = values.astype(np.uint64, copy=False)
-    if v.size and int(v.max()) < (1 << 53):
+    v = values if values.dtype.itemsize < 8 else values.astype(np.uint64, copy=False)
+    if v.size > 1024 and (v.dtype.itemsize < 8 or int(v.max()) < (1 << 53)):
         # float64 represents integers < 2^53 exactly; frexp's exponent IS the
         # bit length (frexp(8) -> (0.5, 4); frexp(0) -> (0, 0)). ~10x faster
         # than searchsorted on large arrays.
@@ -54,8 +50,9 @@ def bit_length(values: np.ndarray) -> np.ndarray:
         return e.astype(np.int64)
     # searchsorted(bins, x, 'right') == number of bins <= x, which IS
     # bit_length: x=0 -> 0, x=1 -> 1, x=184 -> 8, x >= 2^63 -> 64. Exact over
-    # the full uint64 range (no float log2 edge cases).
-    return np.searchsorted(_POW2, v, side="right").astype(np.int64)
+    # the full uint64 range, and one call: the cheap form for the per-block
+    # arrays of the encoder, where numpy call overhead is the cost.
+    return np.searchsorted(_POW2, v.astype(np.uint64, copy=False), side="right")
 
 
 def bit_length_u8(values: np.ndarray) -> np.ndarray:
@@ -100,87 +97,76 @@ def pack(values: np.ndarray, width: int, mask_values: bool = True) -> bytes:
     from the values' own max bit length (every DIRECT/DELTA/FOR path) pass
     False; only PATCHED_BASE low-bits packing relies on the mask to drop the
     patched high bits."""
-    n = len(values)
-    if n == 0 or width == 0:
+    if len(values) == 0 or width == 0:
         return b""
-    if values.dtype == np.uint32 and width <= 32:
-        # native narrow path: no uint64 widening at all
-        v32 = values
-        if width < 32 and mask_values:
-            v32 = v32 & np.uint32((1 << width) - 1)
-        if (n * width) % 32 == 0 and n >= 4096:
-            return _pack_aligned_lanes(v32, width, 32)
-        v = v32.astype(np.uint64)
-    else:
-        v = values.astype(np.uint64, copy=False)
-        if width < 64 and mask_values:
-            v = v & ((np.uint64(1) << np.uint64(width)) - np.uint64(1))
-    if width <= 32 and (n * width) % 32 == 0 and n >= 4096:
-        # 32-bit lanes: identical MSB-first byte stream (big-endian word
-        # chunking is chunk-size-invariant), half the memory traffic of the
-        # 64-bit path — token streams pack at ~16-bit widths, making this
-        # the hottest kernel in the encode pipeline
-        return _pack_aligned_lanes(v.astype(np.uint32), width, 32)
-    if (n * width) % 64 == 0 and n >= 4096:
-        return _pack_aligned(v, width)
+    return _packed(values, width, mask_values).tobytes()
+
+
+def _packed(values: np.ndarray, width: int, mask_values: bool) -> np.ndarray:
+    """pack()'s bytes as a flat uint8 array (len(values) >= 1, width >= 1)."""
+    n = len(values)
+    if n >= 64:
+        pad = -n % 64
+        if pad:  # zero values past the end only add the zero tail bits
+            values = np.concatenate([values, np.zeros(pad, dtype=values.dtype)])
+        return _pack_words(values, width, mask_values)[: packed_size(n, width)]
+    v = values.astype(np.uint64, copy=False)
+    if width < 64 and mask_values:
+        v = v & ((np.uint64(1) << np.uint64(width)) - np.uint64(1))
     dt, nbytes = _container(width)
     b = v.astype(dt).view(np.uint8).reshape(n, nbytes)
     bits = np.unpackbits(b, axis=1)[:, nbytes * 8 - width :]
-    return np.packbits(bits.ravel()).tobytes()
+    return np.packbits(bits.ravel())
 
 
-def _pack_aligned_lanes(v: np.ndarray, w: int, word: int) -> bytes:
-    """Shift-or lane packing into `word`-bit big-endian words (word in
-    {32, 64}); requires len*w % word == 0 and w <= word.
-
-    The output is np.empty, NOT np.zeros: every word group has a known first
-    writer lane (tracked in `written`), which stores with `=` instead of
-    `|=` — dropping the whole-buffer zeroing pass. At ~2 B/token of packed
-    output that pass is pure DRAM traffic, the binding resource at high
-    core counts (the zeroing showed up in the pinned 4-core profile)."""
-    import math
-
-    dt = np.uint32 if word == 32 else np.uint64
-    n = len(v)
-    P = math.lcm(word, w) // w
-    L = (P * w) // word
-    nwords = (n * w) // word
-    out = np.empty(nwords, dtype=dt)
-    written = [False] * L  # per word-group: has its first lane stored yet?
-    for r in range(P):
-        sel = v[r::P]
-        if not len(sel):
-            break
-        bo = r * w
-        wi = bo // word
-        sh = word - w - (bo % word)
-        dst = out[wi::L][: len(sel)]
-        if sh >= 0:
-            if written[wi % L]:
-                dst |= sel << dt(sh)
-            else:
-                np.left_shift(sel, dt(sh), out=dst)
-                written[wi % L] = True
+def _pack_words(v: np.ndarray, w: int, mask_values: bool) -> np.ndarray:
+    """Packed big-endian bytes (flat uint8) of len(v) % 64 == 0 values, in a
+    few wide word passes (FastLanes' idea under ORC's fixed sequential bit
+    order): adjacent values merge pairwise into 2w-, 4w-, ... bit units
+    while a unit still fits a 64-bit word (one shift-or over half as many
+    elements per level, in uint32 while the unit fits 32 bits, in place on
+    fresh temporaries). A unit of whole bytes is then cut from its
+    left-aligned word; two units that make one word plus whole bytes become
+    a (word, left-aligned tail word) pair cut to size; any other unit width
+    lane-packs into words (_pack_aligned)."""
+    if v.dtype != np.uint32 or w > 32:
+        v = v.astype(np.uint64, copy=False)
+    u, U = v, w
+    m = u.dtype.type((1 << w) - 1) if mask_values and w < 64 else None
+    if m is not None and 2 * w > 64:
+        u = u & m
+    while 2 * U <= 64:
+        hi, lo = u[0::2], u[1::2]
+        if m is not None:  # the mask rides on the first merge
+            hi, lo, m = hi & m, lo & m, None
+            if 2 * U > 32 and hi.dtype != np.uint64:
+                hi = hi.astype(np.uint64)
         else:
-            # lane spans two word groups: low part into wi, high into wi+1.
-            # wi is always already written here (some earlier lane started
-            # it — a lane only spills after the word has prior content), but
-            # wi+1 may be fresh.
-            dst |= sel >> dt(-sh)
-            dst2 = out[wi + 1 :: L][: len(sel)]
-            if written[(wi + 1) % L]:
-                dst2 |= sel << dt(word + sh)
-            else:
-                np.left_shift(sel, dt(word + sh), out=dst2)
-                written[(wi + 1) % L] = True
-    # no ragged-tail case: n*w % word == 0 forces n % P == 0 (P is
-    # word/gcd(word,w)), so every lane has exactly n/P rows and every output
-    # word was stored by its first-writer lane above
-    return out.astype(">u4" if word == 32 else ">u8").tobytes()
+            hi = hi.astype(np.uint64) if 2 * U > 32 and hi.dtype != np.uint64 else hi.copy()
+        hi <<= hi.dtype.type(U)
+        hi |= lo
+        u, U = hi, 2 * U
+    u64 = np.uint64
+    if U % 8 == 0:
+        if U < 64:
+            u = u << u64(64 - U)
+        words = u.reshape(-1, 1)
+    elif U % 4 == 0:
+        a, b = u[0::2], u[1::2]
+        words = np.empty((len(a), 2), dtype=u64)
+        np.left_shift(a, u64(64 - U), out=words[:, 0])
+        words[:, 0] |= b >> u64(2 * U - 64)
+        np.left_shift(b, u64(128 - 2 * U), out=words[:, 1])
+    else:
+        return _pack_aligned(u, U).astype(">u8").view(np.uint8)
+    nbytes = words.shape[1] * U // 8  # bytes per row of words
+    b8 = words.astype(">u8").view(np.uint8).reshape(len(words), -1)
+    return b8.reshape(-1) if nbytes == b8.shape[1] else b8[:, :nbytes].reshape(-1)
 
 
-def _pack_aligned(v: np.ndarray, w: int) -> bytes:
-    """Shift-or lane packing, no bool expansion. Requires len*w % 64 == 0.
+def _pack_aligned(v: np.ndarray, w: int) -> np.ndarray:
+    """Shift-or lane packing into native uint64 words, no bool expansion.
+    Requires len*w % 64 == 0.
 
     Values are striped into P = lcm(64,w)/w lanes whose bit offsets repeat
     every L = P*w/64 output words; each lane is 1-2 vectorized shift/or ops.
@@ -192,9 +178,10 @@ def _pack_aligned(v: np.ndarray, w: int) -> bytes:
     P = math.lcm(64, w) // w
     L = (P * w) // 64
     nwords = (n * w) // 64
-    # np.empty + first-writer stores (see _pack_aligned_lanes): n % P == 0 is
-    # implied by the alignment precondition, so every word group has a known
-    # first lane and the zeroing pass is unnecessary
+    # np.empty + first-writer stores: every word group has a known first
+    # writer lane, which stores with `=` instead of `|=`, so there is no
+    # whole-buffer zeroing pass (n % P == 0 is implied by the alignment
+    # precondition)
     out = np.empty(nwords, dtype=np.uint64)
     written = [False] * L
     for r in range(P):
@@ -219,7 +206,7 @@ def _pack_aligned(v: np.ndarray, w: int) -> bytes:
             else:
                 np.left_shift(sel, np.uint64(64 + sh), out=dst2)
                 written[wi + 1] = True
-    return out.astype(">u8").tobytes()
+    return out
 
 
 def packed_size(n: int, width: int) -> int:
@@ -231,7 +218,7 @@ def unpack(buf, n: int, width: int) -> np.ndarray:
     if n == 0 or width == 0:
         return np.zeros(n, dtype=np.uint64)
     if width <= 32 and (n * width) % 32 == 0 and n >= 64:
-        # lane shift-mask extraction: inverse of _pack_aligned_lanes. Each of
+        # lane shift-mask extraction: inverse of a 32-bit-word lane packing. Each of
         # the P = lcm(32,w)/w lanes costs ~2 numpy calls on n/P elements, so
         # it only beats the unpackbits path when lanes are few (w divides a
         # word cleanly) or n is large enough to amortize the call overhead.
@@ -299,57 +286,52 @@ def varpack_rows(
     """Bulk-pack variable-width rows in one vectorized pass.
 
     Row i consists of row_lengths[i] consecutive entries of `values`, each
-    packed at widths[i] bits; every row is independently byte-aligned (so a
-    row's slice equals pack(row_values, widths[i])). Returns
-    (blob, row_byte_offsets, row_byte_lengths). Replaces per-row pack() calls
-    whose numpy dispatch overhead dominates for small rows.
+    packed at widths[i] bits (masked to them); every row starts on a 64-bit
+    word of the blob, so a row's slice equals pack(row_values, widths[i]).
+    Returns (blob, row_byte_offsets, row_byte_lengths). Word-level: an
+    entry (<= 64 bits) lands in at most two words, so each entry is two
+    shifts and two adds into the word array (its fields are disjoint, so
+    add is or) — no per-bit expansion.
     """
-    nrows = len(row_lengths)
-    E = len(values)
     row_lengths = row_lengths.astype(np.int64, copy=False)
     widths = widths.astype(np.int64, copy=False)
-    row_bytes = (row_lengths * widths + 7) // 8
-    row_off = np.zeros(nrows, dtype=np.int64)
-    if nrows:
-        row_off[1:] = np.cumsum(row_bytes)[:-1]
-    total_bytes = int(row_off[-1] + row_bytes[-1]) if nrows else 0
-    if E == 0 or total_bytes == 0:
+    bits = row_lengths * widths
+    row_words = (bits + 63) // 64
+    word_off = np.cumsum(row_words) - row_words
+    row_off, row_bytes = word_off * 8, (bits + 7) // 8
+    E = len(values)
+    if E == 0 or not row_words.sum():
         return b"", row_off, row_bytes
-    w_per = np.repeat(widths, row_lengths)  # width of each entry
-    # exclusive cumsum of entry widths, reset at row starts
-    cum = np.cumsum(w_per) - w_per
-    starts = np.zeros(nrows, dtype=np.int64)
-    starts[1:] = np.cumsum(row_lengths)[:-1]
-    nonempty = row_lengths > 0
-    row_cum0 = np.zeros(nrows, dtype=np.int64)
-    row_cum0[nonempty] = cum[starts[nonempty]]
-    within = cum - np.repeat(row_cum0, row_lengths)
-    entry_bit_off = np.repeat(row_off * 8, row_lengths) + within
-    total_w = int(w_per.sum())
-    intra = np.arange(total_w, dtype=np.int64) - np.repeat(cum, w_per)
-    dst = np.repeat(entry_bit_off, w_per) + intra
-    src_row = np.repeat(np.arange(E, dtype=np.int64), w_per)
-    src_col = np.repeat(64 - w_per, w_per) + intra
-    bits64 = np.unpackbits(
-        values.astype(">u8").view(np.uint8).reshape(E, 8), axis=1
+    w = np.repeat(widths, row_lengths)
+    first = np.cumsum(row_lengths) - row_lengths
+    bit = (np.arange(E, dtype=np.int64) - np.repeat(first, row_lengths)) * w
+    q = np.repeat(word_off, row_lengths) + (bit >> 6)
+    s = 64 - w - (bit & 63)  # left shift into word q; < 0 spills into q + 1
+    u64 = np.uint64
+    v = values.astype(u64, copy=False) & np.where(
+        w < 64, (u64(1) << (w & 63).astype(u64)) - u64(1), u64(0xFFFFFFFFFFFFFFFF)
     )
-    flat = np.zeros(total_bytes * 8, dtype=np.uint8)
-    flat[dst] = bits64[src_row, src_col]
-    return np.packbits(flat).tobytes(), row_off, row_bytes
+    words = np.zeros(int(row_words.sum()), dtype=u64)
+    np.add.at(words, q, (v >> np.maximum(-s, 0).astype(u64)) << np.maximum(s, 0).astype(u64))
+    spill = np.flatnonzero(s < 0)
+    if len(spill):
+        np.add.at(words, q[spill] + 1, v[spill] << (64 + s[spill]).astype(u64))
+    return words.astype(">u8").tobytes(), row_off, row_bytes
 
 
-def pack_many(blocks: np.ndarray, width: int, mask_values: bool = True) -> list[bytes]:
+def pack_many(blocks: np.ndarray, width: int, mask_values: bool = True) -> list[memoryview]:
     """Pack each row of a 2-D array at `width` bits in ONE vectorized call.
 
     All rows share the same length L, so each packed chunk is exactly
     packed_size(L, width) bytes when L*width % 8 == 0 (true for L=512 and any
-    closed width); caller must guarantee that. Returns one bytes per row.
+    closed width); caller must guarantee that. Returns one view per row of
+    the packed buffer.
     """
     nb, L = blocks.shape
     if nb == 0:
         return []
     per = L * width
     assert per % 8 == 0, "pack_many requires byte-aligned rows"
-    blob = pack(blocks.ravel(), width, mask_values=mask_values)
+    blob = memoryview(_packed(blocks.reshape(-1), width, mask_values))
     step = per // 8
     return [blob[i * step : (i + 1) * step] for i in range(nb)]

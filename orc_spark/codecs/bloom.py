@@ -12,9 +12,11 @@ again:
     sized to the stripe's row count (m = next power of two >= 10 bits/key,
     k = 6 -> ~1% false positives). Tested before any stream of the stripe
     blob is decompressed.
-  - FILE level: each data file gets one fixed-size bloom (the OR of its
-    stripes' inserts at file-level m) in a puffin-style SIDECAR
+  - FILE level: each data file gets one bloom in a puffin-style SIDECAR
     (`<data_file>.bloom.json`, tmp+atomic-rename like the data file). The
+    writer ORs its stripes' inserts into a fixed FILE_BLOOM_BITS filter
+    (O(1) memory per writer) and folds it at close to the file's own
+    stripe_bloom_bits(n), capped at FILE_BLOOM_BITS (`fold`). The
     manifest stays O(200 bytes)/partition; the planner reads sidecars only
     for files that survive range pruning (one small GET per file at
     object-store scale — the same planning read Iceberg does for puffin
@@ -52,7 +54,9 @@ import pyarrow as pa
 
 BLOOM_K = 6
 STRIPE_BITS_PER_KEY = 10
-FILE_BLOOM_BITS = 1 << 20  # 1 Mbit = 128 KiB: ~100k keys/file at ~1% fpp
+# a file bloom's size while its writer accumulates, and the cap of the
+# folded sidecar: 1 Mbit = 128 KiB, ~100k keys/file at ~1% fpp
+FILE_BLOOM_BITS = 1 << 20
 
 _GAMMA = 0x9E3779B97F4A7C15
 _C1 = 0xBF58476D1CE4E5B9
@@ -197,6 +201,21 @@ def stripe_bloom_bits(n_keys: int) -> int:
     while m < STRIPE_BITS_PER_KEY * max(1, n_keys):
         m <<= 1
     return m
+
+
+def file_bloom_bits(n_keys: int) -> int:
+    """Sidecar m of a file of n keys: its stripe_bloom_bits, capped."""
+    return min(stripe_bloom_bits(n_keys), FILE_BLOOM_BITS)
+
+
+def fold(bits: np.ndarray, m_bits: int) -> np.ndarray:
+    """The same filter at a smaller power-of-two m: probe indexes are
+    (h1 + i*h2) mod m, and m divides len(bits)*8, so OR-ing the halves
+    until m bits remain is exactly the bloom built at m."""
+    while len(bits) * 8 > m_bits:
+        half = len(bits) // 2
+        bits = bits[:half] | bits[half:]
+    return bits
 
 
 def bloom_insert(bits: np.ndarray, h1: np.ndarray, h2: np.ndarray) -> None:

@@ -78,8 +78,35 @@ def decode_for(buf, n: int, signed: bool) -> np.ndarray:
     return out
 
 
+def encoded_len(arr: np.ndarray, codec: str, signed: bool) -> int:
+    """len(encode_int_stream(arr, codec, signed)) for 'bitpack' and 'for'
+    (an unsigned stream is non-negative), in closed form from extremes
+    alone: bitpack is 1 + ceil(n*w/8) and each FOR block of L values is
+    1 + uvarint_len(zigzag(base)) + ceil(L*w/8)."""
+    n = len(arr)
+    if n == 0:
+        return 0
+    a = np.ascontiguousarray(arr, dtype=np.int64)
+    if codec == "bitpack":
+        lo, hi = int(a.min()), int(a.max())
+        top = max(zigzag_scalar(lo), zigzag_scalar(hi)) if signed else hi
+        return 1 + packed_size(n, closest_width(max(1, top.bit_length())))
+    if codec != "for":
+        raise ValueError(f"no closed-form length for codec {codec!r}")
+    starts = np.arange(0, n, FOR_BLOCK)
+    total = 0
+    for s, lo, hi in zip(
+        starts.tolist(),
+        np.minimum.reduceat(a, starts).tolist(),
+        np.maximum.reduceat(a, starts).tolist(),
+    ):
+        w = closest_width(max(1, (hi - lo).bit_length()))
+        total += 1 + max(1, -(-zigzag_scalar(lo).bit_length() // 7))
+        total += packed_size(min(FOR_BLOCK, n - s), w)
+    return total
+
+
 _ENCODERS = {
-    "rle2": encode_rlev2,
     "for": encode_for,
     "bitpack": encode_bitpack,
 }
@@ -90,7 +117,13 @@ _DECODERS = {
 }
 
 
-def encode_int_stream(arr, codec: str, signed: bool) -> bytes:
+def encode_int_stream(
+    arr, codec: str, signed: bool, bounds: tuple[int, int] | None = None
+) -> bytes:
+    """`bounds` = (min, max) of `arr` when known; rle2 uses them for its
+    narrow check instead of scanning the stream again."""
+    if codec == "rle2":
+        return encode_rlev2(arr, signed, bounds)
     return _ENCODERS[codec](arr, signed)
 
 

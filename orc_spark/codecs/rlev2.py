@@ -14,6 +14,16 @@ its sub-encoding decision per 512-value block with all statistics computed
 vectorized across blocks; only per-RUN header assembly touches Python ints
 (~n/512 iterations, never per value).
 
+Narrow fast path: an unsigned stream whose values fit 31 bits (token ids,
+lengths) runs the whole pipeline in uint32. Its token blocks are almost all
+PATCHED_BASE, so that path is the hot one, and it is built from a few wide
+passes: one per-block histogram of the values' bit lengths (a bincount) gives
+each block's patch width, patch count and max width; patch positions come
+from one flat nonzero; low bits pack by merging adjacent values into wide
+words (bitpack._pack_words); patch lists pack word-level (varpack_rows); and
+the blocks' headers, low bits and patch lists are sliced out of those few
+buffers into one flat join. tests/test_rlev2.py pins the encoder's bytes.
+
 `signed=False` streams skip zigzag (our own extension, recorded in our stripe
 footer; liborc int columns are always signed).
 """
@@ -51,16 +61,24 @@ _CLOSED_LUT = np.array([closest_width(w) for w in range(65)], dtype=np.int64)
 _CODE_LUT = np.array([encode_width(closest_width(w)) for w in range(65)], dtype=np.int64)
 
 
+# LEB128 byte length of u is 1 + #steps <= u; a PATCHED_BASE base's byte
+# count (magnitude plus sign bit, at most 8) is 1 + #steps <= |base|
+_VARINT_STEPS = np.uint64(1) << np.arange(7, 64, 7, dtype=np.uint64)
+_BASE_STEPS = np.uint64(1) << np.arange(7, 56, 8, dtype=np.uint64)
+
+
 def _uvarint_len(u: np.ndarray) -> np.ndarray:
     """Byte length of the LEB128 encoding, vectorized (uint64 in)."""
-    return np.maximum(1, (bit_length(u) + 6) // 7)
+    return 1 + np.searchsorted(_VARINT_STEPS, u, "right")
 
 
 # ---------------------------------------------------------------------------
 # encode
 # ---------------------------------------------------------------------------
 
-def encode_rlev2(arr, signed: bool = True) -> bytes:
+def encode_rlev2(arr, signed: bool = True, bounds: tuple[int, int] | None = None) -> bytes:
+    """Encode `arr` as an RLEv2 stream. `bounds` is (min, max) of `arr` when
+    the caller already has them (stripe stats), saving a scan each."""
     a = np.ascontiguousarray(arr)
     n = len(a)
     if n == 0:
@@ -68,49 +86,41 @@ def encode_rlev2(arr, signed: bool = True) -> bytes:
     # narrow fast path: unsigned streams whose values fit 31 bits (token ids,
     # lengths) run the whole stats+pack pipeline in uint32 — half the memory
     # traffic, which is what the encoder is bound by at high core counts
-    narrow = (
-        not signed
-        and a.dtype in (np.int32, np.uint32, np.int16, np.uint16)
-        and int(a.min()) >= 0
-        and int(a.max()) < (1 << 31)
-    )
+    narrow = not signed and a.dtype in (np.int32, np.uint32, np.int16, np.uint16)
     if narrow:
-        a32 = a.view(np.uint32) if a.dtype == np.int32 else a.astype(np.uint32, copy=False)
-        nb = n // BLOCK
-        chunks: list[bytes] = []
-        if nb:
-            chunks.extend(
-                _encode_full_blocks(a32[: nb * BLOCK].reshape(nb, BLOCK), False, narrow=True)
-            )
-        tail = a32[nb * BLOCK :]
-        if len(tail):
-            chunks.append(_encode_block_scalar(tail.astype(np.int64), False))
-        return b"".join(chunks)
-    a = a.astype(np.int64, copy=False)
+        lo, hi = bounds if bounds is not None else (int(a.min()), int(a.max()))
+        narrow = lo >= 0 and hi < (1 << 31)
+    if narrow:
+        a = a.view(np.uint32) if a.dtype == np.int32 else a.astype(np.uint32, copy=False)
+    else:
+        a = a.astype(np.int64, copy=False)
     nb = n // BLOCK
-    chunks = []
-    if nb:
-        chunks.extend(_encode_full_blocks(a[: nb * BLOCK].reshape(nb, BLOCK), signed))
-    tail = a[nb * BLOCK :]
-    if len(tail):
-        chunks.append(_encode_block_scalar(tail, signed))
-    return b"".join(chunks)
+    pieces = _encode_full_blocks(a[: nb * BLOCK].reshape(nb, BLOCK), signed, narrow) if nb else []
+    if n > nb * BLOCK:
+        pieces.append(_encode_block_scalar(a[nb * BLOCK :].astype(np.int64), signed))
+    return b"".join(pieces)
 
 
-def _encode_full_blocks(M: np.ndarray, signed: bool, narrow: bool = False) -> list[bytes]:
+def _encode_full_blocks(M: np.ndarray, signed: bool, narrow: bool = False) -> list:
     """M: (B, 512) int64, or uint32 with values < 2^31 when narrow=True
-    (then signed is False and every dtype-sensitive step stays 32-bit)."""
+    (then signed is False and every dtype-sensitive step stays 32-bit).
+    Returns the blocks' encoded bytes as a list of buffers in block order,
+    for the caller's one flat join."""
     B = M.shape[0]
+    fd = np.zeros(B, dtype=np.int64)  # DELTA first delta
+    w_dp = np.zeros(B, dtype=np.int64)  # DELTA packed width
     with np.errstate(over="ignore"):
         if narrow:
             zz = M  # uint32, already non-negative
         else:
             zz = zigzag(M) if signed else M.view(np.uint64)
 
-        # --- DIRECT cost -------------------------------------------------
+        # bytes of each block under each sub-encoding, one row each: DELTA
+        # fixed, DELTA packed, DIRECT, PATCHED_BASE; 1 << 30 = ineligible
+        costs = np.full((4, B), 1 << 30, dtype=np.int64)
         zzmax = zz.max(axis=1)
         w_dir = _CLOSED_LUT[bit_length(zzmax)]
-        cost_direct = 2 + 64 * w_dir  # 512*w/8
+        costs[2] = 2 + 64 * w_dir  # 512*w/8
 
         # block min/max in the VALUE domain (narrow: zz IS M; wide signed:
         # zz is zigzagged, so take real extremes separately — wide is rare)
@@ -124,149 +134,121 @@ def _encode_full_blocks(M: np.ndarray, signed: bool, narrow: bool = False) -> li
         # reads 2 columns instead of a strided sample (whose 64 B cache-line
         # stride would re-read the whole array from DRAM). No false
         # negatives; false positives just run the exact per-block diff.
-        # Typical token streams: ~0 candidates.
-        Msigned = M.view(np.int32) if narrow else M
+        # Typical token streams: ~0 candidates, and then no DELTA work.
         first, last = M[:, 0], M[:, -1]
-        cand = ((first == base) & (last == Mmax)) | (
-            (first == Mmax) & (last == base)
+        cidx = np.flatnonzero(
+            ((first == base) & (last == Mmax)) | ((first == Mmax) & (last == base))
         )
-        cidx = np.nonzero(cand)[0]
-
-        fd = np.zeros(B, dtype=np.int64)
-        const_delta = np.zeros(B, dtype=bool)
-        mono_ok = np.zeros(B, dtype=bool)
         diffsC = None  # full diffs for candidate blocks only
         if len(cidx):
             # narrow: diff on the int32 view (values < 2^31 so deltas fit
             # int32); uint32 diff would wrap on decreasing runs
-            diffsC = np.diff(Msigned[cidx], axis=1)  # (C, 511)
+            diffsC = np.diff((M.view(np.int32) if narrow else M)[cidx], axis=1)  # (C, 511)
             dminC = diffsC.min(axis=1)
             dmaxC = diffsC.max(axis=1)
-            fdC = diffsC[:, 0]
+            fdC = diffsC[:, 0].astype(np.int64)
+            fd[cidx] = fdC
             # int64-overflow guard: diffs only trustworthy when the block's
             # value range fits in 63 bits (always true in narrow mode)
+            range_ok = narrow or (
+                Mmax[cidx].view(np.uint64) - base[cidx].view(np.uint64)
+            ) < (np.uint64(1) << np.uint64(63))
             if narrow:
-                range_ok = np.ones(len(cidx), dtype=bool)
+                first_enc = first[cidx].astype(np.uint64)
             else:
-                range_ok = (
-                    Mmax[cidx].view(np.uint64) - base[cidx].view(np.uint64)
-                ) < (np.uint64(1) << np.uint64(63))
-            fd[cidx] = fdC
-            const_delta[cidx] = (dminC == dmaxC) & range_ok
-            mono_ok[cidx] = ((dminC >= 0) | ((dmaxC <= 0) & (fdC < 0))) & range_ok
-        if narrow:
-            base_enc = M[:, 0].astype(np.uint64)
-        else:
-            base_enc = zigzag(M[:, 0]) if signed else M[:, 0].view(np.uint64)
-        vl_base = _uvarint_len(base_enc)
-        vl_fd = _uvarint_len(zigzag(fd))
-        cost_delta_fixed = np.where(const_delta, 2 + vl_base + vl_fd, 1 << 30)
-
-        # delta-packed stats only for eligible blocks (lazy: monotone blocks
-        # are rare in token streams, and abs() over all diffs is a big copy)
-        w_dp = np.zeros(B, dtype=np.int64)
-        cost_delta_packed = np.full(B, 1 << 30, dtype=np.int64)
-        dp_mask = mono_ok & ~const_delta
-        dp_idx = np.nonzero(dp_mask)[0]
-        if len(dp_idx):
-            dp_in_c = np.nonzero(dp_mask[cidx])[0]
-            dabs = np.abs(diffsC[dp_in_c, 1:])
-            dabs_max = (
-                dabs.view(np.uint32) if narrow else dabs.view(np.uint64)
-            ).max(axis=1)
-            w_dp[dp_idx] = _CLOSED_LUT[np.maximum(bit_length(dabs_max.astype(np.uint64)), 2)]  # width 1 invalid in DELTA
-            cost_delta_packed[dp_idx] = (
-                2 + vl_base[dp_idx] + vl_fd[dp_idx] + (510 * w_dp[dp_idx] + 7) // 8
-            )
+                first_enc = zigzag(first[cidx]) if signed else first[cidx].view(np.uint64)
+            head = 2 + _uvarint_len(first_enc) + _uvarint_len(zigzag(fdC))
+            const = (dminC == dmaxC) & range_ok
+            costs[0, cidx[const]] = head[const]
+            mono = ((dminC >= 0) | ((dmaxC <= 0) & (fdC < 0))) & range_ok & ~const
+            if mono.any():
+                k = np.flatnonzero(mono)
+                dabs = np.abs(diffsC[k, 1:])
+                dabs_max = (dabs.view(np.uint32) if narrow else dabs.view(np.uint64)).max(axis=1)
+                w = _CLOSED_LUT[np.maximum(bit_length(dabs_max), 2)]  # width 1 invalid in DELTA
+                w_dp[cidx[k]] = w
+                costs[1, cidx[k]] = head[k] + (510 * w + 7) // 8
 
         # --- PATCHED_BASE estimate ---------------------------------------
         if narrow:
             reduced = M - base[:, None]  # uint32, exact (M >= base)
         else:
             reduced = M.view(np.uint64) - base[:, None].view(np.uint64)
-        # bit lengths straight to uint8 (float32-exponent kernel) + partition
-        # (two order statistics, not a full sort) — the per-value stats pass
-        # is the hot loop at 100-core concurrency, where DRAM bandwidth is
-        # the binding constraint, so every pass here is width-minimal
+        # per-value bit lengths straight to uint8 (float32-exponent kernel),
+        # then one per-block histogram of them (a bincount over blr + 65*row):
+        # its cumsum gives the rank-(BLOCK-32) order statistic, the max and
+        # the count above any width without a partition or a second pass
         blr = bit_length_u8(reduced.reshape(-1)).reshape(B, BLOCK)
-        # single-kth partition (cheaper than two order statistics): the top-32
-        # slice then contains the 32 largest, so its max IS the row max
-        part = np.partition(blr, BLOCK - 32, axis=1)
-        wp_raw = np.maximum(part[:, BLOCK - 32].astype(np.int64), 1)  # <=31 above
-        wp = _CLOSED_LUT[wp_raw]
-        w100 = part[:, BLOCK - 32 :].max(axis=1).astype(np.int64)
-        # any blr > wp (>= the rank-(BLOCK-32) order statistic) lives in the
-        # top-32 positions of the partitioned row: count 32 values, not 512
-        npatch_est = (part[:, BLOCK - 32 :] > wp.astype(np.uint8)[:, None]).sum(axis=1)
+        cum = np.bincount(
+            (blr + (np.arange(B, dtype=np.intp) * 65)[:, None]).reshape(-1),
+            minlength=65 * B,
+        ).reshape(B, 65).cumsum(axis=1)
+        wp = _CLOSED_LUT[np.maximum((cum < BLOCK - 31).sum(axis=1), 1)]
+        w100 = (cum < BLOCK).sum(axis=1)  # the largest bit length
+        npatch = BLOCK - cum[np.arange(B), wp]  # values wider than wp (> 0 if w100 > wp)
         pw_est = _CLOSED_LUT[np.maximum(w100 - wp, 1)]
-        if narrow:
-            bw = np.minimum((bit_length(base.astype(np.uint64)) + 1 + 7) // 8, 8)
-        else:
-            bw = np.minimum((bit_length(np.abs(base).view(np.uint64)) + 1 + 7) // 8, 8)
-        bw = np.maximum(bw, 1)
+        # base bytes: big-endian magnitude plus a sign bit
+        bw = 1 + np.searchsorted(_BASE_STEPS, base if narrow else np.abs(base).view(np.uint64), "right")
         cfb_est = _CLOSED_LUT[np.minimum(8 + pw_est, 64)]
-        cost_patched = np.where(
-            (w100 > wp)
-            & (npatch_est > 0)
-            & (npatch_est <= 31)
-            & (wp + pw_est <= 64)
-            & (narrow | (base > np.iinfo(np.int64).min)),  # abs(base) overflow
-            4 + bw + 64 * wp + (npatch_est * cfb_est + 7) // 8,
-            1 << 30,
-        )
-
-        costs = np.stack([cost_delta_fixed, cost_delta_packed, cost_direct, cost_patched])
+        ok = (w100 > wp) & (npatch <= 31) & (wp + pw_est <= 64)
+        if not narrow:
+            ok &= base > np.iinfo(np.int64).min  # abs(base) overflow
+        costs[3] = np.where(ok, 4 + bw + 64 * wp + (npatch * cfb_est + 7) // 8, 1 << 30)
         choice = np.argmin(costs, axis=0)
 
-    out: list[bytes | None] = [None] * B
+    out: list = [None] * B
 
-    # DIRECT: group by width, one pack call per width
-    dir_idx = np.nonzero(choice == 2)[0]
+    def direct(idx):
+        # one pack call per width
+        for w in np.unique(w_dir[idx]).tolist():
+            g = idx[w_dir[idx] == w]
+            hdr = bytes([0x40 | (encode_width(w) << 1) | 1, 0xFF])
+            for i, body in zip(g.tolist(), pack_many(zz[g], w, mask_values=False)):
+                out[i] = (hdr, body)
+
+    dir_idx = np.flatnonzero(choice == 2)
     if len(dir_idx):
-        for w in np.unique(w_dir[dir_idx]):
-            idx = dir_idx[w_dir[dir_idx] == w]
-            hdr = bytes([0x40 | (encode_width(int(w)) << 1) | 1, 0xFF])
-            for i, body in zip(idx, pack_many(zz[idx], int(w), mask_values=False)):
-                out[i] = hdr + body
+        direct(dir_idx)
 
     # DELTA fixed
-    for i in np.nonzero(choice == 0)[0]:
+    for i in np.flatnonzero(choice == 0).tolist():
         buf = bytearray([0xC0 | 1, 0xFF])
         _write_base(buf, int(M[i, 0]), signed)
         write_svarint(buf, int(fd[i]))
-        out[i] = bytes(buf)
+        out[i] = (buf,)
 
     # DELTA packed (delta-chosen blocks are always screen candidates, so
     # their full diff rows exist in diffsC)
-    for i in np.nonzero(choice == 1)[0]:
+    for i in np.flatnonzero(choice == 1).tolist():
         w = int(w_dp[i])
         buf = bytearray([0xC0 | (encode_width(w) << 1) | 1, 0xFF])
         _write_base(buf, int(M[i, 0]), signed)
         write_svarint(buf, int(fd[i]))
         dline = np.abs(diffsC[np.searchsorted(cidx, i), 1:])
         body = pack(dline.view(np.uint32) if narrow else dline.view(np.uint64), w, mask_values=False)
-        out[i] = bytes(buf) + body
+        out[i] = (buf, body)
 
-    # PATCHED_BASE — fully vectorized across blocks: per-block widths/gaps via
-    # reduceat over one flat nonzero pass, low bits via pack_many per width
-    # group, patch entries via one varpack_rows call. The final loop only
-    # concatenates precomputed byte slices.
-    pat_idx = np.nonzero(choice == 3)[0]
+    # PATCHED_BASE — fully vectorized across blocks: patch positions from
+    # one flat nonzero pass (their per-block counts are the histogram's),
+    # low bits via pack_many per width group, patch entries via one
+    # word-level varpack_rows call. When every block is patched (the token
+    # stream case) the block arrays are used in place, not copied.
+    pat_idx = np.flatnonzero(choice == 3)
     if len(pat_idx):
         with np.errstate(over="ignore"):
-            blrP = blr[pat_idx]
+            every = len(pat_idx) == B
+            blrP = blr if every else blr[pat_idx]
+            redP = reduced if every else reduced[pat_idx]
             wpP = wp[pat_idx]
-            maskP = blrP > wpP.astype(np.uint8)[:, None]
-            counts = maskP.sum(axis=1)
-            rows, cols = np.nonzero(maskP)
-            starts = np.zeros(len(pat_idx), dtype=np.int64)
-            starts[1:] = np.cumsum(counts)[:-1]
+            counts = npatch[pat_idx]
+            pos = np.flatnonzero(blrP > wpP.astype(np.uint8)[:, None])
+            prow, cols = pos // BLOCK, pos % BLOCK
+            starts = np.cumsum(counts) - counts
             prev = np.empty_like(cols)
             prev[1:] = cols[:-1]
             prev[starts] = 0  # first patch's gap is its absolute index
             gaps = (cols - prev).astype(np.uint64)
-            redP = reduced[pat_idx]
-            pv = redP[rows, cols].astype(np.uint64) >> wpP[rows].astype(np.uint64)
+            pv = redP.reshape(-1)[pos].astype(np.uint64) >> wpP[prow].astype(np.uint64)
             # gaps > 255 don't fit the 8-bit gap field: split with (255, 0)
             # dummy entries, exactly as the ORC writer does
             if bool((gaps > 255).any()):
@@ -278,66 +260,63 @@ def _encode_full_blocks(M: np.ndarray, signed: bool, narrow: bool = False) -> li
                 tot = int(e.sum())
                 idx = np.repeat(np.arange(len(gaps)), e)
                 pos_in = np.arange(tot) - np.repeat(ecum, e)
-                last = pos_in == np.repeat(ndum, e)
+                lastd = pos_in == np.repeat(ndum, e)
                 gaps = np.where(
-                    last, gaps[idx] - np.uint64(255) * ndum[idx].astype(np.uint64),
+                    lastd, gaps[idx] - np.uint64(255) * ndum[idx].astype(np.uint64),
                     np.uint64(255),
                 )
-                pv = np.where(last, pv[idx], np.uint64(0))
-                rows = rows[idx]
+                pv = np.where(lastd, pv[idx], np.uint64(0))
+                prow = prow[idx]
                 counts = np.add.reduceat(e, starts)
-                starts = np.zeros(len(pat_idx), dtype=np.int64)
-                starts[1:] = np.cumsum(counts)[:-1]
+                starts = np.cumsum(counts) - counts
             maxgap = np.maximum.reduceat(gaps, starts)
             pw = _CLOSED_LUT[np.maximum(np.maximum.reduceat(bit_length(pv), starts), 1)]
             pgw = np.maximum(bit_length(maxgap), 1)
             ok = (counts <= 31) & (wpP + pw <= 64) & (pgw <= 8)
             # ineligible rows (gap needs dummy entries / width overflow): DIRECT
-            for k in np.nonzero(~ok)[0]:
-                i = pat_idx[k]
-                w = int(w_dir[i])
-                hdr = bytes([0x40 | (encode_width(w) << 1) | 1, 0xFF])
-                out[i] = hdr + pack(zz[i], w, mask_values=False)
-            okk = np.nonzero(ok)[0]
+            if not ok.all():
+                direct(pat_idx[~ok])
+            okk = np.flatnonzero(ok)
             if len(okk):
-                sel_entries = ok[rows]  # keep only entries of ok rows
                 cfb = _CLOSED_LUT[pgw + pw]
                 entries = (gaps << np.repeat(pw, counts).astype(np.uint64)) | pv
                 eblob, eoff, elen = varpack_rows(
-                    entries[sel_entries], counts[okk], cfb[okk]
+                    entries if len(okk) == len(ok) else entries[ok[prow]],
+                    counts[okk], cfb[okk],
                 )
                 # pack() masks to width, so the patched high bits drop out
                 # without a separate lowP = reduced & mask pass
-                lowSel = redP[okk]
-                low_chunks: dict[int, bytes] = {}
-                for w in np.unique(wpP[okk]):
-                    g = np.nonzero(wpP[okk] == w)[0]
-                    for gi, body in zip(g, pack_many(lowSel[g], int(w))):
-                        low_chunks[int(gi)] = body
-                # headers (4 bytes) vectorized
-                bwP = bw[pat_idx][okk]
-                hdrs = np.empty((len(okk), 4), dtype=np.uint8)
-                hdrs[:, 0] = 0x80 | (_CODE_LUT[wpP[okk]] << 1) | 1
-                hdrs[:, 1] = 0xFF
-                hdrs[:, 2] = ((bwP - 1) << 5) | _CODE_LUT[pw[okk]]
-                hdrs[:, 3] = ((pgw[okk] - 1) << 5) | counts[okk]
-                # base bytes: big-endian magnitude, MSB = sign
-                baseP = base[pat_idx][okk]
-                mag = np.abs(baseP).astype(">u8").view(np.uint8).reshape(-1, 8)
-                neg = np.nonzero(baseP < 0)[0]
-                mag = mag.copy()
-                mag[neg, 8 - bwP[neg]] |= 0x80
-                for k in range(len(okk)):
-                    i = pat_idx[okk[k]]
-                    bwk = int(bwP[k])
-                    out[i] = (
-                        hdrs[k].tobytes()
-                        + mag[k, 8 - bwk :].tobytes()
-                        + low_chunks[k]
-                        + eblob[eoff[k] : eoff[k] + elen[k]]
-                    )
+                wpK = wpP[okk]
+                low: list = [None] * len(okk)
+                for w in np.unique(wpK).tolist():
+                    g = np.flatnonzero(wpK == w)
+                    rowsel = redP if len(g) == len(redP) else redP[okk[g]]
+                    for gi, body in zip(g.tolist(), pack_many(rowsel, w)):
+                        low[gi] = body
+                # header (4 bytes) + base (bw bytes: big-endian magnitude,
+                # MSB = sign), one 12-byte row per block, sliced to 4 + bw
+                bwK = bw[pat_idx][okk]
+                baseK = base[pat_idx][okk]
+                pre = np.empty((len(okk), 12), dtype=np.uint8)
+                pre[:, 0] = 0x80 | (_CODE_LUT[wpK] << 1) | 1
+                pre[:, 1] = 0xFF
+                pre[:, 2] = ((bwK - 1) << 5) | _CODE_LUT[pw[okk]]
+                pre[:, 3] = ((pgw[okk] - 1) << 5) | counts[okk]
+                mag = np.abs(baseK.astype(np.int64)).astype(np.uint64) | (
+                    (baseK < 0).astype(np.uint64) << (8 * bwK - 1).astype(np.uint64)
+                )
+                pre[:, 4:] = (
+                    (mag << (64 - 8 * bwK).astype(np.uint64)).astype(">u8").view(np.uint8).reshape(-1, 8)
+                )
+                pre_mv = memoryview(pre.reshape(-1))
+                ent_mv = memoryview(eblob)
+                ends = (eoff + elen).tolist()
+                for k, (i, b, eo, ee) in enumerate(
+                    zip(pat_idx[okk].tolist(), bwK.tolist(), eoff.tolist(), ends)
+                ):
+                    out[i] = (pre_mv[12 * k : 12 * k + 4 + b], low[k], ent_mv[eo:ee])
 
-    return out  # type: ignore[return-value]
+    return [p for blk in out for p in blk]
 
 
 def _write_base(buf: bytearray, base: int, signed: bool) -> None:

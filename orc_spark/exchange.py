@@ -5,9 +5,11 @@ in the warehouse instead of a Spark row shuffle.
           task with pyarrow (its row groups, packed by size); any other
           DataFrame arrives through `mapInArrow`. The task computes each
           row's pid in numpy (`pid_groups`), clusters its rows by pid with
-          one stable sort and writes one Arrow IPC file under the
-          exchange directory, one record batch (a segment) per pid per
-          chunk. It returns one metadata dict per segment.
+          one stable argsort and one row gather (`take_rows`: the token
+          lists are gathered over their offsets, not by Arrow's list
+          take) and writes one Arrow IPC file under the exchange
+          directory, one record batch (a segment) per pid per chunk. It
+          returns one metadata dict per segment.
   plan    the driver sums each pid's token mass from those rows, splits
           pids heavier than `max_pid_tokens` into `@sub` pids, drops
           pids a resume adopted and packs the rest into reduce tasks,
@@ -97,6 +99,49 @@ def pid_groups(
     return groups, names
 
 
+def take_rows(tbl: pa.Table, order: np.ndarray) -> pa.Table:
+    """tbl.take(order) with every column in one chunk. A list column of a
+    numeric child with no nulls at either level is gathered over its
+    offsets: each output row's values are one contiguous slice of the
+    child, so the new child is one np.concatenate of those slices and the
+    new offsets a cumsum of their lengths, about 3x faster than Arrow's
+    generic list take on an 8192-row t-bench group. Any other column
+    (lists with nulls, large or nested lists, strings, scalars) uses
+    Arrow's take."""
+    cols = []
+    for col in tbl.columns:
+        t = col.type
+        if (
+            pa.types.is_list(t)
+            and (pa.types.is_integer(t.value_type) or pa.types.is_floating(t.value_type))
+            and col.null_count == 0
+            and not any(c.values.null_count for c in col.chunks)
+        ):
+            cols.append(_gather_list(col, order))
+        else:
+            cols.append(col.take(order).combine_chunks())
+    return pa.Table.from_arrays(cols, schema=tbl.schema)
+
+
+def _gather_list(col: pa.ChunkedArray, order: np.ndarray) -> pa.ListArray:
+    chunks = col.chunks
+    if not chunks:
+        return pa.array([], type=col.type)
+    vals = [c.values.to_numpy() for c in chunks]
+    offs = [c.offsets.to_numpy() for c in chunks]
+    starts = np.concatenate([o[:-1] for o in offs])[order]
+    ends = np.concatenate([o[1:] for o in offs])[order]
+    chunk = np.searchsorted(np.cumsum([len(c) for c in chunks]), order, side="right")
+    new = np.zeros(len(order) + 1, dtype=np.int64)
+    np.cumsum(ends - starts, out=new[1:])
+    parts = [vals[c][s:e] for c, s, e in zip(chunk.tolist(), starts.tolist(), ends.tolist())]
+    values = np.concatenate(parts) if parts else vals[0][:0]
+    return pa.ListArray.from_arrays(
+        pa.array(new.astype(np.int32)), pa.array(values, type=col.type.value_type),
+        type=col.type,
+    )
+
+
 def sub_of(keys, k: int) -> np.ndarray:
     """Each row's sub-pid index under a k-way split: pmod(xxhash64(key, 1), k)."""
     h = xxhash64(keys).view(np.uint64)
@@ -160,8 +205,9 @@ def map_task(
     source_col: str | None, weight_col: str | None, skip: frozenset,
 ):
     """One map task: cluster `tables` (an iterator of Arrow tables or
-    batches) by pid, chunk by chunk, into one IPC file of per-pid segments
-    under `stage`. Rows of a pid in `skip` (adopted) are dropped. Yields
+    batches) by pid, chunk by chunk (a stable argsort of the pid groups,
+    then `take_rows`), into one IPC file of per-pid segments under
+    `stage`. Rows of a pid in `skip` (adopted) are dropped. Yields
     one MAP_META_SCHEMA dict per segment; the task's timers repeat on each."""
     t = dict.fromkeys(MAP_TIMERS, 0.0)
     path = os.path.join(stage, f"map-{task:05d}-{uuid.uuid4().hex[:8]}.arrow")
@@ -180,7 +226,7 @@ def map_task(
         t1 = time.perf_counter()
         t["hash_s"] += t1 - t0
         order = np.argsort(groups, kind="stable")
-        tbl = tbl.take(order).combine_chunks()
+        tbl = take_rows(tbl, order)
         groups = groups[order]
         csum = np.r_[0, np.cumsum(weights(tbl, weight_col))]
         cuts = np.r_[0, np.flatnonzero(groups[1:] != groups[:-1]) + 1, len(groups)]

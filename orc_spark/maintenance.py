@@ -9,10 +9,10 @@ count, and tiny stripes under-amortize their footers. These are the Iceberg
 `compact_snapshots` has two modes with very different costs:
 
 - **concat** (default): per pid, the stripe rows of every source file are
-  streamed into ONE dest file — blobs are copied verbatim, NEVER decoded
-  (zero codec CPU, I/O-bound); file blooms OR together (same fixed m,
-  codecs/bloom.FILE_BLOOM_BITS) and key ranges merge in the key's native
-  order. Stripe count is preserved; what collapses is the FILE count —
+  streamed into ONE dest file — blobs are copied verbatim; only the key
+  column is decoded, to rebuild the merged file bloom at the size for the
+  summed key count — and key ranges merge in the key's native order.
+  Stripe count is preserved; what collapses is the FILE count —
   exactly the per-epoch fragmentation the stream sink creates. One Spark
   stage, no shuffle: the pid->files plan is O(#pids) driver metadata,
   packed by the sources' encoded bytes into one bin per task slot
@@ -56,12 +56,15 @@ from pyspark.sql import SparkSession
 from .codecs import bloom as bloomc
 from .pipeline import (
     DEFAULT_STRIPE_TOKENS,
-    STRIPE_FILE_SCHEMA,
     decode_table,
     encode_commit,
+    key_hashes,
     pack_bins,
     run_tasks,
+    stripe_file_writer,
+    write_sidecar,
 )
+from .stripe import decode_stripe, footer_from_json
 from .warehouse import Warehouse, current_ids, parse_key, render_key
 
 
@@ -82,35 +85,31 @@ def _load_source_manifests(wh: Warehouse, snapshots: list[str]) -> list[dict]:
     return manifests
 
 
-def _merge_sidecar_blooms(files: list[str], dest: str) -> None:
-    """OR the source files' key blooms into one sidecar for the merged file.
-    All writers use the same fixed FILE_BLOOM_BITS, so the union is exact
-    (a bloom of the union of key sets). Any missing/mismatched sidecar means
-    no merged sidecar — planners then simply cannot bloom-prune this file,
-    which is always conservative."""
-    acc, n, col = None, 0, None
+def _sidecar_column(files: list[str]) -> str | None:
+    """The key column every source file's sidecar blooms, or None when a
+    source has no readable sidecar or they disagree. The merged file then
+    gets no sidecar: planners simply cannot bloom-prune it, which is always
+    conservative."""
+    cols = set()
     for f in files:
         try:
             with open(f + ".bloom.json") as fh:
-                meta = json.load(fh)
-            bits = bloomc.bloom_from_meta(meta)
+                cols.add(json.load(fh).get("column"))
         except (OSError, ValueError):
-            return
-        if bits is None or len(bits) * 8 != bloomc.FILE_BLOOM_BITS:
-            return
-        if acc is None:
-            acc, col = bits.copy(), meta.get("column")
-        elif meta.get("column") != col:
-            return
-        else:
-            acc |= bits
-        n += int(meta.get("n", 0))
-    if acc is None:
-        return
-    tmp = dest + f".bloom.inprogress-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump({"column": col, **bloomc.bloom_to_meta(acc, n)}, fh)
-    os.replace(tmp, dest + ".bloom.json")
+            return None
+    return cols.pop() if len(cols) == 1 else None
+
+
+def _insert_keys(bloom: np.ndarray, t: pa.Table, key_col: str) -> int:
+    """Insert the keys of the stripe rows `t` into `bloom`, decoding only
+    the key column; return how many. A sidecar exists only for a key type
+    the writer could hash, so key_hashes has a hasher here."""
+    n = 0
+    for blob, footer in zip(t.column("blob"), t.column("footer")):
+        keys = decode_stripe(blob.as_buffer(), footer_from_json(str(footer)), [key_col])
+        bloomc.bloom_insert(bloom, *key_hashes(keys.column(0)))
+        n += keys.num_rows
+    return n
 
 
 def _concat_pid(
@@ -118,15 +117,21 @@ def _concat_pid(
 ) -> dict:
     """Stream one pid's source files into its single dest file, stripe rows
     copied verbatim (blob bytes untouched), stripe_id renumbered. Runs
-    executor-side; memory = one parquet row group."""
+    executor-side; memory = one parquet row group. Each source sidecar is
+    sized for its own file's keys (bloom.file_bloom_bits), so the merged
+    sidecar is rebuilt from the copied stripes' keys — only their key
+    column is decoded — at the size for the summed key count."""
     wh = Warehouse(warehouse_path)
     final = wh.data_file(pid, dest_snapshot)
     os.makedirs(os.path.dirname(final), exist_ok=True)
     tmp = final + f".inprogress-{uuid.uuid4().hex[:8]}"
     t0 = time.perf_counter()
     stripes = n_rows = n_tokens = enc_bytes = 0
+    key_col = _sidecar_column(files)
+    bloom = np.zeros(bloomc.FILE_BLOOM_BITS // 8, dtype=np.uint8) if key_col else None
+    n_keys = 0
     try:
-        with pq.ParquetWriter(tmp, STRIPE_FILE_SCHEMA, compression="none") as w:
+        with stripe_file_writer(tmp) as w:
             for f in files:
                 pf = pq.ParquetFile(f)
                 for rg in range(pf.num_row_groups):
@@ -144,13 +149,16 @@ def _concat_pid(
                     n_rows += int(sum(t.column("n_rows").to_pylist()))
                     n_tokens += int(sum(t.column("n_tokens").to_pylist()))
                     enc_bytes += int(sum(t.column("enc_bytes").to_pylist()))
+                    if key_col:
+                        n_keys += _insert_keys(bloom, t, key_col)
     except BaseException:
         try:
             os.remove(tmp)
         except OSError:
             pass
         raise
-    _merge_sidecar_blooms(files, final)  # sidecar lands BEFORE data visible
+    if key_col and n_keys:  # sidecar lands BEFORE data visible
+        write_sidecar(final, key_col, bloomc.fold(bloom, bloomc.file_bloom_bits(n_keys)), n_keys)
     os.replace(tmp, final)
     return {
         "pid": pid,

@@ -100,10 +100,33 @@ STRIPE_FILE_SCHEMA = pa.schema(
     ]
 )
 
+
+def stripe_file_writer(path: str) -> pq.ParquetWriter:
+    """The writer of every stripe file (encode and concat compaction). No
+    Parquet column statistics and no dictionary: no reader uses them, and
+    the statistics held min/max copies of each footer JSON."""
+    return pq.ParquetWriter(
+        path, STRIPE_FILE_SCHEMA, compression="none",
+        write_statistics=False, use_dictionary=False,
+    )
+
+
 DEFAULT_STRIPE_TOKENS = 4_000_000  # ~8 MB encoded per stripe at ~2 B/token
 
 # encode_table's default layout (its key, source and weight columns)
 LAYOUT = {"key_col": "doc_id", "source_col": "source", "weight_col": "n_tok"}
+
+
+def key_hashes(ids: pa.Array):
+    """Vectorized bloom double-hashes of a stripe's key values; None for
+    key types without a bloom hasher (float keys make no sense anyway)."""
+    if isinstance(ids, pa.ChunkedArray):
+        ids = ids.combine_chunks()
+    if pa.types.is_string(ids.type) or pa.types.is_large_string(ids.type):
+        return bloomc.hash_pairs_str_array(ids)
+    if pa.types.is_integer(ids.type):
+        return bloomc.hash_pairs_int(ids.cast(pa.int64()).to_numpy(zero_copy_only=False))
+    return None
 
 
 class _PidWriter:
@@ -123,7 +146,7 @@ class _PidWriter:
         self.final = Warehouse(warehouse_path).data_file(pid, snapshot)
         os.makedirs(os.path.dirname(self.final), exist_ok=True)
         self.tmp = self.final + f".inprogress-{uuid.uuid4().hex[:8]}"
-        self.writer = pq.ParquetWriter(self.tmp, STRIPE_FILE_SCHEMA, compression="none")
+        self.writer = stripe_file_writer(self.tmp)
         self.stripes = 0
         self.n_rows = 0
         self.n_tokens = 0
@@ -131,44 +154,31 @@ class _PidWriter:
         self.min_doc = None
         self.max_doc = None
         # file-level key bloom (ORC BLOOM_FILTER analog, puffin-style
-        # sidecar): fixed m so worker memory stays O(1) per writer; readers
-        # ignore it if over-full (bloom_from_meta checks saturation)
+        # sidecar): fixed m so worker memory stays O(1) per writer, folded
+        # to the file's key count at close; readers ignore it if over-full
+        # (bloom_from_meta checks saturation)
         self.file_bloom = np.zeros(bloomc.FILE_BLOOM_BITS // 8, dtype=np.uint8)
         self.bloom_n = 0
         self.stripe_s = 0.0
         self.write_s = 0.0
         self.t0 = time.perf_counter()
 
-    def _key_hashes(self, ids: pa.Array):
-        """Vectorized bloom double-hashes of a stripe's key values; None for
-        key types without a bloom hasher (float keys make no sense anyway)."""
-        if isinstance(ids, pa.ChunkedArray):
-            ids = ids.combine_chunks()
-        if pa.types.is_string(ids.type) or pa.types.is_large_string(ids.type):
-            return bloomc.hash_pairs_str_array(ids)
-        if pa.types.is_integer(ids.type):
-            return bloomc.hash_pairs_int(ids.cast(pa.int64()).to_numpy(zero_copy_only=False))
-        return None
-
     def write_stripe(self, tbl: pa.Table) -> None:
         # deterministic stripe CONTENT: order rows by doc_id here (vectorized
-        # take) instead of a cluster-wide sortWithinPartitions('pid','doc_id')
+        # gather, exchange.take_rows) instead of a cluster-wide sortWithinPartitions('pid','doc_id')
         # — the JVM sort moves the full token payload and costs ~3x the
         # pid-only clustering sort (measured at 322M tokens: 7.8s vs 2.4s on
         # 16 cores). Stripe boundaries follow the order the rows arrive in
         # (map order); per-row decode equality is order-independent either
         # way.
         t0 = time.perf_counter()
-        tbl = tbl.take(pc.sort_indices(tbl.column(self.key_col)))
+        tbl = exchange.take_rows(tbl, pc.sort_indices(tbl.column(self.key_col)).to_numpy())
         blob, footer = encode_stripe(tbl)
         # key bloom: one vectorized hash pass feeds BOTH the stripe-level
         # bloom (stripe footer stats, sized to this stripe's rows) and the
-        # file-level bloom (OR-accumulated, written as a sidecar at close)
-        hp = (
-            self._key_hashes(tbl.column(self.key_col))
-            if self.key_blooms
-            else None
-        )
+        # file-level bloom (OR-accumulated, folded and written as a sidecar
+        # at close)
+        hp = key_hashes(tbl.column(self.key_col)) if self.key_blooms else None
         if hp is not None:
             h1, h2 = hp
             stats = footer["columns"][self.key_col].setdefault("stats", {})
@@ -221,14 +231,8 @@ class _PidWriter:
             # crash in between leaves a harmless orphan sidecar). The
             # manifest stays O(200 bytes)/partition; planners read sidecars
             # only for files that survive range pruning.
-            side_tmp = self.final + f".bloom.inprogress-{uuid.uuid4().hex[:8]}"
-            with open(side_tmp, "w") as fh:
-                json.dump(
-                    {"column": self.key_col,
-                     **bloomc.bloom_to_meta(self.file_bloom, self.bloom_n)},
-                    fh,
-                )
-            os.replace(side_tmp, self.final + ".bloom.json")
+            bits = bloomc.fold(self.file_bloom, bloomc.file_bloom_bits(self.bloom_n))
+            write_sidecar(self.final, self.key_col, bits, self.bloom_n)
         os.replace(self.tmp, self.final)  # atomic: file is complete or absent
         self.write_s += time.perf_counter() - t0
         return {
@@ -248,6 +252,14 @@ class _PidWriter:
             "stripe_s": self.stripe_s,
             "write_s": self.write_s,
         }
+
+
+def write_sidecar(data_file: str, column: str, bits: np.ndarray, n: int) -> None:
+    """A data file's bloom sidecar, temp file + atomic rename."""
+    tmp = data_file + f".bloom.inprogress-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as fh:
+        json.dump({"column": column, **bloomc.bloom_to_meta(bits, n)}, fh)
+    os.replace(tmp, data_file + ".bloom.json")
 
 
 def _make_encoder(

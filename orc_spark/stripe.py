@@ -87,20 +87,20 @@ def _strip_nulls(w: _Streams, arr: pa.Array) -> pa.Array:
     return arr
 
 
-def _int_stats(arr: np.ndarray) -> dict:
+def _int_stats(arr: np.ndarray, bounds: tuple[int, int] | None) -> dict:
     if len(arr) == 0:
         return {"min": None, "max": None, "sum": 0}
-    return {
-        "min": int(arr.min()),
-        "max": int(arr.max()),
-        "sum": int(arr.sum(dtype=np.int64)),
-    }
+    return {"min": bounds[0], "max": bounds[1], "sum": int(arr.sum(dtype=np.int64))}
 
 
-def _add_int_data(w: _Streams, np_vals: np.ndarray) -> None:
-    plan = chooser.choose_int(np_vals)
-    raw = encode_int_stream(np_vals, plan["codec"], plan["signed"])
+def _add_int_data(w: _Streams, np_vals: np.ndarray) -> tuple[int, int] | None:
+    """Write the DATA stream; return the values' (min, max), found in one
+    scan each and shared by the stats, the codec trial and the encoder."""
+    bounds = (int(np_vals.min()), int(np_vals.max())) if len(np_vals) else None
+    plan = chooser.choose_int(np_vals, bounds)
+    raw = encode_int_stream(np_vals, plan["codec"], plan["signed"], bounds)
     w.add("DATA", raw, {"codec": plan["codec"], "signed": plan["signed"], "n": len(np_vals)})
+    return bounds
 
 
 def _encode_int_column(w: _Streams, arr: pa.Array, col_meta: dict) -> None:
@@ -108,8 +108,8 @@ def _encode_int_column(w: _Streams, arr: pa.Array, col_meta: dict) -> None:
     np_vals = np.ascontiguousarray(
         arr.cast(pa.int64()).to_numpy(zero_copy_only=False), dtype=np.int64
     )
-    _add_int_data(w, np_vals)
-    col_meta.update(encoding="DIRECT", stats=_int_stats(np_vals))
+    bounds = _add_int_data(w, np_vals)
+    col_meta.update(encoding="DIRECT", stats=_int_stats(np_vals, bounds))
 
 
 def _float_stats(arr: np.ndarray) -> dict:
@@ -190,8 +190,8 @@ def _encode_list_column(w: _Streams, arr: pa.Array, col_meta: dict) -> None:
     # previous int64 widening — the dominant byte stream of the table)
     flat = np.ascontiguousarray(arr.flatten().to_numpy(zero_copy_only=False))
     w.add("LENGTH", encode_rlev2(lens, signed=False), {"codec": "rle2", "signed": False, "n": len(lens)})
-    _add_int_data(w, flat)
-    col_meta.update(encoding="DIRECT", stats={**_int_stats(flat), "n_values": int(len(flat))})
+    bounds = _add_int_data(w, flat)
+    col_meta.update(encoding="DIRECT", stats={**_int_stats(flat, bounds), "n_values": int(len(flat))})
 
 
 def _encode_column(

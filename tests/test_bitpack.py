@@ -133,3 +133,25 @@ def test_lane_unpack_small_runs_match_generic():
     for w in (4, 8, 16, 32):  # small-P widths take the lane path at n=512
         v = rng.randint(0, 2 ** min(w, 31), 512).astype(np.uint64)
         assert np.array_equal(unpack(pack(v, w), 512, w), v)
+
+
+def _bool_pack(vals: np.ndarray, width: int) -> bytes:
+    """MSB-first packing through unpackbits: the oracle of the word paths."""
+    v = vals.astype(np.uint64) & np.uint64((1 << width) - 1)
+    b = v.astype(">u8").view(np.uint8).reshape(len(v), 8)
+    return np.packbits(np.unpackbits(b, axis=1)[:, 64 - width :].ravel()).tobytes()
+
+
+@pytest.mark.parametrize("width", [1, 3, 7, 8, 12, 15, 16, 17, 20, 24, 31, 32])
+def test_word_pack_uint32_matches_bool_path(width):
+    """The word-merging packer keeps uint32 input in uint32 while a merged
+    unit fits 32 bits; with and without the mask, any length (padded to 64
+    values internally) must give the bytes of the unpackbits path."""
+    rng = np.random.RandomState(width)
+    for n in (64, 100, 512, 4096 + 37):
+        raw = rng.randint(0, 2**31, n).astype(np.uint32)
+        fits = raw & np.uint32((1 << width) - 1) if width < 32 else raw
+        want = _bool_pack(raw, width)
+        assert pack(raw, width) == want
+        assert pack(raw.astype(np.uint64), width) == want
+        assert pack(fits, width, mask_values=False) == want

@@ -289,3 +289,33 @@ def test_map_rows_are_clustered_in_input_order(tmp_path):
         want = [d for d, p in zip(t.column("doc_id").to_pylist(), pids) if p == r["pid"]]
         assert rb.column("doc_id").to_pylist() == want
         assert pc.sum(rb.column("n_tok")).as_py() == r["tokens"]
+
+
+def test_take_rows_matches_table_take():
+    """The offsets gather of list columns (and Arrow's take for every other
+    shape) equals Table.take, combined, on chunked, sliced, null-bearing,
+    float, large and nested inputs."""
+    rng = np.random.default_rng(5)
+
+    def lists(n, typ):
+        lens = rng.integers(0, 9, n)
+        vals = rng.integers(0, 50257, int(lens.sum()))
+        offs = np.r_[0, np.cumsum(lens)].astype(np.int32)
+        return pa.ListArray.from_arrays(pa.array(offs), pa.array(vals).cast(typ))
+
+    chunks = [pa.table({"k": pa.array([f"d{i}" for i in range(n)], pa.string()),
+                        "tokens": lists(n, pa.int32()), "emb": lists(n, pa.float32()),
+                        "n": pa.array(rng.integers(0, 9, n), pa.int32())})
+              for n in (40, 0, 73, 25)]
+    tbl = pa.concat_tables(chunks)
+    cases = [tbl, tbl.slice(30, 80), tbl.slice(0, 0)]
+    cases.append(pa.table({"l": pa.array([[1, 2], None, [3], []], pa.list_(pa.int32()))}))
+    cases.append(pa.table({"l": pa.array([[1, None], [3]], pa.list_(pa.int64()))}))
+    cases.append(pa.table({"l": pa.array([[1], [2, 3]], pa.large_list(pa.int32()))}))
+    cases.append(pa.table({"l": pa.array([[[1]], [[2], [3]]], pa.list_(pa.list_(pa.int32())))}))
+    for t in cases:
+        for order in (np.arange(t.num_rows)[::-1], rng.permutation(t.num_rows),
+                      np.argsort(rng.integers(0, 3, t.num_rows), kind="stable")):
+            got = exchange.take_rows(t, order)
+            assert got.equals(t.take(order).combine_chunks())
+            assert all(c.num_chunks == 1 for c in got.columns)

@@ -67,3 +67,69 @@ def test_chooser_runs_real_cost_trial():
         for c in ("rle2", "for", "bitpack")
     }
     assert sizes[plan["codec"]] == min(sizes.values())
+
+
+def _encode_all_three(arr):
+    """The trial choose_int ran before its closed forms: encode the sample
+    with every codec and keep the smallest, rle2 first on ties."""
+    from orc_spark.chooser import INT_TRIAL
+
+    signed = bool(len(arr)) and int(arr.min()) < 0
+    if len(arr) <= 16:
+        return {"codec": "rle2", "signed": signed}
+    if len(arr) > 3 * INT_TRIAL:
+        third = INT_TRIAL // 3
+        mid = (len(arr) - third) // 2
+        sample = np.concatenate([arr[:third], arr[mid : mid + third], arr[-third:]])
+    else:
+        sample = arr[:INT_TRIAL]
+    sizes = [(len(encode_int_stream(sample, c, signed)), c) for c in ("rle2", "for", "bitpack")]
+    return {"codec": min(sizes, key=lambda s: s[0])[1], "signed": signed}
+
+
+_int_arrays = st.one_of(
+    st.lists(st.integers(min_value=I64.min, max_value=I64.max), max_size=5000),
+    st.lists(st.integers(min_value=-300, max_value=300), min_size=17, max_size=5000),
+    st.lists(st.integers(min_value=0, max_value=(1 << 40) - 1), max_size=5000),
+    st.tuples(st.integers(min_value=I64.min, max_value=I64.max),
+              st.integers(min_value=1, max_value=5000)).map(lambda t: [t[0]] * t[1]),
+)
+
+
+@settings(max_examples=150, deadline=None)
+@given(_int_arrays, st.booleans())
+def test_closed_form_lengths_equal_encoded_lengths(xs, signed):
+    from orc_spark.codecs.intcodecs import encoded_len
+
+    a = np.array(xs, dtype=np.int64)
+    if not signed and len(a) and a.min() < 0:
+        a = np.abs(a // 2)
+    for codec in ("for", "bitpack"):
+        assert encoded_len(a, codec, signed) == len(encode_int_stream(a, codec, signed))
+
+
+@settings(max_examples=150, deadline=None)
+@given(_int_arrays)
+def test_choose_int_matches_the_encode_all_three_trial(xs):
+    from orc_spark.chooser import choose_int
+
+    a = np.array(xs, dtype=np.int64)
+    assert choose_int(a) == _encode_all_three(a)
+    if len(a):
+        assert choose_int(a, (int(a.min()), int(a.max()))) == _encode_all_three(a)
+
+
+@pytest.mark.parametrize("n", [17, 1000, 4096, 5000, 20_000])
+def test_choose_int_matches_the_trial_on_shaped_streams(n):
+    from orc_spark.chooser import choose_int
+
+    rng = np.random.default_rng(n)
+    streams = [
+        ((rng.zipf(1.2, n) - 1) % 50257).astype(np.int32),
+        10**12 + rng.integers(0, 100, n),  # for wins: large offset, tiny range
+        rng.integers(0, 2**31, n),
+        np.full(n, -5, dtype=np.int64),
+        np.r_[np.zeros(n // 2), rng.integers(-(1 << 40), 1 << 40, n - n // 2)].astype(np.int64),
+    ]
+    for a in streams:
+        assert choose_int(a) == _encode_all_three(a)

@@ -123,3 +123,80 @@ def test_patched_base_cfb64_roundtrip():
     assert np.array_equal(decode_rlev2(enc, len(v), signed=False), v)
     enc_s = encode_rlev2(v, signed=True)
     assert np.array_equal(decode_rlev2(enc_s, len(v), signed=True), v)
+
+
+def pin_corpus() -> list[tuple[str, np.ndarray, bool]]:
+    """Seeded (name, stream, signed) cases that reach every encoder path:
+    the narrow uint32 blocks, the int64 blocks, the scalar tail and every
+    sub-encoding with its edge cases."""
+    rng = np.random.default_rng(16)
+    zipf = ((rng.zipf(1.2, 100_003) - 1) % 50257).astype(np.int32)
+    perm = rng.permutation(50257).astype(np.int32)
+    runs = np.repeat(rng.integers(0, 1 << 20, 700), rng.integers(1, 12, 700))
+    gaps = np.zeros(4096, dtype=np.int64)
+    gaps[np.arange(0, 4096, 300)] = 1 << 20  # patch gaps > 255: dummy entries
+    cfb64 = rng.integers(0, 16, 4096, dtype=np.int64)
+    cfb64[np.arange(0, 4096, 300)] += 1 << 58  # pw=56 + pgw=8
+    fallback = rng.integers(0, 1 << 10, 1024, dtype=np.int64)
+    fallback[np.r_[0:16, 300:315]] += 1 << 30  # 31 patches + 1 dummy: DIRECT
+    spikes = rng.integers(0, 1 << 15, 5 * 512 + 77, dtype=np.int64)
+    spikes[rng.integers(0, len(spikes), 90)] |= 1 << 24  # 18-25 patches/block
+    cases = [
+        ("zipf", zipf),
+        ("zipf_tail", zipf[:1000]),
+        ("permuted", perm[zipf]),
+        ("uint16", zipf.astype(np.uint16)),
+        ("lengths", np.clip(rng.lognormal(5.5, 1.0, 3000), 1, 8192).astype(np.int64)),
+        ("wide_signed", rng.integers(I64.min, I64.max, 5000, dtype=np.int64, endpoint=True)),
+        ("small_signed", rng.integers(-300, 300, 2049, dtype=np.int64)),
+        ("runs", runs),
+        ("constant", np.full(1537, 7, dtype=np.int64)),
+        ("constant_neg", np.full(1024, -12345, dtype=np.int64)),
+        ("up", np.arange(0, 3 * 512 * 7, 7, dtype=np.int64)),
+        ("down", np.arange(5000, 5000 - 1100, -1, dtype=np.int64)),
+        ("mono", np.cumsum(rng.integers(0, 50, 2000)).astype(np.int64)),
+        ("mono32", np.cumsum(rng.integers(0, 50, 2000)).astype(np.int32)),
+        ("mono_down", -np.cumsum(rng.integers(1, 50, 1500)).astype(np.int64)),
+        ("gaps", gaps),
+        ("gaps32", gaps.astype(np.int32)),
+        ("fallback", fallback),
+        ("fallback32", fallback.astype(np.int32)),
+        ("up32", np.arange(0, 3 * 512 * 7, 7, dtype=np.int32)),
+        ("down32", np.arange(5000, 5000 - 1100, -1, dtype=np.int32)),
+        ("uint32_wide", rng.integers(0, 1 << 32, 1500, dtype=np.uint32)),
+        ("cfb64", cfb64),
+        ("spikes", spikes),
+        ("spikes32", spikes.astype(np.int32)),
+    ]
+    cases += [(f"tiny{n}", rng.integers(-5, 60, n).astype(np.int64)) for n in range(0, 17)]
+    cases += [(f"repeat{n}", np.full(n, 3, dtype=np.int64)) for n in (3, 10, 11, 16)]
+    out = []
+    for name, a in cases:
+        out.append((name, a, True))
+        if not len(a) or a.min() >= 0:
+            out.append((name, a, False))
+    return out
+
+
+# sha256 over the length-prefixed encode_rlev2 output of pin_corpus(), as
+# the vectorized block encoder before the narrow word-level rewrite stored it
+RLEV2_CORPUS_SHA = "f511296bb86797db2cc527a27b36ce4fc939d9111d48f460690107f07261439c"
+
+
+def corpus_sha() -> str:
+    import hashlib
+
+    h = hashlib.sha256()
+    for name, a, signed in pin_corpus():
+        enc = encode_rlev2(a, signed)
+        h.update(f"{name}:{int(signed)}:{len(enc)}:".encode())
+        h.update(enc)
+    return h.hexdigest()
+
+
+def test_encoder_bytes_are_pinned():
+    """Encoder changes must store the same bytes: every case also round
+    trips, and the whole corpus hashes to the pinned digest."""
+    for name, a, signed in pin_corpus():
+        roundtrip(a, signed)
+    assert corpus_sha() == RLEV2_CORPUS_SHA
