@@ -3,12 +3,14 @@
 Bit layout matches ORC RLEv2 ([ORCv1], probe-confirmed in SURVEY.md Appendix A):
 values are written MSB-first, consecutively, crossing byte boundaries; the final
 partial byte is zero-padded on the right. All kernels are numpy-vectorized
-(unpackbits/packbits) — no per-value Python.
+(word shifts, unpackbits/packbits for short packs, strided byte windows for
+unpacks) — no per-value Python.
 """
 
 from __future__ import annotations
 
 import bisect
+import math
 
 import numpy as np
 
@@ -172,8 +174,6 @@ def _pack_aligned(v: np.ndarray, w: int) -> np.ndarray:
     every L = P*w/64 output words; each lane is 1-2 vectorized shift/or ops.
     O(n) work in <=128 numpy calls regardless of n.
     """
-    import math
-
     n = len(v)
     P = math.lcm(64, w) // w
     L = (P * w) // 64
@@ -213,71 +213,51 @@ def packed_size(n: int, width: int) -> int:
     return (n * width + 7) // 8
 
 
-def unpack(buf, n: int, width: int) -> np.ndarray:
-    """Unpack `n` values of `width` bits from `buf` -> uint64 array."""
+def unpack(buf, n: int, width: int, dtype=np.uint64) -> np.ndarray:
+    """Unpack `n` values of `width` bits from `buf` into a `dtype` array
+    (uint64, or uint32 when width <= 32)."""
     if n == 0 or width == 0:
-        return np.zeros(n, dtype=np.uint64)
-    if width <= 32 and (n * width) % 32 == 0 and n >= 64:
-        # lane shift-mask extraction: inverse of a 32-bit-word lane packing. Each of
-        # the P = lcm(32,w)/w lanes costs ~2 numpy calls on n/P elements, so
-        # it only beats the unpackbits path when lanes are few (w divides a
-        # word cleanly) or n is large enough to amortize the call overhead.
-        import math
-
-        P = math.lcm(32, width) // width
-        if 2 * P + 2 < 12 or n // P >= 1024:
-            return _unpack_aligned_lanes(buf, n, width)
+        return np.zeros(n, dtype=dtype)
+    n8 = -(-n // 8) * 8
+    src = np.zeros(n8 * width // 8 + 8, dtype=np.uint8)
     need = packed_size(n, width)
-    raw = np.frombuffer(buf, dtype=np.uint8, count=need)
-    bits = np.unpackbits(raw)[: n * width].reshape(n, width)
-    dt, nbytes = _container(width)
-    full = np.zeros((n, nbytes * 8), dtype=np.uint8)
-    full[:, nbytes * 8 - width :] = bits
-    return np.packbits(full, axis=1).reshape(n, nbytes).view(dt).ravel().astype(np.uint64)
+    src[:need] = np.frombuffer(buf, dtype=np.uint8, count=need)
+    return unpack_groups(src, n8, width, dtype)[:n]
 
 
-def unpack_u32(buf, n: int, width: int) -> np.ndarray:
-    """unpack() variant returning uint32 (width <= 32) — skips the uint64
-    widening of the generic API for narrow decode paths."""
-    assert width <= 32
-    if n == 0 or width == 0:
-        return np.zeros(n, dtype=np.uint32)
-    if (n * width) % 32 == 0 and n >= 64:
-        import math
+def unpack_groups(src: np.ndarray, n: int, w: int, dtype=np.uint64) -> np.ndarray:
+    """Unpack n values (n % 8 == 0) of w bits from the flat uint8 array
+    `src`, which holds their n*w/8 packed bytes followed by at least 8
+    bytes of slack (any content).
 
-        P = math.lcm(32, width) // width
-        if 2 * P + 2 < 12 or n // P >= 1024:
-            return _unpack_aligned_lanes(buf, n, width, widen=False)
-    return unpack(buf, n, width).astype(np.uint32)
-
-
-def _unpack_aligned_lanes(buf, n: int, w: int, widen: bool = True) -> np.ndarray:
-    """Extract n w-bit values from 32-bit big-endian words (n*w % 32 == 0)."""
-    import math
-
-    word = 32
-    nwords = (n * w) // word
-    words = np.frombuffer(buf, dtype=">u4", count=nwords).astype(np.uint32)
-    P = math.lcm(word, w) // w
-    L = (P * w) // word
-    out = np.empty(n, dtype=np.uint32)
-    mask = np.uint32((1 << w) - 1) if w < 32 else np.uint32(0xFFFFFFFF)
-    for r in range(P):
-        cnt = len(out[r::P])
-        if not cnt:
-            break
-        bo = r * w
-        wi = bo // word
-        sh = word - w - (bo % word)
-        src = words[wi::L][:cnt]
-        if sh >= 0:
-            vals = (src >> np.uint32(sh)) & mask
-        else:
-            hi = src << np.uint32(-sh)
-            lo = words[wi + 1 :: L][:cnt] >> np.uint32(word + sh)
-            vals = (hi | lo) & mask
-        out[r::P] = vals
-    return out.astype(np.uint64) if widen else out
+    g = 8 / gcd(w, 8) consecutive values fill a whole number of bytes, so
+    the value at phase k of every such group sits at one fixed bit of a
+    window that starts at a fixed byte of the group. One strided,
+    unaligned big-endian view (4-byte windows for w <= 25, else 8) per
+    phase reads all of them: g passes of two ufuncs each (shift into a
+    temporary, mask into the phase's output column), not a sweep of the
+    word array per lane."""
+    g = 8 // math.gcd(w, 8)
+    gb = w * g // 8  # bytes per group
+    ng = n // g
+    out = np.empty((ng, g), dtype=dtype)
+    tmp = np.empty(ng, dtype=dtype)
+    bits = 32 if w <= 25 else 64
+    win_dt = ">u4" if bits == 32 else ">u8"
+    mask = dtype((1 << w) - 1)
+    for k in range(g):
+        r = (k * w) & 7
+        off = (k * w) >> 3
+        win = np.ndarray((ng,), dtype=win_dt, buffer=src, offset=off, strides=(gb,))
+        if r + w <= bits:
+            np.right_shift(win, dtype(bits - w - r), out=tmp, casting="unsafe")
+            np.bitwise_and(tmp, mask, out=out[:, k])
+        else:  # w > 57 at an odd bit phase: the value spans 9 bytes
+            nxt = np.ndarray((ng,), dtype=np.uint8, buffer=src, offset=off + 8, strides=(gb,))
+            hi = win << np.uint64(r)
+            hi |= nxt >> np.uint8(8 - r)
+            np.right_shift(hi, np.uint64(64 - w), out=out[:, k])
+    return out.reshape(-1)
 
 
 def varpack_rows(

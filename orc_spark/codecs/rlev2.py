@@ -24,6 +24,13 @@ words (bitpack._pack_words); patch lists pack word-level (varpack_rows); and
 the blocks' headers, low bits and patch lists are sliced out of those few
 buffers into one flat join. tests/test_rlev2.py pins the encoder's bytes.
 
+The decoder mirrors it: a header scan walks the runs and keeps only the
+offsets of full 512-value DIRECT / PATCHED_BASE runs, which then decode per
+width group in a few wide passes (one row gather of their packed bodies,
+bitpack.unpack_groups, base and patches added in place, rows written through
+a (n/512, 512) view). tests/test_rlev2_decode.py checks it against a per-run
+oracle.
+
 `signed=False` streams skip zigzag (our own extension, recorded in our stripe
 footer; liborc int columns are always signed).
 """
@@ -33,6 +40,7 @@ from __future__ import annotations
 import numpy as np
 
 from .bitpack import (
+    CLOSED_WIDTHS,
     bit_length,
     bit_length_u8,
     closest_width,
@@ -42,7 +50,7 @@ from .bitpack import (
     pack_many,
     packed_size,
     unpack,
-    unpack_u32,
+    unpack_groups,
     varpack_rows,
 )
 from .varint import (
@@ -379,26 +387,41 @@ def _encode_block_scalar(block: np.ndarray, signed: bool) -> bytes:
 def decode_rlev2(buf, n: int, signed: bool = True, dtype=np.int64) -> np.ndarray:
     """Decode `n` values from an RLEv2 stream (ours or liborc's).
 
-    Two-phase batched decode: a light header scan collects every full
-    512-value DIRECT / PATCHED_BASE run (the overwhelmingly common shapes
-    from our encoder) into per-width groups, then each group is gathered and
-    unpacked in ONE vectorized call — turning ~n/512 small unpack calls into
-    a handful of large ones. Odd-length runs, SHORT_REPEAT, and DELTA decode
-    inline as before, so any conformant stream (including liborc's) still
-    parses. `dtype=np.int32` is the narrow output path for streams whose
-    footer stats prove 0 <= min <= max < 2^31: half the output traffic and
-    no int64 widening on the hot DIRECT path."""
+    Two phases. A header scan walks the runs: a full 512-value DIRECT or
+    PATCHED_BASE run (nearly every run our encoder writes) costs two table
+    lookups and two list appends, and only its header and output offsets
+    are kept; odd-length runs, SHORT_REPEAT and DELTA decode inline, so any
+    conformant stream (liborc's too) still parses. _decode_full_runs then
+    decodes the full runs in a few wide passes. `dtype=np.int32` is the
+    narrow output path for streams whose footer stats prove
+    0 <= min <= max < 2^31: half the output traffic, and the full runs'
+    arithmetic stays 32-bit (modulo 2^32, which is what the int32 output
+    keeps of any wider result)."""
     if dtype == np.int32 and signed:
         raise ValueError("narrow int32 decode requires an unsigned stream")
     out = np.empty(n, dtype=dtype)
     mv = memoryview(buf).cast("B")  # pa.Buffer memoryviews are signed by default
     i = 0
     filled = 0
-    dir_runs: list[tuple[int, int, int]] = []  # (width, byte_off, out_off)
-    pat_runs: list[tuple] = []  # (w, base, pw, pll, cfb, low_off, patch_off, out_off)
+    dir_hdr: list[int] = []  # header offsets of full DIRECT runs
+    dir_at: list[int] = []  # ... and their output offsets
+    pat_hdr: list[int] = []  # the same for full PATCHED_BASE runs
+    pat_at: list[int] = []
     with np.errstate(over="ignore"):
         while filled < n:
             hdr = mv[i]
+            if hdr & 0xC1 == 0x81 and mv[i + 1] == 255:  # full PATCHED_BASE
+                pat_hdr.append(i)
+                pat_at.append(filled)
+                i += _BODY512[hdr] + _PATCH_TAIL[(mv[i + 2] << 8) | mv[i + 3]]
+                filled += BLOCK
+                continue
+            if hdr & 0xC1 == 0x41 and mv[i + 1] == 255:  # full DIRECT
+                dir_hdr.append(i)
+                dir_at.append(filled)
+                i += 2 + _BODY512[hdr]
+                filled += BLOCK
+                continue
             kind = hdr >> 6
             if kind == 0:  # SHORT_REPEAT
                 w = ((hdr >> 3) & 7) + 1
@@ -414,13 +437,8 @@ def decode_rlev2(buf, n: int, signed: bool = True, dtype=np.int64) -> np.ndarray
                 L = (((hdr & 1) << 8) | mv[i + 1]) + 1
                 i += 2
                 nbytes = packed_size(L, w)
-                if L == BLOCK:
-                    dir_runs.append((w, i, filled))
-                else:
-                    vals = unpack(mv[i : i + nbytes], L, w)
-                    out[filled : filled + L] = (
-                        unzigzag(vals) if signed else vals.view(np.int64)
-                    )
+                vals = unpack(mv[i : i + nbytes], L, w)
+                out[filled : filled + L] = unzigzag(vals) if signed else vals.view(np.int64)
                 i += nbytes
                 filled += L
             elif kind == 3:  # DELTA
@@ -448,7 +466,7 @@ def decode_rlev2(buf, n: int, signed: bool = True, dtype=np.int64) -> np.ndarray
                     seg[1:] = base + np.cumsum(deltas)
                 out[filled : filled + L] = seg
                 filled += L
-            else:  # PATCHED_BASE
+            else:  # PATCHED_BASE of fewer than 512 values
                 w = decode_width((hdr >> 1) & 0x1F)
                 L = (((hdr & 1) << 8) | mv[i + 1]) + 1
                 bw = ((mv[i + 2] >> 5) & 7) + 1
@@ -461,149 +479,144 @@ def decode_rlev2(buf, n: int, signed: bool = True, dtype=np.int64) -> np.ndarray
                 base = -(raw & (msb - 1)) if raw & msb else raw
                 i += bw
                 nbytes = packed_size(L, w)
-                cfb = closest_width(pgw + pw)
-                pbytes = packed_size(pll, cfb) if pll else 0
-                if L == BLOCK:
-                    pat_runs.append((w, base, pw, pll, cfb, i, i + nbytes, filled))
-                    i += nbytes + pbytes
-                else:
-                    vals = unpack(mv[i : i + nbytes], L, w)
-                    i += nbytes
-                    if pll:
-                        entries = unpack(mv[i : i + pbytes], pll, cfb)
-                        i += pbytes
-                        gaps = (entries >> np.uint64(pw)).astype(np.int64)
-                        patches = entries & ((np.uint64(1) << np.uint64(pw)) - np.uint64(1))
-                        pos = np.cumsum(gaps)
-                        vals[pos] |= patches << np.uint64(w)
-                    out[filled : filled + L] = vals.view(np.int64) + np.int64(base)
+                vals = unpack(mv[i : i + nbytes], L, w)
+                i += nbytes
+                if pll:
+                    cfb = closest_width(pgw + pw)
+                    pbytes = packed_size(pll, cfb)
+                    entries = unpack(mv[i : i + pbytes], pll, cfb)
+                    i += pbytes
+                    gaps = (entries >> np.uint64(pw)).astype(np.int64)
+                    patches = entries & ((np.uint64(1) << np.uint64(pw)) - np.uint64(1))
+                    pos = np.cumsum(gaps)
+                    vals[pos] |= patches << np.uint64(w)
+                out[filled : filled + L] = vals.view(np.int64) + np.int64(base)
                 filled += L
     if filled != n:
         raise ValueError(f"RLEv2 stream decoded {filled} values, expected {n}")
-    if dir_runs or pat_runs:
-        _decode_batched(mv, out, dir_runs, pat_runs, signed)
+    if dir_hdr or pat_hdr:
+        _decode_full_runs(mv, out, dir_hdr, dir_at, pat_hdr, pat_at, signed)
     return out
 
 
-def _extract_patches(buf8: np.ndarray, sel: list) -> tuple | None:
-    """Vectorized patch-list extraction for a group of full PATCHED_BASE runs
-    (the tail of the two-phase decode — previously a per-run Python loop of
-    ~n/512 small unpack+cumsum calls, the last per-block loop on the decode
-    hot path for outlier-heavy data).
-
-    Every patch entry is a cfb-bit big-endian field at bit j*cfb of its run's
-    byte-aligned patch list. All entries of all runs extract in one pass: an
-    8-byte gather window per entry, big-endian u64 combine, shift/mask (cfb
-    <= 40 always fits the top of the window; trailing window bytes past the
-    field — including any clamped past the buffer end — are shifted out).
-    Patch positions are per-run *inclusive* cumsums of the gap fields,
-    computed as one segmented cumsum.
-
-    Returns (run_row, pos, patches) concatenated over runs with pll > 0, or
-    None when no run carries patches."""
-    rows = np.array([k for k, r in enumerate(sel) if r[3]], dtype=np.int64)
-    if not len(rows):
-        return None
-    pw = np.array([sel[k][2] for k in rows], dtype=np.int64)
-    pll = np.array([sel[k][3] for k in rows], dtype=np.int64)
-    cfb = np.array([sel[k][4] for k in rows], dtype=np.int64)
-    poff = np.array([sel[k][6] for k in rows], dtype=np.int64)
-    n_entries = int(pll.sum())
-    rid = np.repeat(np.arange(len(rows)), pll)
-    starts = np.r_[0, np.cumsum(pll)[:-1]]
-    j = np.arange(n_entries, dtype=np.int64) - np.repeat(starts, pll)
-    bitoff = j * cfb[rid]
-    byte = poff[rid] + (bitoff >> 3)
-    win = buf8[np.minimum(byte[:, None] + np.arange(8), len(buf8) - 1)]
-    u = np.ascontiguousarray(win).view(">u8")[:, 0].astype(np.uint64)
-    sh = (64 - cfb[rid] - (bitoff & 7)).astype(np.uint64)
-    cfb_e = cfb[rid].astype(np.uint64)
-    # cfb == 64 is reachable (e.g. pw=56 + pgw=8) and numpy's shift by the
-    # full word width is UNDEFINED — build the mask branch-free without a
-    # 64-bit shift. (sh stays safe: cfb=64 forces bitoff % 8 == 0, sh = 0.)
-    mask = np.where(
-        cfb_e >= 64,
-        np.uint64(0xFFFFFFFFFFFFFFFF),
-        (np.uint64(1) << (cfb_e & np.uint64(63))) - np.uint64(1),
-    )
-    entries = (u >> sh) & mask
-    pw_e = pw[rid].astype(np.uint64)
-    gaps = (entries >> pw_e).astype(np.int64)
-    patches = entries & ((np.uint64(1) << pw_e) - np.uint64(1))
-    c = np.cumsum(gaps)
-    pos = c - np.repeat(c[starts] - gaps[starts], pll)
-    return rows[rid], pos, patches
+# header-scan tables: a full run's packed bytes (64 * its width) by its first
+# header byte; a PATCHED_BASE run's other bytes (4 header bytes, base, patch
+# list) by its third and fourth header bytes. pgw + pw > 64 is malformed:
+# its entry width is clamped here and the stream refused in _decode_full_runs
+_WIDTHS = np.array(CLOSED_WIDTHS, dtype=np.int64)  # 5-bit code -> width
+_BODY512 = (64 * _WIDTHS[(np.arange(256) >> 1) & 31]).tolist()
 
 
-def _decode_batched(
-    mv, out: np.ndarray, dir_runs: list, pat_runs: list, signed: bool
+def _patch_fields(b2: np.ndarray, b3: np.ndarray) -> tuple:
+    """(bw, pw, pgw, pll, cfb) of PATCHED_BASE header bytes 3 and 4."""
+    pw = _WIDTHS[b2 & 31]
+    pgw = (b3 >> 5) + 1
+    return (b2 >> 5) + 1, pw, pgw, b3 & 31, _CLOSED_LUT[np.minimum(pgw + pw, 64)]
+
+
+_b = np.arange(1 << 16)
+_bw, _, _, _pll, _cfb = _patch_fields(_b >> 8, _b & 255)
+_PATCH_TAIL = (4 + _bw + (_pll * _cfb + 7) // 8).tolist()
+del _b, _bw, _pll, _cfb
+
+
+def _decode_full_runs(
+    mv, out: np.ndarray, dir_hdr: list, dir_at: list, pat_hdr: list, pat_at: list,
+    signed: bool,
 ) -> None:
-    """Vectorized execution of collected full-block runs: per width group,
-    one fancy-index gather of the packed bytes + one unpack + one scatter.
-    The narrow (int32 out, width <= 32, unsigned) groups stay in uint32 end
-    to end — no int64 widening anywhere on the path."""
-    buf8 = np.frombuffer(mv, dtype=np.uint8)
-    narrow_out = out.dtype == np.int32 and not signed
-    span = np.arange(BLOCK, dtype=np.int64)
+    """Decode the full 512-value runs the header scan collected into `out`,
+    per width group: the group's packed bodies are copied back to back
+    (one row gather), unpacked at once (bitpack.unpack_groups), based (or
+    unzigzagged) and written to their output rows. Rows on the 512-value
+    grid are written through a (n/512, 512) view of `out`; a stream with
+    odd-length runs before a full one takes a flat index instead. Then all
+    patch entries of all PATCHED_BASE runs are read at once, one 8-byte
+    window each, and added to their values (a patch's bits lie above the
+    run's low bits, so adding them is or-ing them in)."""
+    buf8 = np.zeros(len(mv) + 8, dtype=np.uint8)
+    buf8[: len(mv)] = np.frombuffer(mv, dtype=np.uint8)
+    narrow = out.dtype == np.int32  # unsigned; results modulo 2^32
+    grid = out[: len(out) // BLOCK * BLOCK].reshape(-1, BLOCK)
+
+    def place(at: np.ndarray, vals: np.ndarray) -> None:
+        if not (at % BLOCK).any():
+            grid[at // BLOCK] = vals
+        else:
+            out[(at[:, None] + np.arange(BLOCK)).ravel()] = vals.ravel()
+
+    def runs(body: np.ndarray, w: int) -> np.ndarray:
+        """(len(body), 512) values of the runs whose packed bits start at
+        `body`, uint32 where they fit, else uint64."""
+        nbytes = 64 * w
+        src = np.empty(len(body) * nbytes + 8, dtype=np.uint8)
+        rows = np.lib.stride_tricks.as_strided(
+            buf8, (len(buf8) - nbytes + 1, nbytes), (1, 1), writeable=False
+        )
+        src[:-8].reshape(-1, nbytes)[:] = rows[body]
+        dt = np.uint32 if w <= 32 else np.uint64
+        return unpack_groups(src, len(body) * BLOCK, w, dt).reshape(-1, BLOCK)
+
     with np.errstate(over="ignore"):
-        if dir_runs:
-            dr = np.array(dir_runs, dtype=np.int64)
-            for w in np.unique(dr[:, 0]):
-                g = dr[dr[:, 0] == w]
-                nbytes = packed_size(BLOCK, int(w))
-                mat = buf8[g[:, 1, None] + np.arange(nbytes)]
-                idx = (g[:, 2, None] + span).ravel()
-                if narrow_out and w <= 32:
-                    out[idx] = unpack_u32(mat.ravel(), len(g) * BLOCK, int(w)).view(
-                        np.int32
-                    )
-                else:
-                    vals = unpack(mat.ravel(), len(g) * BLOCK, int(w))
-                    out[idx] = unzigzag(vals) if signed else vals.view(np.int64)
-        if pat_runs:
-            ws = np.array([r[0] for r in pat_runs], dtype=np.int64)
-            for w in np.unique(ws):
-                sel = [r for r in pat_runs if r[0] == w]
-                nbytes = packed_size(BLOCK, int(w))
-                starts = np.array([r[5] for r in sel], dtype=np.int64)
-                mat = buf8[starts[:, None] + np.arange(nbytes)]
-                bases = np.array([r[1] for r in sel], dtype=np.int64)
-                # narrow patched path: values < 2^31 and base >= 0 (by the
-                # caller's stats gate), so low bits, patches, and the base
-                # addition all fit uint32 with no wrap. A foreign stream with
-                # inaccurate footer stats could still carry w + pw > 32 (the
-                # patch shift would overflow the uint32 lane), so such groups
-                # fall back to the int64 path instead of decoding garbage.
-                maxwp = max(int(r[0]) + (int(r[2]) if r[3] else 0) for r in sel)
-                nrw = (
-                    narrow_out
-                    and w < 32
-                    and maxwp <= 32
-                    and bases.min(initial=0) >= 0
-                )
-                if nrw:
-                    vals = unpack_u32(mat.ravel(), len(sel) * BLOCK, int(w)).reshape(
-                        len(sel), BLOCK
-                    )
-                else:
-                    vals = unpack(mat.ravel(), len(sel) * BLOCK, int(w)).reshape(
-                        len(sel), BLOCK
-                    )
-                pr = _extract_patches(buf8, sel)
-                if pr is not None:
-                    rk, pos, patches = pr
-                    flat = rk * BLOCK + pos  # unique positions: gaps are
-                    # strictly positive within a run after the first entry,
-                    # so fancy-index |= never double-writes
-                    if nrw:
-                        vals.ravel()[flat] |= patches.astype(np.uint32) << np.uint32(w)
-                    else:
-                        vals.ravel()[flat] |= patches << np.uint64(w)
-                outs = np.array([r[7] for r in sel], dtype=np.int64)
-                tgt = (outs[:, None] + span).ravel()
-                if nrw:
-                    res32 = vals + bases.astype(np.uint32)[:, None]
-                    out[tgt] = res32.view(np.int32).ravel()
-                else:
-                    res = vals.view(np.int64) + bases[:, None]
-                    out[tgt] = res.ravel()
+        if dir_hdr:
+            hdr = np.array(dir_hdr, dtype=np.int64)
+            at = np.array(dir_at, dtype=np.int64)
+            wv = _WIDTHS[(buf8[hdr] >> 1) & 31]
+            for w in np.unique(wv).tolist():
+                g = np.flatnonzero(wv == w)
+                vals = runs(hdr[g] + 2, w)
+                if signed:
+                    vals = unzigzag(vals)
+                elif w > 32:
+                    vals = vals.view(np.int64)
+                place(at[g], vals)
+        if not pat_hdr:
+            return
+        hdr = np.array(pat_hdr, dtype=np.int64)
+        at = np.array(pat_at, dtype=np.int64)
+        wv = _WIDTHS[(buf8[hdr] >> 1) & 31]
+        bw, pw, pgw, pll, cfb = _patch_fields(
+            buf8[hdr + 2].astype(np.int64), buf8[hdr + 3].astype(np.int64)
+        )
+        if (pgw + pw > 64).any():
+            raise ValueError("RLEv2 PATCHED_BASE patch entries wider than 64 bits")
+        # the 8 bytes at every offset of the stream, big-endian
+        win = np.ndarray((len(mv) + 1,), dtype=">u8", buffer=buf8, strides=(1,))
+        raw = win[hdr + 4] >> (64 - 8 * bw).astype(np.uint64)
+        msb = np.uint64(1) << (8 * bw - 1).astype(np.uint64)
+        mag = (raw & (msb - np.uint64(1))).astype(np.int64)
+        base = np.where(raw & msb, -mag, mag)
+        body = hdr + 4 + bw
+        for w in np.unique(wv).tolist():
+            g = np.flatnonzero(wv == w)
+            vals = runs(body[g], w)
+            bg = base[g]
+            # based low bits stay 32-bit when the output keeps only 32 bits
+            # or when no sum leaves [0, 2^32)
+            if narrow or (w < 32 and bg.min() >= 0 and int(bg.max()) + (1 << w) <= 1 << 32):
+                if vals.dtype != np.uint32:
+                    vals = vals.astype(np.uint32)
+                vals += bg.astype(np.uint32)[:, None]
+            elif vals.dtype == np.uint32:
+                vals = vals + bg[:, None]
+            else:
+                vals = vals.view(np.int64)
+                vals += bg[:, None]
+            place(at[g], vals)
+        has = np.flatnonzero(pll)
+        if not len(has):
+            return
+        cnt = pll[has]
+        rid = np.repeat(has, cnt)
+        first = np.cumsum(cnt) - cnt
+        bit = (np.arange(len(rid), dtype=np.int64) - np.repeat(first, cnt)) * cfb[rid]
+        # an entry's cfb bits start at bit (bit & 7) of its window; cfb = 64
+        # entries are byte-aligned, so every entry fits its window
+        u = win[(body + 64 * wv)[rid] + (bit >> 3)].astype(np.uint64)
+        entries = (u << (bit & 7).astype(np.uint64)) >> (64 - cfb[rid]).astype(np.uint64)
+        pwr = pw[rid].astype(np.uint64)
+        gaps = (entries >> pwr).astype(np.int64)
+        patch = (entries & ((np.uint64(1) << pwr) - np.uint64(1))) << wv[rid].astype(np.uint64)
+        c = np.cumsum(gaps)
+        pos = at[rid] + c - np.repeat(c[first] - gaps[first], cnt)
+        # positions in a run are distinct (gaps after its first are >= 1)
+        out[pos] += patch.astype(np.uint32).view(np.int32) if narrow else patch.view(np.int64)

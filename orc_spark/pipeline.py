@@ -719,7 +719,7 @@ def decode_table(
     out_schema = ", ".join(f"{n} {_spark_type_str(schema[n])}" for n in names)
     entries = plan_table(manifest, preds, prune_metrics)
     if not entries:  # every partition pruned: empty result, no job
-        return spark.createDataFrame([], out_schema)
+        return spark.createDataFrame([], ddl_type(spark, out_schema))
     accs = (None, None, None)
     if prune_metrics is not None:
         accs = tuple(spark.sparkContext.accumulator(0) for _ in range(3))
@@ -941,7 +941,16 @@ def run_tasks(spark: SparkSession, items: list, fn) -> list[dict]:
     worker; returns the dicts every task yielded, in task order. For jobs
     that hand back only metadata (the encode's map and reduce, concat
     compaction): no DataFrame, Catalyst plan, Arrow batches or Row objects,
-    which cost a fixed ~0.04 s per job (BENCH.md §13)."""
+    which cost a fixed ~0.04 s per job (BENCH.md §13).
+
+    Work first, input last: the job is a `parallelize([], n)`, so a task's
+    input is an empty partition, and the task runs `fn` before it drains
+    that input. The input reaches a reused worker after its command, often
+    ~40 ms later (a delayed-ACK stall on the JVM->worker socket, BENCH.md
+    §16); a task that read it first would start its work that much later.
+    (`parallelize(range(n))` reads its input before any engine code runs.)
+    The drain stays: PySpark reuses a worker only if its input was
+    consumed."""
     if not items:
         return []
     sc = spark.sparkContext
@@ -951,11 +960,28 @@ def run_tasks(spark: SparkSession, items: list, fn) -> list[dict]:
     if spark.conf.get("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled") == "true":
         sc.environment["SPARK_SIMPLIFIED_TRACEBACK"] = "1"
 
-    def run(it):
-        for i in it:
-            yield from fn(items[i])
+    def run(i, it):
+        yield from fn(items[i])
+        for _ in it:
+            pass
 
-    return sc.parallelize(range(len(items)), len(items)).mapPartitions(run).collect()
+    return sc.parallelize([], len(items)).mapPartitionsWithIndex(run).collect()
+
+
+_DDL_TYPES: dict = {}  # DDL schema string -> its StructType, for the process
+
+
+def ddl_type(spark: SparkSession, ddl: str):
+    """The StructType of a DDL schema string. Spark parses DDL through the
+    JVM (3.7-4.1 ms a call), so each string is parsed once per process."""
+    t = _DDL_TYPES.get(ddl)
+    if t is None:
+        t = _DDL_TYPES[ddl] = spark._parse_ddl(ddl)
+    return t
+
+
+# output a scan task holds while it waits for its trigger (scan_bins)
+TRIGGER_HOLD_BYTES = 32 << 20
 
 
 def scan_bins(spark: SparkSession, bins: list, read_bin, schema: str) -> DataFrame:
@@ -965,14 +991,52 @@ def scan_bins(spark: SparkSession, bins: list, read_bin, schema: str) -> DataFra
     `schema`. The manifest already holds the file list and
     STRIPE_FILE_SCHEMA, so building this DataFrame starts no Spark job — no
     file listing, no schema inference — and the blobs never pass through a
-    JVM parquet scan. A job that only returns metadata uses run_tasks."""
+    JVM parquet scan. A job that only returns metadata uses run_tasks.
+
+    Work first, input last: a task's one-row trigger input (its range row
+    i) reaches a reused worker ~40 ms after the task starts (run_tasks
+    says why), so the task does not wait for it; scan_task says what it
+    does instead."""
 
     def run(batches):
-        for b in batches:
-            for i in b.column(0).to_pylist():
-                yield from read_bin(bins[i])
+        from pyspark import TaskContext
 
-    return spark.range(len(bins), numPartitions=len(bins)).mapInArrow(run, schema)
+        yield from scan_task(bins, read_bin, TaskContext.get().partitionId(), batches)
+
+    return spark.range(len(bins), numPartitions=len(bins)).mapInArrow(run, ddl_type(spark, schema))
+
+
+def scan_task(bins: list, read_bin, part: int, batches):
+    """One scan_bins task, given its partition id and its trigger batches.
+    It reads the bin its partition id names and holds the output (up to
+    TRIGGER_HOLD_BYTES), then drains the trigger. When the trigger is
+    that id — always, unless the plan around the scan renumbers its
+    partitions (a union after another input, a coalesce) — the held
+    batches go out and the read goes on. Otherwise they are dropped, the
+    task's accumulators get back the values they had before the read, and
+    the task reads the bins its trigger names. So read_bin must be safe to
+    stop early. The drain stays: PySpark reuses a worker only if its input
+    was consumed."""
+    from pyspark.accumulators import _accumulatorRegistry as registry
+
+    before = {k: a._value for k, a in registry.items()}
+    work = iter(read_bin(bins[part]) if part < len(bins) else ())
+    held, size = [], 0
+    for b in work:
+        held.append(b)
+        size += b.nbytes
+        if size >= TRIGGER_HOLD_BYTES:
+            break
+    rows = [v for b in batches for v in b.column(0).to_pylist()]
+    if rows == [part]:
+        yield from held
+        yield from work
+        return
+    del held, work
+    for k, v in before.items():
+        registry[k]._value = v
+    for j in rows:
+        yield from read_bin(bins[j])
 
 
 def decode_file(
@@ -1052,15 +1116,14 @@ def export_orc(
         raise ValueError(f"no committed files for snapshot {snapshot}")
     os.makedirs(out_dir, exist_ok=True)
 
-    def export_bin(entries):
-        from pyspark import TaskContext
-
+    def export_bin(numbered):
         from .orcexport import OrcFileWriter
 
-        # the output name is (pid, task)-scoped: a retried task regenerates
-        # the identical name (idempotent), and files of one pid packed into
-        # different bins never race on a rename
-        task_part = TaskContext.get().partitionId()
+        # the output name is (pid, bin)-scoped: a retried task, or a scan
+        # task that starts this bin and drops it (pipeline.scan_task),
+        # regenerates the identical name (idempotent), and files of one pid
+        # packed into different bins never race on a rename
+        task_part, entries = numbered
         writers: dict[str, tuple[OrcFileWriter, str, str]] = {}
         metas = []
 
@@ -1113,7 +1176,7 @@ def export_orc(
             yield pa.RecordBatch.from_pylist(metas)
 
     bins = file_bins(file_sizes(m), entries, spark.sparkContext.defaultParallelism)
-    return scan_bins(spark, bins, export_bin, EXPORT_META_SCHEMA)
+    return scan_bins(spark, list(enumerate(bins)), export_bin, EXPORT_META_SCHEMA)
 
 
 def import_orc(

@@ -14,7 +14,8 @@ from orc_spark import deletes
 from orc_spark.datasource import register
 from orc_spark.fixtures import tokens_arrow
 from orc_spark.pipeline import (
-    decode_table, encode_table, file_bins, file_sizes, read_table_bin, scan_bins,
+    decode_table, encode_table, export_orc, file_bins, file_sizes, read_table_bin, run_tasks,
+    scan_bins, scan_task,
 )
 from orc_spark.warehouse import Warehouse
 
@@ -193,3 +194,72 @@ def test_reused_worker_task_rereads_no_zip_directory(spark, wide_wh):
         setup_reads += [b.start - a.end for a, b in zip(tasks, tasks[1:])]
     assert setup_reads and setup_reads == [0] * len(setup_reads)
     assert min(r.frozen for r in out) > 0
+
+
+def test_work_first_tasks_run_on_reused_workers(spark):
+    """scan_bins and run_tasks tasks do their work before they read their
+    input, and still drain it, so PySpark reuses their workers: 40 tasks
+    on 4 slots run in a few worker processes, not one each."""
+
+    def read_bin(i):
+        yield pa.RecordBatch.from_pylist([{"pid": os.getpid(), "bin": i}])
+
+    rows = scan_bins(spark, list(range(40)), read_bin, "pid long, bin long").collect()
+    assert sorted(r.bin for r in rows) == list(range(40))
+    assert len({r.pid for r in rows}) <= 8
+
+    got = run_tasks(spark, list(range(40)), lambda i: [{"pid": os.getpid(), "i": i}])
+    assert [d["i"] for d in got] == list(range(40))
+    assert len({d["pid"] for d in got}) <= 8
+
+
+def test_scan_task_reads_the_bin_its_trigger_names(spark):
+    """The partition id only guesses the bin: a task whose trigger names
+    another bin drops what it read, with the accumulator counts of that
+    read, and reads the named bin."""
+    acc = spark.sparkContext.accumulator(0)
+    bins = [[10, 11], [20], [30, 31, 32]]
+
+    def read_bin(b):
+        for v in b:
+            acc.add(1)
+            yield pa.RecordBatch.from_pylist([{"v": v}])
+
+    def trigger(*rows):
+        return [pa.RecordBatch.from_pylist([{"id": r} for r in rows])]
+
+    def values(part, *rows):
+        return [v for b in scan_task(bins, read_bin, part, trigger(*rows))
+                for v in b.column(0).to_pylist()]
+
+    assert values(2, 2) == [30, 31, 32] and acc.value == 3
+    assert values(1, 0) == [10, 11] and acc.value == 5
+    assert values(7, 1) == [20] and acc.value == 6  # an id past the bins
+    assert values(0, 2, 1) == [30, 31, 32, 20] and acc.value == 10
+
+
+def test_scans_under_renumbering_plans_are_exact(spark, wide_wh):
+    """A union after another input and a coalesce run scan tasks under
+    partition ids that are not their bins'; each read stays exact."""
+    wh, t = wide_wh
+    one = decode_table(spark, wh, columns=["doc_id"])
+    # one partition ahead of the scan's, so its task i runs as partition i + 1
+    first = spark.range(1, numPartitions=1).selectExpr("'x' doc_id")
+    want = sorted(t.column("doc_id").to_pylist())
+    assert sorted(r.doc_id for r in first.unionAll(one).collect()) == sorted(want + ["x"])
+    assert sorted(r.doc_id for r in one.unionAll(one).collect()) == sorted(want * 2)
+    assert sorted(r.doc_id for r in one.coalesce(1).collect()) == want
+
+
+def test_export_under_a_renumbering_plan_writes_each_file_once(spark, wide_wh, tmp_path):
+    """A scan task that starts a bin and drops it rewrites that bin's
+    export files under the same names, so the output is what the metas
+    list, once."""
+    wh, t = wide_wh
+    out = str(tmp_path / "orc")
+    # one partition ahead of the export's, so its task i runs as partition i + 1
+    first = spark.range(1, numPartitions=1).selectExpr(
+        "'x' pid", "0L stripes", "'x' file", "0L n_rows", "0L orc_bytes")
+    metas = first.unionAll(export_orc(spark, wh, out, snapshot="w")).collect()[1:]
+    assert sorted(os.listdir(out)) == sorted(os.path.basename(m.file) for m in metas)
+    assert sum(m.n_rows for m in metas) == t.num_rows
