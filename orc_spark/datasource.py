@@ -176,6 +176,14 @@ def register(spark) -> None:
 _REGISTERED_VARIANT: dict[int, bool] = {}
 
 
+def _cores() -> int:
+    """The cores this process may run on: its CPU affinity mask where the
+    platform has one, as `nproc` counts them, else the host's count."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 class TokstripeDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
@@ -365,9 +373,9 @@ class _TokstripeReaderBase(DataSourceReader):
         entries = plan_table(self._manifest, self._preds + self._hint_preds)
         # the same size-balanced bins as decode_table, one InputPartition
         # each. The planner runs in a Python worker that cannot reach the
-        # SparkContext, so the planning host's cores stand in for
+        # SparkContext, so the cores it may run on stand in for
         # defaultParallelism (equal under local[*])
-        bins = file_bins(file_sizes(self._manifest), entries, os.cpu_count() or 1)
+        bins = file_bins(file_sizes(self._manifest), entries, _cores())
         # empty scan: the API needs >= 1 partition; an empty bin reads
         # nothing
         return [_BinPartition(b) for b in bins] or [_BinPartition([])]
@@ -495,9 +503,9 @@ class TokstripeStreamReader(DataSourceStreamReader):
         if self._bound is None:
             self._bound = self._bind()
         tasks = plan_changes(wh, commits, self._bound or {}, cdc=self._cdc)
-        # planning runs in a Python worker: the host's cores stand in for
-        # defaultParallelism, as in the batch reader
-        bins = file_bins({t.file: t.size for t in tasks}, tasks, os.cpu_count() or 1)
+        # planning runs in a Python worker: the cores it may run on stand
+        # in for defaultParallelism, as in the batch reader
+        bins = file_bins({t.file: t.size for t in tasks}, tasks, _cores())
         return [_BinPartition(b) for b in bins] or [_BinPartition([])]
 
     def read(self, partition: _BinPartition):
@@ -640,9 +648,9 @@ class TokstripeStreamWriter(DataSourceStreamArrowWriter):
     """Micro-batch sink with exactly-once across driver restarts: tasks
     stage data files under a unique per-invocation snapshot name; commit
     publishes them as '<snapshot>-e<batchId>'. The commit is the replay
-    check: a replayed epoch, whose name the commit log holds, deletes its
-    re-staged files instead of double-publishing. A name only an unlogged
-    manifest holds (warehouse.py) is no replay: the commit raises."""
+    check: a replayed epoch, whose commit raises SnapshotExists (the name
+    is committed), deletes its re-staged files instead of
+    double-publishing."""
 
     def __init__(self, options, schema: StructType):
         self.options = dict(options)
@@ -660,14 +668,11 @@ class TokstripeStreamWriter(DataSourceStreamArrowWriter):
         )
 
     def commit(self, messages, batchId: int):
-        from .warehouse import SnapshotExists, Warehouse
+        from .warehouse import SnapshotExists
 
-        name = self._epoch_snapshot(batchId)
         try:
-            _commit(self.options, self.schema, name, messages)
+            _commit(self.options, self.schema, self._epoch_snapshot(batchId), messages)
         except SnapshotExists:
-            if name not in Warehouse(self.options.get("path")).commit_log():
-                raise
             # replayed epoch after restart: already published exactly once —
             # drop the re-staged files
             _remove_staged(messages)

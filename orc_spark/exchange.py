@@ -46,9 +46,10 @@ from .codecs.xxh64 import HASHABLE, hash_int, xxhash64
 
 MAP_META_SCHEMA = (
     "task long, file string, pid string, seg long, n_rows long, tokens long, "
-    "read_s double, hash_s double, sort_s double, write_s double"
+    "read_s double, hash_s double, sort_s double, write_s double, cpu_s double"
 )
-MAP_TIMERS = ("read_s", "hash_s", "sort_s", "write_s")
+# a map task's wall seconds per step, and its process CPU seconds (cpu_s)
+MAP_TIMERS = ("read_s", "hash_s", "sort_s", "write_s", "cpu_s")
 
 # Arrow bytes a map task clusters at once: one sort, one segment per pid
 MAP_CHUNK_BYTES = 128 << 20
@@ -209,6 +210,7 @@ def map_task(
     then `take_rows`), into one IPC file of per-pid segments under
     `stage`. Rows of a pid in `skip` (adopted) are dropped. Yields
     one MAP_META_SCHEMA dict per segment; the task's timers repeat on each."""
+    cpu0 = time.process_time()
     t = dict.fromkeys(MAP_TIMERS, 0.0)
     path = os.path.join(stage, f"map-{task:05d}-{uuid.uuid4().hex[:8]}.arrow")
     writer, rows, seg = None, [], 0
@@ -263,6 +265,7 @@ def map_task(
         t0 = time.perf_counter()
         writer.close()
         t["write_s"] += time.perf_counter() - t0
+    t["cpu_s"] = time.process_time() - cpu0
     for r in rows:
         yield {**r, **t}
 

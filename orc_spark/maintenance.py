@@ -336,9 +336,9 @@ def expire_snapshots(
     doomed = [wh.read_manifest(s) for s in expire]
     # drop manifests first so the survivors' reference set is final
     n = 0
-    for s in expire:
+    for f in filter(None, map(wh.manifest_file, expire)):
         try:
-            os.remove(wh.manifest_file(s))
+            os.remove(f)
             n += 1
         except OSError:
             pass
@@ -361,16 +361,14 @@ def expire_snapshots(
 
 
 def _reachable(wh: Warehouse) -> set[str]:
-    """Every data and delete file (deletes.py) a manifest on disk lists:
+    """Every data and delete file (deletes.py) a committed manifest lists:
     the root of reachability for expiry and vacuum."""
     from .deletes import delete_files_of
 
     out: set[str] = set()
-    for f in os.listdir(wh.manifest_dir):
-        if f.startswith("snap-") and f.endswith(".json"):
-            m = wh.read_manifest(f[len("snap-"):-len(".json")])
-            out.update(p["file"] for p in (m or {}).get("partitions", {}).values())
-            out.update(delete_files_of(m))
+    for m in wh.manifests():
+        out.update(p["file"] for p in m["partitions"].values())
+        out.update(delete_files_of(m))
     return out
 
 
@@ -383,7 +381,8 @@ def vacuum_orphans(
 ) -> dict:
     """Remove-orphan-files (the Iceberg `remove_orphan_files` analog):
     delete data files, bloom sidecars and `*.inprogress-*` temps on disk
-    that NO manifest references, once they are older than `min_age_s`.
+    that NO committed manifest references, once they are older than
+    `min_age_s`.
     It defaults to 3 days (Iceberg's remove_orphan_files default) because
     a vacuum racing an encode — which publishes no manifest until its one
     commit — would otherwise delete the run's already-renamed data files
@@ -393,17 +392,19 @@ def vacuum_orphans(
     never rewritten, so a file of it that the manifest does not list can
     never be adopted either: it goes like any other.
 
-    So are a manifest no log entry names (warehouse.py: a writer died
-    between the two, and it holds the name until it goes), the files only
-    it lists, and a commit's leftover `*.tmp`.
+    So are a manifest no log entry names (warehouse.py: its writer died
+    before its commit entry, or lost it), the files only it lists, and a
+    commit's leftover `*.tmp`. An uncommitted manifest holds no name, so
+    this is only a matter of space.
 
     An encode's exchange directory (exchange.py) is removed with its
     files once older than `min_age_s`: a running encode's is younger, and
     a finished one removes its own, so an old one was left by a killed
     driver.
 
-    Committed files are never touched: the manifest set is the root of
-    reachability, exactly like Iceberg's metadata tree. Returns
+    Committed files are never touched: the manifests the log's commit
+    entries name are the root of reachability, exactly like Iceberg's
+    metadata tree. Returns
     {'files_deleted', 'bytes_deleted'}."""
     wh = Warehouse(warehouse_path)
     now = time.time()
@@ -421,9 +422,9 @@ def vacuum_orphans(
         except OSError:
             pass  # raced with a concurrent delete/rename
 
-    logged = set(wh.commit_log())
+    named = set(wh.state()[1].values())
     for f in os.listdir(wh.manifest_dir):
-        if f.endswith(".tmp") or (f.startswith("snap-") and f[len("snap-"):-len(".json")] not in logged):
+        if f.endswith(".tmp") or (f.startswith("snap-") and f not in named):
             reap(os.path.join(wh.manifest_dir, f))
     committed = _reachable(wh)
     for root, _, files in os.walk(wh.data_dir):

@@ -81,12 +81,13 @@ from . import exchange
 from .codecs import bloom as bloomc
 from .evolution import column_maps, fill_type
 from .stripe import decode_stripe, encode_stripe, footer_from_json, footer_to_json
-from .warehouse import APPEND, INT_TYPES, Warehouse, current_ids, held, parse_key, render_key
+from .warehouse import APPEND, INT_TYPES, Warehouse, current_ids, parse_key, render_key
 
 # a reduce task's per-pid seconds in encode_stripe + blooms, in file
-# writes and in reading its segments (summed into the manifest's
+# writes and in reading its segments, and its process CPU seconds from
+# the pid's first row to its file's close (summed into the manifest's
 # `encode_phases`, not kept per pid)
-REDUCE_TIMERS = ("stripe_s", "write_s", "read_s")
+REDUCE_TIMERS = ("stripe_s", "write_s", "read_s", "cpu_s")
 
 STRIPE_FILE_SCHEMA = pa.schema(
     [
@@ -162,6 +163,7 @@ class _PidWriter:
         self.stripe_s = 0.0
         self.write_s = 0.0
         self.t0 = time.perf_counter()
+        self.cpu0 = time.process_time()
 
     def write_stripe(self, tbl: pa.Table) -> None:
         # deterministic stripe CONTENT: order rows by doc_id here (vectorized
@@ -251,6 +253,7 @@ class _PidWriter:
             "max_doc_id": render_key(self.max_doc),
             "stripe_s": self.stripe_s,
             "write_s": self.write_s,
+            "cpu_s": time.process_time() - self.cpu0,
         }
 
 
@@ -383,8 +386,6 @@ def encode_commit(
     once."""
     if snapshot in wh.commit_log():
         return wh.read_manifest(snapshot)
-    if wh.read_manifest(snapshot) is not None:
-        raise held(snapshot)  # found before the jobs, not at the commit
     layout = {**LAYOUT, **layout}
     adopted = {}
     if resume:

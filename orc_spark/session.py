@@ -7,7 +7,9 @@ the scale notes).
 
 from __future__ import annotations
 
+import ctypes
 import os
+import platform
 
 from pyspark.sql import SparkSession
 
@@ -15,6 +17,33 @@ from pyspark.sql import SparkSession
 # overrides for tuning (bigger batches = fewer JVM<->Python IPC round trips,
 # more worker memory per batch)
 ARROW_BATCH_ROWS = int(os.environ.get("ORC_SPARK_ARROW_BATCH", "8192"))
+
+# glibc's mallopt parameters (malloc.h) for the two variables below
+_MALLOPT = {"MALLOC_TRIM_THRESHOLD_": -1, "MALLOC_MMAP_THRESHOLD_": -3}
+
+
+def tune_malloc() -> None:
+    """glibc tuning for the numpy codec work: without it, every large numpy
+    temporary is a fresh mmap/munmap and concurrent page-fault zeroing
+    serializes in the kernel (a measured 100x per-core collapse at 8
+    processes); raising the mmap threshold so freed blocks recycle in the
+    heap restored ~16x aggregate throughput. The variables are set
+    before the JVM starts, so the Python workers Spark spawns inherit
+    them; this process's glibc read its environment at start-up, so the
+    same values reach it through mallopt (glibc only)."""
+    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
+    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str((1 << 31) - 1))
+    if platform.libc_ver()[0] != "glibc":
+        return
+    mallopt = ctypes.CDLL(None).mallopt
+    mallopt.argtypes = (ctypes.c_int, ctypes.c_int)
+    mallopt.restype = ctypes.c_int
+    for var, param in _MALLOPT.items():
+        value = os.environ[var]
+        # a malformed value is left out, as glibc leaves it out of the
+        # environment; so is one past mallopt's C int, which would wrap
+        if value.isdigit() and int(value) < 1 << 31:
+            mallopt(param, int(value))
 
 
 def get_spark(
@@ -24,14 +53,7 @@ def get_spark(
 ) -> SparkSession:
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cpus, 32)
-    # glibc tuning for the numpy codec workers: without it, every large numpy
-    # temporary is a fresh mmap/munmap and concurrent page-fault zeroing
-    # serializes in the kernel — measured 100x per-core collapse at 8 procs
-    # on this host; raising the mmap threshold so freed blocks recycle in the
-    # heap restored ~16x aggregate throughput. Set before the JVM starts so
-    # spawned Python workers inherit it.
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str((1 << 31) - 1))
+    tune_malloc()
     # make orc_spark importable in executor Python workers (local mode inherits
     # the driver env; on a cluster use spark-submit --py-files engine.zip)
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

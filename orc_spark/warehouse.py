@@ -8,8 +8,9 @@ blocked — SURVEY.md [PROBE-4]), so the Iceberg surface the north rule names
     data/pid=<pid>/snap-<snapshot>.parquet   one file per logical partition,
                                              written by executors via
                                              temp-file + atomic rename
-    manifests/snap-<snapshot>.json           manifest: per-partition lineage
-                                             + encode metrics, created once
+    manifests/snap-<snapshot>-<id>.json      manifest: per-partition lineage
+                                             + encode metrics, under a name
+                                             unique to its writer
     manifests/log/<ordinal:020d>.json        the commit log
     exchange/<snapshot>-<id>/map-*.arrow     an encode's per-pid Arrow
                                              segments (exchange.py)
@@ -17,18 +18,21 @@ blocked — SURVEY.md [PROBE-4]), so the Iceberg surface the north rule names
 The log (Delta Lake's, VLDB 2020) is the table's only state: numbered
 entries {snapshot, parent, ref, op}, each created put-if-absent (temp file
 + `os.link`). `op` is `commit` (on ref main or a branch), `rollback`,
-`branch` / `tag` (set_ref) or `drop` (delete_ref). CURRENT, the refs and
-`commit_log()` (whose indexes are the stream offsets) are folds over it
-(`Warehouse.state`). A warehouse without `log/` but with a pre-log
-`COMMITLOG` is refused, not migrated.
+`branch` / `tag` (set_ref) or `drop` (delete_ref); a commit entry also
+names its manifest file (`manifest`; an entry written before it did names
+`snap-<snapshot>.json`). CURRENT, the refs, `commit_log()` (whose indexes
+are the stream offsets) and each committed snapshot's manifest file are
+folds over it (`Warehouse.state`). A warehouse without `log/` but with a
+pre-log `COMMITLOG` is refused, not migrated.
 
 Commits (BASELINE.json:6 "resumes from its last committed checkpoint"):
 - a SNAPSHOT is the unit of commit: every write publishes it with ONE
-  `commit`, which creates the manifest put-if-absent and then claims the
-  log's next ordinal, a compare-and-swap (Warehouse.commit). The entry is
-  the commit point: a manifest no entry names (its writer died between
-  the two) is not committed, and holds its name until vacuum_orphans
-  removes it;
+  `commit`, which writes its manifest under a writer-unique name and then
+  claims the log's next ordinal with an entry naming that file, a
+  compare-and-swap (Warehouse.commit). The entry is the only commit
+  point: a manifest no entry names (its writer died between the two) is
+  not committed and holds nothing, so a re-run of the name commits at
+  once; vacuum_orphans removes such a manifest;
 - executors write data files idempotently (deterministic content, atomic
   rename), so task retries are safe;
 - a re-run of a committed snapshot is a no-op (encode_table returns the
@@ -48,6 +52,7 @@ import json
 import os
 import tempfile
 import time
+import uuid
 
 # a manifest's field IDs (evolution.py): its {name: field_id} schema
 # versions and the index of the current one
@@ -65,25 +70,15 @@ APPEND = object()
 # each log dir's fold (Warehouse.state) with the bytes of its entry 0 and
 # its entry count: a log whose entry 0 changed (the warehouse was removed
 # and made anew) is folded from the start
-_LOGS: dict[str, tuple[bytes, int, list[str], dict[str, dict]]] = {}
+_LOGS: dict[str, tuple[bytes, int, dict[str, str], dict[str, dict]]] = {}
 
 
 class SnapshotExists(ValueError):
-    """A commit of a snapshot name that is committed, or whose manifest
-    another writer holds."""
+    """A commit of a snapshot name that is already committed."""
 
 
 class CommitConflict(ValueError):
     """A write that read the table lost its ref's head to another commit."""
-
-
-def held(snapshot: str) -> SnapshotExists:
-    """The refusal of a commit of a name whose manifest no log entry
-    names."""
-    return SnapshotExists(
-        f"snapshot {snapshot!r} has a manifest no log entry names: another "
-        "writer is committing it, or one died doing so (vacuum_orphans "
-        "removes such a manifest once it is older than min_age_s)")
 
 
 def check_ref_name(name: str) -> None:
@@ -133,26 +128,36 @@ class Warehouse:
     def data_file(self, pid: str, snapshot: str) -> str:
         return os.path.join(self.data_dir, f"pid={pid}", f"snap-{snapshot}.parquet")
 
-    def manifest_file(self, snapshot: str) -> str:
-        return os.path.join(self.manifest_dir, f"snap-{snapshot}.json")
+    def manifest_file(self, snapshot: str) -> str | None:
+        """The manifest file the commit entry of `snapshot` names; None if
+        no commit entry names it."""
+        name = self.state()[1].get(snapshot)
+        return None if name is None else os.path.join(self.manifest_dir, name)
 
     # -- manifests --------------------------------------------------------
+    def _load(self, name: str) -> dict | None:
+        try:
+            with open(os.path.join(self.manifest_dir, name)) as fh:
+                return json.load(fh)
+        except FileNotFoundError:
+            return None  # expired
+
     def read_manifest(self, snapshot: str) -> dict | None:
-        f = self.manifest_file(snapshot)
-        if not os.path.exists(f):
-            return None
-        return json.load(open(f))
+        """A committed snapshot's manifest; None if `snapshot` is not
+        committed or its manifest expired."""
+        name = self.state()[1].get(snapshot)
+        return None if name is None else self._load(name)
+
+    def manifests(self) -> list[dict]:
+        """Every committed manifest not expired, in commit order."""
+        return [m for m in map(self._load, self.state()[1].values()) if m is not None]
 
     def last_field_id(self) -> int:
-        """The largest field ID in any manifest: the last one handed out, on
-        any branch (IDs are table-wide, so a changelog that crosses a
-        rollback never reads one column as another)."""
-        return max((
-            f for n in os.listdir(self.manifest_dir)
-            if n.startswith("snap-") and n.endswith(".json")
-            for s in json.load(open(os.path.join(self.manifest_dir, n))).get("schemas", ())
-            for f in s.values()
-        ), default=0)
+        """The largest field ID in any committed manifest: the last one
+        handed out, on any branch (IDs are table-wide, so a changelog that
+        crosses a rollback never reads one column as another)."""
+        return max((f for m in self.manifests() for s in m.get("schemas", ())
+                    for f in s.values()), default=0)
 
     def carry_ids(self, parent: dict | None, schema: dict) -> dict:
         """ID_KEYS of a commit of `schema` on `parent` (None: a fresh
@@ -171,13 +176,13 @@ class Warehouse:
     def log_entry(self, ordinal: int) -> str:
         return os.path.join(self.log_dir, f"{ordinal:020d}.json")
 
-    def state(self) -> tuple[int, list[str], dict[str, dict]]:
-        """The log read and folded: (its entry count, the snapshots of its
-        commit entries in ordinal order, {ref: {'snapshot', 'kind',
-        'updated_at'}} from each ref's newest entry; `main`'s head is
-        CURRENT). Ordinals are dense and entries never change, so a
-        process folds each entry once (_LOGS) and opens only those past
-        the last it read."""
+    def state(self) -> tuple[int, dict[str, str], dict[str, dict]]:
+        """The log read and folded: (its entry count, {snapshot: manifest
+        file name} of its commit entries in ordinal order, {ref:
+        {'snapshot', 'kind', 'updated_at'}} from each ref's newest entry;
+        `main`'s head is CURRENT). Ordinals are dense and entries never
+        change, so a process folds each entry once (_LOGS) and opens only
+        those past the last it read."""
         try:
             with open(self.log_entry(0), "rb") as fh:
                 first = fh.read()
@@ -186,9 +191,9 @@ class Warehouse:
                 raise ValueError(
                     f"warehouse {self.path!r} was written before the table kept "
                     "its commit log in manifests/log/; re-encode it") from None
-            return 0, [], {}
-        seen, n, commits, heads = _LOGS.get(self.log_dir, (first, 0, [], {}))
-        n, commits, heads = (n, list(commits), dict(heads)) if seen == first else (0, [], {})
+            return 0, {}, {}
+        seen, n, commits, heads = _LOGS.get(self.log_dir, (first, 0, {}, {}))
+        n, commits, heads = (n, dict(commits), dict(heads)) if seen == first else (0, {}, {})
         while True:
             try:
                 with open(self.log_entry(n)) as fh:
@@ -200,17 +205,17 @@ class Warehouse:
                 heads.pop(e["ref"], None)
                 continue
             if e["op"] == "commit":
-                commits.append(e["snapshot"])
+                commits[e["snapshot"]] = e.get("manifest", f"snap-{e['snapshot']}.json")
             heads[e["ref"]] = {"snapshot": e["snapshot"], "updated_at": e["at"],
                                "kind": "tag" if e["op"] == "tag" else "branch"}
         _LOGS[self.log_dir] = (first, n, commits, heads)
-        return n, list(commits), {r: dict(h) for r, h in heads.items()}
+        return n, dict(commits), {r: dict(h) for r, h in heads.items()}
 
     def commit_log(self) -> list[str]:
         """Snapshot names in commit order: the commit entries of the log, on
         any ref. A name's index is its stream offset and `_commit_ordinal`;
         an expired snapshot keeps its place (its manifest is gone)."""
-        return self.state()[1]
+        return list(self.state()[1])
 
     def current_snapshot_id(self) -> str | None:
         """CURRENT: the newest snapshot on ref main."""
@@ -219,7 +224,8 @@ class Warehouse:
     def _append(self, entry_of) -> dict:
         """Create the log's next entry put-if-absent and return it.
         `entry_of(commits, heads)` validates against the log as read
-        (state's view) and returns the entry's {snapshot, parent, ref, op};
+        (state's view) and returns the entry's {snapshot, parent, ref, op,
+        and a commit's manifest};
         a writer that loses the race for the ordinal re-reads the log and
         calls it again."""
         while True:
@@ -245,15 +251,17 @@ class Warehouse:
             os.remove(tmp)
 
     def commit(self, snapshot: str, partitions: dict[str, dict], schema: dict, extra: dict | None = None, ids: dict | None = None, ref: str = MAIN, expect=APPEND) -> dict:
-        """Publish `snapshot` on `ref` (main or a branch): create its
-        manifest put-if-absent, then the log entry that commits it. Raises
-        SnapshotExists (and changes nothing) if the name is committed or
-        another writer holds its manifest. `partitions` maps pid -> {file,
-        n_rows, n_tokens, enc_bytes, metrics…}.
+        """Publish `snapshot` on `ref` (main or a branch): write its
+        manifest under a name no other writer uses, then create the log
+        entry that names it, the one commit point. Raises SnapshotExists
+        (and changes nothing) if the name is committed. A writer killed
+        between the two files leaves a manifest no entry names: it is not
+        committed, and a re-run of the name commits at once. `partitions`
+        maps pid -> {file, n_rows, n_tokens, enc_bytes, metrics…}.
 
         `expect`: the head of `ref` a write that read the table started
         from (None: no such ref yet); a moved head raises CommitConflict,
-        naming the winner, and removes the manifest. An append (the
+        naming the winner, and removes its manifest. An append (the
         default) never conflicts. The manifest's `parent` is the head it
         lands on (a branch's first commit: CURRENT).
 
@@ -264,12 +272,13 @@ class Warehouse:
         """
         if ref != MAIN:
             check_ref_name(ref)
+        path = os.path.join(self.manifest_dir, f"snap-{snapshot}-{uuid.uuid4().hex[:12]}.json")
         manifest = None
 
         def entry_of(commits, heads):
             nonlocal manifest
             if manifest is not None:  # lost the ordinal: build on the new head
-                os.remove(self.manifest_file(snapshot))
+                os.remove(path)
                 manifest = None
             if snapshot in commits:
                 raise SnapshotExists(f"snapshot {snapshot!r} is already committed")
@@ -289,10 +298,10 @@ class Warehouse:
                                for pid, p in partitions.items()},
                 **{k: m_ids[k] for k in ID_KEYS}, "committed_at": now, **(extra or {}),
             }
-            if not self._create(self.manifest_file(snapshot), m):
-                raise held(snapshot)
+            self._create(path, m)
             manifest = m
-            return {"snapshot": snapshot, "parent": parent, "ref": ref, "op": "commit"}
+            return {"snapshot": snapshot, "parent": parent, "ref": ref, "op": "commit",
+                    "manifest": os.path.basename(path)}
 
         self._append(entry_of)
         return manifest
@@ -386,8 +395,8 @@ class Warehouse:
     def resolve_snapshot(self, name: str | None) -> str | None:
         """A snapshot name, a ref name, or None (CURRENT) -> snapshot id.
         Committed snapshot names win over a same-named ref (refs cannot
-        shadow data). A manifest no log entry names is not committed:
-        resolving its name raises."""
+        shadow data); any other name passes through, and a read of it
+        finds no manifest."""
         _, commits, heads = self.state()
         if name is None:
             return heads.get(MAIN, {}).get("snapshot")
@@ -395,8 +404,6 @@ class Warehouse:
             return name
         if name != MAIN and name in heads:
             return heads[name]["snapshot"]
-        if os.path.exists(self.manifest_file(name)):
-            raise ValueError(f"snapshot {name!r} is not committed")
         return name
 
     def rollback(self, snapshot: str) -> None:

@@ -7,10 +7,13 @@ in-memory model. Real processes race writers: of two writes that read the
 table from one head, exactly one commits and the other raises
 CommitConflict, while two appends both land."""
 
+import glob
 import json
 import os
 import random
+import select
 import shutil
+import signal
 import subprocess
 import sys
 import time
@@ -32,6 +35,20 @@ REFS = ("t1", "t2", "b1", "b2")
 
 def _part(name: str) -> dict:
     return {"p0": {"file": f"/x/{name}.parquet", "n_rows": 1}}
+
+
+def _manifests_on_disk(wh: Warehouse, name: str) -> list[str]:
+    """Every manifest file a writer of `name` left, committed or not."""
+    return glob.glob(os.path.join(glob.escape(wh.manifest_dir), f"snap-{name}-*.json"))
+
+
+def _orphan(wh: Warehouse, name: str, like: str) -> str:
+    """The manifest a writer of `name` killed before its log entry leaves:
+    a copy of `like`'s under a writer-unique name."""
+    f = os.path.join(wh.manifest_dir, f"snap-{name}-0123456789ab.json")
+    with open(f, "w") as fh:
+        json.dump({**wh.read_manifest(like), "snapshot_id": name}, fh)
+    return f
 
 
 @pytest.mark.parametrize("seed", range(8))
@@ -66,7 +83,7 @@ def test_log_fold_matches_a_model(tmp_path, seed):
             if head[1] == "tag":
                 refuses(ValueError, "tag", lambda: wh.commit(
                     name, _part(name), SCHEMA, ref=ref, expect=head[0]))
-                assert not os.path.exists(wh.manifest_file(name))
+                assert _manifests_on_disk(wh, name) == []
             else:
                 wh.commit(name, _part(name), SCHEMA, ref=ref, expect=head[0])
                 commits.append(name)
@@ -77,7 +94,7 @@ def test_log_fold_matches_a_model(tmp_path, seed):
                 continue
             refuses(CommitConflict, "not committed", lambda: wh.commit(
                 name, _part(name), SCHEMA, ref=ref, expect="moved-on"))
-            assert not os.path.exists(wh.manifest_file(name))
+            assert _manifests_on_disk(wh, name) == []
         elif op == "ref":
             ref, kind = rng.choice(REFS), rng.choice(("tag", "branch"))
             target = rng.choice(commits + ["ghost"])
@@ -148,34 +165,58 @@ def test_an_entry_without_its_manifest_and_a_manifest_without_an_entry(tmp_path)
     with pytest.raises(SnapshotExists):
         wh.commit("a", _part("a"), SCHEMA)
     # a manifest that no entry names (a writer died between its manifest
-    # and its entry) is not committed: not logged, not resolvable, no target
-    with open(wh.manifest_file("ghost"), "w") as fh:
-        json.dump({**wh.read_manifest("b"), "snapshot_id": "ghost"}, fh)
+    # and its entry) is not committed: not logged, no manifest, no target,
+    # and it holds no name
+    _orphan(wh, "ghost", like="b")
     assert wh.commit_log() == ["a", "b"] and wh.current_snapshot_id() == "b"
-    with pytest.raises(ValueError, match="not committed"):
-        wh.resolve_snapshot("ghost")
+    assert wh.resolve_snapshot("ghost") == "ghost" and wh.read_manifest("ghost") is None
+    assert wh.manifest_file("ghost") is None
     with pytest.raises(ValueError, match="no manifest"):
         wh.rollback("ghost")
-    with pytest.raises(SnapshotExists):
-        wh.commit("ghost", _part("ghost"), SCHEMA)
+    with pytest.raises(ValueError, match="no manifest"):
+        wh.set_ref("t", "ghost")
     reader = TokstripeStreamReader({"path": wh.path}, StructType([]))
     assert reader.latestOffset() == {"pos": 2}
     assert [t.file for p in reader.partitions({"pos": 0}, {"pos": 2}) for t in p.files] \
         == ["/x/b.parquet"]  # a's manifest is gone, ghost is not a commit
+    wh.commit("ghost", _part("ghost"), SCHEMA)  # commits at once
+    assert wh.commit_log() == ["a", "b", "ghost"] and reader.latestOffset() == {"pos": 3}
+    assert wh.read_manifest("ghost")["partitions"]["p0"]["file"] == "/x/ghost.parquet"
+
+
+def test_an_entry_that_names_no_manifest_reads_the_name_keyed_one(tmp_path):
+    """A commit entry written before entries named their manifest file
+    reads `snap-<snapshot>.json`, and vacuum keeps that file."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    wh.commit("a", _part("a"), SCHEMA)
+    os.makedirs(str(tmp_path / "old" / "manifests"))
+    old = Warehouse(str(tmp_path / "old"))
+    os.replace(wh.manifest_file("a"), os.path.join(old.manifest_dir, "snap-a.json"))
+    with open(wh.log_entry(0)) as fh:
+        entry = json.load(fh)
+    del entry["manifest"]
+    os.makedirs(old.log_dir)
+    with open(old.log_entry(0), "w") as fh:
+        json.dump(entry, fh)
+    assert old.commit_log() == ["a"]
+    assert old.manifest_file("a") == os.path.join(old.manifest_dir, "snap-a.json")
+    assert old.read_manifest("a")["partitions"]["p0"]["file"] == "/x/a.parquet"
+    assert vacuum_orphans(old.path, min_age_s=0)["files_deleted"] == 0
+    assert old.commit("b", _part("b"), SCHEMA)["parent"] == "a"
+    assert old.commit_log() == ["a", "b"] and old.read_manifest("a") is not None
 
 
 def test_an_unlogged_manifest_never_passes_for_a_commit(tmp_path):
     """A writer that died between its manifest and its log entry committed
-    nothing. A stream epoch over such a manifest is not taken for a replay:
-    its commit raises (Spark retries it) and keeps its files. A re-run
-    encode of the name fails before any job. vacuum_orphans removes the
-    manifest once it is older than min_age_s, and the epoch then commits;
-    its real replay after that drops its re-staged files."""
+    nothing and holds nothing. A stream epoch over such a manifest is no
+    replay: it commits at once with its own files, and its real replay
+    after that drops its re-staged files. A re-run encode of the name then
+    finds it committed and runs no job. vacuum_orphans removes the dead
+    writer's manifest once it is older than min_age_s."""
     wh = Warehouse(str(tmp_path / "wh"))
     wh.commit("a", _part("a"), SCHEMA)
     epoch = "st-e000001"
-    with open(wh.manifest_file(epoch), "w") as fh:
-        json.dump({**wh.read_manifest("a"), "snapshot_id": epoch}, fh)
+    orphan = _orphan(wh, epoch, like="a")
     schema = StructType.fromJson({"type": "struct", "fields": [
         {"name": n, "type": t, "nullable": True, "metadata": {}}
         for n, t in (("doc_id", "string"), ("source", "string"))]})
@@ -187,17 +228,16 @@ def test_an_unlogged_manifest_never_passes_for_a_commit(tmp_path):
         return f, [_CommitMsg({"p0": {"file": f, "n_rows": 1}})]
 
     f1, msgs = staged(1)
-    with pytest.raises(SnapshotExists, match="no log entry names"):
-        writer.commit(msgs, 1)
-    assert os.path.exists(f1) and wh.commit_log() == ["a"]
-    with pytest.raises(SnapshotExists, match="no log entry names"):
-        encode_table(None, None, wh.path, epoch)  # no session: no job ran
+    writer.commit(msgs, 1)  # commits at once
+    assert os.path.exists(f1) and wh.commit_log() == ["a", epoch]
+    assert wh.read_manifest(epoch)["partitions"]["p0"]["file"] == f1
+    # no session: a committed name runs no job
+    assert encode_table(None, None, wh.path, epoch) == wh.read_manifest(epoch)
     assert vacuum_orphans(wh.path, min_age_s=3600)["files_deleted"] == 0
     old = time.time() - 7200
-    os.utime(wh.manifest_file(epoch), (old, old))
+    os.utime(orphan, (old, old))
     assert vacuum_orphans(wh.path, min_age_s=3600)["files_deleted"] == 1
-    writer.commit(msgs, 1)
-    assert wh.commit_log() == ["a", epoch]
+    assert not os.path.exists(orphan) and _manifests_on_disk(wh, epoch) == [wh.manifest_file(epoch)]
     assert wh.read_manifest(epoch)["partitions"]["p0"]["file"] == f1
     f2, replay = staged(2)
     writer.commit(replay, 1)  # a replay: dropped, not re-published
@@ -373,3 +413,97 @@ def test_racing_writer_processes(spark, tmp_path):
     for p in procs:
         err = p.communicate(timeout=120)[1]
         assert p.returncode == 0, err[-3000:]
+
+
+KILLED = """
+import json, sys
+sys.path.insert(0, sys.argv[1])
+from orc_spark.warehouse import Warehouse
+
+path, name, parts = sys.argv[2:5]
+w = Warehouse(path)
+create = w._create
+
+
+def create_entry_after_eof(p, obj):
+    if p.startswith(w.log_dir):
+        print("manifest on disk", flush=True)
+        sys.stdin.read()  # blocks: the test kills this process here
+    return create(p, obj)
+
+
+w._create = create_entry_after_eof
+w.commit(name, json.load(open(parts)), {"doc_id": "string"})
+"""
+
+
+def _kill_between_manifest_and_entry(tmp_path, wh: Warehouse, name: str, parts: dict) -> str:
+    """Run a commit of `name` in a writer process, SIGKILL it once its
+    manifest is on disk and before its log entry; return that manifest."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pf = str(tmp_path / f"{name}.parts.json")
+    with open(pf, "w") as fh:
+        json.dump(parts, fh)
+    p = subprocess.Popen([sys.executable, "-c", KILLED, repo, wh.path, name, pf],
+                         stdin=subprocess.PIPE, stdout=subprocess.PIPE,
+                         stderr=subprocess.PIPE, text=True)
+    try:
+        ready, _, _ = select.select([p.stdout], [], [], 120)
+        assert ready and p.stdout.readline() == "manifest on disk\n", p.stderr.read()
+        (orphan,) = _manifests_on_disk(wh, name)
+        p.send_signal(signal.SIGKILL)
+        assert p.wait(timeout=60) == -signal.SIGKILL
+    finally:
+        p.kill()
+        p.communicate(timeout=60)
+    assert os.path.exists(orphan)
+    return orphan
+
+
+def test_a_writer_killed_between_manifest_and_entry_holds_no_name(spark, tmp_path):
+    """The log entry is the only commit point. A writer SIGKILLed after its
+    manifest is on disk and before its entry committed nothing: no reader
+    takes its manifest for a commit, and a re-run of the name commits at
+    once, through Warehouse.commit or encode_table (which adopts the dead
+    run's data files). vacuum_orphans removes the dead manifests only past
+    min_age_s."""
+    from orc_spark.pipeline import LAYOUT, encode_files
+
+    path = str(tmp_path / "wh")
+    wh = Warehouse(path)
+    wh.commit("a", _part("a"), SCHEMA)
+    t = tokens_arrow(200)
+    df = spark.createDataFrame(t.to_pandas())
+    kw = {"salt_buckets": 2, "stripe_tokens": 20_000}
+    # the dead encode's data files, as its jobs left them
+    parts, _ = encode_files(spark, df, path, "e", num_partitions=None, max_pid_tokens=None,
+                            key_blooms=True, skip=frozenset(), **LAYOUT, **kw)
+    orphans = [_kill_between_manifest_and_entry(tmp_path, wh, "c", _part("c")),
+               _kill_between_manifest_and_entry(tmp_path, wh, "e", parts)]
+
+    reader = TokstripeStreamReader({"path": path}, StructType([]))
+    for name in ("c", "e"):
+        assert wh.commit_log() == ["a"] and wh.current_snapshot_id() == "a"
+        assert wh.resolve_snapshot(name) == name and wh.read_manifest(name) is None
+        with pytest.raises(ValueError, match="no manifest"):
+            wh.set_ref("t", name)
+        with pytest.raises(ValueError, match="no manifest"):
+            wh.rollback(name)
+    assert reader.latestOffset() == {"pos": 1}
+    assert [f.file for p in reader.partitions({"pos": 0}, {"pos": 1}) for f in p.files] \
+        == ["/x/a.parquet"]
+
+    assert wh.commit("c", _part("c"), SCHEMA)["snapshot_id"] == "c"
+    m = encode_table(spark, df, path, "e", **kw)
+    assert wh.commit_log() == ["a", "c", "e"] and wh.current_snapshot_id() == "e"
+    assert sorted(m["partitions"]) == sorted(parts)
+    assert all(p["adopted"] for p in m["partitions"].values())
+    assert decode_table(spark, path, "e").count() == t.num_rows
+
+    assert vacuum_orphans(path, min_age_s=3600)["files_deleted"] == 0
+    old = time.time() - 7200
+    for f in orphans:
+        os.utime(f, (old, old))
+    assert vacuum_orphans(path, min_age_s=3600)["files_deleted"] == 2
+    assert not any(map(os.path.exists, orphans))
+    assert wh.read_manifest("e") == m and decode_table(spark, path, "e").count() == t.num_rows

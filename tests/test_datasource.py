@@ -72,6 +72,21 @@ def _planned_files(wh, schema, *filters):
     return [f for p in r.partitions() for f, *_ in p.files]
 
 
+@pytest.mark.parametrize("cores", [1, 3])
+def test_reader_bins_follow_the_affinity_mask(ds_wh, monkeypatch, cores):
+    """Both readers size their bins by the cores the planning process may
+    run on, not by the host's count."""
+    from orc_spark.datasource import TokstripeReader, TokstripeStreamReader
+
+    wh, df = ds_wh
+    monkeypatch.setattr(os, "cpu_count", lambda: 64)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: set(range(cores)), raising=False)
+    batch = TokstripeReader({"path": wh}, df.schema)
+    stream = TokstripeStreamReader({"path": wh}, df.schema)
+    assert len(batch.partitions()) == cores
+    assert len(stream.partitions({"pos": 0}, stream.latestOffset())) == cores
+
+
 def test_planning_time_pruning_reduces_tasks(spark, ds_wh):
     from pyspark.sql.datasource import EqualTo
 
@@ -296,11 +311,7 @@ def test_stream_writer_exactly_once(spark, tmp_path):
 
     run()
     w = Warehouse(wh)
-    snaps = sorted(
-        f[5:-5]
-        for f in os.listdir(w.manifest_dir)
-        if f.startswith("snap-sw-e")
-    )
+    snaps = sorted(s for s in w.commit_log() if s.startswith("sw-e"))
     assert len(snaps) >= 2  # one epoch per file
     dec = None
     for s in snaps:
@@ -310,11 +321,7 @@ def test_stream_writer_exactly_once(spark, tmp_path):
 
     # replay with the same checkpoint: no new epochs, no duplicates
     run()
-    snaps2 = sorted(
-        f[5:-5]
-        for f in os.listdir(w.manifest_dir)
-        if f.startswith("snap-sw-e")
-    )
+    snaps2 = sorted(s for s in w.commit_log() if s.startswith("sw-e"))
     assert snaps2 == snaps
     assert verify_roundtrip(orig, dec)["ok"]
 

@@ -150,6 +150,7 @@ def test_stored_stripes_byte_identical(spark, pinned_input, tmp_path, feed):
     assert ph["reduce_tasks"] == spark.sparkContext.defaultParallelism
     assert all(ph[k] > 0 for k in ("map_s", "plan_s", "reduce_s"))
     assert ph["map"]["hash_s"] > 0 and ph["reduce"]["stripe_s"] > 0
+    assert ph["map"]["cpu_s"] > 0 and ph["reduce"]["cpu_s"] > 0
     assert not os.listdir(Warehouse(str(tmp_path / "wh")).exchange_dir)
 
 

@@ -39,11 +39,7 @@ def test_stream_encode_exactly_once(spark, tmp_path):
     q.awaitTermination(180)
 
     w = Warehouse(wh)
-    snaps = sorted(
-        f[5:-5]
-        for f in os.listdir(w.manifest_dir)
-        if f.startswith("snap-stream-")
-    )
+    snaps = sorted(s for s in w.commit_log() if s.startswith("stream-"))
     assert len(snaps) >= 1
     # union of all streaming snapshots == everything ingested, bit-identical
     dec = None
@@ -86,13 +82,7 @@ def test_stream_restart_recovery_from_checkpoint(spark, tmp_path):
     w = Warehouse(wh)
 
     def committed_snaps():
-        if not os.path.isdir(w.manifest_dir):
-            return []
-        return sorted(
-            f[5:-5]
-            for f in os.listdir(w.manifest_dir)
-            if f.startswith("snap-stream-")
-        )
+        return sorted(s for s in w.commit_log() if s.startswith("stream-"))
 
     # phase 1: continuous trigger, one file per micro-batch; kill the query
     # as soon as the first snapshot commits (so later batches are pending
