@@ -49,6 +49,8 @@ def _rounded(v):
 def disk_bytes(wh: str, manifest: dict) -> dict:
     """Bytes on disk of one encoded snapshot: its data files, their bloom
     sidecars, and the manifests plus commit log of the warehouse."""
+    from orc_spark.warehouse import sidecar_file
+
     files = [p["file"] for p in manifest["partitions"].values()]
     meta = 0
     for root, _, names in os.walk(os.path.join(wh, "manifests")):
@@ -56,9 +58,9 @@ def disk_bytes(wh: str, manifest: dict) -> dict:
     return {
         "data_files": sum(os.path.getsize(f) for f in files),
         "sidecars": sum(
-            os.path.getsize(f + ".bloom.json")
+            os.path.getsize(sidecar_file(f))
             for f in files
-            if os.path.exists(f + ".bloom.json")
+            if os.path.exists(sidecar_file(f))
         ),
         "manifest_log": meta,
     }

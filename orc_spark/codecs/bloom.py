@@ -13,10 +13,12 @@ again:
     k = 6 -> ~1% false positives). Tested before any stream of the stripe
     blob is decompressed.
   - FILE level: each data file gets one bloom in a puffin-style SIDECAR
-    (`<data_file>.bloom.json`, tmp+atomic-rename like the data file). The
-    writer ORs its stripes' inserts into a fixed FILE_BLOOM_BITS filter
-    (O(1) memory per writer) and folds it at close to the file's own
-    stripe_bloom_bits(n), capped at FILE_BLOOM_BITS (`fold`). The
+    (warehouse.sidecar_file names it; tmp+atomic-rename like the data
+    file). Its one writer, pipeline._PidWriter, ORs the keys of every
+    stripe it writes — encoded, or copied verbatim by concat compaction,
+    which decodes only their key column — into a fixed FILE_BLOOM_BITS
+    filter (O(1) memory per writer) and folds it at close to the file's
+    own stripe_bloom_bits(n), capped at FILE_BLOOM_BITS (`fold`). The
     manifest stays O(200 bytes)/partition; the planner reads sidecars only
     for files that survive range pruning (one small GET per file at
     object-store scale — the same planning read Iceberg does for puffin

@@ -51,8 +51,9 @@ The driver commits the collected partition metadata as one atomic manifest
 (`DataSourceWriter.commit`) — Iceberg-style: data files are invisible until
 the commit. Either save mode, `overwrite` too, refuses a committed
 snapshot name before any task runs (a committed snapshot is never
-rewritten). A failed job aborts by sweeping in-progress temp files;
-already-renamed files are harmless orphans outside the manifest.
+rewritten). A failed task's writer removes its own temp file; a failed
+job aborts by removing the data files its finished tasks' commit
+messages name (`_remove_staged`), and nothing another write staged.
 The writer does NOT reshuffle (Spark's DSv2 Python API cannot require a
 distribution): every task writes its own pid@wN files, so
 pre-`repartition(source, key)` upstream for one file per pid; without it
@@ -93,7 +94,6 @@ upgrade that fixes it surfaces here.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -594,9 +594,13 @@ def _commit(options, schema: StructType, snapshot: str, messages) -> None:
 
 def _remove_staged(messages) -> None:
     """Delete the data files (and their bloom sidecars) the tasks' commit
-    messages name: an epoch that must not be published."""
+    messages name: a write or epoch that must not be published. Only this
+    write's own files go; a failed task's writer has already removed its
+    temp files, and vacuum_orphans reaps those of a killed process."""
+    from .warehouse import sidecar_file
+
     files = [p["file"] for m in messages if m is not None for p in m.partitions.values()]
-    for f in files + [f + ".bloom.json" for f in files]:
+    for f in files + [sidecar_file(f) for f in files]:
         try:
             os.remove(f)
         except OSError:
@@ -630,18 +634,7 @@ class TokstripeWriter(DataSourceArrowWriter):
         _commit(self.options, self.schema, self.snapshot, messages)
 
     def abort(self, messages):
-        _sweep_inprogress(self.options.get("path"))
-
-
-def _sweep_inprogress(warehouse_path: str) -> None:
-    """Remove leftover '*.inprogress-*' temp files after a failed job.
-    Renamed-but-uncommitted data files stay — they are invisible to readers
-    (manifest never published) and resumable jobs may adopt them."""
-    for f in glob.glob(os.path.join(glob.escape(warehouse_path), "data", "*", "*.inprogress-*")):
-        try:
-            os.remove(f)
-        except OSError:
-            pass
+        _remove_staged(messages)
 
 
 class TokstripeStreamWriter(DataSourceStreamArrowWriter):
@@ -678,7 +671,4 @@ class TokstripeStreamWriter(DataSourceStreamArrowWriter):
             _remove_staged(messages)
 
     def abort(self, messages, batchId: int):
-        # remove staged files of the failed epoch (they are referenced only
-        # by the never-published commit messages) + temp leftovers
         _remove_staged(messages)
-        _sweep_inprogress(self.options.get("path"))

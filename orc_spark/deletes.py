@@ -28,8 +28,10 @@ warehouse's manifest tree:
     files at sequence number `max_seq + 1`, and its keys commit as a
     SEQ-SCOPED delete file ({'path','seq'} manifest entries) that readers
     merge only into files BELOW that seq — old versions vanish, the
-    upsert's own files keep the new versions. Plain `delete_where`
-    entries stay bare strings = apply to every file. Readers attach each
+    upsert's own files keep the new versions. `delete_where` writes the
+    same {'path','seq'} entries, at a seq above every file the table
+    holds then, so they apply to all of those files and to none a later
+    upsert commits. Readers attach each
     file's applicable delete set to it (applicable_deletes), so mixed
     chains (delete → upsert → delete) read exactly in one scan.
   * Reads merge deletes one way. Every table read (`decode_table`, the
@@ -80,10 +82,10 @@ def deletes_dir(warehouse_path: str) -> str:
 
 
 def normalize_delete_entries(raw: list) -> list[tuple[str, int | None]]:
-    """Manifest `delete_files` entries -> [(path, seq)]. Plain string
-    entries (delete_where) have seq None = apply to EVERY data file; dict
-    entries {'path','seq'} (upsert) apply only to data files whose
-    partition 'seq' is LOWER — Iceberg's sequence-number scoping, which is
+    """Manifest `delete_files` entries -> [(path, seq)]. Dict entries
+    {'path','seq'} (what delete_where and upsert write) apply only to data
+    files whose partition 'seq' is LOWER; a plain string entry has seq
+    None = apply to EVERY data file. The seq scoping is Iceberg's, which is
     what lets an upsert's own new files carry the re-inserted keys the
     same commit deleted from the old files."""
     out: list[tuple[str, int | None]] = []
@@ -339,7 +341,6 @@ def upsert(
     dest: str | None = None,
     salt_buckets: int = 32,
     stripe_tokens: int | None = None,
-    key_blooms: bool = True,
     branch: str | None = None,
 ) -> dict:
     """Merge-on-read UPSERT (Iceberg `MERGE INTO … WHEN MATCHED UPDATE
@@ -365,11 +366,11 @@ def upsert(
     that moves while this runs raises CommitConflict, as for a delete."""
     wh = Warehouse(warehouse_path)
     return _upsert(spark, wh, df_new, _base(wh, branch, snapshot), dest,
-                   salt_buckets, stripe_tokens, key_blooms)
+                   salt_buckets, stripe_tokens)
 
 
 def _upsert(spark, wh: Warehouse, df_new, base: tuple, dest: str | None, salt_buckets: int = 32,
-            stripe_tokens: int | None = None, key_blooms: bool = True) -> dict:
+            stripe_tokens: int | None = None) -> dict:
     from .pipeline import DEFAULT_STRIPE_TOKENS, LAYOUT, encode_files
 
     ref, head, snapshot = base
@@ -391,7 +392,7 @@ def _upsert(spark, wh: Warehouse, df_new, base: tuple, dest: str | None, salt_bu
     parts, phases = encode_files(
         spark, df_new, wh.path, dest, salt_buckets=salt_buckets,
         stripe_tokens=stripe_tokens or DEFAULT_STRIPE_TOKENS, num_partitions=None,
-        max_pid_tokens=None, key_blooms=key_blooms, skip=frozenset(), **{**LAYOUT, **layout},
+        max_pid_tokens=None, skip=frozenset(), **{**LAYOUT, **layout},
     )
 
     new_files = _write_delete_files(

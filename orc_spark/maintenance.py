@@ -8,16 +8,19 @@ count, and tiny stripes under-amortize their footers. These are the Iceberg
 
 `compact_snapshots` has two modes with very different costs:
 
-- **concat** (default): per pid, the stripe rows of every source file are
-  streamed into ONE dest file — blobs are copied verbatim; only the key
-  column is decoded, to rebuild the merged file bloom at the size for the
-  summed key count — and key ranges merge in the key's native order.
-  Stripe count is preserved; what collapses is the FILE count —
-  exactly the per-epoch fragmentation the stream sink creates. One Spark
-  stage, no shuffle: the pid->files plan is O(#pids) driver metadata,
-  packed by the sources' encoded bytes into one bin per task slot
-  (pipeline.run_tasks); executors stream file-to-file, only metadata
-  dicts return (same commit discipline as encode_table).
+- **concat** (default): per pid, the stripe rows of every source file
+  stream into ONE dest file through the encode's stripe-file writer
+  (pipeline._PidWriter.copy_stripes) — blobs and footers are copied
+  verbatim; only the key column is decoded, and the writer takes the dest
+  file's bloom sidecar and key range from those keys, as it does for the
+  rows it encodes, never from the sources' recorded stats. Stripe count
+  is preserved; what collapses is the FILE count — exactly the per-epoch
+  fragmentation the stream sink creates. A failed copy removes its temp
+  file (the writer's own cleanup). One Spark stage, no shuffle: the
+  pid->files plan is O(#pids) driver metadata, packed by the sources'
+  encoded bytes into one bin per task slot (pipeline.run_tasks);
+  executors stream file-to-file, only metadata dicts return (same commit
+  discipline as encode_table).
 - **reencode**: decode the union of the source snapshots and push it back
   through the encode pipeline — full codec cost, but tiny stripes re-pack to
   `stripe_tokens` and codec choices re-fit the merged distribution. Use
@@ -46,26 +49,20 @@ import json
 import os
 import shutil
 import time
-import uuid
 
-import numpy as np
-import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
-from .codecs import bloom as bloomc
 from .pipeline import (
     DEFAULT_STRIPE_TOKENS,
+    REDUCE_TIMERS,
+    _PidWriter,
     decode_table,
     encode_commit,
-    key_hashes,
     pack_bins,
     run_tasks,
-    stripe_file_writer,
-    write_sidecar,
 )
-from .stripe import decode_stripe, footer_from_json
-from .warehouse import Warehouse, current_ids, parse_key, render_key
+from .warehouse import Warehouse, current_ids, sidecar_file
 
 
 def _load_source_manifests(wh: Warehouse, snapshots: list[str]) -> list[dict]:
@@ -83,92 +80,6 @@ def _load_source_manifests(wh: Warehouse, snapshots: list[str]) -> list[dict]:
         if (m.get("layout") or {}) != layout0:
             raise ValueError(f"snapshot {s!r} layout differs — cannot compact")
     return manifests
-
-
-def _sidecar_column(files: list[str]) -> str | None:
-    """The key column every source file's sidecar blooms, or None when a
-    source has no readable sidecar or they disagree. The merged file then
-    gets no sidecar: planners simply cannot bloom-prune it, which is always
-    conservative."""
-    cols = set()
-    for f in files:
-        try:
-            with open(f + ".bloom.json") as fh:
-                cols.add(json.load(fh).get("column"))
-        except (OSError, ValueError):
-            return None
-    return cols.pop() if len(cols) == 1 else None
-
-
-def _insert_keys(bloom: np.ndarray, t: pa.Table, key_col: str) -> int:
-    """Insert the keys of the stripe rows `t` into `bloom`, decoding only
-    the key column; return how many. A sidecar exists only for a key type
-    the writer could hash, so key_hashes has a hasher here."""
-    n = 0
-    for blob, footer in zip(t.column("blob"), t.column("footer")):
-        keys = decode_stripe(blob.as_buffer(), footer_from_json(str(footer)), [key_col])
-        bloomc.bloom_insert(bloom, *key_hashes(keys.column(0)))
-        n += keys.num_rows
-    return n
-
-
-def _concat_pid(
-    warehouse_path: str, dest_snapshot: str, pid: str, files: list[str]
-) -> dict:
-    """Stream one pid's source files into its single dest file, stripe rows
-    copied verbatim (blob bytes untouched), stripe_id renumbered. Runs
-    executor-side; memory = one parquet row group. Each source sidecar is
-    sized for its own file's keys (bloom.file_bloom_bits), so the merged
-    sidecar is rebuilt from the copied stripes' keys — only their key
-    column is decoded — at the size for the summed key count."""
-    wh = Warehouse(warehouse_path)
-    final = wh.data_file(pid, dest_snapshot)
-    os.makedirs(os.path.dirname(final), exist_ok=True)
-    tmp = final + f".inprogress-{uuid.uuid4().hex[:8]}"
-    t0 = time.perf_counter()
-    stripes = n_rows = n_tokens = enc_bytes = 0
-    key_col = _sidecar_column(files)
-    bloom = np.zeros(bloomc.FILE_BLOOM_BITS // 8, dtype=np.uint8) if key_col else None
-    n_keys = 0
-    try:
-        with stripe_file_writer(tmp) as w:
-            for f in files:
-                pf = pq.ParquetFile(f)
-                for rg in range(pf.num_row_groups):
-                    t = pf.read_row_group(rg)
-                    k = t.num_rows
-                    t = t.set_column(
-                        t.schema.get_field_index("stripe_id"),
-                        "stripe_id",
-                        pa.array(
-                            np.arange(stripes, stripes + k, dtype=np.int64)
-                        ),
-                    )
-                    w.write_table(t)
-                    stripes += k
-                    n_rows += int(sum(t.column("n_rows").to_pylist()))
-                    n_tokens += int(sum(t.column("n_tokens").to_pylist()))
-                    enc_bytes += int(sum(t.column("enc_bytes").to_pylist()))
-                    if key_col:
-                        n_keys += _insert_keys(bloom, t, key_col)
-    except BaseException:
-        try:
-            os.remove(tmp)
-        except OSError:
-            pass
-        raise
-    if key_col and n_keys:  # sidecar lands BEFORE data visible
-        write_sidecar(final, key_col, bloomc.fold(bloom, bloomc.file_bloom_bits(n_keys)), n_keys)
-    os.replace(tmp, final)
-    return {
-        "pid": pid,
-        "file": final,
-        "stripes": stripes,
-        "n_rows": n_rows,
-        "n_tokens": n_tokens,
-        "enc_bytes": enc_bytes,
-        "encode_s": time.perf_counter() - t0,
-    }
 
 
 def compact_snapshots(
@@ -205,7 +116,7 @@ def compact_snapshots(
         return encode_commit(  # resumable: a re-run adopts a killed run's files
             spark, df, wh, dest_snapshot, resume=True, layout=layout, extra=lineage,
             ids=wh.carry_ids(manifests[0], schema), expect=head, salt_buckets=salt_buckets,
-            stripe_tokens=stripe_tokens, num_partitions=None, max_pid_tokens=None, key_blooms=True)
+            stripe_tokens=stripe_tokens, num_partitions=None, max_pid_tokens=None)
     if mode != "concat":
         raise ValueError(f"unknown compaction mode {mode!r}")
     for s, m in zip(snapshots, manifests):
@@ -223,14 +134,11 @@ def compact_snapshots(
                 "use mode='reencode' to unify schemas"
             )
 
-    # pid -> ordered source files + parsed key ranges (driver-side metadata
-    # only: O(#pids), the same scale class as an Iceberg manifest rewrite)
-    key_type = schema.get(layout.get("key_col", "doc_id"), "string")
+    # pid -> ordered source files (driver-side metadata only: O(#pids), the
+    # same scale class as an Iceberg manifest rewrite)
     plan: dict[str, list[str]] = {}
     size: dict[str, int] = {}
     sid: dict[str, int] = {}
-    lo: dict[str, object] = {}
-    hi: dict[str, object] = {}
     schemas = manifests[0]["schemas"]
     for m in manifests:
         for pid, part in m["partitions"].items():
@@ -243,25 +151,28 @@ def compact_snapshots(
             if j < 0 or sid.setdefault(pid, j) != j:
                 raise ValueError(f"pid {pid!r} has source files written under "
                                  "different schemas — use mode='reencode'")
-            mn = parse_key(part.get("min_doc_id"), key_type)
-            mx = parse_key(part.get("max_doc_id"), key_type)
-            if mn is not None and mx is not None:
-                lo[pid], hi[pid] = min(lo.get(pid, mn), mn), max(hi.get(pid, mx), mx)
+    key_col = layout.get("key_col", "doc_id")
+
+    def concat(units):
+        # executor-side: each pid's source stripes stream into one dest
+        # file, memory = one parquet row group
+        for pid, files in units:
+            with _PidWriter(warehouse_path, dest_snapshot, pid, key_col) as w:
+                for f in files:
+                    pf = pq.ParquetFile(f)
+                    for rg in range(pf.num_row_groups):
+                        w.copy_stripes(pf.read_row_group(rg))
+                d = w.close()
+            yield {k: v for k, v in d.items() if k not in REDUCE_TIMERS}
 
     # one single-stage job: pids packed on the driver by their sources'
     # encoded bytes, one bin per task slot
     bins = pack_bins(size, list(plan.items()), min(len(plan), spark.sparkContext.defaultParallelism))
     parts = {}
-    for d in run_tasks(
-        spark, bins,
-        lambda units: (_concat_pid(warehouse_path, dest_snapshot, p, fs) for p, fs in units),
-    ):
-        p = d["pid"]
-        # "" = no recorded range (file_matches treats it as cannot-exclude)
-        d["min_doc_id"], d["max_doc_id"] = render_key(lo.get(p)), render_key(hi.get(p))
+    for d in run_tasks(spark, bins, concat):
         d["compacted"] = True
-        d["schema_id"] = sid[p]
-        parts[p] = d
+        d["schema_id"] = sid[d["pid"]]
+        parts[d["pid"]] = d
     return wh.commit(dest_snapshot, parts, schema, extra={"layout": layout, **lineage}, ids=manifests[0], expect=head)
 
 
@@ -301,7 +212,7 @@ def materialize_deletes(
         spark, df, wh, dest_snapshot, resume=True, layout=m.get("layout") or {},
         extra={"materialized_from": snapshot, "deletes_applied": len(dels)},
         ids=wh.carry_ids(m, m["schema"]), expect=head, salt_buckets=salt_buckets,
-        stripe_tokens=stripe_tokens, num_partitions=None, max_pid_tokens=None, key_blooms=True)
+        stripe_tokens=stripe_tokens, num_partitions=None, max_pid_tokens=None)
 
 
 def expire_snapshots(
@@ -351,7 +262,7 @@ def expire_snapshots(
         for f in cand:
             if f in live:
                 continue
-            for path in (f, f + ".bloom.json"):
+            for path in (f, sidecar_file(f)):
                 try:
                     os.remove(path)
                     n += 1
@@ -427,10 +338,11 @@ def vacuum_orphans(
         if f.endswith(".tmp") or (f.startswith("snap-") and f not in named):
             reap(os.path.join(wh.manifest_dir, f))
     committed = _reachable(wh)
+    committed |= {sidecar_file(f) for f in committed}
     for root, _, files in os.walk(wh.data_dir):
         for f in files:
             full = os.path.join(root, f)
-            if full not in committed and full[: -len(".bloom.json")] not in committed:
+            if full not in committed:
                 reap(full)
     stages = os.listdir(wh.exchange_dir) if os.path.isdir(wh.exchange_dir) else []
     for name in stages:

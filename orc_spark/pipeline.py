@@ -63,7 +63,9 @@ Scale notes (designed for 10^12 rows / 1000 executors, tested on local[32]):
 
 from __future__ import annotations
 
+import contextlib
 import heapq
+import itertools
 import json
 import os
 import shutil
@@ -81,7 +83,9 @@ from . import exchange
 from .codecs import bloom as bloomc
 from .evolution import column_maps, fill_type
 from .stripe import decode_stripe, encode_stripe, footer_from_json, footer_to_json
-from .warehouse import APPEND, INT_TYPES, Warehouse, current_ids, parse_key, render_key
+from .warehouse import (
+    APPEND, INT_TYPES, Warehouse, current_ids, parse_key, render_key, sidecar_file,
+)
 
 # a reduce task's per-pid seconds in encode_stripe + blooms, in file
 # writes and in reading its segments, and its process CPU seconds from
@@ -100,16 +104,6 @@ STRIPE_FILE_SCHEMA = pa.schema(
         ("footer", pa.string()),
     ]
 )
-
-
-def stripe_file_writer(path: str) -> pq.ParquetWriter:
-    """The writer of every stripe file (encode and concat compaction). No
-    Parquet column statistics and no dictionary: no reader uses them, and
-    the statistics held min/max copies of each footer JSON."""
-    return pq.ParquetWriter(
-        path, STRIPE_FILE_SCHEMA, compression="none",
-        write_statistics=False, use_dictionary=False,
-    )
 
 
 DEFAULT_STRIPE_TOKENS = 4_000_000  # ~8 MB encoded per stripe at ~2 B/token
@@ -131,23 +125,24 @@ def key_hashes(ids: pa.Array):
 
 
 class _PidWriter:
-    """Streams one pid's stripes into its snapshot data file (tmp + rename)."""
+    """The one writer of stripe data files: streams one pid's stripes into
+    its snapshot data file (temp file + atomic rename at close) and keeps
+    the file's key bloom and key range from the keys it writes. Used as a
+    context manager, it removes its temp files if the block fails; the
+    final file is never touched."""
 
-    def __init__(
-        self,
-        warehouse_path: str,
-        snapshot: str,
-        pid: str,
-        key_col: str = "doc_id",
-        key_blooms: bool = True,
-    ):
+    def __init__(self, warehouse_path: str, snapshot: str, pid: str, key_col: str = "doc_id"):
         self.pid = pid
         self.key_col = key_col
-        self.key_blooms = key_blooms
         self.final = Warehouse(warehouse_path).data_file(pid, snapshot)
         os.makedirs(os.path.dirname(self.final), exist_ok=True)
         self.tmp = self.final + f".inprogress-{uuid.uuid4().hex[:8]}"
-        self.writer = stripe_file_writer(self.tmp)
+        # no Parquet column statistics and no dictionary: no reader uses
+        # them, and the statistics held min/max copies of each footer JSON
+        self.writer = pq.ParquetWriter(
+            self.tmp, STRIPE_FILE_SCHEMA, compression="none",
+            write_statistics=False, use_dictionary=False,
+        )
         self.stripes = 0
         self.n_rows = 0
         self.n_tokens = 0
@@ -165,6 +160,36 @@ class _PidWriter:
         self.t0 = time.perf_counter()
         self.cpu0 = time.process_time()
 
+    def __enter__(self) -> _PidWriter:
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        if exc_type is not None:
+            with contextlib.suppress(OSError, pa.ArrowException):
+                self.writer.close()
+            for f in (self.tmp, sidecar_file(self.tmp)):
+                with contextlib.suppress(OSError):  # never made, or renamed
+                    os.remove(f)
+
+    def _add_keys(self, keys):
+        """Fold a stripe's keys into the file bloom and the key range;
+        returns their bloom hashes (None for a key type without a
+        hasher)."""
+        hp = key_hashes(keys)
+        if hp is not None:
+            bloomc.bloom_insert(self.file_bloom, *hp)
+            self.bloom_n += len(hp[0])
+        # native-typed key range (str for doc_id, int for int keys): the
+        # manifest file-pruning range test compares in the key's own order,
+        # so integer keys don't fall into string collation. Null keys sort
+        # last and are outside every range: min_max skips them
+        mm = pc.min_max(keys)
+        lo, hi = mm["min"].as_py(), mm["max"].as_py()
+        if lo is not None:
+            self.min_doc = lo if self.min_doc is None else min(self.min_doc, lo)
+            self.max_doc = hi if self.max_doc is None else max(self.max_doc, hi)
+        return hp
+
     def write_stripe(self, tbl: pa.Table) -> None:
         # deterministic stripe CONTENT: order rows by doc_id here (vectorized
         # gather, exchange.take_rows) instead of a cluster-wide sortWithinPartitions('pid','doc_id')
@@ -180,7 +205,7 @@ class _PidWriter:
         # bloom (stripe footer stats, sized to this stripe's rows) and the
         # file-level bloom (OR-accumulated, folded and written as a sidecar
         # at close)
-        hp = key_hashes(tbl.column(self.key_col)) if self.key_blooms else None
+        hp = self._add_keys(tbl.column(self.key_col))
         if hp is not None:
             h1, h2 = hp
             stats = footer["columns"][self.key_col].setdefault("stats", {})
@@ -188,8 +213,6 @@ class _PidWriter:
                 bloomc.bloom_build(h1, h2, bloomc.stripe_bloom_bits(len(h1))),
                 len(h1),
             )
-            bloomc.bloom_insert(self.file_bloom, h1, h2)
-            self.bloom_n += len(h1)
         if "tokens" in footer["columns"]:
             n_tok = int(footer["columns"]["tokens"].get("stats", {}).get("n_values", 0))
         else:
@@ -214,15 +237,21 @@ class _PidWriter:
         self.n_rows += tbl.num_rows
         self.n_tokens += n_tok
         self.enc_bytes += len(blob)
-        # native-typed key range (str for doc_id, int for int keys): the
-        # manifest file-pruning range test compares in the key's own order,
-        # so integer keys don't fall into string collation. Null keys sort
-        # last and are outside every range: min_max skips them
-        mm = pc.min_max(tbl.column(self.key_col))
-        lo, hi = mm["min"].as_py(), mm["max"].as_py()
-        if lo is not None:
-            self.min_doc = lo if self.min_doc is None else min(self.min_doc, lo)
-            self.max_doc = hi if self.max_doc is None else max(self.max_doc, hi)
+
+    def copy_stripes(self, t: pa.Table) -> None:
+        """Append stripe rows `t` of another stripe file verbatim (blob and
+        footer bytes untouched), stripe_id renumbered. Only their key
+        column is decoded, for the file bloom and key range."""
+        for blob, footer in zip(t.column("blob"), t.column("footer")):
+            keys = decode_stripe(blob.as_buffer(), footer_from_json(str(footer)), [self.key_col])
+            self._add_keys(keys.column(0))
+        ids = pa.array(np.arange(self.stripes, self.stripes + t.num_rows, dtype=np.int64))
+        t = t.set_column(t.schema.get_field_index("stripe_id"), "stripe_id", ids)
+        self.writer.write_table(t)
+        self.stripes += t.num_rows
+        self.n_rows += pc.sum(t["n_rows"]).as_py()
+        self.n_tokens += pc.sum(t["n_tokens"]).as_py()
+        self.enc_bytes += pc.sum(t["enc_bytes"]).as_py()
 
     def close(self) -> dict:
         t0 = time.perf_counter()
@@ -234,7 +263,9 @@ class _PidWriter:
             # manifest stays O(200 bytes)/partition; planners read sidecars
             # only for files that survive range pruning.
             bits = bloomc.fold(self.file_bloom, bloomc.file_bloom_bits(self.bloom_n))
-            write_sidecar(self.final, self.key_col, bits, self.bloom_n)
+            with open(sidecar_file(self.tmp), "w") as fh:
+                json.dump({"column": self.key_col, **bloomc.bloom_to_meta(bits, self.bloom_n)}, fh)
+            os.replace(sidecar_file(self.tmp), sidecar_file(self.final))
         os.replace(self.tmp, self.final)  # atomic: file is complete or absent
         self.write_s += time.perf_counter() - t0
         return {
@@ -257,28 +288,20 @@ class _PidWriter:
         }
 
 
-def write_sidecar(data_file: str, column: str, bits: np.ndarray, n: int) -> None:
-    """A data file's bloom sidecar, temp file + atomic rename."""
-    tmp = data_file + f".bloom.inprogress-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w") as fh:
-        json.dump({"column": column, **bloomc.bloom_to_meta(bits, n)}, fh)
-    os.replace(tmp, data_file + ".bloom.json")
-
-
 def _make_encoder(
     warehouse_path: str,
     snapshot: str,
     stripe_tokens: int,
     key_col: str = "doc_id",
     weight_col: str | None = "n_tok",
-    key_blooms: bool = True,
 ):
-    """Sequential stripe writer: takes (pid, Arrow batches) groups, each pid
-    once (the exchange clusters rows by pid), streams each pid's rows into
-    its own data file and yields the file's metadata dict (_PidWriter.close)
-    as the pid ends. Only the current pid is buffered: it flushes
-    when the buffer reaches stripe_tokens and when the pid's rows end, so a
-    pid's stripe boundaries depend only on its own rows in map order."""
+    """Sequential stripe writer: takes (pid, Arrow batch iterator) groups,
+    each pid once (the exchange clusters rows by pid), streams each pid's
+    rows into its own data file and yields the file's metadata dict
+    (_PidWriter.close) as the pid ends. Only the current pid is buffered:
+    it flushes when the buffer reaches stripe_tokens and when the pid's
+    rows end, so a pid's stripe boundaries depend only on its own rows in
+    map order. A pid without rows writes no file."""
 
     def flush(writer: _PidWriter, buf: list[pa.RecordBatch]) -> None:
         # split the buffer at stripe_tokens boundaries so stripe size has a
@@ -300,19 +323,21 @@ def _make_encoder(
 
     def encode_partition(groups):
         for pid, batches in groups:
-            writer, buf, buffered = None, [], 0
-            for batch in batches:
-                if writer is None:
-                    writer = _PidWriter(warehouse_path, snapshot, pid, key_col, key_blooms)
-                buf.append(batch)
-                buffered += int(exchange.weights(batch, weight_col).sum())
-                if buffered >= stripe_tokens:
+            first = next(batches, None)
+            if first is None:
+                continue
+            with _PidWriter(warehouse_path, snapshot, pid, key_col) as writer:
+                buf, buffered = [], 0
+                for batch in itertools.chain([first], batches):
+                    buf.append(batch)
+                    buffered += int(exchange.weights(batch, weight_col).sum())
+                    if buffered >= stripe_tokens:
+                        flush(writer, buf)
+                        buf, buffered = [], 0
+                if buf:
                     flush(writer, buf)
-                    buf, buffered = [], 0
-            if buf:
-                flush(writer, buf)
-            if writer is not None:
-                yield writer.close()
+                meta = writer.close()
+            yield meta
 
     return encode_partition
 
@@ -330,7 +355,6 @@ def encode_table(
     key_col: str = "doc_id",
     source_col: str | None = "source",
     weight_col: str | None = "n_tok",
-    key_blooms: bool = True,
 ) -> dict:
     """Encode a (doc_id, tokens, n_tok, source) DataFrame into the warehouse
     as snapshot `snapshot`, published by one commit; returns its manifest.
@@ -352,10 +376,6 @@ def encode_table(
     layout is recorded in the manifest so decode-side pruning knows which
     columns the file-level ranges describe.
 
-    `key_blooms=False` skips the stripe/file key bloom filters (and their
-    ~1% encode CPU): IN-set point lookups then fall back to range stats +
-    exact row filtering — correct, just unpruned under the salt.
-
     `num_partitions` is the number of reduce (encode) tasks, one per task
     slot by default.
 
@@ -369,7 +389,7 @@ def encode_table(
         layout={"key_col": key_col, "source_col": source_col, "weight_col": weight_col},
         extra={}, ids=None, expect=APPEND, salt_buckets=salt_buckets,
         stripe_tokens=stripe_tokens, num_partitions=num_partitions,
-        max_pid_tokens=max_pid_tokens, key_blooms=key_blooms,
+        max_pid_tokens=max_pid_tokens,
     )
 
 
@@ -407,7 +427,7 @@ def encode_files(
     spark: SparkSession, df: DataFrame, warehouse_path: str, snapshot: str, *,
     salt_buckets: int, stripe_tokens: int, num_partitions: int | None,
     max_pid_tokens: int | None, key_col: str, source_col: str | None,
-    weight_col: str | None, key_blooms: bool, skip: frozenset,
+    weight_col: str | None, skip: frozenset,
 ) -> tuple[dict, dict]:
     """encode_table's file-writing half, which commits nothing: the map,
     plan and reduce jobs write one data file per pid of `df` not in `skip`
@@ -446,9 +466,7 @@ def encode_files(
             segments, max_pid_tokens, skip, num_partitions or slots
         )
         t2 = time.perf_counter()
-        encoder = _make_encoder(
-            warehouse_path, snapshot, stripe_tokens, key_col, weight_col, key_blooms
-        )
+        encoder = _make_encoder(warehouse_path, snapshot, stripe_tokens, key_col, weight_col)
 
         def reduce_bin(units):
             read_s: dict[str, float] = {}
@@ -818,7 +836,7 @@ def plan_scan_files(
         for f in files:
             keep = True
             try:
-                with open(f + ".bloom.json") as fh:
+                with open(sidecar_file(f)) as fh:
                     meta = json.load(fh)
                 if meta.get("column") == key_col:
                     keep = all(

@@ -13,10 +13,10 @@ import platform
 
 from pyspark.sql import SparkSession
 
-# ~3.4M tokens/batch at the canonical length mix; ORC_SPARK_ARROW_BATCH
-# overrides for tuning (bigger batches = fewer JVM<->Python IPC round trips,
-# more worker memory per batch)
-ARROW_BATCH_ROWS = int(os.environ.get("ORC_SPARK_ARROW_BATCH", "8192"))
+# ~3.4M tokens/batch at the canonical length mix (bigger batches = fewer
+# JVM<->Python IPC round trips, more worker memory per batch); A/B runs set
+# spark.sql.execution.arrow.maxRecordsPerBatch through ORC_SPARK_EXTRA_CONF
+ARROW_BATCH_ROWS = 8192
 
 # glibc's mallopt parameters (malloc.h) for the two variables below
 _MALLOPT = {"MALLOC_TRIM_THRESHOLD_": -1, "MALLOC_MMAP_THRESHOLD_": -3}
@@ -133,11 +133,8 @@ def get_spark(
         # shuffle bytes are network bytes (measured +22% encode throughput
         # at 4 pinned cores when the encode still shuffled its rows; the
         # encode's Arrow exchange files are not Spark shuffle blocks);
-        # ORC_SPARK_IO_CODEC overrides for benchmarking A/Bs
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("ORC_SPARK_IO_CODEC", "zstd"),
-        )
+        # A/B runs set it through ORC_SPARK_EXTRA_CONF
+        .config("spark.io.compression.codec", "zstd")
     )
     # benchmarking escape hatch: ORC_SPARK_EXTRA_CONF="k=v;k=v" applies
     # arbitrary Spark confs without code edits — LAST, so it overrides any

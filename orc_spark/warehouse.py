@@ -90,8 +90,8 @@ def check_ref_name(name: str) -> None:
 
 def render_key(v) -> str:
     """A key-range bound as a manifest stores it: "" for no range (a file
-    of null keys only, a source without one), a string key as is, any
-    other (integral) key as its JSON text."""
+    of null keys only, an adopted file whose footers lack the stats), a
+    string key as is, any other (integral) key as its JSON text."""
     return "" if v is None else v if isinstance(v, str) else json.dumps(v)
 
 
@@ -101,6 +101,11 @@ def parse_key(s: str | None, key_type: str):
     if s in ("", None):
         return None
     return int(s) if key_type in INT_TYPES else s
+
+
+def sidecar_file(data_file: str) -> str:
+    """The file-level key bloom sidecar of a data file (codecs/bloom.py)."""
+    return data_file + ".bloom.json"
 
 
 def current_ids(m: dict) -> dict[str, int]:

@@ -216,29 +216,3 @@ def test_int_key_bloom_through_generic_layout(spark, tmp_path):
         ).count()
         == 0
     )
-
-
-def test_key_blooms_off_skips_sidecars_but_stays_correct(spark, tmp_path):
-    # encode_table(key_blooms=False) is the kill-switch for tables that
-    # never serve point lookups: no hash pass, no sidecars, no stripe
-    # blooms — IN-set predicates fall back to range stats + exact row
-    # filter and must return identical rows
-    wh = str(tmp_path / "noblooms")
-    encode_table(
-        spark, _tokens_df(spark, n=1200), wh, snapshot="nb",
-        salt_buckets=4, stripe_tokens=3_000, key_blooms=False,
-    )
-    assert glob.glob(wh + "/data/pid=*/snap-nb.parquet.bloom.json") == []
-    import pyarrow.parquet as pq
-
-    f = glob.glob(wh + "/data/pid=*/snap-nb.parquet")[0]
-    footer = json.loads(pq.read_table(f, columns=["footer"])["footer"][0].as_py())
-    assert "bloom" not in footer["columns"]["doc_id"].get("stats", {})
-    ids = ["d000042", "d000777"]
-    m = {}
-    got = decode_table(
-        spark, wh, "nb", predicate=[("doc_id", ids)], prune_metrics=m
-    ).collect()
-    assert sorted(r["doc_id"] for r in got) == sorted(ids)
-    mv = _metrics_values(m)
-    assert mv["files_bloom_pruned"] == 0 and mv["stripes_bloom_skipped"] == 0

@@ -477,7 +477,7 @@ def test_a_writer_killed_between_manifest_and_entry_holds_no_name(spark, tmp_pat
     kw = {"salt_buckets": 2, "stripe_tokens": 20_000}
     # the dead encode's data files, as its jobs left them
     parts, _ = encode_files(spark, df, path, "e", num_partitions=None, max_pid_tokens=None,
-                            key_blooms=True, skip=frozenset(), **LAYOUT, **kw)
+                            skip=frozenset(), **LAYOUT, **kw)
     orphans = [_kill_between_manifest_and_entry(tmp_path, wh, "c", _part("c")),
                _kill_between_manifest_and_entry(tmp_path, wh, "e", parts)]
 

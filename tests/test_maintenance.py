@@ -309,3 +309,40 @@ def test_a_killed_reencode_is_resumed_by_its_rerun(spark, tmp_path, monkeypatch)
     got = decode_table(spark, wh, "re")
     want = decode_table(spark, wh, "e0").unionByName(decode_table(spark, wh, "e1"))
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_concat_takes_the_merged_range_from_the_copied_keys(spark, tmp_path):
+    """A concat source recorded without a key range ("" — here an adopted
+    file with a stripe of null keys only) still holds keys: the merged
+    file's range comes from the keys the copy writes, so a lookup of one
+    of that source's keys finds it."""
+    from pyspark.sql.types import (ArrayType, IntegerType, StringType,
+                                   StructField, StructType)
+
+    from orc_spark.pipeline import LAYOUT, encode_files
+
+    schema = StructType([
+        StructField("doc_id", StringType()), StructField("tokens", ArrayType(IntegerType())),
+        StructField("n_tok", IntegerType()), StructField("source", StringType()),
+    ])
+
+    def rows(keys, n_tok):
+        return [(k, list(range(n_tok)), n_tok, "s") for k in keys]
+
+    a_m = [chr(c) for c in range(ord("a"), ord("n"))]
+    n_z = [chr(c) for c in range(ord("n"), ord("z") + 1)]
+    e0 = spark.createDataFrame(rows(a_m, 10) + rows([None] * 40, 50), schema)
+    e1 = spark.createDataFrame(rows(n_z, 10), schema)
+    wh = str(tmp_path / "wh")
+    kw = {"salt_buckets": 1, "stripe_tokens": 200}
+    # e0's files as a killed run left them; its re-run adopts them
+    encode_files(spark, e0, wh, "e0", num_partitions=None, max_pid_tokens=None,
+                 skip=frozenset(), **LAYOUT, **kw)
+    m0 = encode_table(spark, e0, wh, snapshot="e0", **kw)
+    assert [(p["adopted"], p["min_doc_id"]) for p in m0["partitions"].values()] == [(True, "")]
+    encode_table(spark, e1, wh, snapshot="e1", **kw)
+
+    m = compact_snapshots(spark, wh, ["e0", "e1"], "merged")
+    got = decode_table(spark, wh, "merged", predicate=[("doc_id", ["c"])]).collect()
+    assert [r["doc_id"] for r in got] == ["c"]
+    assert [(p["min_doc_id"], p["max_doc_id"]) for p in m["partitions"].values()] == [("a", "z")]
